@@ -2958,8 +2958,9 @@ hit AS (
          row_number() OVER (PARTITION BY q ORDER BY bin) AS rn
   FROM qs JOIN c ON c.cb + c.n >= q * c.total)
 SELECT q::DOUBLE AS q,
-       round(CASE WHEN bin < 0 THEN 0.0
-             ELSE pow(2.0, bin + (q * total - cb) / n) END, 6) AS est
+       CASE WHEN bin < 0 THEN 0.0
+            ELSE least(round(pow(2.0, bin + (q * total - cb) / n), 6),
+                       round(pow(2.0, bin + 1), 6) - 1e-6) END AS est
 FROM hit WHERE rn = 1 ORDER BY q""",
         "field_title_bm25": f"""
 WITH {SQL_TOKS}, {SQL_TF}, {SQL_DL}, {SQL_STATS},

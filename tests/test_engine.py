@@ -723,3 +723,199 @@ def test_lexicon_rev_staleness_detected(engine):
     # rebuild restamps and serving resumes
     engine.build_lexicon_rev()
     assert engine.expand_wildcard("*ing")
+
+
+# -- cached-footer point reads (lookup_docs / term_df / term lists) ------
+def _direct_rows(d, key, values, columns):
+    """The reference read: pyarrow dataset discovery + filter pushdown
+    over one directory, as the engine did before footers were cached."""
+    import os
+
+    import pyarrow.parquet as pq
+
+    if not os.path.isdir(d):
+        return []
+    return pq.read_table(
+        d, columns=columns, filters=[(key, "in", values)]
+    ).to_pylist()
+
+
+def _docs_query_ids(index_dir, docid_map, salt_bits):
+    """Ids spread over every salt dir, plus an unknown id in a present
+    salt dir and a (legacy negative) id whose salt dir does not exist."""
+    import os
+
+    from wiki_search_engine_spark.engine import salt_of
+
+    known = sorted(docid_map.values())
+    present = {
+        int(e.split("=")[1])
+        for e in os.listdir(f"{index_dir}/docs")
+        if e.startswith("salt=")
+    }
+    assert {salt_of(d, salt_bits) for d in known} == present
+    unknown = next(d + 1 for d in known if d + 1 not in docid_map.values())
+    absent_salt = -5
+    assert not os.path.isdir(
+        f"{index_dir}/docs/salt={salt_of(absent_salt, salt_bits)}"
+    )
+    return known[::3] + [unknown, absent_salt]
+
+
+@pytest.mark.parametrize("with_images", [True, False])
+def test_lookup_docs_matches_direct_read(spark, engine, index_dir,
+                                         docid_map, with_images):
+    from wiki_search_engine_spark.engine import SearchEngine, salt_of
+
+    eng = SearchEngine(spark, index_dir)
+    ids = _docs_query_ids(index_dir, docid_map, eng.salt_bits)
+    cols = ["docid", "url", "title", "snippet"]
+    if with_images:
+        cols += ["images", "image_count"]
+    by_salt: dict = {}
+    for d in ids:
+        by_salt.setdefault(salt_of(d, eng.salt_bits), []).append(d)
+    exp = [
+        row
+        for s, ss in by_salt.items()
+        for row in _direct_rows(f"{index_dir}/docs/salt={s}", "docid",
+                                ss, cols)
+    ]
+    assert len(exp) == len(ids) - 2
+    for _ in range(2):  # first touch, then the cached footers
+        assert eng.lookup_docs(ids, with_images=with_images) == exp
+
+
+def test_lookup_docs_legacy_layout_prunes_row_groups(spark, engine,
+                                                   index_dir, docid_map,
+                                                   tmp_path):
+    """A legacy unpartitioned docs table (files directly under docs/),
+    written docid-sorted in many row groups so the cached min/max skip
+    most of them, hydrates exactly like the direct filtered read."""
+    import os
+    import shutil
+
+    import pyarrow.parquet as pq
+
+    from wiki_search_engine_spark.engine import SearchEngine
+
+    copy = str(tmp_path / "idx")
+    shutil.copytree(index_dir, copy)
+    flat = pq.read_table(f"{copy}/docs").drop(["salt"]).sort_by("docid")
+    shutil.rmtree(f"{copy}/docs")
+    os.makedirs(f"{copy}/docs")
+    pq.write_table(flat, f"{copy}/docs/part-0.parquet", row_group_size=8)
+    eng = SearchEngine(spark, copy)
+    ids = _docs_query_ids(index_dir, docid_map, eng.salt_bits)
+    cols = ["docid", "url", "title", "snippet", "images", "image_count"]
+    exp = _direct_rows(f"{copy}/docs", "docid", ids, cols)
+    assert len(exp) == len(ids) - 2
+    assert eng.lookup_docs(ids) == exp
+    [(_path, md, ranges)] = eng._footer_index("docs", "docid")
+    assert md.num_row_groups == len(ranges) > 1
+    assert eng.lookup_docs(ids[:1]) == [r for r in exp if r["docid"] == ids[0]]
+
+
+def test_term_reads_match_direct_read(spark, engine, index_dir, tmp_path):
+    """term_df and _cached_term_lists vs direct reads: present terms,
+    absent terms, and terms whose bucket directory is missing."""
+    import shutil
+
+    import pyarrow.parquet as pq
+
+    from wiki_search_engine_spark.engine import SearchEngine
+    from wiki_search_engine_spark.operators.postings import term_bucket
+
+    copy = str(tmp_path / "idx")
+    shutil.copytree(index_dir, copy)
+    lexicon = sorted(
+        pq.read_table(f"{copy}/term_stats", columns=["term"])
+        .column("term").to_pylist()
+    )
+    gone = term_bucket(lexicon[0], engine.n_buckets)
+    shutil.rmtree(f"{copy}/term_stats/bucket={gone}")
+    shutil.rmtree(f"{copy}/postings/bucket={gone}")
+    eng = SearchEngine(spark, copy)
+    terms = lexicon[::7] + ["zzqqxxnotaterm", "qqzzjjabsent"]
+    assert any(term_bucket(t, eng.n_buckets) == gone for t in terms)
+    by_bucket: dict = {}
+    for t in terms:
+        by_bucket.setdefault(term_bucket(t, eng.n_buckets), []).append(t)
+    exp_df: dict = {}
+    exp_lists = {t: (0, []) for t in terms}
+    for b, ts in by_bucket.items():
+        for r in _direct_rows(f"{copy}/term_stats/bucket={b}", "term",
+                              ts, ["term", "df"]):
+            exp_df[r["term"]] = int(r["df"])
+        for r in _direct_rows(f"{copy}/postings/bucket={b}", "term", ts,
+                              ["term", "salt", "blocks"]):
+            _df, lists = exp_lists[r["term"]]
+            exp_lists[r["term"]] = (
+                exp_df[r["term"]], lists + [(r["salt"], r["blocks"])]
+            )
+    assert exp_df and all(t in exp_df for t in lexicon[::7]
+                          if term_bucket(t, eng.n_buckets) != gone)
+    assert not any(term_bucket(t, eng.n_buckets) == gone for t in exp_df)
+    for _ in range(2):
+        assert eng.term_df(terms) == exp_df
+        assert eng._cached_term_lists(terms) == exp_lists
+
+
+def test_lookup_docs_concurrent_threads(spark, engine, index_dir,
+                                        docid_map):
+    """8 threads hydrating at once — racing the first touch of every
+    salt directory — all get the single-threaded rows."""
+    import sys
+    import threading
+
+    from wiki_search_engine_spark.engine import SearchEngine
+
+    ids = sorted(docid_map.values())[::2]
+    exp = SearchEngine(spark, index_dir).lookup_docs(ids)
+    eng = SearchEngine(spark, index_dir)
+    start = threading.Barrier(8)
+    results: list = []
+
+    def work():
+        start.wait(timeout=30)
+        for _ in range(5):
+            results.append(eng.lookup_docs(ids))
+
+    old = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)
+    try:
+        threads = [threading.Thread(target=work) for _ in range(8)]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=60)
+    finally:
+        sys.setswitchinterval(old)
+    assert not any(t.is_alive() for t in threads)
+    assert len(results) == 40 and all(r == exp for r in results)
+
+
+def test_point_reads_skip_dataset_discovery(spark, engine, index_dir,
+                                            fixture_queries, monkeypatch):
+    """After a first query, hydration, the lexicon and posting-list
+    loads never go back to per-query pq.read_table dataset discovery."""
+    import pyarrow.parquet as pq
+
+    from wiki_search_engine_spark.engine import SearchEngine
+
+    eng = SearchEngine(spark, index_dir)  # cache_terms=0: every call loads
+    q = fixture_queries[1]
+    terms = eng.analyze(q)
+    hits = eng.search_local(q, k=10)
+    assert hits
+    ids = [d for d, _ in hits]
+    exp = (eng.lookup_docs(ids), eng.term_df(terms),
+           eng._cached_term_lists(terms))
+
+    def boom(*a, **kw):
+        raise AssertionError("per-query pq.read_table")
+
+    monkeypatch.setattr(pq, "read_table", boom)
+    assert eng.search_local(q, k=10) == hits
+    assert (eng.lookup_docs(ids), eng.term_df(terms),
+            eng._cached_term_lists(terms)) == exp

@@ -264,6 +264,74 @@ def test_static_boost_missing_sidecar_and_http(spark, ranked_engine):
         plain.search_local("shared corpus", k=5, boost="static")
 
 
+def test_static_boost_empty_sidecar_is_zero_boost(spark, tmp_path):
+    """A corpus with no intra-corpus links leaves static_rank/ without
+    a data file: every doc is absent from the link graph, so
+    boost=static answers 200 and ranks exactly like the plain query."""
+    import datetime
+    import json as _json
+    import os
+    import urllib.parse
+    import urllib.request
+
+    from wiki_search_engine_spark.engine import SearchEngine
+    from wiki_search_engine_spark.server import start_server
+
+    rows = [
+        {
+            "url": f"https://en.wikipedia.org/wiki/Lone_{i}",
+            "warc_ts": datetime.datetime(2024, 5, 1, 0, 0, i),
+            "html": (
+                "<html><body><div id='mw-content-text'>"
+                f"<p>shared corpus words number {i} "
+                '<a href="https://example.org/away">out</a></p>'
+                "</div></body></html>"
+            ).encode(),
+            "text": f"shared corpus words number {i}",
+            "lang": "en",
+        }
+        for i in range(12)
+    ]
+    df = spark.createDataFrame(
+        rows,
+        "url string, warc_ts timestamp, html binary, text string, "
+        "lang string",
+    )
+    eng = SearchEngine.build(
+        spark, df, str(tmp_path / "lone_idx"), stem=True, n_buckets=8,
+        bucket_groups=1, salt_bits=2, pagerank_iters=2,
+    )
+    root = f"{eng.index_dir}/static_rank"
+    assert os.path.isdir(root)
+    assert not [
+        f for _d, _s, fs in os.walk(root) for f in fs
+        if f.endswith(".parquet")
+    ]
+    plain = eng.search_local("shared corpus", k=eng.n)
+    assert eng.search_local("shared corpus", k=eng.n, boost="static") == (
+        plain
+    )
+    srv = start_server(eng, port=0, path_mode="local")
+    try:
+        q = urllib.parse.quote("shared corpus")
+        base = f"http://127.0.0.1:{srv.server_address[1]}/query-stem"
+        bodies = []
+        for extra in ("", "&boost=static"):
+            with urllib.request.urlopen(
+                f"{base}?query={q}&optionName=bm25{extra}", timeout=30
+            ) as r:
+                assert r.status == 200
+                bodies.append(_json.load(r)["textResult"])
+    finally:
+        srv.shutdown()
+    assert [x["file_id"] for x in bodies[1]] == [
+        x["file_id"] for x in bodies[0]
+    ]
+    assert [x["score"] for x in bodies[1]] == [
+        x["score"] for x in bodies[0]
+    ]
+
+
 def test_anchor_terms_field_relation(spark):
     """Anchor text aggregates per DESTINATION with the index analyzer:
     tf across all incoming anchors, anchor_len = the field length;

@@ -105,6 +105,15 @@ def test_server_over_tiered_engine(spark, engine, index_dir):
         with pytest.raises(urllib.error.HTTPError) as ei:
             _get(srv, "/query-stem?query=%20")
         assert ei.value.code == 400
+        # the static-rank boost serves single indexes only: a client
+        # error with the 400 body, not an opaque 500
+        with pytest.raises(urllib.error.HTTPError) as ei:
+            _get(srv, f"/query-stem?query={q}&optionName=bm25&boost=static")
+        assert ei.value.code == 400
+        assert json.loads(ei.value.read()) == {
+            "success": False, "result": [],
+            "error": "boost is single-index serving only",
+        }
     finally:
         srv.shutdown()
 

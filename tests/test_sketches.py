@@ -202,3 +202,23 @@ def test_log_histogram_merge_and_quantile_bounds(spark):
             np.floor(np.log2(exact)) + 1
         )
         assert lo_e <= est <= hi_e, (q, est, exact)
+
+
+def test_histogram_quantiles_stay_below_bin_hi(spark):
+    """A rank exactly on a bin's upper cumulative boundary — q=1.0, and
+    q=0.5 over [1, 1, 2, 3] (rank 2 == bin 0's count) — interpolates to
+    the bin's hi; the estimate must stay inside the hit bin's [lo, hi)."""
+    from wiki_search_engine_spark.operators.sketches import (
+        histogram_quantiles, log_histogram,
+    )
+
+    df = spark.createDataFrame([(v,) for v in (1, 1, 2, 3)], "n int")
+    ests = {
+        r["q"]: r["est"]
+        for r in histogram_quantiles(
+            log_histogram(df, "n"), [0.5, 1.0]
+        ).collect()
+    }
+    assert 1.0 <= ests[0.5] < 2.0  # bin 0 = [1, 2)
+    assert 2.0 <= ests[1.0] < 4.0  # bin 1 = [2, 4)
+    assert ests[1.0] == pytest.approx(4.0 - 1e-6)

@@ -294,6 +294,10 @@ class SearchEngine:
 
         self._cache_cap = int(cache_terms)
         self._datasets: dict = {}
+        # (subdir, key) -> parquet footers of that directory, filled
+        # lazily by _footer_index (never here: opening an engine reads
+        # nothing beyond meta + stats)
+        self._footers: dict = {}
         self._term_cache: "OrderedDict[str, tuple[int, list]]" = (
             OrderedDict()
         )
@@ -306,17 +310,106 @@ class SearchEngine:
     def clear_cache(self) -> None:
         with self._cache_lock:
             self._term_cache.clear()
+        self._footers = {}
+
+    def _footer_index(self, sub: str, key: str) -> list:
+        """[(path, FileMetaData, [(min, max) of ``key`` or None per row
+        group])] for the parquet files directly under ``index_dir/sub``
+        ([] when the directory is absent). Read on the first touch of
+        the directory and cached: the engine pins an immutable snapshot,
+        so its file list and footers never change. Footers only, never
+        data — the index's file count bounds the cache."""
+        import os
+
+        import pyarrow.parquet as pq
+
+        hit = self._footers.get((sub, key))
+        if hit is not None:
+            return hit
+        d = f"{self.index_dir}/{sub}"
+        files = []
+        for name in sorted(os.listdir(d)) if os.path.isdir(d) else []:
+            path = f"{d}/{name}"
+            # the prefixes pyarrow's dataset discovery skips too
+            # (_SUCCESS, .crc checksums)
+            if name.startswith((".", "_")) or not os.path.isfile(path):
+                continue
+            md = pq.read_metadata(path)
+            j = next(
+                i for i in range(md.num_columns)
+                if md.schema.column(i).path == key
+            )
+            ranges = []
+            for g in range(md.num_row_groups):
+                st = md.row_group(g).column(j).statistics
+                ranges.append(
+                    (st.min, st.max)
+                    if st is not None and st.has_min_max
+                    else None
+                )
+            files.append((path, md, ranges))
+        # a concurrent first touch computes the same list; either wins
+        return self._footers.setdefault((sub, key), files)
+
+    def _point_read(self, key: str, columns, reads: dict):
+        """Rows whose ``key`` is in the requested values, projected to
+        ``columns`` (which include ``key``), as one pyarrow Table — or
+        None when no row group can hold a value (absent directories
+        included). ``reads`` maps each subdirectory of the index to the
+        values that can live in it: the key picks the directory (term ->
+        bucket, docid -> salt), so no value has rows in another one. The
+        one read behind every per-query point lookup: hydration, lexicon
+        df, posting lists, title rows.
+
+        Per directory it reads only the row groups whose cached key
+        min/max can hold one of that directory's values (a row group
+        without statistics is read, never skipped); one filter over all
+        of them keeps the exact matches. Each call opens its own readers
+        over the cached footers, so ThreadingHTTPServer workers share no
+        reader state."""
+        import pyarrow as pa
+        import pyarrow.compute as pc
+        import pyarrow.parquet as pq
+
+        tables = []
+        for sub, values in reads.items():
+            for path, md, ranges in self._footer_index(sub, key):
+                groups = [
+                    g for g, r in enumerate(ranges)
+                    if r is None or any(r[0] <= v <= r[1] for v in values)
+                ]
+                if groups:
+                    # a few small row groups: Arrow's thread pool costs
+                    # more than it saves, and the server already runs
+                    # one query per handler thread
+                    with pq.ParquetFile(path, metadata=md) as pf:
+                        tables.append(pf.read_row_groups(
+                            groups, columns=columns, use_threads=False
+                        ))
+        if not tables:
+            return None
+        # directories written by separate jobs (bucket groups, merges)
+        # may disagree on a column's nullability
+        tbl = pa.concat_tables(tables, promote_options="default")
+        wanted = [v for values in reads.values() for v in values]
+        return tbl.filter(pc.is_in(
+            tbl[key],
+            value_set=pa.array(wanted, type=tbl.schema.field(key).type),
+        ))
+
+    def _bucket_reads(self, table: str, terms) -> dict:
+        """_point_read's ``reads`` for a term-bucketed table (term_stats,
+        postings, title_tf): each term under its bucket directory."""
+        reads: dict[str, list[str]] = {}
+        for t in terms:
+            b = term_bucket(t, self.n_buckets)
+            reads.setdefault(f"{table}/bucket={b}", []).append(t)
+        return reads
 
     def _cached_term_lists(self, terms: list[str]):
         """(term -> (df, [(salt, blocks), ...])) for every present term,
         loading misses from the lexicon + postings buckets and evicting
         LRU past ``cache_terms``. df == 0 terms are cached as absent."""
-        import os
-
-        import pyarrow.parquet as pq
-
-        from .operators.postings import term_bucket
-
         out: dict[str, tuple[int, list]] = {}
         missing: list[str] = []
         with self._cache_lock:
@@ -332,20 +425,11 @@ class SearchEngine:
                 t: (0, []) for t in missing
             }
             present = [t for t in missing if df_map.get(t, 0) > 0]
-            by_bucket: dict[int, list[str]] = {}
-            for t in present:
-                by_bucket.setdefault(
-                    term_bucket(t, self.n_buckets), []
-                ).append(t)
-            for b, ts in by_bucket.items():
-                d = f"{self.index_dir}/postings/bucket={b}"
-                if not os.path.isdir(d):
-                    continue
-                tbl = pq.read_table(
-                    d,
-                    columns=["term", "salt", "blocks"],
-                    filters=[("term", "in", ts)],
-                )
+            tbl = self._point_read(
+                "term", ["term", "salt", "blocks"],
+                self._bucket_reads("postings", present),
+            )
+            if tbl is not None:
                 for row in tbl.to_pylist():
                     t = row["term"]
                     loaded[t] = (
@@ -463,31 +547,25 @@ class SearchEngine:
 
     def term_df(self, terms: list[str]) -> dict[str, int]:
         """Driver-side lexicon lookup: global df per query term from the
-        term_stats side table — pyarrow over the terms' bucket directories
-        only (dictionary-compressed, term-sorted), NO Spark job. The
-        reference's analogue is the metaData/posting-length read per query
-        (mongoService.js:16-32)."""
-        import os
-
-        import pyarrow.parquet as pq
-
-        out: dict[str, int] = {}
-        by_bucket: dict[int, list[str]] = {}
-        for t in terms:
-            by_bucket.setdefault(term_bucket(t, self.n_buckets), []).append(t)
-        for b, ts in by_bucket.items():
-            d = f"{self.index_dir}/term_stats/bucket={b}"
-            if not os.path.isdir(d):
-                continue
-            tbl = pq.read_table(
-                d, columns=["term", "df"],
-                filters=[("term", "in", ts)],
-            )
+        term_stats side table (hash-bucketed, term-sorted), NO Spark job.
+        Each term's bucket directory is point-read over its cached
+        parquet footers (_point_read): after the first touch of a bucket
+        a lookup reads only the row groups whose term min/max can hold a
+        query term — no directory listing, footer parse or dataset
+        discovery per query. Terms of an absent bucket directory are
+        simply absent. The reference's analogue is the
+        metaData/posting-length read per query (mongoService.js:16-32)."""
+        tbl = self._point_read(
+            "term", ["term", "df"], self._bucket_reads("term_stats", terms)
+        )
+        if tbl is None:
+            return {}
+        return {
+            term: int(df)
             for term, df in zip(
                 tbl.column("term").to_pylist(), tbl.column("df").to_pylist()
-            ):
-                out[term] = int(df)
-        return out
+            )
+        }
 
     def suggest(self, prefix: str, k: int = 10) -> list[tuple[str, int]]:
         """Autocomplete: top-k index terms starting with ``prefix``,
@@ -555,19 +633,17 @@ class SearchEngine:
             analyzer=analyzer or self.analyzer,
         )
         self._title_cache = {}
+        self._footers = {}
 
     def _title_rows(self, terms: list[str]) -> dict:
         """term -> (docids, title_tfs, body_doc_lens) numpy arrays from
         the title_tf sidecar — pyarrow over the terms' bucket
-        directories (term-sorted row groups), no Spark job, same read
-        shape as term_df. Missing sidecar raises with the titleindex
-        remedy."""
+        directories (term-sorted row groups), no Spark job, the same
+        cached-footer point read as term_df. Missing sidecar raises with
+        the titleindex remedy."""
         import os
 
         import numpy as np
-        import pyarrow.parquet as pq
-
-        from .operators.postings import term_bucket
 
         root = f"{self.index_dir}/title_tf"
         if not os.path.isdir(root):
@@ -580,34 +656,29 @@ class SearchEngine:
         if cache is None:
             cache = self._title_cache = {}
         out: dict = {}
-        by_bucket: dict[int, list[str]] = {}
+        want: list[str] = []
         for t in dict.fromkeys(terms):
             if t in cache:
                 out[t] = cache[t]
             else:
-                by_bucket.setdefault(
-                    term_bucket(t, self.n_buckets), []
-                ).append(t)
+                want.append(t)
         empty = (
             np.empty(0, np.int64),
             np.empty(0, np.float64),
             np.empty(0, np.float64),
         )
-        for t in (t for ts in by_bucket.values() for t in ts):
+        for t in want:
             out[t] = empty
-        for b, ts in by_bucket.items():
-            d = f"{root}/bucket={b}"
-            if not os.path.isdir(d):
-                continue
-            tbl = pq.read_table(
-                d, columns=["term", "docid", "tf", "doc_len"],
-                filters=[("term", "in", ts)],
-            )
+        tbl = self._point_read(
+            "term", ["term", "docid", "tf", "doc_len"],
+            self._bucket_reads("title_tf", want),
+        )
+        if tbl is not None:
             terms_a = tbl.column("term").to_pylist()
             did = tbl.column("docid").to_numpy()
             tf = tbl.column("tf").to_numpy().astype(np.float64)
             dl = tbl.column("doc_len").to_numpy().astype(np.float64)
-            for t in ts:
+            for t in want:
                 sel = np.fromiter(
                     (x == t for x in terms_a), bool, len(terms_a)
                 )
@@ -628,7 +699,9 @@ class SearchEngine:
         sidecar (build with pagerank_iters=N / CLI --pagerank N) —
         one column-pruned pyarrow read cached per engine instance,
         like the facet doc-values. Docs absent from the link graph get
-        no row (zero boost)."""
+        no row (zero boost); a sidecar with no data file (a corpus
+        without intra-corpus links) is empty arrays, so every doc gets
+        zero boost."""
         import os
 
         import numpy as np
@@ -643,9 +716,11 @@ class SearchEngine:
                 "sidecar; rebuild with pagerank_iters=N (CLI: build "
                 "--pagerank N)"
             )
-        tbl = self._side_dataset("static_rank").to_table(
-            columns=["docid", "rank"]
-        )
+        ds = self._side_dataset("static_rank")
+        if not ds.files:
+            self._rank_cache = (np.empty(0, np.int64), np.empty(0))
+            return self._rank_cache
+        tbl = ds.to_table(columns=["docid", "rank"])
         d = tbl.column("docid").to_numpy()
         r = tbl.column("rank").to_numpy().astype(np.float64)
         order = np.argsort(d, kind="stable")
@@ -2502,49 +2577,34 @@ class SearchEngine:
     ) -> list[dict]:
         """Point-lookup hydration: the reference's result fetch
         (mongoService.js:75-113, ``find({_id: {$in: ids}})`` over the
-        _id B-tree) as a driver-side PRUNED parquet read. Two pruning
-        levels: the docs table is partitioned by the docid-range salt,
-        so only the <= k salt DIRECTORIES holding the requested ids are
-        even listed (a 10^12-row table's remaining files never have
-        their footers read); within them, docid-sorted files prune ROW
-        GROUPS via footer min/max stats. No Spark job and no full docs
-        scan: cost tracks k (<= 50), not corpus size. Falls back to a
-        filtered whole-table read on a legacy unpartitioned layout."""
-        import os
-
-        import pyarrow.parquet as pq
-
+        _id B-tree) as a driver-side point read over CACHED parquet
+        footers (_point_read). The docs table is partitioned by the
+        docid-range salt, so only the <= k salt directories holding the
+        requested ids are touched; each directory's file list, footers
+        and per-row-group docid min/max are read once per engine (it
+        pins an immutable snapshot), and a lookup reads only the
+        docid-sorted row groups that can hold a requested id. No Spark
+        job, no directory listing or dataset discovery per query: cost
+        tracks k (<= 50), not corpus size. An id whose salt directory
+        does not exist is simply not found. A legacy unpartitioned
+        layout (files directly under docs/) is point-read as one
+        directory."""
         if not docids:
             return []
         cols = ["docid", "url", "title", "snippet"]
         if with_images:
             cols += ["images", "image_count"]
-        base = f"{self.index_dir}/docs"
-        by_salt: dict[int, list[int]] = {}
-        for d in docids:
-            by_salt.setdefault(salt_of(d, self.salt_bits), []).append(
-                int(d)
-            )
-        legacy = not any(
-            e.startswith("salt=") for e in os.listdir(base)
-        )
-        if legacy:
-            return pq.read_table(
-                base,
-                columns=cols,
-                filters=[("docid", "in", [int(d) for d in docids])],
-            ).to_pylist()
-        out: list[dict] = []
-        for s, ids in by_salt.items():
-            d = f"{base}/salt={s}"
-            if not os.path.isdir(d):
-                continue  # id from an empty shard -> simply not found
-            out.extend(
-                pq.read_table(
-                    d, columns=cols, filters=[("docid", "in", ids)]
-                ).to_pylist()
-            )
-        return out
+        ids = [int(d) for d in docids]
+        reads: dict[str, list[int]] = {}
+        if self._footer_index("docs", "docid"):  # legacy, unpartitioned
+            reads["docs"] = ids
+        else:
+            for d in ids:
+                reads.setdefault(
+                    f"docs/salt={salt_of(d, self.salt_bits)}", []
+                ).append(d)
+        tbl = self._point_read("docid", cols, reads)
+        return [] if tbl is None else tbl.to_pylist()
 
     def search(
         self,

@@ -246,10 +246,12 @@ def histogram_quantiles(
     rank = q * total; inside the first bin whose cumulative count
     reaches the rank, interpolate the EXPONENT —
     est = base^(bin + (rank - cum_before) / n_bin) (bin -1 -> 0).
-    Deterministic arithmetic over the ~64-row sketch (one window
-    cumsum — no corpus access), so a DuckDB oracle replays it exactly;
-    the estimate is always within the bin's [lo, hi) bounds (pytest
-    vs the exact percentile)."""
+    A rank on the bin's upper cumulative boundary (q=1 included)
+    interpolates to exactly hi, so the estimate is clamped to the
+    6-decimal grid point below hi. Deterministic arithmetic over the
+    ~64-row sketch (one window cumsum — no corpus access), so a DuckDB
+    oracle replays it exactly; the estimate is always within the bin's
+    [lo, hi) bounds (pytest vs the exact percentile)."""
     import math
 
     from pyspark.sql import Window
@@ -274,16 +276,20 @@ def histogram_quantiles(
             .limit(1)
             .select(
                 F.lit(float(q)).alias("q"),
-                F.round(
-                    F.when(F.col("bin") < 0, F.lit(0.0)).otherwise(
-                        F.pow(
-                            F.lit(base),
-                            F.col("bin")
-                            + (rank - F.col("cum_before"))
-                            / F.col("n").cast("double"),
-                        )
-                    ),
-                    6,
+                F.when(F.col("bin") < 0, F.lit(0.0)).otherwise(
+                    F.least(
+                        F.round(
+                            F.pow(
+                                F.lit(base),
+                                F.col("bin")
+                                + (rank - F.col("cum_before"))
+                                / F.col("n").cast("double"),
+                            ),
+                            6,
+                        ),
+                        F.round(F.pow(F.lit(base), F.col("bin") + 1), 6)
+                        - F.lit(1e-6),
+                    )
                 ).alias("est"),
             )
         )

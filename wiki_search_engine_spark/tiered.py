@@ -1627,7 +1627,7 @@ class TieredEngine:
         phrase: bool = False, fuzzy: bool = False,
         highlight: bool = False, negation: bool = False,
         synonyms: bool = False, facets: str | None = None,
-        facet_top: int = 100,
+        facet_top: int = 100, boost: str | None = None,
     ) -> dict:
         """The reference HTTP response shape over tiered serving — the
         shared assembler (engine.py assemble_reference_response) with
@@ -1638,9 +1638,12 @@ class TieredEngine:
         the operator's escape hatch when head-term candidate lists
         exceed driver memory. Results are identical between the two
         (pytest); any other path is rejected rather than silently
-        downgraded."""
+        downgraded. ``boost`` is rejected: the static-rank boost
+        serves single indexes only (ValueError -> HTTP 400)."""
         from .engine import assemble_reference_response
 
+        if boost:
+            raise ValueError("boost is single-index serving only")
         if path not in ("local", "wand"):
             raise ValueError(
                 f"unsupported tiered serving path {path!r}: use 'local' "
