@@ -1391,7 +1391,7 @@ def q_phrase_slop_bm25(spark, sf_dir):
     follows 'slow' within a window of span 3; scored as a pseudo-term
     like exact phrases (operators/phrase.py slop_occurrences — the
     hit-kernel + chained range joins form; the driver twin is the
-    greedy smallest-successor chain in SearchEngine._phrase_matches,
+    greedy smallest-successor chain in SearchEngine._live_phrase_matches,
     pytest-identity). At sf0.01 this widens 36 exact starts to 93 —
     the discriminating case."""
     from wiki_search_engine_spark.operators.phrase import (

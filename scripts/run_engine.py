@@ -865,7 +865,8 @@ def main(argv=None):
             payload["facets"] = {
                 f: fac_eng.facet_counts(
                     args.query, field=f, negation=args.negation,
-                    top=args.facet_top,
+                    top=args.facet_top, mode=args.mode,
+                    synonyms=args.synonyms,
                 )
                 for f in (
                     s.strip() for s in args.facets.split(",")

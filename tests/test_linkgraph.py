@@ -98,6 +98,34 @@ def test_pagerank_dangling_and_sinks(spark):
     assert got[5] > max(got[i] for i in range(1, 5))
 
 
+def test_pagerank_extracts_edges_once(spark):
+    """The edge relation is computed once per pagerank call, not once
+    per use: upstream of it sits the html anchor extraction, which
+    nodes, out-degrees and every iteration would otherwise re-run. A
+    counting stand-in for the extraction adds one to an accumulator
+    per Arrow batch; the single-partition input makes one pass one
+    batch."""
+    from wiki_search_engine_spark.operators.linkgraph import pagerank
+
+    passes = spark.sparkContext.accumulator(0)
+
+    def extract(batches):
+        for pdf in batches:
+            passes.add(1)
+            yield pdf
+
+    edges = [(1, 2), (2, 3), (3, 1), (4, 1), (1, 5)]
+    df = (
+        spark.createDataFrame(edges, "src long, dst long")
+        .coalesce(1)
+        .mapInPandas(extract, "src long, dst long")
+    )
+    got = {r["node"]: r["rank"] for r in pagerank(df, n_iter=5).collect()}
+    assert passes.value == 1
+    for v, rv in _py_pagerank(edges, n_iter=5).items():
+        assert got[v] == pytest.approx(rv, rel=1e-9)
+
+
 def test_resolve_link_docids_drops_frontier(spark):
     """Links to urls OUTSIDE the corpus (crawl frontier) are dropped;
     docids derive exactly like the index's (xxhash64 >> 1)."""

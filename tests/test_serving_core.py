@@ -1,0 +1,246 @@
+"""One driver-local serving core (serving.LocalServing): every response
+mode gives the same answer on a single index, on a one-segment
+TieredEngine over that index, and — over a [base, deletes] segment
+list — the same answer as the compacted index; facets count exactly
+the docs the results are ranked from; no mode grows a second copy."""
+
+import datetime
+import inspect
+import math
+import re
+from types import SimpleNamespace
+
+import pytest
+from pyspark.sql import functions as F
+
+WORDS = [
+    "river", "stone", "field", "cloud", "bridge", "tower",
+    "garden", "forest", "market", "harbor", "valley", "castle",
+]
+TITLES = ["Alpha_River", "Beta_Stone", "Gamma_Field", "Delta_Cloud"]
+N_DOCS = 48
+DELETED = (0, 5, 12, 17, 30)
+
+
+def _row(i: int) -> dict:
+    w = WORDS
+    extra = " ".join(w[(i + j) % 12] for j in range(i % 5))
+    # 'tower' opens every snippet; 'alpha' sits in the body of every
+    # 6th doc and in the title of every 4th (BM25F title-only matches)
+    text = (
+        f"tower {w[i % 12]} {w[(i + 1) % 12]} {w[(i * 5) % 12]} shared "
+        f"words {w[(i * 7 + 3) % 12]} {'alpha ' if i % 6 == 0 else ''}"
+        f"{extra} tail"
+    )
+    return {
+        "url": f"https://example.org/wiki/{TITLES[i % 4]}_{i}",
+        "warc_ts": datetime.datetime(2024, 1, 1, 0, 0, i),
+        "html": b"",
+        "text": text,
+        "lang": ("en", "de", "fr")[(i // 2) % 3],
+    }
+
+
+@pytest.fixture(scope="module")
+def served(spark, tmp_path_factory):
+    """A base index (positions, title sidecar, synonyms, spell layout),
+    a deletes segment over five of its docs, and their compaction."""
+    from wiki_search_engine_spark.engine import SearchEngine
+    from wiki_search_engine_spark.tiered import (
+        TieredEngine, compact, write_deletes_segment,
+    )
+
+    root = tmp_path_factory.mktemp("serving_core")
+    rows = [_row(i) for i in range(N_DOCS)]
+    df = spark.createDataFrame(
+        rows,
+        "url string, warc_ts timestamp, html binary, text string, "
+        "lang string",
+    )
+    base = SearchEngine.build(
+        spark, df, str(root / "base"), stem=True, n_buckets=8,
+        bucket_groups=1, salt_bits=2, positions=True,
+    )
+    base.set_synonyms([["river", "harbor"]])
+    base.build_spellindex()
+    victims = [
+        r["docid"]
+        for r in spark.createDataFrame(
+            [(rows[i]["url"],) for i in DELETED], "url string"
+        )
+        .withColumn("docid", F.shiftrightunsigned(F.xxhash64("url"), 1))
+        .collect()
+    ]
+    dele = write_deletes_segment(str(root / "del"), docids=victims)
+    compact(spark, [base.index_dir, dele], str(root / "compacted"))
+    comp = SearchEngine(spark, str(root / "compacted"))
+    comp.set_synonyms([["river", "harbor"]])
+    comp.build_spellindex()
+    return SimpleNamespace(
+        single=SearchEngine(spark, base.index_dir),
+        one_segment=TieredEngine(spark, [base.index_dir]),
+        tiered=TieredEngine(spark, [base.index_dir, dele]),
+        compacted=comp,
+    )
+
+
+# every request class of the benchmark's mixed workload, as
+# query_response arguments
+REQUESTS = [
+    ("bag-tfidf", "river stone", {}),
+    ("bag-bm25", "river stone", {"option_name": "bm25"}),
+    ("and", "river stone", {"option_name": "bm25", "semantics": "and"}),
+    ("must", "+river stone", {"option_name": "bm25", "negation": True}),
+    ("not", "river stone -garden", {"option_name": "bm25",
+                                    "negation": True}),
+    ("title", "title:alpha stone", {"option_name": "bm25",
+                                    "negation": True}),
+    ("bm25f", "alpha river", {"option_name": "bm25f"}),
+    ("synonyms", "river field", {"option_name": "bm25",
+                                 "synonyms": True}),
+    ("phrase", "river stone", {"phrase": True}),
+    ("mixed", '"river stone" garden', {"option_name": "bm25"}),
+    ("mixed-not", '"river stone" garden -cloud',
+     {"option_name": "bm25", "negation": True}),
+    ("facets", "river stone", {"option_name": "bm25",
+                               "facets": "lang"}),
+    ("highlight", "river stone", {"option_name": "bm25",
+                                  "highlight": True}),
+    ("page", "river stone", {"option_name": "bm25", "page": 2,
+                             "per_page": 3}),
+    ("wildcard", "riv* stone", {"option_name": "bm25"}),
+    # the excluded typo corrects to 'tower' (in every snippet), which
+    # must not be highlighted: highlight terms come from the positive
+    # part of the query only
+    ("highlight-fuzzy-not", "river stone -towxr",
+     {"option_name": "bm25", "highlight": True, "fuzzy": True,
+      "negation": True}),
+]
+
+
+def _strip(resp: dict) -> dict:
+    """The response without its timing fields."""
+    return {
+        k: v for k, v in resp.items() if k not in ("searchTime", "profile")
+    }
+
+
+def _assert_same_up_to_float(a: dict, b: dict) -> None:
+    """Equal responses, scores compared at rel 1e-9: a segment list
+    and the compacted index may sum a doc's term contributions in a
+    different order."""
+    a, b = _strip(a), _strip(b)
+    ta, tb = a.pop("textResult"), b.pop("textResult")
+    assert a == b
+    assert [{**r, "score": 0} for r in ta] == [{**r, "score": 0} for r in tb]
+    for ra, rb in zip(ta, tb):
+        assert math.isclose(ra["score"], rb["score"], rel_tol=1e-9)
+
+
+@pytest.mark.parametrize(
+    "query,kwargs", [r[1:] for r in REQUESTS], ids=[r[0] for r in REQUESTS]
+)
+def test_every_request_class_is_served_identically(served, query, kwargs):
+    kw = {"k": 10, **kwargs}
+    single = served.single.query_response(query, **kw)
+    assert single["textResult"], "the request must rank something"
+    assert _strip(served.one_segment.query_response(query, **kw)) == (
+        _strip(single)
+    )
+    _assert_same_up_to_float(
+        served.tiered.query_response(query, **kw),
+        served.compacted.query_response(query, **kw),
+    )
+    if kwargs.get("highlight"):
+        assert any("<em>" in r["chunkedBody"] for r in single["textResult"])
+        assert not any(
+            "<em>tower</em>" in r["chunkedBody"]
+            for r in single["textResult"]
+        )
+
+
+# query shapes whose match set differs from the OR union of the
+# positive terms
+FACET_SHAPES = [
+    ("title:alpha stone", {"negation": True}),
+    ("+river stone", {"negation": True}),
+    ("stone -title:alpha", {"negation": True}),
+    ("river stone", {"semantics": "and"}),
+    ("alpha", {"mode": "bm25f"}),
+    ("river", {"synonyms": True}),
+]
+
+
+@pytest.mark.parametrize(
+    "query,opts", FACET_SHAPES, ids=[q for q, _ in FACET_SHAPES]
+)
+def test_facets_count_the_result_match_set(served, query, opts):
+    """Every doc has one lang value, so the lang totals (all categories
+    returned) are the size of the match set the results rank."""
+    for eng in (served.single, served.tiered):
+        matched = eng.search_local(query, k=10**9, **opts)
+        got = eng.facet_counts(query, field="lang", top=100, **opts)
+        assert matched
+        assert sum(got.values()) == len(matched)
+
+
+def test_faceted_response_is_one_retrieval(served, monkeypatch):
+    """The page and the facet counts of a local response come from one
+    retrieval, and the page equals the unfaceted response's."""
+    for eng in (served.single, served.tiered):
+        kw = {"k": 10, "option_name": "bm25", "negation": True}
+        plain = eng.query_response("river stone -garden", **kw)
+        calls = []
+        serve = eng._serve_matches
+        monkeypatch.setattr(
+            eng, "_serve_matches",
+            lambda *a, **o: calls.append(a) or serve(*a, **o),
+        )
+        faceted = eng.query_response(
+            "river stone -garden", facets="lang", **kw
+        )
+        monkeypatch.undo()
+        assert len(calls) == 1
+        matched = eng.search_local(
+            "river stone -garden", k=10**9, negation=True
+        )
+        assert sum(faceted.pop("facets")["lang"].values()) == len(matched)
+        _assert_same_up_to_float(faceted, plain)
+
+
+@pytest.mark.parametrize("query,kwargs", [
+    ("-river", {"negation": True}),
+    ("+river -river", {"negation": True}),
+    ("+title:alpha -title:alpha", {"negation": True}),
+    ("zzzabsent", {}),
+    ("river stone", {"phrase": True}),
+    ('"river stone"', {}),
+    ("   ", {}),
+])
+def test_tiered_boost_is_rejected_for_every_query(served, query, kwargs):
+    """A segment list has no static rank: boost raises (HTTP 400) on
+    every query shape, also where retrieval would return early."""
+    with pytest.raises(ValueError, match="single-index"):
+        served.tiered.query_response(query, boost="static", **kwargs)
+    if not kwargs.get("phrase") and query.strip():
+        with pytest.raises(ValueError, match="single-index"):
+            served.tiered.search_local(query, boost="static", **kwargs)
+
+
+def test_modes_exist_once():
+    """Each driver-local mode lives on LocalServing only: neither engine
+    may define its own copy (a parallel path would drift), and the
+    tiered engine borrows no single-index method."""
+    from wiki_search_engine_spark import tiered
+    from wiki_search_engine_spark.engine import SearchEngine
+    from wiki_search_engine_spark.serving import LocalServing
+    from wiki_search_engine_spark.tiered import TieredEngine
+
+    shared = {n for n, v in vars(LocalServing).items() if callable(v)}
+    assert {"search_local", "search_mixed", "search_phrase",
+            "facet_counts", "query_response"} <= shared
+    for cls in (SearchEngine, TieredEngine):
+        assert not shared & set(vars(cls)), cls.__name__
+    assert not re.search(
+        r"SearchEngine\.\w+\(\s*self", inspect.getsource(tiered)
+    )

@@ -6,6 +6,9 @@ twin is operators/tokenize.py link_table).
 
 Spark-first shape, and how it survives 10^12 pages:
 
+- the edge list is materialized ONCE (persist + count): upstream of it
+  sits the whole html anchor extraction, which every later use — nodes,
+  out-degrees and each iteration's join — would otherwise re-run;
 - nodes / out-degrees are computed ONCE and cached; every iteration is
   one join (edges x current ranks on src — both sides partitioned by
   the join key, AQE-planned) and one hash aggregate (contributions by
@@ -48,7 +51,8 @@ def pagerank(
     d = float(damping)
     e = edges.select(
         F.col(src_col).alias("src"), F.col(dst_col).alias("dst")
-    )
+    ).persist()
+    e.count()
     nodes = (
         e.select(F.col("src").alias("node"))
         .unionByName(e.select(F.col("dst").alias("node")))
@@ -57,6 +61,7 @@ def pagerank(
     )
     n = nodes.count()
     if n == 0:
+        e.unpersist()
         return nodes.select(
             "node", F.lit(0.0).alias("rank")
         )
@@ -107,6 +112,7 @@ def pagerank(
         ranks = new_ranks
     nodes.unpersist()
     out_deg.unpersist()
+    e.unpersist()
     return ranks
 
 

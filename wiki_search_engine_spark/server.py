@@ -155,67 +155,16 @@ class _Handler(BaseHTTPRequestHandler):
         # &boost=static — additive PageRank authority boost on the
         # local serving path (needs the static_rank sidecar)
         boost = (qs.get("boost") or [""])[0].strip().lower()
-        kwargs = {}
-        if boost:
-            kwargs["boost"] = boost
-        if facets:
-            if not hasattr(self.server.engine, "facet_counts"):
-                self._send(
-                    400,
-                    {
-                        "success": False, "result": [],
-                        "error": "facet counts are single-index "
-                        "serving only",
-                    },
-                )
-                return
-            kwargs["facets"] = facets
-            kwargs["facet_top"] = facet_top
-        if negation:
-            kwargs["negation"] = True
-        if synonyms:
-            if not hasattr(self.server.engine, "_load_synonyms"):
-                self._send(
-                    400,
-                    {
-                        "success": False, "result": [],
-                        "error": "synonym expansion is unsupported by "
-                        "this engine",
-                    },
-                )
-                return
-            kwargs["synonyms"] = True
-        if highlight and hasattr(self.server.engine, "fuzzy_terms"):
-            kwargs["highlight"] = True
-        if fuzzy:
-            if not hasattr(self.server.engine, "fuzzy_terms"):
-                self._send(
-                    400,
-                    {
-                        "success": False, "result": [],
-                        "error": "fuzzy search is single-index only",
-                    },
-                )
-                return
-            kwargs["fuzzy"] = True
-        if phrase:
-            if not hasattr(self.server.engine, "search_phrase"):
-                self._send(
-                    400,
-                    {
-                        "success": False, "result": [],
-                        "error": "phrase search is single-index only",
-                    },
-                )
-                return
-            kwargs["phrase"] = True
         try:
             # &semantics=and — conjunctive retrieval, an extension
             # beyond the reference API (default 'or' is the reference's)
             resp = self.server.engine.query_response(
                 query, option_name=option, k=k,
                 path=self.server.path_mode, semantics=semantics,
-                page=page, per_page=per_page, **kwargs,
+                page=page, per_page=per_page, phrase=phrase, fuzzy=fuzzy,
+                highlight=highlight, negation=negation, synonyms=synonyms,
+                facets=facets or None, facet_top=facet_top,
+                boost=boost or None,
             )
         except FileNotFoundError as e:
             # phrase over an index without the sidecar: client error

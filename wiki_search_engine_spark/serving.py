@@ -1,0 +1,981 @@
+"""Driver-local serving: every query mode, written once.
+
+``SearchEngine`` (one index) and ``TieredEngine`` (a segment list) both
+inherit ``LocalServing``. Its modes — bag/OR, AND, ``+``MUST, ``-``NOT,
+``title:`` fields, BM25F, synonyms, the static boost, phrase, mixed
+quoted queries, facets and the reference response — read the index only
+through a small SOURCE that each engine implements:
+
+- ``n`` / ``avgdl`` / ``analyzer``: live corpus stats and the analyzer
+  name; ``overridden``: docs a later segment replaced or deleted (0 on a
+  single index, and on an append-only segment list);
+- ``analyze``, ``expand_query_terms`` (through the engine's
+  ``expand_wildcard``), ``fuzzy_terms``, ``_load_synonyms``;
+- ``_live_postings(terms)`` -> term -> (live df, [LiveList, ...]);
+- ``_live_title_rows(terms)``, ``_live_phrase_matches(text, slop)``,
+  ``_live_facet_arrays(field)``, ``_static_rank_arrays()`` (only where
+  ``SERVES_STATIC_BOOST``; a segment list rejects every boost request),
+  ``_has_positions()`` and ``lookup_docs(docids)``.
+
+Plain OR runs the block-max shard kernel (operators/wand.py
+``score_shard_topk``, which drops each list's tombstones and scales its
+bounds by ``ub_scale``) whenever every list's df is known without
+decoding (``overridden == 0``) and only the top k is asked for. Every
+other retrieval decodes the candidate lists once (``LiveList.arrays``),
+scores them per posting (``_scores``) and accumulates -> gates ->
+excludes in one helper (``_accumulate``); ``_top_k`` cuts the page. A
+faceted response keeps the full match set of that one retrieval: the
+facets count it and the page is cut from it.
+"""
+
+from __future__ import annotations
+
+import numpy as np
+
+from . import B, K1
+from .operators.codec import decode_posting_list, isin_sorted
+from .oracle_py.oracle import bm25_idf, tfidf_idf
+
+_NO_DOCS = np.empty(0, np.int64)
+_NO_VALUES = np.empty(0, np.float64)
+_NO_MATCHES = (_NO_DOCS, _NO_VALUES)
+
+
+class EmptyQueryError(ValueError):
+    """Reference returns HTTP 400 {success:false, error:'Empty query'}
+    for blank queries (backend/controllers/queryController.js:21-25)."""
+
+
+def sys_snapshot() -> dict:
+    """Driver-process memory snapshot mirroring the reference's
+    profiler sysSnapshot shape (backend/utils/profiler.js:20-29):
+    rss_mb / heapUsed_mb / heapTotal_mb / eventLoopDelay_ms. Values come
+    from /proc/self/status (VmRSS / VmData / VmSize); on platforms
+    without procfs the fields degrade to 0.0 rather than erroring a
+    query response."""
+    vals = {"VmRSS": 0.0, "VmData": 0.0, "VmSize": 0.0}
+    try:
+        with open("/proc/self/status") as f:
+            for line in f:
+                key = line.split(":")[0]
+                if key in vals:
+                    vals[key] = float(line.split()[1]) / 1024.0  # kB->MB
+    except OSError:
+        pass
+    return {
+        "rss_mb": round(vals["VmRSS"], 1),
+        "heapUsed_mb": round(vals["VmData"], 1),
+        "heapTotal_mb": round(vals["VmSize"], 1),
+        "eventLoopDelay_ms": 0,
+    }
+
+
+def option_mode(option_name: str | None) -> str:
+    """The scoring mode of a reference ``optionName``: lowercased,
+    'tfidf' by default and for anything unknown
+    (queryController.js:19)."""
+    mode = (option_name or "tfidf").lower()
+    return mode if mode in ("tfidf", "bm25", "bm25f") else "tfidf"
+
+
+def assemble_reference_response(
+    query: str,
+    option_name: str,
+    analyze,
+    get_ids,
+    lookup_docs,
+    page: int | None = None,
+    per_page: int = 10,
+    decorate_snippet=None,
+) -> dict:
+    """The ONE implementation of the reference HTTP response shape
+    (queryController.js:11-59).
+    ``get_ids(mode) -> [(docid, score), ...]`` supplies scoring;
+    ``lookup_docs(docids) -> rows`` supplies hydration; spans and the
+    sysSnapshot follow utils/profiler.js.
+
+    ``page`` enables SERVER-side pagination — the reference does it in
+    the client (react-app/src/App.js:145-147: startIndex =
+    (currentPage-1)*resultsPerPage, slice, resultsPerPage=10) over the
+    full top-k it downloaded; passing page replays that exact slice
+    over BOTH textResult and imageResult here and adds totalResults /
+    page / resultsPerPage so a pager can render without shipping all k
+    hydrated rows per request. page=None (default) keeps the reference
+    API byte-shape."""
+    import time
+
+    mode = option_mode(option_name)
+    t_all = time.time()
+    measures = []
+
+    def span(name, fn):
+        t0 = time.time()
+        out = fn()
+        measures.append(
+            {"name": name,
+             "duration_ms": round(1000 * (time.time() - t0), 3)}
+        )
+        return out
+
+    try:
+        span(
+            "validate_input",
+            lambda: (_ for _ in ()).throw(EmptyQueryError("Empty query"))
+            if not query or not query.strip()
+            else None,
+        )
+        terms = span("stem_query", lambda: analyze(query))
+    except EmptyQueryError:
+        return {"success": False, "result": [], "error": "Empty query"}
+    ids = span("get_documents", lambda: get_ids(mode))
+    id_rows = [(int(d), float(s)) for d, s in ids]
+    score_map = dict(id_rows)
+    # result hydration is a point lookup over the k result ids — never a
+    # second search and never a docs-table scan/join
+    docs = span(
+        "fetch_results",
+        lambda: sorted(
+            lookup_docs([d for d, _ in id_rows]),
+            key=lambda r: (-score_map[r["docid"]], r["docid"]),
+        ),
+    )
+    text_result = [
+        {
+            "docId": r["title"],
+            "chunkedBody": (
+                r["snippet"]
+                if decorate_snippet is None
+                else decorate_snippet(r["snippet"])
+            ),
+            "url": r["url"],
+            "file_id": str(r["docid"]),
+            "score": score_map[r["docid"]],
+        }
+        for r in docs
+    ]
+    image_result = span(
+        "get_image_filenames",
+        lambda: [
+            img["image_id"]
+            for r in docs
+            for img in (r.get("images") or [])
+        ],
+    )
+    measures.append(
+        {"name": "total_request",
+         "duration_ms": round(1000 * (time.time() - t_all), 3)}
+    )
+    resp = {
+        "imageResult": image_result,
+        "textResult": text_result,
+        "searchTime": round(time.time() - t_all, 3),
+        "profile": {
+            "measures": measures,
+            "sysSnapshot": sys_snapshot(),
+        },
+        "query_terms": terms,
+    }
+    if page is not None:
+        # App.js:145-147 verbatim: slice(start, start+per) on whichever
+        # list the client is viewing — both are sliced consistently so
+        # either view paginates; hydration above already happened over
+        # all k ids, matching what the client-side scheme fetched
+        page = max(1, int(page))
+        per_page = max(1, int(per_page))
+        start = (page - 1) * per_page
+        resp["totalResults"] = {
+            "text": len(text_result), "image": len(image_result),
+        }
+        resp["page"] = page
+        resp["resultsPerPage"] = per_page
+        resp["textResult"] = text_result[start:start + per_page]
+        resp["imageResult"] = image_result[start:start + per_page]
+    return resp
+
+
+class LiveList:
+    """One term's posting list in one docid-range shard (``salt``) of
+    one index: its encoded ``blocks``, the sorted docids a later
+    segment overrides (``tombs``) and the factor that keeps the stored
+    block-max bounds sound at the live avgdl (``ub_scale``).
+    ``arrays()`` decodes the list once and drops the tombstoned
+    postings."""
+
+    __slots__ = ("salt", "blocks", "tombs", "ub_scale", "_arrays")
+
+    def __init__(self, salt, blocks, tombs=_NO_DOCS, ub_scale=1.0):
+        self.salt = salt
+        self.blocks = blocks
+        self.tombs = tombs
+        self.ub_scale = ub_scale
+        self._arrays = None
+
+    def arrays(self):
+        """(docids, tfs, doc_lens) of the live postings."""
+        if self._arrays is None:
+            d, tf, dl = decode_posting_list([
+                b if isinstance(b, dict) else b.asDict()
+                for b in self.blocks
+            ])
+            if self.tombs.size and d.size:
+                keep = ~isin_sorted(self.tombs, d)
+                d, tf, dl = d[keep], tf[keep], dl[keep]
+            self._arrays = (d, tf, dl)
+        return self._arrays
+
+
+def _decode(lists):
+    """(docids, tfs, doc_lens) of one term's live lists, concatenated;
+    tf and doc_len as float64 for scoring."""
+    if not lists:
+        return _NO_DOCS, _NO_VALUES, _NO_VALUES
+    parts = [ll.arrays() for ll in lists]
+    return (
+        np.concatenate([p[0] for p in parts]),
+        np.concatenate([p[1] for p in parts]).astype(np.float64),
+        np.concatenate([p[2] for p in parts]).astype(np.float64),
+    )
+
+
+def _top_k(docs, scores, k):
+    """[(docid, score)] of the k best by (score desc, docid asc); only
+    the docs scoring at least the k-th best score are sorted."""
+    if 0 < k < docs.size:
+        sel = scores >= -np.partition(-scores, k - 1)[k - 1]
+        docs, scores = docs[sel], scores[sel]
+    idx = np.lexsort((docs, -scores))[:k]
+    return [(int(docs[i]), float(scores[i])) for i in idx]
+
+
+class LocalServing:
+    """Every driver-local serving mode, over the live-postings source
+    its subclass implements (see the module doc)."""
+
+    # Lucene-style cap on wildcard expansions: highest-df matches win
+    # (suggest already ranks by df desc), so a short prefix over a
+    # 10^9-term lexicon can't explode the query
+    MAX_WILDCARD_EXPANSIONS = 128
+
+    # BM25F title-field weight (mode='bm25f'): a title occurrence
+    # counts this many times (weight 1 == plain BM25 exactly; see
+    # operators/scoring.py score_bm25f for the formula and the
+    # reference parity notes)
+    DEFAULT_TITLE_WEIGHT = 2.0
+
+    # additive static-authority boost weight (boost='static'):
+    # score' = score + W * ln(1 + N * pagerank) — the same formula the
+    # oracle-checked bm25_static_rank entry replays in DuckDB
+    STATIC_BOOST_WEIGHT = 2.0
+
+    # whether the source has a static_rank sidecar (_static_rank_arrays);
+    # a segment list has none — the rule for per-segment PageRank is
+    # open — so every boost request to it raises, whatever the query
+    SERVES_STATIC_BOOST = True
+
+    def _reject_unserved_boost(self, boost) -> None:
+        if boost and not self.SERVES_STATIC_BOOST:
+            raise ValueError("boost is single-index serving only")
+
+    # -- scoring primitives ------------------------------------------------
+    def _scores(self, tf, dl, df: int, mode: str):
+        """Per-posting contribution of one term (or pseudo-term) with
+        ``df`` live docs: BM25 for mode 'bm25', TF-IDF otherwise —
+        the reference formulas (mongoService.js:8-58)."""
+        if mode != "bm25":
+            return tf * tfidf_idf(self.n, df)
+        return bm25_idf(self.n, df) * tf * (K1 + 1.0) / (
+            tf + K1 * (1.0 - B + B * dl / self.avgdl)
+        )
+
+    def _accumulate(self, parts, gates=(), exclude=_NO_DOCS, rank=None):
+        """(docids, scores) of every match: accumulate (docids, scores)
+        ``parts`` per doc, keep the docs present in every ``gates``
+        array (AND / MUST), drop ``exclude`` (NOT) and add the static
+        boost when ``rank`` (docid-sorted ids, ranks) is given."""
+        if not parts:
+            return _NO_MATCHES
+        uniq, inv = np.unique(
+            np.concatenate([p[0] for p in parts]), return_inverse=True
+        )
+        acc = np.zeros(uniq.size)
+        np.add.at(acc, inv, np.concatenate([p[1] for p in parts]))
+        keep = np.ones(uniq.size, bool)
+        for g in gates:
+            keep &= np.isin(uniq, g)
+        if exclude.size:
+            keep &= ~np.isin(uniq, exclude)
+        uniq, acc = uniq[keep], acc[keep]
+        if rank is not None and rank[0].size:
+            rd, rr = rank
+            pos = np.minimum(np.searchsorted(rd, uniq), rd.size - 1)
+            hit = rd[pos] == uniq
+            boost = np.zeros(uniq.size)
+            boost[hit] = self.STATIC_BOOST_WEIGHT * np.log1p(
+                float(self.n) * rr[pos[hit]]
+            )
+            acc = acc + boost
+        return uniq, acc
+    def _excluded_docids_by_salt(self, terms: list[str]) -> dict:
+        """salt -> sorted docids whose LIVE postings hold any of
+        ``terms`` — the NOT set, grouped by docid-range shard. Cost
+        tracks those terms' posting sizes (the reads a positive query on
+        them would do), never the corpus."""
+        by_salt: dict = {}
+        for _df, lists in self._live_postings(terms).values():
+            for ll in lists:
+                by_salt.setdefault(ll.salt, []).append(ll.arrays()[0])
+        return {s: np.unique(np.concatenate(v)) for s, v in by_salt.items()}
+
+    def _live_docids(self, terms) -> np.ndarray:
+        """Sorted docids whose live postings hold any of ``terms``."""
+        if not terms:
+            return _NO_DOCS
+        by_salt = self._excluded_docids_by_salt(list(dict.fromkeys(terms)))
+        return (
+            np.unique(np.concatenate(list(by_salt.values())))
+            if by_salt else _NO_DOCS
+        )
+
+    # -- query parsing -----------------------------------------------------
+    def _analyze_or_empty(self, text: str) -> list[str]:
+        """Analyzed terms of one boolean clause; [] when it is blank."""
+        try:
+            return self.analyze(text) if text.strip() else []
+        except EmptyQueryError:
+            return []
+
+    def expand_query_terms(self, query: str) -> list[str]:
+        """Wildcard-aware query analysis: a token containing ``*``
+        (trailing, leading, or infix — see ``expand_wildcard``)
+        expands to the highest-df lexicon terms matching the pattern,
+        capped at MAX_WILDCARD_EXPANSIONS; everything else goes
+        through the normal analyzer. Wildcard patterns match INDEX
+        terms (i.e. stems on a stemmed index) — the standard
+        multi-term-query contract. Order-preserving dedupe, like
+        analyze_query."""
+        parts = (query or "").split()
+        wild = [p for p in parts if "*" in p and len(p) > 1]
+        rest = " ".join(p for p in parts if p not in set(wild))
+        terms = self.analyze(rest) if rest.strip() else []
+        for w in wild:
+            try:
+                matches = self.expand_wildcard(w)
+            except EmptyQueryError:
+                continue
+            terms.extend(t for t, _df in matches)
+        return list(dict.fromkeys(terms))
+
+    def _parse_field_clauses(
+        self, should_q: str, must_q: str, neg_q: str
+    ) -> tuple:
+        """Extract ``title:``-scoped terms from already-split boolean
+        clause texts. Returns (plain_should, plain_must, plain_neg,
+        t_should, t_must, t_not, contradiction) — field tokens run
+        through the index analyzer (a multi-word source token can
+        yield several field terms) and the Lucene overlap rule applies
+        within the title namespace (+title:t -title:t contradicts;
+        SHOULD title:t -title:t drops the SHOULD occurrence)."""
+        from .functions.analyzer import (
+            resolve_boolean_overlap, split_field_terms,
+        )
+
+        should_q, f_s = split_field_terms(should_q)
+        must_q, f_m = split_field_terms(must_q)
+        neg_q, f_n = split_field_terms(neg_q)
+
+        def _an(toks):
+            out = []
+            for t in toks:
+                if "*" in t:
+                    raise ValueError(
+                        "wildcards are not supported in field-scoped "
+                        "terms"
+                    )
+                out.extend(self._analyze_or_empty(t))
+            return list(dict.fromkeys(out))
+
+        t_s, t_m, t_n = _an(f_s), _an(f_m), _an(f_n)
+        pos, contra = resolve_boolean_overlap(
+            list(dict.fromkeys(t_s + t_m)), t_m, t_n
+        )
+        t_s = [t for t in t_s if t in pos and t not in t_m]
+        return should_q, must_q, neg_q, t_s, t_m, t_n, contra
+
+    # -- bag-of-words modes ------------------------------------------------
+    def search_local(
+        self, query: str, k: int = 50, mode: str = "bm25",
+        semantics: str = "or", fuzzy: bool = False,
+        negation: bool = False, synonyms: bool = False,
+        boost: str | None = None,
+    ) -> list[tuple[int, float]]:
+        """Serve a query entirely on the DRIVER: pyarrow reads of the
+        terms' bucket directories (row-group pruned on the term-sorted
+        files), NumPy scoring and a driver-side merge — zero Spark
+        jobs, rank-identical to the distributed paths and, over a
+        segment list, to the compacted index (pytest-enforced).
+
+        This is the search-head serving mode: a Spark job costs ~0.5s of
+        scheduling alone, which dwarfs the reference server's per-query
+        wall (backend/services/mongoService.js). Use the distributed
+        'wand' path when candidate posting lists exceed driver memory —
+        at 10^12 docs that's head terms, exactly where the cluster earns
+        its keep; the two paths share kernel and index format.
+
+        ``semantics='and'`` keeps only docs whose live postings hold
+        every term. ``negation`` enables the Lucene operators
+        (opt-in, so legacy hyphenated queries keep the reference's bag
+        reading): ``-term`` NOT drops docs before the top-k cut,
+        ``+term`` MUST gates membership, ``title:term`` scores on the
+        title field. ``fuzzy`` swaps zero-df terms for their best spell
+        correction (``fuzzy_terms``); ``synonyms`` scores each term's
+        sidecar group as one pseudo-term; ``boost='static'`` adds the
+        PageRank authority boost."""
+        return _top_k(
+            *self._matches(
+                query, k, mode, semantics, fuzzy, negation, synonyms, boost
+            ),
+            k,
+        )
+
+    def _matches(
+        self, query, k, mode, semantics="or", fuzzy=False, negation=False,
+        synonyms=False, boost=None, also_exclude=(),
+    ):
+        """(docids, scores) behind ``search_local``: every match when
+        ``k`` is None, else a set holding the top k. ``also_exclude``
+        (analyzed terms) drops docs after the boolean overlap rule —
+        the ``-term``s of a mixed quoted query."""
+        from .functions.analyzer import resolve_boolean_overlap, split_boolean
+
+        self._reject_unserved_boost(boost)
+        excluded: list[str] = []
+        required: list[str] = []
+        t_should: list[str] = []
+        t_must: list[str] = []
+        t_not: list[str] = []
+        if negation:
+            should_q, must_q, neg_q = split_boolean(query)
+            if "title:" in (query or "").lower():
+                (
+                    should_q, must_q, neg_q,
+                    t_should, t_must, t_not, f_contra,
+                ) = self._parse_field_clauses(should_q, must_q, neg_q)
+                if f_contra:
+                    return _NO_MATCHES
+            excluded = self._analyze_or_empty(neg_q)
+            required = self._analyze_or_empty(must_q)
+            query = f"{should_q} {must_q}".strip()
+            if not query and not (t_should or t_must):
+                return _NO_MATCHES  # pure-NOT query ranks nothing
+        has_fields = bool(t_should or t_must or t_not)
+        if not (query or "").strip():
+            if not has_fields:
+                # reference contract: a blank query RAISES (the HTTP
+                # 400 'Empty query' body) — only field extraction may
+                # legitimately empty the bag part
+                self.analyze(query)
+            terms = []
+        else:
+            terms = (
+                self.expand_query_terms(query)
+                if "*" in query
+                else self.analyze(query)
+            )
+        if (not terms and not (t_should or t_must)) or not self.n:
+            return _NO_MATCHES
+        if fuzzy:
+            terms, _ = self.fuzzy_terms(terms)
+        terms, contradiction = resolve_boolean_overlap(
+            terms,
+            terms if semantics == "and" else required,
+            excluded,
+        )
+        if contradiction or (not terms and not has_fields):
+            return _NO_MATCHES  # +t -t contradiction, or nothing left
+        required = [t for t in required if t in terms]
+        excluded = [*excluded, *also_exclude]
+        if has_fields and (
+            semantics == "and" or synonyms or mode == "bm25f"
+            or fuzzy or boost
+        ):
+            raise ValueError(
+                "field-scoped terms (title:) compose with OR and "
+                "+/- only — not with semantics=and, synonyms, "
+                "bm25f, fuzzy, or boost"
+            )
+        rank = None
+        if boost:
+            if boost != "static":
+                raise ValueError(
+                    f"unknown boost {boost!r}; supported: 'static'"
+                )
+            rank = self._static_rank_arrays()
+            if (
+                semantics == "and" or required or synonyms
+                or mode == "bm25f"
+            ):
+                raise ValueError(
+                    "boost=static composes with plain OR (and -term "
+                    "NOT) retrieval only"
+                )
+        if synonyms and self._load_synonyms():
+            if semantics == "and" or required:
+                raise ValueError(
+                    "synonyms compose with OR/SHOULD semantics only (a "
+                    "synonym group IS a disjunction)"
+                )
+            if mode == "bm25f":
+                raise ValueError(
+                    "bm25f does not compose with synonym groups yet — "
+                    "pick one of mode=bm25f / synonyms=true"
+                )
+            return self._synonym_matches(terms, mode, excluded)
+        if mode == "bm25f":
+            if semantics == "and" or required:
+                raise ValueError(
+                    "bm25f serves OR/SHOULD semantics (title-boosted "
+                    "accumulation); AND/MUST composition is not "
+                    "supported"
+                )
+            return self._bm25f_matches(terms, excluded)
+        gate = terms if semantics == "and" else required
+        if (
+            k is None or has_fields or gate or rank is not None
+            or self.overridden
+        ):
+            return self._decoded_matches(
+                terms, gate, excluded, mode, t_should, t_must, t_not, rank,
+            )
+        hits = self._search_kernel(terms, excluded, k, mode)
+        return (
+            np.array([d for d, _ in hits], np.int64),
+            np.array([s for _, s in hits], np.float64),
+        )
+
+    def _search_kernel(self, terms, excluded, k, mode):
+        """Plain OR through the block-max shard kernel, one call per
+        docid-range shard: every live list of the shard (one per term
+        and segment) with its tombstones, the NOT docids of the shard
+        merged in — excluded docs drop at decode time, BEFORE the top-k
+        cut, so the heap stays k-sized however common the excluded term
+        is. Needs each term's live df up front (``overridden == 0``)."""
+        from .operators.wand import merge_topk, score_shard_topk
+
+        exc_by_salt = (
+            self._excluded_docids_by_salt(excluded) if excluded else {}
+        )
+        by_salt: dict = {}
+        for df, lists in self._live_postings(terms).values():
+            if df <= 0:
+                continue
+            for ll in lists:
+                tombs = ll.tombs
+                exc = exc_by_salt.get(ll.salt)
+                if exc is not None:
+                    tombs = np.union1d(tombs, exc) if tombs.size else exc
+                by_salt.setdefault(ll.salt, []).append({
+                    "df": df, "blocks": ll.blocks, "tombs": tombs,
+                    "ub_scale": ll.ub_scale,
+                })
+        return merge_topk(
+            [
+                score_shard_topk(tls, self.n, self.avgdl, k, mode)
+                for tls in by_salt.values()
+            ],
+            k,
+        )
+
+    def _decoded_matches(
+        self, terms, gate, excluded, mode,
+        t_should=(), t_must=(), t_not=(), rank=None,
+    ):
+        """Decoded exhaustive accumulate: every bag term's live
+        postings score in full; ``gate`` terms (all terms under AND, the
+        ``+`` terms under MUST) must hold for a doc to rank, ``excluded``
+        terms drop docs. ``title:`` clauses score on the TITLE field —
+        tf = title occurrences, df = docs whose title holds the term
+        (the live title row count), dl = the doc's BODY length — with
+        ``+title:`` gating and ``-title:`` excluding on title
+        containment. ``rank`` adds the static boost (block-max pruning
+        would be unsound under it: the boost can lift a doc past an
+        unboosted bound)."""
+        live = self._live_postings(terms) if terms else {}
+        fields = list(dict.fromkeys([*t_should, *t_must, *t_not]))
+        trows = self._live_title_rows(fields) if fields else {}
+        parts, gates = [], []
+        for t in dict.fromkeys(terms):
+            df, lists = live.get(t, (0, []))
+            if df <= 0:
+                if t in gate:
+                    return _NO_MATCHES  # an absent required term
+                continue
+            d, tf, dl = _decode(lists)
+            parts.append((d, self._scores(tf, dl, df, mode)))
+            if t in gate:
+                gates.append(d)
+        for t in dict.fromkeys([*t_should, *t_must]):
+            td, ttf, tdl = trows[t]
+            if not td.size:
+                if t in t_must:
+                    return _NO_MATCHES  # absent required title term
+                continue
+            parts.append((td, self._scores(ttf, tdl, int(td.size), mode)))
+            if t in t_must:
+                gates.append(td)
+        exclude = np.concatenate(
+            [self._live_docids(excluded)] + [trows[t][0] for t in t_not]
+        )
+        return self._accumulate(parts, gates, exclude, rank)
+
+    def _synonym_matches(self, terms: list[str], mode: str, excluded=None):
+        """SynonymQuery scoring: each query term's group (itself +
+        sidecar synonyms) scores as ONE pseudo-term — per-doc tf summed
+        over members (and segments), df = live docs containing ANY
+        member (the true disjunction df; operators/scoring.py
+        score_synonyms docstring has the Lucene comparison).
+        Rank-identical to the distributed operator (pytest)."""
+        syn = self._load_synonyms()
+        groups = [
+            list(dict.fromkeys([t] + syn.get(t, [])))
+            for t in dict.fromkeys(terms)
+        ]
+        live = self._live_postings(sorted({g for grp in groups for g in grp}))
+        parts = []
+        for grp in groups:
+            d, tf, dl = _decode([ll for g in grp for ll in live[g][1]])
+            if not d.size:
+                continue
+            uniq, inv = np.unique(d, return_inverse=True)
+            tf_sum = np.zeros(uniq.size)
+            np.add.at(tf_sum, inv, tf)
+            dl_u = np.zeros(uniq.size)
+            dl_u[inv] = dl  # constant per doc
+            parts.append(
+                (uniq, self._scores(tf_sum, dl_u, int(uniq.size), mode))
+            )
+        return self._accumulate(parts, exclude=self._live_docids(excluded))
+
+    def _search_local_bm25f(
+        self, terms: list[str], k: int,
+        excluded: list[str] | None = None,
+        title_weight: float | None = None,
+    ) -> list[tuple[int, float]]:
+        """Top ``k`` of ``_bm25f_matches`` at a chosen title weight."""
+        return _top_k(*self._bm25f_matches(terms, excluded, title_weight), k)
+
+    def _bm25f_matches(self, terms, excluded=None, title_weight=None):
+        """BM25F: per term, live body postings merge with the live title
+        sidecar rows — tf' = tf + (w-1)*tf_title, title-only matches
+        normalize against their stored BODY length, df = docs with
+        tf' > 0 (== body df at w == 1, preserving the plain-BM25
+        identity). Exclusion (NOT) applies to body-posting membership
+        after accumulation, like the synonyms kernel. Rank-identical
+        to the distributed operator (pytest)."""
+        w = (
+            self.DEFAULT_TITLE_WEIGHT
+            if title_weight is None
+            else float(title_weight)
+        )
+        uniq_terms = list(dict.fromkeys(terms))
+        live = self._live_postings(uniq_terms)
+        trows = self._live_title_rows(uniq_terms)
+        parts = []
+        for t in uniq_terms:
+            d, tf, dl = _decode(live[t][1])
+            order = np.argsort(d, kind="stable")
+            d, tf, dl = d[order], tf[order], dl[order]
+            td, ttf, tdl = trows[t]
+            if w != 1.0 and td.size:
+                in_body = isin_sorted(d, td)
+                pos = np.searchsorted(d, td[in_body])
+                tf[pos] += (w - 1.0) * ttf[in_body]
+                d = np.concatenate([d, td[~in_body]])
+                tf = np.concatenate([tf, (w - 1.0) * ttf[~in_body]])
+                dl = np.concatenate([dl, tdl[~in_body]])
+            keep = tf > 0
+            d, tf, dl = d[keep], tf[keep], dl[keep]
+            if d.size:
+                parts.append((d, self._scores(tf, dl, int(d.size), "bm25")))
+        return self._accumulate(parts, exclude=self._live_docids(excluded))
+
+    # -- positional modes --------------------------------------------------
+    def _phrase_part(self, text: str, slop: int, mode: str):
+        """(docids, scores, phrase tfs) of one phrase's live matches
+        (``_live_phrase_matches``) scored as a pseudo-term against the
+        live N/avgdl; None when a phrase term is absent."""
+        m = self._live_phrase_matches(text, slop=slop)
+        if m is None:
+            return None
+        docs, dls, tfs = m
+        scores = self._scores(
+            tfs.astype(np.float64), dls.astype(np.float64),
+            int(docs.size), mode,
+        )
+        return docs, scores, tfs
+
+    def search_phrase(
+        self, phrase: str, k: int = 50, slop: int = 0
+    ) -> list[tuple[int, float, int]]:
+        """Exact-phrase (or ``slop`` proximity) top-k on the DRIVER from
+        the positional sidecar (build with positions=True), scored as a
+        BM25 pseudo-term — zero Spark jobs, zero corpus access. Returns
+        [(docid, score, phrase_tf)] by (score desc, docid asc); [] when
+        any phrase term is absent. Rank/value identity with the
+        corpus-scan operator (operators/phrase.py) and with the
+        compacted index is pytest-enforced."""
+        m = self._phrase_part(phrase, slop, "bm25")
+        if m is None:
+            return []
+        docs, scores, tfs = m
+        tf_of = dict(zip(docs.tolist(), tfs.tolist()))
+        return [
+            (d, s, int(tf_of[d])) for d, s in _top_k(docs, scores, k)
+        ]
+
+    def search_mixed(
+        self, query: str, k: int = 50, mode: str = "bm25",
+        negation: bool = False,
+    ) -> list[tuple[int, float]]:
+        """Mixed quoted-phrase query on the DRIVER: every
+        double-quoted span is an exact-phrase REQUIREMENT (conjunctive
+        filter, scored as a pseudo-term via the positional sidecar);
+        the remaining bag terms add their ordinary contributions (OR,
+        never expanding the candidate set). ``negation`` drops the docs
+        of ``-term`` tokens before the top-k cut (quoted spans are never
+        negated — Lucene parity: NOT applies to terms). A quote-free
+        query is served as by search_local. Zero Spark jobs; rank/value
+        identity with operators/phrase.py mixed_bm25 is
+        pytest-enforced."""
+        return _top_k(*self._mixed_matches(query, k, mode, negation), k)
+
+    def _mixed_matches(self, query, k, mode, negation):
+        """(docids, scores) behind ``search_mixed``: every match when
+        ``k`` is None, else a set holding the top k."""
+        from .functions.analyzer import split_negations
+        from .operators.phrase import parse_query
+
+        neg_terms: list[str] = []
+        if negation:
+            query, neg_q = split_negations(query)
+            neg_terms = self._analyze_or_empty(neg_q)
+        bag_text, phrases = parse_query(query)
+        if not phrases:
+            return self._matches(query, k, mode, also_exclude=neg_terms)
+        cand = pscore = None
+        for ptext, pslop in phrases:
+            m = self._phrase_part(ptext, pslop, mode)
+            if m is None:
+                return _NO_MATCHES
+            docs, ps, _tfs = m
+            if cand is None:
+                cand, pscore = docs, ps
+                continue
+            keep = np.isin(cand, docs, assume_unique=True)
+            cand, pscore = cand[keep], pscore[keep]
+            if cand.size == 0:
+                return _NO_MATCHES
+            pscore = pscore + ps[np.isin(docs, cand, assume_unique=True)]
+        bag_terms = self.analyze(bag_text) if bag_text else []
+        live = self._live_postings(bag_terms) if bag_terms else {}
+        for t in dict.fromkeys(bag_terms):
+            df, lists = live[t]
+            if df <= 0:
+                continue
+            d, tf, dl = _decode(lists)
+            sel = isin_sorted(cand, d)
+            if sel.any():
+                pscore[np.searchsorted(cand, d[sel])] += self._scores(
+                    tf[sel], dl[sel], df, mode
+                )
+        keep = ~np.isin(cand, self._live_docids(neg_terms))
+        return cand[keep], pscore[keep]
+
+    # -- serving -----------------------------------------------------------
+    def _serve_matches(
+        self, query: str, k, mode: str, semantics: str = "or",
+        phrase: bool = False, fuzzy: bool = False, negation: bool = False,
+        synonyms: bool = False, boost: str | None = None,
+    ):
+        """(docids, scores) behind a response — every match when ``k``
+        is None, else a set holding the top k: exact phrase, a mixed
+        quoted query (quotes auto-route to mixed phrase semantics WHEN
+        the positional sidecar exists; without it the analyzer strips
+        them -> bag-of-words, so existing indexes never start erroring
+        on quoted input), or bag-of-words."""
+        if phrase:
+            m = self._phrase_part(query, 0, "bm25")
+            return _NO_MATCHES if m is None else m[:2]
+        if '"' in (query or "") and self._has_positions():
+            return self._mixed_matches(query, k, mode, negation)
+        return self._matches(
+            query, k, mode, semantics, fuzzy, negation, synonyms, boost
+        )
+
+    def _facet_totals(self, docids, field: str, top: int) -> dict:
+        """Per-value doc counts of ``field`` over ``docids`` from the
+        cached doc-values (``_live_facet_arrays``). A null value counts
+        under ``""``; ``top`` caps the categories (count desc, value asc
+        — Lucene facet order)."""
+        parts, cats = self._live_facet_arrays(field)
+        matched = np.unique(docids)
+        totals = np.zeros(len(cats), np.int64)
+        for fd, codes in parts:
+            hit = isin_sorted(fd, matched)
+            totals += np.bincount(
+                codes[np.searchsorted(fd, matched[hit])],
+                minlength=len(cats),
+            )
+        ranked = sorted(
+            (
+                (("" if c is None else c), int(n))
+                for c, n in zip(cats, totals)
+                if n > 0
+            ),
+            key=lambda kv: (-kv[1], kv[0]),
+        )
+        return dict(ranked[: max(1, int(top))])
+
+    def facet_counts(
+        self, query: str, field: str = "lang", negation: bool = False,
+        top: int = 100, mode: str = "bm25", **opts,
+    ) -> dict:
+        """Per-facet LIVE doc counts over the FULL match set — exactly
+        the docs the results are ranked from (the same retrieval with
+        no top-k cut; ``opts`` are its options, e.g. ``semantics``,
+        ``synonyms``: ``title:``, ``+must``, ``-not``, AND, BM25F
+        title-only matches and synonym members all count as they
+        match), NOT just the top-k page: the search-head companion the
+        reference's UI paginates blindly without. Zero Spark jobs: facet
+        values come from cached doc-values, so over a segment list
+        tombstoned docs never count and the result equals the compacted
+        index's (pytest). At scales where the facet column no longer
+        fits the driver, the distributed twin is the facet_counts entry
+        operator (same semantics, one Spark job)."""
+        docs, _scores = self._serve_matches(
+            query, None, mode, negation=negation, **opts
+        )
+        return self._facet_totals(docs, field, top)
+
+    def query_response(
+        self,
+        query: str,
+        option_name: str = "tfidf",
+        k: int = 50,
+        path: str = "local",
+        semantics: str = "or",
+        page: int | None = None,
+        per_page: int = 10,
+        phrase: bool = False,
+        fuzzy: bool = False,
+        highlight: bool = False,
+        negation: bool = False,
+        synonyms: bool = False,
+        facets: str | None = None,
+        facet_top: int = 100,
+        boost: str | None = None,
+    ) -> dict:
+        """The reference's full HTTP response shape
+        (backend/controllers/queryController.js:11-59):
+
+        - empty/whitespace query -> {"success": False, "result": [],
+          "error": "Empty query"} (the exact 400 body,
+          queryController.js:25);
+        - optionName defaults to 'tfidf', lowercased
+          (queryController.js:19);
+        - otherwise {"imageResult", "textResult", "searchTime",
+          "profile": {"measures": [{name, duration_ms}, ...],
+          "sysSnapshot": {rss_mb, heapUsed_mb, heapTotal_mb,
+          eventLoopDelay_ms}}} with per-stage spans mirroring
+          utils/profiler.js:8-29 (validate_input / stem_query /
+          get_documents / fetch_results / get_image_filenames /
+          total_request; connect_to_db has no analogue — there is no
+          connection pool). sysSnapshot maps Node's process.memoryUsage
+          (profiler.js:21-29) to the driver process: rss_mb = VmRSS,
+          heapUsed_mb = VmData, heapTotal_mb = VmSize from
+          /proc/self/status; eventLoopDelay_ms pinned 0 as in the
+          reference.
+
+        ``path='local'`` (default) scores driver-side with zero Spark
+        jobs; any other path routes bag-of-words queries to the
+        engine's distributed ``search_ids``. Extension fields appear
+        only when requested: ``corrections`` (fuzzy, when something was
+        corrected) and ``facets`` (counts over the results' full match
+        set)."""
+        from .functions.analyzer import split_negations
+
+        self._reject_unserved_boost(boost)
+        mixed = '"' in (query or "") and self._has_positions()
+        if fuzzy and path != "local":
+            raise ValueError(
+                "fuzzy (did-you-mean) is served by the local path"
+            )
+        if boost:
+            if path != "local":
+                raise ValueError(
+                    "boost=static is served by the local path (the "
+                    "distributed twin is the bm25_static_rank plan)"
+                )
+            if phrase or mixed:
+                raise ValueError(
+                    "boost=static composes with bag-of-words retrieval "
+                    "only (not phrase/mixed queries)"
+                )
+        opts = dict(
+            semantics=semantics, phrase=phrase, fuzzy=fuzzy,
+            negation=negation, synonyms=synonyms,
+        )
+        fields = [f.strip() for f in (facets or "").split(",") if f.strip()]
+        matched = []  # the local retrieval's full match set, for facets
+
+        def get_ids(mode):
+            if path != "local" and not (phrase or mixed):
+                return [
+                    (r["docid"], r["score"])
+                    for r in self.search_ids(
+                        query, k=k, mode=mode, path=path,
+                        semantics=semantics, negation=negation,
+                        synonyms=synonyms,
+                    ).collect()
+                ]
+            # with facets the retrieval keeps every match (no top-k
+            # pruning): the page and the counts come from one pass
+            docs, scores = self._serve_matches(
+                query, None if fields else k, mode, boost=boost, **opts
+            )
+            matched.append(docs)
+            return _top_k(docs, scores, k)
+
+        decorate = None
+        if highlight:
+            from .functions.textstats import highlight_snippet
+
+            # highlight/corrections analyze the POSITIVE part only — an
+            # excluded term never appears in results
+            hl_query = split_negations(query)[0] if negation else query
+            hterms = set(self.analyze(hl_query))
+            if fuzzy:
+                hterms |= set(self.fuzzy_terms(self.analyze(hl_query))[0])
+
+            def decorate(s, _t=frozenset(hterms)):
+                return highlight_snippet(s, _t, self.analyzer)
+
+        resp = assemble_reference_response(
+            query, option_name, self.analyze, get_ids, self.lookup_docs,
+            page=page, per_page=per_page, decorate_snippet=decorate,
+        )
+        if resp.get("success") is False:
+            return resp
+        if fuzzy:
+            _t, corr = self.fuzzy_terms(self.analyze(query))
+            if corr:
+                resp["corrections"] = corr
+        if fields:
+            # the distributed path ranks only the top k: its match set
+            # is one local retrieval more
+            docs = matched[0] if matched else self._serve_matches(
+                query, None, option_mode(option_name), **opts
+            )[0]
+            resp["facets"] = {
+                f: self._facet_totals(docs, f, facet_top) for f in fields
+            }
+        return resp
