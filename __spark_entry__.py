@@ -3792,7 +3792,7 @@ def q_field_title_bm25(spark, sf_dir):
     pseudo-field (first 8 raw whitespace tokens — the reference's
     title-on-line-1 analogue), both through the same exhaustive
     scorer; df per tagged term is its live row count
-    (engine._search_ids_fielded is the serving twin)."""
+    (serving.ServingCore._fielded_ids is the serving twin)."""
     from wiki_search_engine_spark.operators.scoring import (
         score_exhaustive,
     )

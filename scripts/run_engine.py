@@ -733,14 +733,9 @@ def main(argv=None):
         try:
             if len(dirs) > 1:
                 # tiered search over a segment list (deletes segments
-                # allowed after the first entry) — local or wand path
+                # allowed after the first entry) — every path
                 from wiki_search_engine_spark.tiered import TieredEngine
 
-                if args.path == "exhaustive":
-                    raise SystemExit(
-                        "path=exhaustive is single-index only; use "
-                        "local or wand for tiered search"
-                    )
                 teng = TieredEngine(spark, dirs)
                 if args.path == "local":
                     ids = teng.search_local(
@@ -753,7 +748,7 @@ def main(argv=None):
                         (r["docid"], r["score"])
                         for r in teng.search_ids(
                             args.query, k=args.k, mode=args.mode,
-                            negation=args.negation,
+                            path=args.path, negation=args.negation,
                             synonyms=args.synonyms,
                         ).collect()
                     ]

@@ -621,10 +621,9 @@ def test_updated_docids_sidecar_top_shard_boundary(tmp_path):
 def test_tiered_query_response_wand_routes_distributed(
     spark, merged_and_full, fixture_queries
 ):
-    """query_response(path='wand') must actually serve through the
-    DISTRIBUTED tiered path (TieredEngine.search_ids), identical results
-    to the local path; unsupported paths / wand+AND are rejected rather
-    than silently downgraded (ADVICE r2)."""
+    """query_response(path='wand') and path='exhaustive' must actually
+    serve through the DISTRIBUTED tiered path (TieredEngine.search_ids),
+    identical results to the local path, AND included."""
     import pytest as _p
 
     from wiki_search_engine_spark.tiered import TieredEngine
@@ -642,8 +641,14 @@ def test_tiered_query_response_wand_routes_distributed(
     assert [r["score"] for r in wand["textResult"]] == [
         r["score"] for r in local["textResult"]
     ]
-    with _p.raises(ValueError, match="path"):
-        tiered.query_response(q, path="exhaustive")
+    exh = tiered.query_response(
+        q, option_name="bm25", k=5, path="exhaustive"
+    )
+    assert [r["file_id"] for r in exh["textResult"]] == [
+        r["file_id"] for r in local["textResult"]
+    ]
+    for a, b in zip(exh["textResult"], local["textResult"]):
+        assert a["score"] == _p.approx(b["score"], rel=1e-9)
     # conjunctive retrieval serves on BOTH paths, identically
     and_local = tiered.query_response(
         q, option_name="bm25", k=5, path="local", semantics="and"

@@ -1,8 +1,9 @@
-"""One driver-local serving core (serving.LocalServing): every response
-mode gives the same answer on a single index, on a one-segment
-TieredEngine over that index, and — over a [base, deletes] segment
-list — the same answer as the compacted index; facets count exactly
-the docs the results are ranked from; no mode grows a second copy."""
+"""One serving core (serving.ServingCore): every response mode and
+every distributed search_ids/search_many query class gives the same
+answer on a single index, on a one-segment TieredEngine over that
+index, and — over a [base, deletes] segment list — the same answer as
+the compacted index; facets count exactly the docs the results are
+ranked from; no mode grows a second copy."""
 
 import datetime
 import inspect
@@ -227,20 +228,122 @@ def test_tiered_boost_is_rejected_for_every_query(served, query, kwargs):
             served.tiered.search_local(query, boost="static", **kwargs)
 
 
+# every query class of the distributed path, as search_ids arguments
+DISTRIBUTED = [
+    ("bag-tfidf", "river stone", {"mode": "tfidf"}),
+    ("bag-bm25", "river stone", {"mode": "bm25"}),
+    ("bm25f", "alpha river", {"mode": "bm25f"}),
+    ("and", "river stone", {"mode": "bm25", "semantics": "and"}),
+    ("must", "+river stone", {"mode": "bm25", "negation": True}),
+    ("not", "river stone -garden", {"mode": "bm25", "negation": True}),
+    ("title", "title:alpha stone", {"mode": "bm25", "negation": True}),
+    ("synonyms", "river field", {"mode": "bm25", "synonyms": True}),
+    ("wildcard", "riv* stone", {"mode": "bm25"}),
+]
+
+
+def _ids(frame) -> list[tuple[int, float]]:
+    return [(int(r["docid"]), float(r["score"])) for r in frame.collect()]
+
+
+def _assert_same_ranking(a, b) -> None:
+    """Same docs in the same order, scores at rel 1e-9 (the paths may
+    sum a doc's term contributions in a different order)."""
+    assert [d for d, _ in a] == [d for d, _ in b]
+    for (_, x), (_, y) in zip(a, b):
+        assert math.isclose(x, y, rel_tol=1e-9)
+
+
+@pytest.mark.parametrize("path", ["wand", "exhaustive"])
+@pytest.mark.parametrize(
+    "query,kwargs", [r[1:] for r in DISTRIBUTED],
+    ids=[r[0] for r in DISTRIBUTED],
+)
+def test_distributed_query_classes_are_served_identically(
+    served, path, query, kwargs
+):
+    kw = {"k": 10, "path": path, **kwargs}
+    single = _ids(served.single.search_ids(query, **kw))
+    assert single, "the query must rank something"
+    _assert_same_ranking(
+        single, served.single.search_local(query, k=10, **kwargs)
+    )
+    _assert_same_ranking(
+        _ids(served.one_segment.search_ids(query, **kw)), single
+    )
+    _assert_same_ranking(
+        _ids(served.tiered.search_ids(query, **kw)),
+        _ids(served.compacted.search_ids(query, **kw)),
+    )
+
+
+def test_search_many_is_served_identically(served):
+    queries = ["river stone", "   ", "zzzabsent", "alpha tower field"]
+
+    def by_query(eng, mode):
+        out: dict = {}
+        for r in eng.search_many(queries, k=5, mode=mode).collect():
+            out.setdefault(r["query_id"], []).append(
+                (int(r["docid"]), float(r["score"]))
+            )
+        return {
+            q: sorted(rows, key=lambda ds: (-ds[1], ds[0]))
+            for q, rows in out.items()
+        }
+
+    for mode in ("bm25", "tfidf"):
+        single = by_query(served.single, mode)
+        assert sorted(single) == [0, 3]
+        for qid, rows in single.items():
+            _assert_same_ranking(rows, _ids(served.single.search_ids(
+                queries[qid], k=5, mode=mode
+            )))
+        pairs = [
+            (by_query(served.one_segment, mode), single),
+            (by_query(served.tiered, mode),
+             by_query(served.compacted, mode)),
+        ]
+        for got, exp in pairs:
+            assert sorted(got) == sorted(exp)
+            for qid in exp:
+                _assert_same_ranking(got[qid], exp[qid])
+
+
+def test_unknown_path_and_kernel_mode_are_rejected(served):
+    """An unknown path raises instead of serving as exhaustive; the
+    block-max kernel scores bm25/tfidf only, so any other mode raises
+    instead of being scored as TF-IDF."""
+    from wiki_search_engine_spark.operators.wand import search_topk
+
+    for eng in (served.single, served.tiered):
+        with pytest.raises(ValueError, match="path"):
+            eng.search_ids("river stone", path="exhaustve")
+    eng = served.single
+    with pytest.raises(ValueError, match="bm25f"):
+        search_topk(
+            eng._postings(["river"]), ["river"], eng.n, eng.avgdl,
+            k=5, mode="bm25f",
+        )
+
+
 def test_modes_exist_once():
-    """Each driver-local mode lives on LocalServing only: neither engine
-    may define its own copy (a parallel path would drift), and the
-    tiered engine borrows no single-index method."""
+    """Each serving mode and path lives on ServingCore only: neither
+    engine may define its own copy (a parallel path would drift), and
+    the tiered engine borrows no single-index method."""
     from wiki_search_engine_spark import tiered
     from wiki_search_engine_spark.engine import SearchEngine
-    from wiki_search_engine_spark.serving import LocalServing
+    from wiki_search_engine_spark.serving import ServingCore
     from wiki_search_engine_spark.tiered import TieredEngine
 
-    shared = {n for n, v in vars(LocalServing).items() if callable(v)}
+    shared = {n for n, v in vars(ServingCore).items() if callable(v)}
     assert {"search_local", "search_mixed", "search_phrase",
-            "facet_counts", "query_response"} <= shared
+            "facet_counts", "query_response", "search_ids",
+            "search_many"} <= shared
     for cls in (SearchEngine, TieredEngine):
         assert not shared & set(vars(cls)), cls.__name__
+        assert not {"_search_ids_fielded", "_decoded_live_postings"} & set(
+            vars(cls)
+        ), cls.__name__
     assert not re.search(
         r"SearchEngine\.\w+\(\s*self", inspect.getsource(tiered)
     )

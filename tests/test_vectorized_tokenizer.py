@@ -2,7 +2,7 @@
 
 from collections import Counter
 
-from hypothesis import given, settings
+from hypothesis import example, given, settings
 from hypothesis import strategies as st
 
 from wiki_search_engine_spark.functions.analyzer import (
@@ -52,23 +52,25 @@ ner_text_st = st.lists(ner_word_st, max_size=25).map(" ".join)
 
 
 @given(ner_text_st)
+@example("EDEE")  # Porter is not idempotent: edee -> ede -> ed
+@example("aED")  # a stem may be a stopword: aed -> a
 @settings(max_examples=60, deadline=None)
 def test_ner_tokens_invariants(text):
     """Structural invariants of the entity surrogate that must hold on
     ANY input: every multi-word phrase token's core words are also
     emitted standalone; phrases have >= 2 non-stopword core words and
-    never start/end on a stopword; bare stopwords are never emitted;
+    never start/end on a stopword; every other single is the one-pass
+    Porter stem of a cleaned non-stopword input token;
     no token from an entity's cores is ALSO emitted via the stem pass
     (the inverted_index.py:56-61 dedup); output is deterministic."""
     from wiki_search_engine_spark.functions.analyzer import (
-        STOPWORDS, ner_tokens, porter_stem,
+        STOPWORDS, base_tokens, ner_tokens, porter_stem,
     )
 
     toks = ner_tokens(text)
     assert toks == ner_tokens(text)  # deterministic
     phrases = [t for t in toks if " " in t]
     singles = [t for t in toks if " " not in t]
-    assert all(t not in STOPWORDS for t in singles)
     for ph in phrases:
         words = ph.split()
         cores = [w for w in words if w not in STOPWORDS]
@@ -81,8 +83,16 @@ def test_ner_tokens_invariants(text):
     # singles never exceeds its emissions from entity runs
     core_set = {c for ph in phrases for c in ph.split()
                 if c not in STOPWORDS}
+    # non-entity singles went through the reference's analyzer: the
+    # stopword filter, then ONE Porter pass — not to a fixpoint (Porter
+    # is not idempotent), and the stem may itself be a stopword
+    stems = {
+        porter_stem(c)
+        for w in text.split()
+        for c in base_tokens(w)
+        if c not in STOPWORDS
+    }
     for s in singles:
         if s in core_set:
             continue
-        # non-entity singles went through Porter; stemming is a fixpoint
-        assert porter_stem(s) == s, s
+        assert s in stems, s

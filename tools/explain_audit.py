@@ -6,6 +6,8 @@ Checks, per headline path:
   scan (PushedFilters) and the scan reads only the needed columns;
 - hydration join: BroadcastHashJoin (never SortMerge for a k-row side);
 - exhaustive scorer: partial/final HashAggregate pair + WholeStageCodegen;
+- exhaustive and BM25F scorers: live df with no Window (a per-term
+  window puts a head term's whole relation in one task);
 - lineitem demo query: filter + column pruning pushed to the scan.
 
 Usage: python tools/explain_audit.py  (exit 1 on any failed assertion)
@@ -141,12 +143,23 @@ def main() -> None:
 
     # 4. exhaustive scorer: partial+final hash agg, codegen, top-k pushdown
     exh = eng.search_ids(query, k=10, mode="bm25", path="exhaustive")
+    xplan = plan_of(exh)
     check(
         "exhaustive_scorer",
-        plan_of(exh),
+        xplan,
         must=[r"HashAggregate", r"TakeOrderedAndProject",
               r"PartitionFilters: \[[^\]]*bucket"],
         must_not=[r"SortMergeJoin"],
+    )
+
+    # 4b. live df without a window keyed on term: a head term's whole
+    # posting relation must never land in one task — the per-term count
+    # is a partial aggregate broadcast back to the rows
+    check(
+        "no_window_in_scorers",
+        xplan + fplan,
+        must=[r"BroadcastHashJoin"],
+        must_not=[r"Window"],
     )
 
     # 5. incremental merge postings plan: exactly ONE exchange (the

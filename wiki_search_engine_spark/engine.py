@@ -13,24 +13,23 @@ SAME analyzer as indexing -> bucket-pruned scan of the postings table ->
 per-shard block-max kernel (or the exhaustive Catalyst path) -> global
 orderBy(score desc, docid asc).limit(k) -> broadcast hydration join.
 
-The driver-local modes (search_local, search_phrase, search_mixed,
-facet_counts, query_response) are inherited from serving.LocalServing,
-shared with tiered.TieredEngine; this class supplies their single-index
-live-postings source, the build/merge lifecycle and the distributed
-paths.
+Every serving mode and path (search_local, search_ids, search_many,
+search_phrase, search_mixed, facet_counts, query_response) is inherited
+from serving.ServingCore, shared with tiered.TieredEngine; this class is
+the core's one-segment source (no tombstones, its own lexicon df, the
+pruned title_tf scan) plus the build/merge lifecycle and hydration.
 """
 
 from __future__ import annotations
 
+import numpy as np
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .functions.analyzer import analyze_query
-from .operators.postings import DEFAULT_BUCKETS, decode_postings_df, term_bucket
-from .operators.scoring import score_exhaustive
-from .operators.wand import search_topk
+from .operators.postings import DEFAULT_BUCKETS, term_bucket
 from .plans.build import build_index
-from .serving import EmptyQueryError, LiveList, LocalServing
+from .serving import EmptyQueryError, LiveList, ServingCore
 
 
 def salt_of(docid: int, salt_bits: int) -> int:
@@ -83,9 +82,12 @@ def resolve_index_dir(path: str, snapshot: str | None = None) -> str:
     return path
 
 
-class SearchEngine(LocalServing):
-    # a single index: no docs overridden by a later segment
+class SearchEngine(ServingCore):
+    # a single index is one segment: no docs overridden by a later one,
+    # no tombstones, block-max bounds computed at its own avgdl
     overridden = 0
+    tombstones = (np.empty(0, np.int64),)
+    ub_scales = (1.0,)
 
     def __init__(
         self,
@@ -403,6 +405,39 @@ class SearchEngine(LocalServing):
             F.col("bucket").isin(buckets)
         )
 
+    def _candidate_postings(self, terms: list[str]) -> DataFrame:
+        """The distributed source's candidate rows: ``_postings`` as
+        segment 0."""
+        return self._postings(terms).withColumn("seg", F.lit(0))
+
+    def _live_df_map(self, terms: list[str]) -> dict[str, int]:
+        return self.term_df(terms)
+
+    def _title_relation(self, terms: list[str]) -> DataFrame:
+        """(term, docid, tf, doc_len) title rows of ``terms``: a scan of
+        the title_tf sidecar pruned to the terms' bucket directories,
+        with the term predicate pushed into the parquet reader."""
+        import os
+
+        if not os.path.isdir(f"{self.index_dir}/title_tf"):
+            raise FileNotFoundError(
+                f"{self.index_dir}/title_tf missing — BM25F and "
+                "field-scoped queries need the title-field sidecar; run "
+                "engine.build_title_tf() (CLI: titleindex)"
+            )
+        buckets = sorted({term_bucket(t, self.n_buckets) for t in terms})
+        return (
+            self.spark.read.parquet(f"{self.index_dir}/title_tf")
+            .filter(F.col("bucket").isin(buckets))
+            .filter(F.col("term").isin(terms))
+            .select(
+                "term",
+                F.col("docid").cast("long").alias("docid"),
+                F.col("tf").cast("int").alias("tf"),
+                F.col("doc_len").cast("int").alias("doc_len"),
+            )
+        )
+
     def analyze(self, query: str) -> list[str]:
         if not query or not query.strip():
             raise EmptyQueryError("Empty query")
@@ -573,73 +608,6 @@ class SearchEngine(LocalServing):
         order = np.argsort(d, kind="stable")
         self._rank_cache = (d[order], r[order])
         return self._rank_cache
-
-    def _search_ids_fielded(
-        self, bag_terms: list[str], bag_required: list[str],
-        t_should: list[str], t_must: list[str], t_not: list[str],
-        bag_excluded: list[str], k: int, mode: str,
-    ) -> DataFrame:
-        """Distributed field-scoped scoring as ONE tagged relation:
-        title clauses become pseudo-terms named ``title:<term>`` whose
-        rows come from the title_tf sidecar (tf = title occurrences,
-        doc_len = body length), unioned with the body posting decode,
-        then the standard exhaustive scorer runs once — its live df
-        recompute, MUST count gate and NOT anti-join all operate on
-        the tagged names, so field semantics need no new aggregation
-        machinery. Rank-identical to _search_local_fielded (pytest)."""
-        import os as _os
-
-        from .operators.postings import term_bucket
-        from .operators.scoring import score_exhaustive
-
-        if not _os.path.isdir(f"{self.index_dir}/title_tf"):
-            raise FileNotFoundError(
-                f"{self.index_dir}/title_tf missing — field-scoped "
-                "queries need the title sidecar; run "
-                "engine.build_title_tf() (CLI: titleindex)"
-            )
-
-        def tag(ts):
-            return [f"title:{t}" for t in ts]
-
-        read_bag = list(dict.fromkeys(bag_terms + bag_excluded))
-        title_terms = list(
-            dict.fromkeys(t_should + t_must + t_not)
-        )
-        tbuckets = sorted(
-            {term_bucket(t, self.n_buckets) for t in title_terms}
-        )
-        title_rel = (
-            self.spark.read.parquet(f"{self.index_dir}/title_tf")
-            .filter(F.col("bucket").isin(tbuckets))
-            .filter(F.col("term").isin(title_terms))
-            .select(
-                F.concat(F.lit("title:"), F.col("term")).alias("term"),
-                F.col("docid").cast("long").alias("docid"),
-                F.col("tf").cast("int").alias("tf"),
-                F.col("doc_len").cast("int").alias("doc_len"),
-            )
-        )
-        if read_bag:
-            body_rel = decode_postings_df(
-                self._postings(read_bag).filter(
-                    F.col("term").isin(read_bag)
-                )
-            ).select("term", "docid", "tf", "doc_len")
-            rel = body_rel.unionByName(title_rel)
-        else:
-            rel = title_rel
-        return score_exhaustive(
-            rel,
-            list(dict.fromkeys(bag_terms + tag(t_should + t_must))),
-            self.n,
-            self.avgdl,
-            k,
-            mode,
-            semantics="or",
-            exclude_terms=(bag_excluded + tag(t_not)) or None,
-            required_terms=(bag_required + tag(t_must)) or None,
-        )
 
     def build_lexicon_rev(self, partitions: int | None = None) -> None:
         """Materialize the REVERSED-term lexicon sidecar under
@@ -889,7 +857,7 @@ class SearchEngine(LocalServing):
             self._datasets[name] = ds
         return ds
 
-    # -- the live-postings source of LocalServing ---------------------------
+    # -- the live-postings source of ServingCore ----------------------------
     def _live_postings(self, terms: list[str]) -> dict:
         """term -> (df, [LiveList per salt shard]) for every term (absent:
         (0, [])) — the cached lexicon + postings point reads; a single
@@ -1196,269 +1164,6 @@ class SearchEngine(LocalServing):
                             out[t] = analyzed
         self._syn_map = out
         return out
-
-    def search_ids(
-        self,
-        query: str,
-        k: int = 50,
-        mode: str = "bm25",
-        path: str = "wand",
-        semantics: str = "or",
-        negation: bool = False,
-        synonyms: bool = False,
-    ) -> DataFrame:
-        """Top-k (docid, score). ``path``: 'wand' = block-max pruned kernel;
-        'exhaustive' = decode + Catalyst aggregation (oracle path);
-        'local' = driver-side serve (see search_local) wrapped back into
-        a DataFrame. ``semantics='and'`` (conjunctive retrieval — every
-        query term required) is served by the local path's intersection
-        scorer or the exhaustive path; a 'wand' request downgrades to
-        exhaustive (the intersection IS the pruning — block-max skipping
-        has nothing to add). ``negation=True`` parses ``-term`` tokens
-        as Lucene NOT (opt-in so legacy hyphenated queries keep the
-        reference's bag behavior): served local (per-shard filtered
-        top-k) or exhaustive (LEFT ANTI join before the cut); a 'wand'
-        request downgrades to exhaustive. ``synonyms=True`` is served on
-        EVERY path: local uses the driver kernel, the distributed paths
-        route through operators/scoring.score_synonyms (a 'wand' request
-        downgrades — the group's summed-tf saturation is an aggregation,
-        which block-max skipping cannot express); rank-identical across
-        paths (pytest)."""
-        excluded: list[str] = []
-        required: list[str] = []
-        t_should: list[str] = []
-        t_must: list[str] = []
-        t_not: list[str] = []
-        if negation and path != "local":
-            from .functions.analyzer import split_boolean
-
-            should_q, must_q, neg_q = split_boolean(query)
-            if "title:" in (query or "").lower():
-                (
-                    should_q, must_q, neg_q,
-                    t_should, t_must, t_not, f_contra,
-                ) = self._parse_field_clauses(should_q, must_q, neg_q)
-                if f_contra:
-                    return self.spark.createDataFrame(
-                        [], "docid long, score double"
-                    )
-            if neg_q.strip():
-                try:
-                    excluded = self.analyze(neg_q)
-                except EmptyQueryError:
-                    excluded = []
-            if must_q.strip():
-                try:
-                    required = self.analyze(must_q)
-                except EmptyQueryError:
-                    required = []
-            query = f"{should_q} {must_q}".strip()
-            if not query and not (t_should or t_must):
-                return self.spark.createDataFrame(
-                    [], "docid long, score double"
-                )
-            if (
-                excluded or required or t_should or t_must or t_not
-            ) and path == "wand":
-                path = "exhaustive"
-        has_fields = bool(t_should or t_must or t_not)
-        if semantics == "and" and path == "wand":
-            path = "exhaustive"
-        if not (query or "").strip():
-            if not has_fields:
-                self.analyze(query)  # blank query raises (400 body)
-            terms = []
-        else:
-            terms = (
-                # wildcard expansion is a driver-side lexicon scan, so
-                # the DISTRIBUTED paths expand identically to the local
-                self.expand_query_terms(query)
-                if "*" in (query or "")
-                else self.analyze(query)
-            )
-        if not terms and not (t_should or t_must):
-            return self.spark.createDataFrame([], "docid long, score double")
-        from .functions.analyzer import resolve_boolean_overlap
-
-        terms, contradiction = resolve_boolean_overlap(
-            terms,
-            terms if semantics == "and" else required,
-            excluded,
-        )
-        if contradiction or (not terms and not has_fields):
-            return self.spark.createDataFrame(
-                [], "docid long, score double"
-            )
-        required = [t for t in required if t in terms]
-        if has_fields and path != "local":
-            if semantics == "and" or synonyms or mode == "bm25f":
-                raise ValueError(
-                    "field-scoped terms (title:) compose with OR and "
-                    "+/- only — not with semantics=and, synonyms, or "
-                    "bm25f"
-                )
-            return self._search_ids_fielded(
-                terms, required, t_should, t_must, t_not, excluded,
-                k, mode,
-            )
-        if path == "local":
-            rows = [
-                (int(d), float(s)) for d, s in self.search_local(
-                    query, k=k, mode=mode, semantics=semantics,
-                    negation=negation, synonyms=synonyms,
-                )
-            ]
-            return self.spark.createDataFrame(
-                rows, "docid long, score double"
-            )
-        syn = self._load_synonyms() if synonyms else {}
-        if syn:
-            if semantics == "and" or required:
-                raise ValueError(
-                    "synonyms compose with OR/SHOULD semantics only (a "
-                    "synonym group IS a disjunction)"
-                )
-            from .operators.scoring import score_synonyms
-
-            # each query term's group (itself + sidecar synonyms) scores
-            # as ONE pseudo-term: summed tf, TRUE disjunction df — the
-            # distributed twin of _search_local_synonyms, same sidecar
-            groups = [
-                list(dict.fromkeys([t] + syn.get(t, [])))
-                for t in dict.fromkeys(terms)
-            ]
-            need = sorted({g for grp in groups for g in grp})
-            flat = decode_postings_df(
-                self._postings(need + excluded).filter(
-                    F.col("term").isin(need + excluded)
-                )
-            )
-            # df is computed over ALL docs the groups match (exclusion
-            # narrows candidates, not collection stats) — score with
-            # k=None, anti-join the NOT set, then cut, mirroring the
-            # local kernel's order of operations exactly
-            res = score_synonyms(
-                flat.filter(F.col("term").isin(need)),
-                groups, self.n, self.avgdl, k=None, mode=mode,
-            )
-            if excluded:
-                exc_docs = (
-                    flat.filter(F.col("term").isin(excluded))
-                    .select("docid").distinct()
-                )
-                res = res.join(exc_docs, "docid", "left_anti")
-            return res.orderBy(
-                F.desc("score"), F.asc("docid")
-            ).limit(k)
-        if mode == "bm25f":
-            import os as _os
-
-            if semantics == "and" or required:
-                raise ValueError(
-                    "bm25f serves OR/SHOULD semantics (title-boosted "
-                    "accumulation); AND/MUST composition is not "
-                    "supported"
-                )
-            if not _os.path.isdir(f"{self.index_dir}/title_tf"):
-                raise FileNotFoundError(
-                    f"{self.index_dir}/title_tf missing — BM25F needs "
-                    "the title-field sidecar; run "
-                    "engine.build_title_tf() (CLI: titleindex)"
-                )
-            from .operators.postings import term_bucket
-            from .operators.scoring import score_bm25f
-
-            # wand downgrades: block maxima were computed for the
-            # UNboosted tf, so pruning bounds would be unsound under
-            # the title boost — same aggregation-form downgrade as
-            # synonyms/AND
-            flat = decode_postings_df(
-                self._postings(terms + excluded).filter(
-                    F.col("term").isin(terms + excluded)
-                )
-            )
-            tbuckets = sorted(
-                {term_bucket(t, self.n_buckets) for t in terms}
-            )
-            title = (
-                self.spark.read.parquet(f"{self.index_dir}/title_tf")
-                .filter(F.col("bucket").isin(tbuckets))
-                .select("docid", "term", "tf", "doc_len")
-            )
-            res = score_bm25f(
-                flat.filter(F.col("term").isin(terms)),
-                title, terms, self.n, self.avgdl, k=None,
-                title_weight=self.DEFAULT_TITLE_WEIGHT,
-            )
-            if excluded:
-                exc_docs = (
-                    flat.filter(F.col("term").isin(excluded))
-                    .select("docid").distinct()
-                )
-                res = res.join(exc_docs, "docid", "left_anti")
-            return res.orderBy(
-                F.desc("score"), F.asc("docid")
-            ).limit(k)
-        postings = self._postings(terms + excluded)
-        if path == "wand":
-            import os
-
-            has_lexicon = os.path.isdir(f"{self.index_dir}/term_stats")
-            return search_topk(
-                postings, terms, self.n, self.avgdl, k=k, mode=mode,
-                # no lexicon (pre-term_stats index): search_topk falls
-                # back to collecting df from the candidate metadata
-                df_map=self.term_df(terms) if has_lexicon else None,
-                n_shards=1 << self.salt_bits,
-            )
-        flat = decode_postings_df(
-            postings.filter(F.col("term").isin(terms + excluded))
-        )
-        return score_exhaustive(
-            flat, terms, self.n, self.avgdl, k, mode,
-            semantics=semantics, exclude_terms=excluded or None,
-            required_terms=required or None,
-        )
-
-    def search_many(
-        self, queries: list[str], k: int = 50, mode: str = "bm25"
-    ) -> DataFrame:
-        """Batch serving: top-k for MANY queries in ONE Spark job —
-        (query_id, docid, score), query_id = position in ``queries``.
-        Rank-identical per query to search_ids (pytest-enforced);
-        queries that analyze to nothing (empty, all-absent terms)
-        produce no rows rather than erroring the whole batch. The bulk
-        analogue of the reference's one-request-per-query serving
-        (backend/controllers/queryController.js); see
-        operators/wand.py search_topk_many for the cost model."""
-        from .operators.wand import search_topk_many
-
-        qmap: dict[int, list[str]] = {}
-        for i, q in enumerate(queries):
-            try:
-                terms = self.analyze(q)
-            except EmptyQueryError:
-                continue
-            if terms:
-                qmap[i] = terms
-        if not qmap:
-            return self.spark.createDataFrame(
-                [], "query_id int, docid long, score double"
-            )
-        all_terms = sorted({t for ts in qmap.values() for t in ts})
-        import os
-
-        has_lexicon = os.path.isdir(f"{self.index_dir}/term_stats")
-        return search_topk_many(
-            self._postings(all_terms),
-            qmap,
-            self.n,
-            self.avgdl,
-            k=k,
-            mode=mode,
-            df_map=self.term_df(all_terms) if has_lexicon else None,
-            n_shards=1 << self.salt_bits,
-        )
 
     def facet_fields(self) -> list[str]:
         """Facet fields available on this index: the categorical

@@ -338,24 +338,46 @@ def build_postings(
     return salted.mapInArrow(encode_stream_arrow, schema=POSTINGS_SCHEMA)
 
 
-def decode_postings_df(postings: DataFrame) -> DataFrame:
+def decode_postings_df(
+    postings: DataFrame, tombstones_by_seg: list | None = None
+) -> DataFrame:
     """postings shards -> flat (term, docid, tf, doc_len).
 
-    The decompressed view used by the exhaustive scorer, the TF-IDF path
-    and the index-invariant tests; mapInPandas NumPy decode.
+    The decompressed view used by the exhaustive scorers and the
+    index-invariant tests; mapInPandas NumPy decode.
+
+    ``tombstones_by_seg`` (segment serving): ``postings`` carries a
+    ``seg`` column, and each row drops the sorted docids of its
+    segment's array at decode time — the LIVE relation, so a term's row
+    count is its live df (§8.Q7).
     """
-    from .codec import decode_posting_list
+    from .codec import decode_posting_list, isin_sorted
+
+    bc = (
+        postings.sparkSession.sparkContext.broadcast(list(tombstones_by_seg))
+        if tombstones_by_seg is not None
+        and any(t.size for t in tombstones_by_seg)
+        else None
+    )
 
     def decode(batches):
         for pdf in batches:
             frames = []
-            for term, blocks in zip(pdf["term"], pdf["blocks"]):
+            segs = pdf["seg"] if bc is not None else [None] * len(pdf)
+            for term, blocks, seg in zip(pdf["term"], pdf["blocks"], segs):
                 docids, tfs, doclens = decode_posting_list(
                     [
                         b if isinstance(b, dict) else b.asDict()
                         for b in blocks
                     ]
                 )
+                if seg is not None:
+                    tombs = bc.value[int(seg)]
+                    if tombs.size and docids.size:
+                        keep = ~isin_sorted(tombs, docids)
+                        docids, tfs, doclens = (
+                            docids[keep], tfs[keep], doclens[keep],
+                        )
                 frames.append(
                     pd.DataFrame(
                         {
@@ -379,6 +401,7 @@ def decode_postings_df(postings: DataFrame) -> DataFrame:
                 )
             )
 
-    return postings.select("term", "blocks").mapInPandas(
+    cols = ["term", "blocks"] + (["seg"] if bc is not None else [])
+    return postings.select(*cols).mapInPandas(
         decode, schema="term string, docid long, tf int, doc_len int"
     )

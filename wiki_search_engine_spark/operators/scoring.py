@@ -42,6 +42,17 @@ def score_expr(mode: str, n: int, avgdl: float):
     raise ValueError(f"unknown scoring mode: {mode}")
 
 
+def with_live_df(rows: DataFrame) -> DataFrame:
+    """``rows`` (one per term and doc) plus ``df``: each term's row
+    count, recomputed from the live relation (§8.Q7). A partial-
+    aggregating ``groupBy(term)`` — one row per term and map task, so a
+    head term never lands in one task the way a window keyed on term
+    would put its whole relation there — broadcast-joined back (the
+    side is query-sized)."""
+    dfs = rows.groupBy("term").agg(F.count("*").alias("df"))
+    return rows.join(F.broadcast(dfs), "term")
+
+
 def score_exhaustive(
     tokens: DataFrame,
     query_terms: list[str],
@@ -82,12 +93,7 @@ def score_exhaustive(
                 [], "docid long, score double"
             )
         )
-    matched = tokens.filter(F.col("term").isin(query_terms))
-    # df recomputed from live postings (Q7); window avoids a second scan
-    from pyspark.sql import Window
-
-    df_w = Window.partitionBy("term")
-    matched = matched.withColumn("df", F.count("*").over(df_w))
+    matched = with_live_df(tokens.filter(F.col("term").isin(query_terms)))
     scored = matched.withColumn("partial", score_expr(mode, n, avgdl))
     if semantics == "and":
         agg = (
@@ -226,7 +232,8 @@ def score_bm25f(
 
     Plan shape: both sides filter to the query terms BEFORE the join
     (query-sized relations), full-outer hash join on (docid, term),
-    window df count, one hash aggregate, TakeOrderedAndProject."""
+    broadcast live-df count, one hash aggregate,
+    TakeOrderedAndProject."""
     if not query_terms:
         return tokens.sparkSession.createDataFrame(
             [], "docid long, score double"
@@ -253,10 +260,7 @@ def score_bm25f(
         ).alias("tfp"),
         F.coalesce(F.col("dl_b"), F.col("dl_t")).alias("doc_len"),
     ).filter(F.col("tfp") > 0)
-    from pyspark.sql import Window
-
-    df_w = Window.partitionBy("term")
-    merged = merged.withColumn("df", F.count("*").over(df_w))
+    merged = with_live_df(merged)
     tfp = F.col("tfp")
     dfc = F.col("df").cast("double")
     idf = F.log((F.lit(float(n)) - dfc + 0.5) / (dfc + 0.5) + 1.0)

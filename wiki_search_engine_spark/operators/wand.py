@@ -47,14 +47,82 @@ def _bm25_scores(tfs, doclens, idf, avgdl):
     )
 
 
+_KERNEL_MODES = ("bm25", "tfidf")
+
+
+def _check_kernel_mode(mode: str) -> None:
+    if mode not in _KERNEL_MODES:
+        raise ValueError(
+            f"the block-max kernel scores {_KERNEL_MODES}, not {mode!r}"
+        )
+
+
+def _shard_term_lists(pdf, df_map, bc_tombs, scales):
+    """[(term, {df, blocks[, tombs, ub_scale]})] for one shard group's
+    postings rows. A term may span several rows (bounded-row splits,
+    postings.py MAX_POSTINGS_PER_ROW; segments): one entry per row, so
+    each carries its own segment's tombstones and bound scale — split
+    lists score identically (same global df, docid-disjoint)."""
+    segs = pdf["seg"] if "seg" in pdf.columns else [None] * len(pdf)
+    out = []
+    for term, blocks, seg in zip(pdf["term"], pdf["blocks"], segs):
+        if not len(blocks) or term not in df_map:
+            continue
+        e = {
+            "df": df_map[term],
+            "blocks": [
+                b if isinstance(b, dict) else b.asDict() for b in blocks
+            ],
+        }
+        if seg is not None and bc_tombs is not None:
+            t = bc_tombs.value[int(seg)]
+            if t.size:
+                e["tombs"] = t
+        if seg is not None and scales is not None:
+            e["ub_scale"] = float(scales[int(seg)])
+        out.append((term, e))
+    return out
+
+
+def _segment_args(postings: DataFrame, df_map, tombstones_by_seg,
+                  ub_scale_by_seg):
+    """(broadcast tombstones or None, bound scales or None) of a
+    segment-serving call, after checking its contract."""
+    if tombstones_by_seg is None:
+        return None, None
+    if df_map is None:
+        raise ValueError(
+            "segment scoring needs a LIVE df_map — shard metadata counts "
+            "tombstoned postings (the serving source's _live_df_map)"
+        )
+    if "seg" not in postings.columns:
+        raise ValueError(
+            "tombstones_by_seg given but postings has no 'seg' column — "
+            "stale documents would be scored silently; union segment "
+            "postings with a seg index (the serving source's "
+            "_candidate_postings)"
+        )
+    bc = (
+        postings.sparkSession.sparkContext.broadcast(
+            list(tombstones_by_seg)
+        )
+        if any(t.size for t in tombstones_by_seg)
+        else None
+    )
+    return bc, (list(ub_scale_by_seg) if ub_scale_by_seg else None)
+
+
 def score_shard_topk(
     term_lists: list[dict], n: int, avgdl: float, k: int, mode: str
 ) -> tuple[np.ndarray, np.ndarray]:
     """Exact top-k (docids, scores) for one docid-range shard.
 
     ``term_lists``: [{df, blocks}] one entry per distinct query term
-    present in the shard.
+    present in the shard. ``mode`` is 'bm25' or 'tfidf': the stored
+    block bounds (max_score, max_tf) bound those two formulas only, so
+    any other mode raises rather than silently scoring as one of them.
     """
+    _check_kernel_mode(mode)
     prepared = []
     for tl in term_lists:
         df = int(tl["df"])
@@ -179,7 +247,7 @@ def search_topk_many(
 ) -> DataFrame:
     """Batched top-k: score MANY queries in ONE Spark job.
 
-    ``tombstones_by_seg``: tiered serving (see search_topk) — postings
+    ``tombstones_by_seg``: segment serving (see search_topk) — postings
     carry a ``seg`` column, stale postings drop at decode time, and the
     caller must supply LIVE dfs.
 
@@ -195,31 +263,17 @@ def search_topk_many(
     form a training-data pipeline uses (e.g. mining hard negatives for
     retrieval training: thousands of queries against the corpus).
     """
+    _check_kernel_mode(mode)
     spark = postings.sparkSession
     out_schema = "query_id int, docid long, score double"
     queries = {qid: terms for qid, terms in queries.items() if terms}
     if not queries:
         return spark.createDataFrame([], out_schema)
-    if tombstones_by_seg is not None and df_map is None:
-        raise ValueError(
-            "tiered scoring needs a LIVE df_map — shard metadata counts "
-            "tombstoned postings (TieredEngine._live_df_distributed)"
-        )
+    bc_tombs, scales = _segment_args(
+        postings, df_map, tombstones_by_seg, ub_scale_by_seg
+    )
     all_terms = sorted({t for ts in queries.values() for t in ts})
     cand = postings.filter(F.col("term").isin(all_terms))
-    if tombstones_by_seg is not None and "seg" not in postings.columns:
-        raise ValueError(
-            "tombstones_by_seg given but postings has no 'seg' column — "
-            "stale documents would be scored silently; union segment "
-            "postings with a seg index (TieredEngine._candidate_postings)"
-        )
-    tiered = tombstones_by_seg is not None
-    bc_tombs = (
-        spark.sparkContext.broadcast(list(tombstones_by_seg))
-        if tiered
-        else None
-    )
-    scales = list(ub_scale_by_seg) if ub_scale_by_seg else None
 
     if df_map is None or n_shards is None:
         # one tiny metadata collect (block payloads never read) supplies
@@ -241,27 +295,8 @@ def search_topk_many(
     n_shards = max(n_shards, 1)
 
     def kernel(key, pdf):
-        # a term may span several rows in a shard (bounded-row splits,
-        # postings.py MAX_POSTINGS_PER_ROW; tiered segments) — keep one
-        # entry per row so each carries its own tombstone array; split
-        # lists score identically (same global df, docid-disjoint)
         by_term: dict[str, list[dict]] = {}
-        segs = pdf["seg"] if tiered else [None] * len(pdf)
-        for term, blocks, seg in zip(pdf["term"], pdf["blocks"], segs):
-            if not len(blocks) or term not in df_map:
-                continue
-            e = {
-                "df": df_map[term],
-                "blocks": [
-                    b if isinstance(b, dict) else b.asDict() for b in blocks
-                ],
-            }
-            if tiered:
-                t = bc_tombs.value[int(seg)]
-                if t.size:
-                    e["tombs"] = t
-                if scales is not None:
-                    e["ub_scale"] = float(scales[int(seg)])
+        for term, e in _shard_term_lists(pdf, df_map, bc_tombs, scales):
             by_term.setdefault(term, []).append(e)
         out_q, out_d, out_s = [], [], []
         for qid, terms in queries.items():
@@ -314,11 +349,12 @@ def search_topk(
 ) -> DataFrame:
     """Distributed top-k over the sharded postings table.
 
-    ``tombstones_by_seg`` (tiered serving, wiki_search_engine_spark/
-    tiered.py): ``postings`` then carries a ``seg`` column and the list
+    ``tombstones_by_seg`` (segment serving, wiki_search_engine_spark/
+    serving.py): ``postings`` then carries a ``seg`` column and the list
     maps segment index -> sorted stale-docid array; the kernel drops
-    tombstoned postings at decode time. The caller MUST pass a df_map of
-    LIVE dfs in that case (shard metadata counts stale postings).
+    tombstoned postings at decode time and scales each list's bounds by
+    ``ub_scale_by_seg``. The caller MUST pass a df_map of LIVE dfs in
+    that case (shard metadata counts stale postings).
 
     ``postings`` should already be filtered to the query's term buckets
     (partition pruning) — this function adds the exact term filter, runs
@@ -334,14 +370,13 @@ def search_topk(
     never a groupBy, which would plan a full shuffle-partition-wide
     exchange for a handful of rows.
     """
+    _check_kernel_mode(mode)
     spark = postings.sparkSession
     if not query_terms:
         return spark.createDataFrame([], "docid long, score double")
-    if tombstones_by_seg is not None and df_map is None:
-        raise ValueError(
-            "tiered scoring needs a LIVE df_map — shard metadata counts "
-            "tombstoned postings (TieredEngine._live_df_distributed)"
-        )
+    bc_tombs, scales = _segment_args(
+        postings, df_map, tombstones_by_seg, ub_scale_by_seg
+    )
     cand = postings.filter(F.col("term").isin(query_terms))
 
     if df_map is None or n_shards is None:
@@ -362,42 +397,13 @@ def search_topk(
     if not df_map:
         return spark.createDataFrame([], "docid long, score double")
 
-    if tombstones_by_seg is not None and "seg" not in postings.columns:
-        raise ValueError(
-            "tombstones_by_seg given but postings has no 'seg' column — "
-            "stale documents would be scored silently; union segment "
-            "postings with a seg index (TieredEngine._candidate_postings)"
-        )
-    tiered = tombstones_by_seg is not None
-    bc_tombs = (
-        spark.sparkContext.broadcast(list(tombstones_by_seg))
-        if tiered
-        else None
-    )
-    scales = list(ub_scale_by_seg) if ub_scale_by_seg else None
-
     # NB: deliberately un-annotated — applyInPandas warns (on stdout!)
     # when it can't infer an eval type from partial type hints, which
     # corrupts machine-readable CLI output.
     def kernel(key, pdf):
-        segs = pdf["seg"] if tiered else [None] * len(pdf)
-        term_lists = []
-        for term, blocks, seg in zip(pdf["term"], pdf["blocks"], segs):
-            if not len(blocks) or term not in df_map:
-                continue
-            tl = {
-                "df": df_map[term],
-                "blocks": [
-                    b if isinstance(b, dict) else b.asDict() for b in blocks
-                ],
-            }
-            if tiered:
-                t = bc_tombs.value[int(seg)]
-                if t.size:
-                    tl["tombs"] = t
-                if scales is not None:
-                    tl["ub_scale"] = float(scales[int(seg)])
-            term_lists.append(tl)
+        term_lists = [
+            e for _t, e in _shard_term_lists(pdf, df_map, bc_tombs, scales)
+        ]
         if not term_lists:
             return pd.DataFrame({"docid": [], "score": []})
         docids, scores = score_shard_topk(term_lists, n, avgdl, k, mode)

@@ -1,36 +1,52 @@
-"""Driver-local serving: every query mode, written once.
+"""Serving: every query mode and every path, written once.
 
 ``SearchEngine`` (one index) and ``TieredEngine`` (a segment list) both
-inherit ``LocalServing``. Its modes — bag/OR, AND, ``+``MUST, ``-``NOT,
+inherit ``ServingCore``. Its modes — bag/OR, AND, ``+``MUST, ``-``NOT,
 ``title:`` fields, BM25F, synonyms, the static boost, phrase, mixed
-quoted queries, facets and the reference response — read the index only
-through a small SOURCE that each engine implements:
+quoted queries, facets and the reference response — and its paths —
+driver-local (``search_local`` and the response modes) and distributed
+(``search_ids``, ``search_many``) — read the index only through a small
+SOURCE that each engine implements. A single index is the source with
+one segment and no tombstones.
 
 - ``n`` / ``avgdl`` / ``analyzer``: live corpus stats and the analyzer
   name; ``overridden``: docs a later segment replaced or deleted (0 on a
   single index, and on an append-only segment list);
 - ``analyze``, ``expand_query_terms`` (through the engine's
   ``expand_wildcard``), ``fuzzy_terms``, ``_load_synonyms``;
-- ``_live_postings(terms)`` -> term -> (live df, [LiveList, ...]);
-- ``_live_title_rows(terms)``, ``_live_phrase_matches(text, slop)``,
-  ``_live_facet_arrays(field)``, ``_static_rank_arrays()`` (only where
-  ``SERVES_STATIC_BOOST``; a segment list rejects every boost request),
-  ``_has_positions()`` and ``lookup_docs(docids)``.
+- driver-local: ``_live_postings(terms)`` -> term -> (live df,
+  [LiveList, ...]); ``_live_title_rows(terms)``,
+  ``_live_phrase_matches(text, slop)``, ``_live_facet_arrays(field)``,
+  ``_static_rank_arrays()`` (only where ``SERVES_STATIC_BOOST``; a
+  segment list rejects every boost request), ``_has_positions()`` and
+  ``lookup_docs(docids)``;
+- distributed: ``spark``, ``salt_bits``, ``_candidate_postings(terms)``
+  (bucket-pruned packed postings rows with a ``seg`` column),
+  ``tombstones`` and ``ub_scales`` (one per segment),
+  ``_live_df_map(terms)`` and ``_title_relation(terms)`` (title rows as
+  a DataFrame).
 
-Plain OR runs the block-max shard kernel (operators/wand.py
-``score_shard_topk``, which drops each list's tombstones and scales its
-bounds by ``ub_scale``) whenever every list's df is known without
-decoding (``overridden == 0``) and only the top k is asked for. Every
-other retrieval decodes the candidate lists once (``LiveList.arrays``),
-scores them per posting (``_scores``) and accumulates -> gates ->
-excludes in one helper (``_accumulate``); ``_top_k`` cuts the page. A
-faceted response keeps the full match set of that one retrieval: the
-facets count it and the page is cut from it.
+Every path parses a query once (``_parse_query``) and rejects the
+combinations no path serves in one place
+(``_reject_unserved_combination``). Locally, plain OR runs the block-max
+shard kernel (operators/wand.py ``score_shard_topk``, which drops each
+list's tombstones and scales its bounds by ``ub_scale``) whenever every
+list's df is known without decoding (``overridden == 0``) and only the
+top k is asked for. Every other local retrieval decodes the candidate
+lists once (``LiveList.arrays``), scores them per posting (``_scores``)
+and accumulates -> gates -> excludes in one helper (``_accumulate``);
+``_top_k`` cuts the page. A faceted response keeps the full match set
+of that one retrieval: the facets count it and the page is cut from it.
+Distributed, plain OR runs the same kernel in the cluster
+(``search_topk``) and every other shape scores one decoded live
+relation (``_live_relation``) with the Catalyst operators of
+operators/scoring.py.
 """
 
 from __future__ import annotations
 
 import numpy as np
+from pyspark.sql import functions as F
 
 from . import B, K1
 from .operators.codec import decode_posting_list, isin_sorted
@@ -247,9 +263,9 @@ def _top_k(docs, scores, k):
     return [(int(docs[i]), float(scores[i])) for i in idx]
 
 
-class LocalServing:
-    """Every driver-local serving mode, over the live-postings source
-    its subclass implements (see the module doc)."""
+class ServingCore:
+    """Every serving mode and path, over the source its subclass
+    implements (see the module doc)."""
 
     # Lucene-style cap on wildcard expansions: highest-df matches win
     # (suggest already ranks by df desc), so a short prefix over a
@@ -401,6 +417,99 @@ class LocalServing:
         t_s = [t for t in t_s if t in pos and t not in t_m]
         return should_q, must_q, neg_q, t_s, t_m, t_n, contra
 
+    def _parse_query(self, query, semantics="or", negation=False,
+                     fuzzy=False):
+        """The query's clauses, parsed once for every serving path:
+        (terms, required, excluded, t_should, t_must, t_not) — the
+        analyzed (wildcard-expanded, with ``fuzzy`` spell-corrected)
+        positive terms after the Lucene overlap rule, the ``+`` and
+        ``-`` terms, and the ``title:`` clauses — or None when nothing
+        can match (a pure-NOT query, a ``+t -t`` contradiction, no
+        terms, an empty index). ``negation`` enables the Lucene
+        operators; without it ``-``, ``+`` and ``title:`` keep the
+        reference's bag reading. A blank query raises EmptyQueryError
+        (the HTTP 400 body)."""
+        from .functions.analyzer import resolve_boolean_overlap, split_boolean
+
+        excluded: list[str] = []
+        required: list[str] = []
+        t_should: list[str] = []
+        t_must: list[str] = []
+        t_not: list[str] = []
+        if negation:
+            should_q, must_q, neg_q = split_boolean(query)
+            if "title:" in (query or "").lower():
+                (
+                    should_q, must_q, neg_q,
+                    t_should, t_must, t_not, f_contra,
+                ) = self._parse_field_clauses(should_q, must_q, neg_q)
+                if f_contra:
+                    return None
+            excluded = self._analyze_or_empty(neg_q)
+            required = self._analyze_or_empty(must_q)
+            query = f"{should_q} {must_q}".strip()
+            if not query and not (t_should or t_must):
+                return None  # a pure-NOT query ranks nothing
+        has_fields = bool(t_should or t_must or t_not)
+        if not (query or "").strip():
+            if not has_fields:
+                # reference contract: a blank query RAISES (the HTTP
+                # 400 'Empty query' body) — only field extraction may
+                # legitimately empty the bag part
+                self.analyze(query)
+            terms = []
+        else:
+            terms = (
+                self.expand_query_terms(query)
+                if "*" in query
+                else self.analyze(query)
+            )
+        if (not terms and not (t_should or t_must)) or not self.n:
+            return None
+        if fuzzy:
+            terms, _ = self.fuzzy_terms(terms)
+        terms, contradiction = resolve_boolean_overlap(
+            terms,
+            terms if semantics == "and" else required,
+            excluded,
+        )
+        if contradiction or (not terms and not has_fields):
+            return None  # +t -t contradiction, or nothing left
+        required = [t for t in required if t in terms]
+        return terms, required, excluded, t_should, t_must, t_not
+
+    def _reject_unserved_combination(
+        self, has_fields, semantics, required, mode, synonyms,
+        fuzzy=False, boost=None,
+    ) -> None:
+        """ValueError (HTTP 400) for the option combinations no path
+        serves."""
+        if has_fields and (
+            semantics == "and" or synonyms or mode == "bm25f"
+            or fuzzy or boost
+        ):
+            raise ValueError(
+                "field-scoped terms (title:) compose with OR and "
+                "+/- only — not with semantics=and, synonyms, "
+                "bm25f, fuzzy, or boost"
+            )
+        if synonyms and self._load_synonyms():
+            if semantics == "and" or required:
+                raise ValueError(
+                    "synonyms compose with OR/SHOULD semantics only (a "
+                    "synonym group IS a disjunction)"
+                )
+            if mode == "bm25f":
+                raise ValueError(
+                    "bm25f does not compose with synonym groups yet — "
+                    "pick one of mode=bm25f / synonyms=true"
+                )
+        if mode == "bm25f" and (semantics == "and" or required):
+            raise ValueError(
+                "bm25f serves OR/SHOULD semantics (title-boosted "
+                "accumulation); AND/MUST composition is not supported"
+            )
+
     # -- bag-of-words modes ------------------------------------------------
     def search_local(
         self, query: str, k: int = 50, mode: str = "bm25",
@@ -445,64 +554,16 @@ class LocalServing:
         ``k`` is None, else a set holding the top k. ``also_exclude``
         (analyzed terms) drops docs after the boolean overlap rule —
         the ``-term``s of a mixed quoted query."""
-        from .functions.analyzer import resolve_boolean_overlap, split_boolean
-
         self._reject_unserved_boost(boost)
-        excluded: list[str] = []
-        required: list[str] = []
-        t_should: list[str] = []
-        t_must: list[str] = []
-        t_not: list[str] = []
-        if negation:
-            should_q, must_q, neg_q = split_boolean(query)
-            if "title:" in (query or "").lower():
-                (
-                    should_q, must_q, neg_q,
-                    t_should, t_must, t_not, f_contra,
-                ) = self._parse_field_clauses(should_q, must_q, neg_q)
-                if f_contra:
-                    return _NO_MATCHES
-            excluded = self._analyze_or_empty(neg_q)
-            required = self._analyze_or_empty(must_q)
-            query = f"{should_q} {must_q}".strip()
-            if not query and not (t_should or t_must):
-                return _NO_MATCHES  # pure-NOT query ranks nothing
-        has_fields = bool(t_should or t_must or t_not)
-        if not (query or "").strip():
-            if not has_fields:
-                # reference contract: a blank query RAISES (the HTTP
-                # 400 'Empty query' body) — only field extraction may
-                # legitimately empty the bag part
-                self.analyze(query)
-            terms = []
-        else:
-            terms = (
-                self.expand_query_terms(query)
-                if "*" in query
-                else self.analyze(query)
-            )
-        if (not terms and not (t_should or t_must)) or not self.n:
+        parsed = self._parse_query(query, semantics, negation, fuzzy)
+        if parsed is None:
             return _NO_MATCHES
-        if fuzzy:
-            terms, _ = self.fuzzy_terms(terms)
-        terms, contradiction = resolve_boolean_overlap(
-            terms,
-            terms if semantics == "and" else required,
-            excluded,
-        )
-        if contradiction or (not terms and not has_fields):
-            return _NO_MATCHES  # +t -t contradiction, or nothing left
-        required = [t for t in required if t in terms]
+        terms, required, excluded, t_should, t_must, t_not = parsed
         excluded = [*excluded, *also_exclude]
-        if has_fields and (
-            semantics == "and" or synonyms or mode == "bm25f"
-            or fuzzy or boost
-        ):
-            raise ValueError(
-                "field-scoped terms (title:) compose with OR and "
-                "+/- only — not with semantics=and, synonyms, "
-                "bm25f, fuzzy, or boost"
-            )
+        has_fields = bool(t_should or t_must or t_not)
+        self._reject_unserved_combination(
+            has_fields, semantics, required, mode, synonyms, fuzzy, boost
+        )
         rank = None
         if boost:
             if boost != "static":
@@ -519,24 +580,8 @@ class LocalServing:
                     "NOT) retrieval only"
                 )
         if synonyms and self._load_synonyms():
-            if semantics == "and" or required:
-                raise ValueError(
-                    "synonyms compose with OR/SHOULD semantics only (a "
-                    "synonym group IS a disjunction)"
-                )
-            if mode == "bm25f":
-                raise ValueError(
-                    "bm25f does not compose with synonym groups yet — "
-                    "pick one of mode=bm25f / synonyms=true"
-                )
             return self._synonym_matches(terms, mode, excluded)
         if mode == "bm25f":
-            if semantics == "and" or required:
-                raise ValueError(
-                    "bm25f serves OR/SHOULD semantics (title-boosted "
-                    "accumulation); AND/MUST composition is not "
-                    "supported"
-                )
             return self._bm25f_matches(terms, excluded)
         gate = terms if semantics == "and" else required
         if (
@@ -634,11 +679,7 @@ class LocalServing:
         member (the true disjunction df; operators/scoring.py
         score_synonyms docstring has the Lucene comparison).
         Rank-identical to the distributed operator (pytest)."""
-        syn = self._load_synonyms()
-        groups = [
-            list(dict.fromkeys([t] + syn.get(t, [])))
-            for t in dict.fromkeys(terms)
-        ]
+        groups = self._synonym_groups(terms)
         live = self._live_postings(sorted({g for grp in groups for g in grp}))
         parts = []
         for grp in groups:
@@ -654,6 +695,15 @@ class LocalServing:
                 (uniq, self._scores(tf_sum, dl_u, int(uniq.size), mode))
             )
         return self._accumulate(parts, exclude=self._live_docids(excluded))
+
+    def _synonym_groups(self, terms: list[str]) -> list[list[str]]:
+        """Each query term's group — itself and its sidecar synonyms —
+        which scores as ONE pseudo-term."""
+        syn = self._load_synonyms()
+        return [
+            list(dict.fromkeys([t] + syn.get(t, [])))
+            for t in dict.fromkeys(terms)
+        ]
 
     def _search_local_bm25f(
         self, terms: list[str], k: int,
@@ -979,3 +1029,199 @@ class LocalServing:
                 f: self._facet_totals(docs, f, facet_top) for f in fields
             }
         return resp
+
+    # -- distributed serving -----------------------------------------------
+    def search_ids(
+        self,
+        query: str,
+        k: int = 50,
+        mode: str = "bm25",
+        path: str = "wand",
+        semantics: str = "or",
+        negation: bool = False,
+        synonyms: bool = False,
+    ):
+        """Top-k (docid, score) DataFrame — the cluster path for head
+        terms whose candidate lists exceed driver memory, the same
+        answer as ``search_local`` (and, over a segment list, as the
+        compacted index; pytest-enforced). ``path``:
+
+        - 'wand': plain OR runs the block-max shard kernel
+          (operators/wand.py ``search_topk``) over the candidate
+          postings of every segment, each segment's tombstones dropped
+          at decode time and its bounds scaled by its ``ub_scale``.
+          Segments share the docid-range salt domain, so a shard holds
+          every segment's postings for its range and per-shard top-k is
+          exact. Every other query shape downgrades to 'exhaustive':
+          AND and ``+``MUST intersect (the intersection IS the pruning),
+          ``-``NOT is a LEFT ANTI join inside the cluster (the driver
+          never holds an excluded head term's docids), and synonym
+          groups, BM25F and ``title:`` clauses aggregate a rewritten tf
+          the stored block bounds do not cover;
+        - 'exhaustive': the decoded live relation
+          (``_live_relation``) scored by the Catalyst operators of
+          operators/scoring.py — ``score_exhaustive`` (bag, AND, MUST,
+          NOT and, over a tagged relation, ``title:``),
+          ``score_synonyms``, ``score_bm25f``;
+        - 'local': ``search_local`` wrapped into a DataFrame.
+
+        ``negation``, ``synonyms`` and ``semantics`` mean what they mean
+        for ``search_local``."""
+        from .operators.scoring import (
+            score_bm25f, score_exhaustive, score_synonyms,
+        )
+        from .operators.wand import search_topk
+
+        if path not in ("wand", "exhaustive", "local"):
+            raise ValueError(
+                f"unknown serving path {path!r}: use 'wand', "
+                "'exhaustive' or 'local'"
+            )
+        if path == "local":
+            return self._id_frame(self.search_local(
+                query, k=k, mode=mode, semantics=semantics,
+                negation=negation, synonyms=synonyms,
+            ))
+        parsed = self._parse_query(query, semantics, negation)
+        if parsed is None:
+            return self._id_frame([])
+        terms, required, excluded, t_should, t_must, t_not = parsed
+        has_fields = bool(t_should or t_must or t_not)
+        self._reject_unserved_combination(
+            has_fields, semantics, required, mode, synonyms
+        )
+        if has_fields:
+            return self._fielded_ids(
+                terms, required, excluded, t_should, t_must, t_not, k, mode
+            )
+        if synonyms and self._load_synonyms():
+            groups = self._synonym_groups(terms)
+            need = sorted({g for grp in groups for g in grp})
+            flat = self._live_relation(need + excluded)
+            return self._exclude_and_cut(
+                score_synonyms(
+                    flat.filter(F.col("term").isin(need)),
+                    groups, self.n, self.avgdl, k=None, mode=mode,
+                ),
+                flat, excluded, k,
+            )
+        if mode == "bm25f":
+            flat = self._live_relation(terms + excluded)
+            return self._exclude_and_cut(
+                score_bm25f(
+                    flat, self._title_relation(terms), terms, self.n,
+                    self.avgdl, k=None,
+                    title_weight=self.DEFAULT_TITLE_WEIGHT,
+                ),
+                flat, excluded, k,
+            )
+        if path == "wand" and semantics == "or" and not (
+            required or excluded
+        ):
+            return search_topk(
+                self._candidate_postings(terms), terms, self.n,
+                self.avgdl, k=k, mode=mode,
+                **self._segment_kernel_args(terms),
+            )
+        return score_exhaustive(
+            self._live_relation(terms + excluded), terms, self.n,
+            self.avgdl, k, mode, semantics=semantics,
+            exclude_terms=excluded or None,
+            required_terms=required or None,
+        )
+
+    def search_many(
+        self, queries: list[str], k: int = 50, mode: str = "bm25"
+    ):
+        """Batch serving: top-k for MANY plain-OR queries in ONE Spark
+        job — (query_id, docid, score), query_id = position in
+        ``queries``, each query rank-identical to its ``search_ids``
+        (pytest). Queries that analyze to nothing produce no rows rather
+        than erroring the batch. operators/wand.py ``search_topk_many``
+        has the cost model."""
+        from .operators.wand import search_topk_many
+
+        qmap: dict[int, list[str]] = {}
+        for i, q in enumerate(queries):
+            terms = self._analyze_or_empty(q or "")
+            if terms:
+                qmap[i] = terms
+        if not qmap:
+            return self.spark.createDataFrame(
+                [], "query_id int, docid long, score double"
+            )
+        all_terms = sorted({t for ts in qmap.values() for t in ts})
+        return search_topk_many(
+            self._candidate_postings(all_terms), qmap, self.n, self.avgdl,
+            k=k, mode=mode, **self._segment_kernel_args(all_terms),
+        )
+
+    def _id_frame(self, rows):
+        return self.spark.createDataFrame(rows, "docid long, score double")
+
+    def _segment_kernel_args(self, terms) -> dict:
+        """The block-max kernel's source arguments: live df, shard
+        count, and per segment its tombstones and bound scale."""
+        return dict(
+            df_map=self._live_df_map(terms),
+            n_shards=1 << self.salt_bits,
+            tombstones_by_seg=self.tombstones,
+            ub_scale_by_seg=self.ub_scales,
+        )
+
+    def _live_relation(self, terms):
+        """Flat LIVE (term, docid, tf, doc_len) rows of ``terms``: the
+        bucket-pruned candidate postings decoded where they live (one
+        decode kernel, operators/postings.py ``decode_postings_df``),
+        each row's segment tombstones dropped — a term's row count is
+        its live df, which the scorers recompute from the relation."""
+        from .operators.postings import decode_postings_df
+
+        terms = list(dict.fromkeys(terms))
+        return decode_postings_df(
+            self._candidate_postings(terms).filter(
+                F.col("term").isin(terms)
+            ),
+            self.tombstones,
+        )
+
+    def _fielded_ids(
+        self, terms, required, excluded, t_should, t_must, t_not, k, mode
+    ):
+        """Field-scoped scoring as ONE tagged relation: title clauses
+        become pseudo-terms ``title:<term>`` whose rows come from the
+        source's title relation (tf = title occurrences, doc_len = body
+        length), unioned with the live body postings; the exhaustive
+        scorer runs once — its live df, MUST gate and NOT anti-join
+        work on the tagged names, so fields need no scoring code of
+        their own."""
+        from .operators.scoring import score_exhaustive
+
+        def tag(ts):
+            return [f"title:{t}" for t in ts]
+
+        title = self._title_relation(
+            list(dict.fromkeys(t_should + t_must + t_not))
+        ).withColumn("term", F.concat(F.lit("title:"), F.col("term")))
+        read = list(dict.fromkeys(terms + excluded))
+        rel = self._live_relation(read).unionByName(title) if read else title
+        return score_exhaustive(
+            rel,
+            list(dict.fromkeys(terms + tag(t_should + t_must))),
+            self.n, self.avgdl, k, mode, semantics="or",
+            exclude_terms=(excluded + tag(t_not)) or None,
+            required_terms=(required + tag(t_must)) or None,
+        )
+
+    @staticmethod
+    def _exclude_and_cut(res, flat, excluded, k):
+        """Drop the docs holding an ``excluded`` term of the live
+        relation ``flat`` (LEFT ANTI join, before the cut), then the
+        top k by (score desc, docid asc)."""
+        if excluded:
+            res = res.join(
+                flat.filter(F.col("term").isin(excluded))
+                .select("docid").distinct(),
+                "docid", "left_anti",
+            )
+        return res.orderBy(F.desc("score"), F.asc("docid")).limit(k)

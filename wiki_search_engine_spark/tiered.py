@@ -28,30 +28,33 @@ compaction" segment engine: scores are IDENTICAL to the compacted
   excluded from scoring and subtracted from df before idf is computed
   (two passes over arrays already in memory, not extra IO).
 
-Two serving paths, both exact:
+Every query mode and path — driver-local (``search_local``,
+``search_phrase``, ``search_mixed``, ``facet_counts``,
+``query_response``) and distributed (``search_ids``, ``search_many``) —
+is the SAME code as the single index: ``serving.ServingCore``, inherited
+by both engines, of which a single index is the one-segment case.
+TieredEngine is only its SOURCE:
 
-- driver-local — every query mode (``search_local``, ``search_phrase``,
-  ``search_mixed``, ``facet_counts``, ``query_response``) is the SAME
-  code as the single index: ``serving.LocalServing``, inherited by both
-  engines. TieredEngine is only its live-postings SOURCE:
-  ``_live_postings`` (one list per segment and salt shard, carrying that
-  segment's tombstones and the block-max bound scale max(1, live avgdl /
-  segment avgdl); live df = summed lexicon df while no doc is
-  overridden, else counted from the decoded live docids),
+- driver-local: ``_live_postings`` (one list per segment and salt shard,
+  carrying that segment's tombstones and the block-max bound scale
+  max(1, live avgdl / segment avgdl); live df = summed lexicon df while
+  no doc is overridden, else counted from the decoded live docids),
   ``_live_title_rows``, ``_live_phrase_matches`` and
   ``_live_facet_arrays`` (tombstone-filtered per segment) and
   ``lookup_docs`` (newest segment wins). Plain OR therefore runs the
   block-max shard kernel over an append-only segment list and the
-  decoded exhaustive accumulate once a doc is overridden. A segment
-  list has no static rank (``SERVES_STATIC_BOOST = False``): every
-  ``boost`` request raises ValueError (HTTP 400);
-- ``search_ids`` — DISTRIBUTED: phase 1 computes exact live df where
-  the postings are (stale hits subtracted during a docid-only decode of
-  the pruned candidates), phase 2 runs the block-max WAND shard kernel
-  over the union of segment postings with tombstoned postings dropped
-  at decode time. Segments share the docid-range salt domain, so a
-  shard holds every segment's postings for its range and per-shard
-  top-k stays exact — the cluster path for head terms.
+  decoded exhaustive accumulate once a doc is overridden;
+- distributed: ``_candidate_postings`` (the union of every segment's
+  bucket-pruned postings with a ``seg`` column), ``tombstones`` and
+  ``ub_scales`` per segment, ``_live_df_map`` (summed lexicon df while
+  append-only, else one job that counts the live postings where they
+  are) and ``_title_relation`` (the live title rows). Segments share
+  the docid-range salt domain, so a shard holds every segment's
+  postings for its range and per-shard top-k stays exact — the cluster
+  path for head terms.
+
+A segment list has no static rank (``SERVES_STATIC_BOOST = False``):
+every ``boost`` request raises ValueError (HTTP 400).
 
 Compaction IS ``plans/merge.py``: fold segments when their count or
 tombstone ratio grows (``compact`` below; automated in
@@ -70,7 +73,7 @@ import numpy as np
 from pyspark.sql import SparkSession
 
 from .engine import SearchEngine
-from .serving import EmptyQueryError, LiveList, LocalServing
+from .serving import EmptyQueryError, LiveList, ServingCore
 
 _COMPAT_KEYS = ("stem", "analyzer", "n_buckets", "salt_bits")
 
@@ -217,7 +220,7 @@ def _overridden_doc_stats(
     return n_rm, len_rm
 
 
-class TieredEngine(LocalServing):
+class TieredEngine(ServingCore):
     # no static rank sidecar: the rule for per-segment PageRank is open
     SERVES_STATIC_BOOST = False
 
@@ -255,6 +258,7 @@ class TieredEngine(LocalServing):
         ]
         head = self.engines[0]
         self.analyzer = head.analyzer
+        self.salt_bits = head.salt_bits
         for eng in self.engines[1:]:
             diffs = [
                 k for k in _COMPAT_KEYS
@@ -320,13 +324,20 @@ class TieredEngine(LocalServing):
         # table), so live df == lexicon sums and the tombstone filters
         # are no-ops.
         self.overridden = overridden
+        # sound block-max bounds: each segment's stored max_score was
+        # computed at ITS OWN avgdl; scale up when the live avgdl is
+        # larger (merge.py pass-through lemma)
+        self.ub_scales = [
+            max(1.0, self.avgdl / eng.avgdl) if eng.avgdl else 1.0
+            for eng in self.engines
+        ]
 
     def analyze(self, query: str) -> list[str]:
         return self.engines[0].analyze(query)
 
     def _live_postings(self, terms: list[str]) -> dict:
         """term -> (live df, [LiveList per segment and salt shard]) —
-        the live-postings source of LocalServing. Each list carries its
+        the live-postings source of ServingCore. Each list carries its
         segment's tombstones (none while no doc is overridden: no
         posting is stale then) and the bound scale max(1, live avgdl /
         segment avgdl) (sound block-max bounds: each segment's stored
@@ -340,8 +351,9 @@ class TieredEngine(LocalServing):
         out: dict[str, tuple[int, list]] = {
             t: (0, []) for t in dict.fromkeys(terms)
         }
-        for eng, tombs in zip(self.engines, self.tombstones):
-            scale = max(1.0, self.avgdl / eng.avgdl) if eng.avgdl else 1.0
+        for eng, tombs, scale in zip(
+            self.engines, self.tombstones, self.ub_scales
+        ):
             if not self.overridden:
                 tombs = tombs[:0]  # append-only: nothing to filter
             decode = bool(tombs.size)
@@ -654,11 +666,7 @@ class TieredEngine(LocalServing):
         distributed live-df job runs."""
         if self.overridden:
             return self._live_df_distributed(terms)
-        out: dict[str, int] = {}
-        for eng in self.engines:
-            for t, d in eng.term_df(terms).items():
-                out[t] = out.get(t, 0) + int(d)
-        return out
+        return self._live_df_driver(terms)
 
     def _live_df_distributed(self, terms: list[str]) -> dict[str, int]:
         """Phase 1 of the distributed tiered query: EXACT live df per
@@ -714,333 +722,17 @@ class TieredEngine(LocalServing):
             out[r["term"]] = out.get(r["term"], 0) + int(r["df"])
         return out
 
-    def _decoded_live_postings(self, terms: list[str]):
-        """Flat LIVE (term, docid, tf, doc_len) rows across segments —
-        candidate lists decoded WHERE THEY LIVE (bucket-pruned tasks),
-        tombstoned postings dropped inside the kernel via the same
-        broadcast the live-df job uses. Row count per term == live df,
-        so downstream exhaustive scoring recomputes df correctly from
-        the relation itself (§8.Q7)."""
-        from pyspark.sql import functions as F
-
-        cand = self._candidate_postings(terms).filter(
-            F.col("term").isin(terms)
-        )
-        bc = self.spark.sparkContext.broadcast(list(self.tombstones))
-
-        def kernel(batches):
-            import pandas as pd
-
-            from wiki_search_engine_spark.operators.codec import (
-                decode_posting_list, isin_sorted,
-            )
-
-            empty = pd.DataFrame(
-                {
-                    "term": pd.Series([], dtype="string"),
-                    "docid": pd.Series([], dtype="int64"),
-                    "tf": pd.Series([], dtype="int32"),
-                    "doc_len": pd.Series([], dtype="int32"),
-                }
-            )
-            for pdf in batches:
-                frames = []
-                for term, seg, blocks in zip(
-                    pdf["term"], pdf["seg"], pdf["blocks"]
-                ):
-                    d, tf, dl = decode_posting_list(
-                        [
-                            b if isinstance(b, dict) else b.asDict()
-                            for b in blocks
-                        ]
-                    )
-                    t = bc.value[int(seg)]
-                    if t.size and d.size:
-                        keep = ~isin_sorted(t, d)
-                        d, tf, dl = d[keep], tf[keep], dl[keep]
-                    if d.size:
-                        frames.append(
-                            pd.DataFrame(
-                                {
-                                    "term": term,
-                                    "docid": d,
-                                    "tf": tf,
-                                    "doc_len": dl,
-                                }
-                            )
-                        )
-                yield pd.concat(frames) if frames else empty
-
-        return cand.select("term", "seg", "blocks").mapInPandas(
-            kernel, "term string, docid long, tf int, doc_len int"
-        )
-
-    def search_ids(
-        self, query: str, k: int = 50, mode: str = "bm25",
-        semantics: str = "or", negation: bool = False,
-        synonyms: bool = False, path: str = "wand",
-    ):
-        """DISTRIBUTED tiered top-k — the cluster path for head terms
-        whose candidate lists exceed driver memory. Two jobs: phase 1
-        computes exact live df per term (above); phase 2 is the standard
-        block-max shard kernel over the union of segment postings with
-        tombstoned postings dropped at decode time
-        (operators/wand.py search_topk tombstones_by_seg). Segments
-        share the docid-range salt domain (enforced at load), so a salt
-        shard holds every segment's postings for its range and per-shard
-        top-k stays exact. Rank- and score-identical to the compacted
-        index (pytest).
-
-        ``semantics='and'`` (conjunctive) routes through the
-        tombstone-aware decode + the Catalyst AND scorer
-        (operators/scoring.py score_exhaustive): the intersection is
-        the pruning, so block-max machinery has nothing to add —
-        identical results to the tiered local path (pytest).
-
-        ``negation=True``: Lucene NOT (-term) on the DISTRIBUTED path —
-        the excluded docids (driver read of the excluded terms' LIVE
-        postings, the same IO a positive query on them would do) ride
-        the per-segment tombstone mask into the kernel, so excluded
-        docs drop at decode time, before any top-k cut. Collection
-        stats (N/avgdl/df of positive terms) are deliberately
-        UNCHANGED — NOT narrows the candidate set, it does not shrink
-        the corpus (unlike a deletes segment).
-
-        ``path`` must be 'wand' (the only distributed tiered path); any
-        other path is rejected rather than silently downgraded."""
-        if path != "wand":
-            raise ValueError(
-                f"unsupported tiered serving path {path!r}: use 'local' "
-                "or 'wand'"
-            )
-        excluded: list[str] = []
-        required: list[str] = []
-        t_should: list[str] = []
-        t_must: list[str] = []
-        t_not: list[str] = []
-        if negation:
-            from .functions.analyzer import split_boolean
-
-            should_q, must_q, neg_q = split_boolean(query)
-            if "title:" in (query or "").lower():
-                (
-                    should_q, must_q, neg_q,
-                    t_should, t_must, t_not, f_contra,
-                ) = self._parse_field_clauses(should_q, must_q, neg_q)
-                if f_contra:
-                    return self.spark.createDataFrame(
-                        [], "docid long, score double"
-                    )
-            excluded = self._analyze_or_empty(neg_q)
-            required = self._analyze_or_empty(must_q)
-            query = f"{should_q} {must_q}".strip()
-            if not query and not (t_should or t_must):
-                return self.spark.createDataFrame(
-                    [], "docid long, score double"
-                )
-        has_fields = bool(t_should or t_must or t_not)
-        if not (query or "").strip():
-            if not has_fields:
-                self.analyze(query)  # blank query raises (400 body)
-            terms = []
-        else:
-            terms = (
-                self.expand_query_terms(query)
-                if "*" in (query or "")
-                else self.analyze(query)
-            )
-        if not terms and not has_fields:
-            return self.spark.createDataFrame(
-                [], "docid long, score double"
-            )
-        from .functions.analyzer import resolve_boolean_overlap
-
-        terms, contradiction = resolve_boolean_overlap(
-            terms,
-            terms if semantics == "and" else required,
-            excluded,
-        )
-        if contradiction or (not terms and not has_fields):
-            return self.spark.createDataFrame(
-                [], "docid long, score double"
-            )
-        required = [t for t in required if t in terms]
-        if has_fields:
-            if semantics == "and" or synonyms or mode == "bm25f":
-                raise ValueError(
-                    "field-scoped terms (title:) compose with OR and "
-                    "+/- only — not with semantics=and, synonyms, or "
-                    "bm25f"
-                )
-            from pyspark.sql import functions as F
-
-            from .operators.scoring import score_exhaustive
-
-            def tag(ts):
-                return [f"title:{t}" for t in ts]
-
-            # tagged-relation form over LIVE data: the live title rows
-            # are driver-decoded (bounded by the title dfs — the same
-            # IO a title query pays) and shipped as a tiny DataFrame
-            # unioned with the live posting decode
-            trows = self._live_title_rows(
-                list(dict.fromkeys(t_should + t_must + t_not))
-            )
-            title_rows = [
-                (f"title:{t}", int(d), int(tf), int(dl))
-                for t, (td, ttf, tdl) in trows.items()
+    def _title_relation(self, terms: list[str]):
+        """The live title rows (``_live_title_rows``: driver-decoded,
+        tombstone-filtered per segment — bounded by the title dfs, the
+        IO a title query pays anyway) as a small DataFrame."""
+        return self.spark.createDataFrame(
+            [
+                (t, int(d), int(tf), int(dl))
+                for t, (td, ttf, tdl) in self._live_title_rows(terms).items()
                 for d, tf, dl in zip(td, ttf, tdl)
-            ]
-            title_rel = self.spark.createDataFrame(
-                title_rows,
-                "term string, docid long, tf int, doc_len int",
-            )
-            read_bag = list(dict.fromkeys(terms + excluded))
-            rel = (
-                self._decoded_live_postings(read_bag).unionByName(
-                    title_rel
-                )
-                if read_bag
-                else title_rel
-            )
-            return score_exhaustive(
-                rel,
-                list(dict.fromkeys(terms + tag(t_should + t_must))),
-                self.n,
-                self.avgdl,
-                k,
-                mode,
-                semantics="or",
-                exclude_terms=(excluded + tag(t_not)) or None,
-                required_terms=(required + tag(t_must)) or None,
-            )
-        syn = self._load_synonyms() if synonyms else {}
-        if syn:
-            if semantics == "and" or required:
-                raise ValueError(
-                    "synonyms compose with OR/SHOULD semantics only "
-                    "(a synonym group IS a disjunction)"
-                )
-            from pyspark.sql import functions as F
-
-            from .operators.scoring import score_synonyms
-
-            # distributed tiered synonyms: group scoring over the LIVE
-            # postings (tombstones dropped at decode) — same sidecar
-            # rule as the tiered local path (newest segment wins), same
-            # kernel as the single-index distributed path
-            groups = [
-                list(dict.fromkeys([t] + syn.get(t, [])))
-                for t in dict.fromkeys(terms)
-            ]
-            need = sorted({g for grp in groups for g in grp})
-            read = need + [
-                t for t in dict.fromkeys(excluded) if t not in need
-            ]
-            flat = self._decoded_live_postings(read)
-            res = score_synonyms(
-                flat.filter(F.col("term").isin(need)),
-                groups, self.n, self.avgdl, k=None, mode=mode,
-            )
-            if excluded:
-                exc_docs = (
-                    flat.filter(F.col("term").isin(excluded))
-                    .select("docid").distinct()
-                )
-                res = res.join(exc_docs, "docid", "left_anti")
-            return res.orderBy(
-                F.desc("score"), F.asc("docid")
-            ).limit(k)
-        tombs = self.tombstones
-        exc = self._live_docids(excluded)
-        if exc.size:
-            tombs = [
-                np.union1d(t, exc) if t.size else exc
-                for t in self.tombstones
-            ]
-        if semantics == "and" or required:
-            from .operators.scoring import score_exhaustive
-
-            uniq = list(dict.fromkeys(terms))
-            read = uniq + [
-                t for t in dict.fromkeys(excluded) if t not in uniq
-            ]
-            return score_exhaustive(
-                self._decoded_live_postings(read),
-                uniq,
-                self.n,
-                self.avgdl,
-                k,
-                mode,
-                semantics=semantics,
-                exclude_terms=excluded or None,
-                required_terms=(
-                    required if semantics != "and" else None
-                ) or None,
-            )
-        from .operators.wand import search_topk
-
-        df_map = self._live_df_map(terms)
-        return search_topk(
-            self._candidate_postings(terms),
-            terms,
-            self.n,
-            self.avgdl,
-            k=k,
-            mode=mode,
-            df_map=df_map,
-            n_shards=1 << self.engines[0].salt_bits,
-            tombstones_by_seg=tombs,
-            # sound block-max bounds: each segment's stored max_score
-            # was computed at ITS OWN avgdl; scale up when the live
-            # avgdl is larger (merge.py pass-through lemma)
-            ub_scale_by_seg=[
-                max(1.0, self.avgdl / eng.avgdl) if eng.avgdl else 1.0
-                for eng in self.engines
             ],
-        )
-
-    def search_many(
-        self, queries: list[str], k: int = 50, mode: str = "bm25"
-    ):
-        """Batched tiered top-k: ONE Spark job for all queries over the
-        union of segment postings (plus the shared live-df job) —
-        per-query rank-identical to the compacted index's search_many
-        (pytest). The bulk-scoring form for training-data mining over a
-        still-uncompacted index."""
-        from .operators.wand import search_topk_many
-
-        qmap: dict[int, list[str]] = {}
-        for i, q in enumerate(queries):
-            try:
-                terms = self.analyze(q)
-            except EmptyQueryError:
-                continue
-            if terms:
-                qmap[i] = terms
-        if not qmap:
-            return self.spark.createDataFrame(
-                [], "query_id int, docid long, score double"
-            )
-        all_terms = sorted({t for ts in qmap.values() for t in ts})
-        df_map = self._live_df_map(all_terms)
-        return search_topk_many(
-            self._candidate_postings(all_terms),
-            qmap,
-            self.n,
-            self.avgdl,
-            k=k,
-            mode=mode,
-            df_map=df_map,
-            n_shards=1 << self.engines[0].salt_bits,
-            tombstones_by_seg=self.tombstones,
-            # sound block-max bounds: each segment's stored max_score
-            # was computed at ITS OWN avgdl; scale up when the live
-            # avgdl is larger (merge.py pass-through lemma)
-            ub_scale_by_seg=[
-                max(1.0, self.avgdl / eng.avgdl) if eng.avgdl else 1.0
-                for eng in self.engines
-            ],
+            "term string, docid long, tf int, doc_len int",
         )
 
     def facet_fields(self) -> list[str]:
