@@ -1356,7 +1356,7 @@ def q_wildcard_bm25(spark, sf_dir):
 def q_wildcard_leading_bm25(spark, sf_dir):
     """Leading wildcard ('*er'): every lexicon term with the SUFFIX
     expands into an OR-scored BM25 query with its own df. The serving
-    twin is SearchEngine.expand_wildcard over the reversed-term
+    twin is ServingCore.expand_wildcard over the reversed-term
     lexicon sidecar (engine.build_lexicon_rev / CLI revindex — a
     term_rev prefix RANGE scan, footer-stats pruned, pytest identity
     vs a full-lexicon regex); here the expansion is the distributed
@@ -1391,7 +1391,7 @@ def q_phrase_slop_bm25(spark, sf_dir):
     follows 'slow' within a window of span 3; scored as a pseudo-term
     like exact phrases (operators/phrase.py slop_occurrences — the
     hit-kernel + chained range joins form; the driver twin is the
-    greedy smallest-successor chain in SearchEngine._live_phrase_matches,
+    greedy smallest-successor chain in SearchEngine._phrase_rows,
     pytest-identity). At sf0.01 this widens 36 exact starts to 93 —
     the discriminating case."""
     from wiki_search_engine_spark.operators.phrase import (

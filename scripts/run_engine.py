@@ -46,6 +46,21 @@ import sys
 import time
 
 
+def _open_engine(spark, index: str, cache_terms: int = 0, snapshot=None):
+    """The engine behind ``--index``: one index directory, or a
+    comma-separated segment list, oldest first, served tiered (deletes
+    segments allowed after the first entry)."""
+    from wiki_search_engine_spark.engine import SearchEngine
+    from wiki_search_engine_spark.tiered import TieredEngine
+
+    dirs = [d for d in index.split(",") if d]
+    if len(dirs) > 1:
+        return TieredEngine(spark, dirs, cache_terms=cache_terms)
+    return SearchEngine(
+        spark, dirs[0], cache_terms=cache_terms, snapshot=snapshot
+    )
+
+
 def main(argv=None):
     p = argparse.ArgumentParser()
     sub = p.add_subparsers(dest="cmd", required=True)
@@ -638,20 +653,9 @@ def main(argv=None):
             )
         )
     elif args.cmd == "serve":
-        from wiki_search_engine_spark.engine import SearchEngine
         from wiki_search_engine_spark.server import SearchServer
 
-        dirs = [d for d in args.index.split(",") if d]
-        if len(dirs) > 1:
-            from wiki_search_engine_spark.tiered import TieredEngine
-
-            eng = TieredEngine(
-                spark, dirs, cache_terms=args.cache_terms
-            )
-        else:
-            eng = SearchEngine(
-                spark, dirs[0], cache_terms=args.cache_terms
-            )
+        eng = _open_engine(spark, args.index, cache_terms=args.cache_terms)
         server = SearchServer(
             eng, host=args.host, port=args.port, path_mode=args.path
         )
@@ -668,180 +672,75 @@ def main(argv=None):
         )
         server.serve_forever()
     else:
-        from wiki_search_engine_spark.engine import (
-            EmptyQueryError, SearchEngine,
-        )
+        from wiki_search_engine_spark.engine import EmptyQueryError
 
-        dirs = [d for d in args.index.split(",") if d]
-        if args.snapshot and len(dirs) > 1:
+        if args.snapshot and "," in args.index:
             raise SystemExit(
                 "--snapshot is single-index only; time-travel each "
                 "segment root separately"
             )
-        if args.phrase and len(dirs) > 1:
-            raise SystemExit(
-                "--phrase is single-index only (positional sidecars "
-                "are per-index; compact the segments first)"
-            )
-        if args.phrase:
-            t0 = time.time()
-            try:
-                eng = SearchEngine.load(
-                    spark, dirs[0], snapshot=args.snapshot
-                )
-                hits = eng.search_phrase(
-                    args.query, k=args.k, slop=args.slop
-                )
-            except EmptyQueryError:
-                print(
-                    json.dumps({"success": False, "error": "Empty query"})
-                )
-                spark.stop()
-                return 1
-            except (FileNotFoundError, ValueError) as e:
-                # missing sidecar, bad --snapshot, or a phrase token
-                # that does not analyze to exactly one term
-                print(json.dumps({"success": False, "error": str(e)}))
-                spark.stop()
-                return 1
-            dmap = {
-                r["docid"]: r
-                for r in eng.lookup_docs([d for d, _s, _tf in hits])
-            }
-            print(
-                json.dumps(
-                    {
-                        "query": args.query,
-                        "phrase": True,
-                        "search_sec": round(time.time() - t0, 3),
-                        "results": [
-                            {
-                                "docid": d,
-                                "url": dmap[d]["url"],
-                                "score": round(s, 6),
-                                "phrase_tf": tf,
-                                "snippet": dmap[d]["snippet"],
-                            }
-                            for d, s, tf in hits
-                        ],
-                    }
-                )
-            )
-            spark.stop()
-            return 0
         t0 = time.time()
         try:
-            if len(dirs) > 1:
-                # tiered search over a segment list (deletes segments
-                # allowed after the first entry) — every path
-                from wiki_search_engine_spark.tiered import TieredEngine
-
-                teng = TieredEngine(spark, dirs)
-                if args.path == "local":
-                    ids = teng.search_local(
-                        args.query, k=args.k, mode=args.mode,
-                        negation=args.negation,
-                        synonyms=args.synonyms,
-                    )
-                else:
-                    ids = [
-                        (r["docid"], r["score"])
-                        for r in teng.search_ids(
-                            args.query, k=args.k, mode=args.mode,
-                            path=args.path, negation=args.negation,
-                            synonyms=args.synonyms,
-                        ).collect()
-                    ]
-                smap = dict(ids)
-                rows = sorted(
-                    (
-                        {
-                            "docid": r["docid"], "url": r["url"],
-                            "score": smap[r["docid"]],
-                            "snippet": r["snippet"],
-                        }
-                        for r in teng.lookup_docs([d for d, _ in ids])
-                    ),
-                    key=lambda r: (-r["score"], r["docid"]),
+            # both engines serve every mode through the same dispatch
+            eng = _open_engine(spark, args.index, snapshot=args.snapshot)
+            phrase_tf = None
+            if args.phrase:
+                hits = eng.search_phrase(args.query, k=args.k, slop=args.slop)
+                ids = [(d, s) for d, s, _tf in hits]
+                phrase_tf = {d: tf for d, _s, tf in hits}
+            elif '"' in args.query and eng._has_positions():
+                # quoted spans = mixed phrase semantics (driver path;
+                # mirrors the HTTP auto-routing)
+                ids = eng.search_mixed(
+                    args.query, k=args.k, mode=args.mode,
+                    negation=args.negation,
+                )
+            elif args.boost and args.path != "local":
+                # a segment list's "single-index" error comes first
+                eng._reject_unserved_boost(args.boost)
+                raise ValueError("--boost static is served by --path local")
+            elif args.path == "local":
+                ids = eng.search_local(
+                    args.query, k=args.k, mode=args.mode,
+                    negation=args.negation, synonyms=args.synonyms,
+                    boost=args.boost,
                 )
             else:
-                try:
-                    eng = SearchEngine.load(
-                        spark, dirs[0], snapshot=args.snapshot
-                    )
-                except (FileNotFoundError, ValueError) as e:
-                    if args.snapshot:
-                        # bad --snapshot: clean JSON error (expired
-                        # name, or a plain non-pointer-root index),
-                        # not a traceback
-                        print(
-                            json.dumps(
-                                {"success": False, "error": str(e)}
-                            )
-                        )
-                        spark.stop()
-                        return 1
-                    raise
-                import os as _os
-
-                if '"' in args.query and _os.path.isdir(
-                    f"{eng.index_dir}/positions"
-                ):
-                    # quoted spans = mixed phrase semantics (driver
-                    # path; mirrors the HTTP auto-routing)
-                    ids = eng.search_mixed(
-                        args.query, k=args.k, mode=args.mode
-                    )
-                    smap = dict(ids)
-                    rows = sorted(
-                        (
-                            {
-                                "docid": r["docid"], "url": r["url"],
-                                "score": smap[r["docid"]],
-                                "snippet": r["snippet"],
-                            }
-                            for r in eng.lookup_docs(
-                                [d for d, _ in ids]
-                            )
-                        ),
-                        key=lambda r: (-r["score"], r["docid"]),
-                    )
-                elif args.boost:
-                    if args.path != "local":
-                        raise SystemExit(
-                            "--boost static is served by --path local"
-                        )
-                    ids = eng.search_local(
-                        args.query, k=args.k, mode=args.mode,
-                        negation=args.negation, boost=args.boost,
-                    )
-                    smap = dict(ids)
-                    rows = sorted(
-                        (
-                            {
-                                "docid": r["docid"], "url": r["url"],
-                                "score": smap[r["docid"]],
-                                "snippet": r["snippet"],
-                            }
-                            for r in eng.lookup_docs(
-                                [d for d, _ in ids]
-                            )
-                        ),
-                        key=lambda r: (-r["score"], r["docid"]),
-                    )
-                else:
-                    rows = eng.search(
+                ids = [
+                    (r["docid"], r["score"])
+                    for r in eng.search_ids(
                         args.query, k=args.k, mode=args.mode,
                         path=args.path, negation=args.negation,
                         synonyms=args.synonyms,
                     ).collect()
+                ]
+            smap = dict(ids)
+            rows = sorted(
+                eng.lookup_docs([d for d, _ in ids]),
+                key=lambda r: (-smap[r["docid"]], r["docid"]),
+            )
+            sec = time.time() - t0
+            facets = {
+                f: eng.facet_counts(
+                    args.query, field=f, negation=args.negation,
+                    top=args.facet_top, mode=args.mode,
+                    synonyms=args.synonyms, phrase=args.phrase,
+                )
+                for f in (s.strip() for s in (args.facets or "").split(","))
+                if f
+            }
         except EmptyQueryError:
             # mirror the reference's HTTP 400 body
             # (backend/controllers/queryController.js:21-25)
             print(json.dumps({"success": False, "error": "Empty query"}))
             spark.stop()
             return 1
-        sec = time.time() - t0
+        except (FileNotFoundError, ValueError) as e:
+            # a missing sidecar, a bad --snapshot, an option combination
+            # no path serves: the HTTP 400 errors, as a JSON body
+            print(json.dumps({"success": False, "error": str(e)}))
+            spark.stop()
+            return 1
         payload = {
             "query": args.query,
             "search_sec": round(sec, 3),
@@ -849,25 +748,18 @@ def main(argv=None):
                 {
                     "docid": r["docid"],
                     "url": r["url"],
-                    "score": round(r["score"], 6),
+                    "score": round(smap[r["docid"]], 6),
                     "snippet": r["snippet"][:120],
                 }
                 for r in rows
             ],
         }
-        if getattr(args, "facets", None):
-            fac_eng = teng if len(dirs) > 1 else eng
-            payload["facets"] = {
-                f: fac_eng.facet_counts(
-                    args.query, field=f, negation=args.negation,
-                    top=args.facet_top, mode=args.mode,
-                    synonyms=args.synonyms,
-                )
-                for f in (
-                    s.strip() for s in args.facets.split(",")
-                )
-                if f
-            }
+        if phrase_tf is not None:
+            payload["phrase"] = True
+            for r in payload["results"]:
+                r["phrase_tf"] = phrase_tf[r["docid"]]
+        if facets:
+            payload["facets"] = facets
         print(json.dumps(payload))
     spark.stop()
 

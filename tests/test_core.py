@@ -426,3 +426,18 @@ def test_ner_sentence_initial_fp_guard():
     # mid-sentence runs are untouched by the guard
     toks = ner_tokens("We phoned Big Bank yesterday about a big loan")
     assert "big bank" in toks
+
+
+def test_coverage_states_the_entry_count():
+    """The entry count COVERAGE.md states is the size of the
+    ``__spark_entry__`` registry (the two drifted apart once)."""
+    import os
+    import re
+
+    import __spark_entry__ as E
+
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    with open(os.path.join(repo, "COVERAGE.md")) as f:
+        stated = re.findall(r"All (\d+) `__spark_entry__` entries", f.read())
+    assert stated
+    assert {int(n) for n in stated} == {len(E.queries())}

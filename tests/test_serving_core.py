@@ -81,6 +81,7 @@ def served(spark, tmp_path_factory):
         single=SearchEngine(spark, base.index_dir),
         one_segment=TieredEngine(spark, [base.index_dir]),
         tiered=TieredEngine(spark, [base.index_dir, dele]),
+        tiered_deletes_dir=dele,
         compacted=comp,
     )
 
@@ -329,7 +330,9 @@ def test_unknown_path_and_kernel_mode_are_rejected(served):
 def test_modes_exist_once():
     """Each serving mode and path lives on ServingCore only: neither
     engine may define its own copy (a parallel path would drift), and
-    the tiered engine borrows no single-index method."""
+    the tiered engine borrows no single-index method. Every source read
+    is one fold over ``segments`` on the core: SearchEngine keeps only
+    its per-segment readers, and TieredEngine only its constructor."""
     from wiki_search_engine_spark import tiered
     from wiki_search_engine_spark.engine import SearchEngine
     from wiki_search_engine_spark.serving import ServingCore
@@ -339,6 +342,14 @@ def test_modes_exist_once():
     assert {"search_local", "search_mixed", "search_phrase",
             "facet_counts", "query_response", "search_ids",
             "search_many"} <= shared
+    folds = {
+        "_live_postings", "_live_title_rows", "_live_phrase_matches",
+        "_live_facet_arrays", "lookup_docs", "_load_synonyms",
+        "facet_fields", "_has_positions", "build_spellindex",
+        "_candidate_postings", "_live_df_map", "_title_relation",
+        "suggest", "correct", "fuzzy_terms", "expand_wildcard",
+    }
+    assert folds <= shared, folds - shared
     for cls in (SearchEngine, TieredEngine):
         assert not shared & set(vars(cls)), cls.__name__
         assert not {"_search_ids_fielded", "_decoded_live_postings"} & set(
@@ -347,3 +358,185 @@ def test_modes_exist_once():
     assert not re.search(
         r"SearchEngine\.\w+\(\s*self", inspect.getsource(tiered)
     )
+    own = {
+        n for n in vars(TieredEngine)
+        if not (n.startswith("__") and n.endswith("__"))
+    }
+    assert own <= {"analyze"}, own
+    assert len(inspect.getsource(TieredEngine).splitlines()) <= 200
+    # the segment readers the core folds stay reachable on SearchEngine
+    # (perfbench/trace.py wraps some of them)
+    for name in ("lookup_docs", "term_df", "_cached_term_lists",
+                 "query_response"):
+        assert callable(getattr(SearchEngine, name)), name
+
+
+# the search-head features, as (method, args) calls
+SEARCH_HEAD = [
+    ("suggest-r", "suggest", ("r",), {"k": 5}),
+    ("suggest-t", "suggest", ("t",), {"k": 3}),
+    ("suggest-st", "suggest", ("st",), {"k": 10}),
+    ("correct-rivr", "correct", ("rivr",), {"k": 5}),
+    ("correct-towxr", "correct", ("towxr",), {"k": 5}),
+    ("correct-all", "correct", ("stoen",), {"k": None}),
+    ("fuzzy", "fuzzy_terms", (["rivr", "stone", "zzzzqq"],), {}),
+    ("wildcard", "expand_wildcard", ("t*",), {}),
+    ("wildcard-cap", "expand_wildcard", ("s*",), {"cap": 2}),
+]
+
+
+@pytest.mark.parametrize(
+    "method,args,kwargs", [r[1:] for r in SEARCH_HEAD],
+    ids=[r[0] for r in SEARCH_HEAD],
+)
+def test_search_head_features_are_served_identically(
+    served, method, args, kwargs
+):
+    single = getattr(served.single, method)(*args, **kwargs)
+    assert single, "the call must return something"
+    assert getattr(served.one_segment, method)(*args, **kwargs) == single
+    assert getattr(served.tiered, method)(*args, **kwargs) == (
+        getattr(served.compacted, method)(*args, **kwargs)
+    )
+
+
+@pytest.fixture(scope="module")
+def crawled(spark, served, tmp_path_factory):
+    """A crawl batch over the base — three re-crawled base urls with new
+    text and three new urls — served as [base, batch], and its
+    compaction."""
+    from wiki_search_engine_spark.engine import SearchEngine
+    from wiki_search_engine_spark.tiered import TieredEngine, compact
+
+    root = tmp_path_factory.mktemp("crawled")
+    recrawled = [
+        {**_row(i), "text": f"{_row(i)['text']} river recrawl"}
+        for i in (1, 2, 3)
+    ]
+    fresh = [_row(i) for i in range(N_DOCS, N_DOCS + 3)]
+    batch = SearchEngine.build(
+        spark,
+        spark.createDataFrame(
+            recrawled + fresh,
+            "url string, warc_ts timestamp, html binary, text string, "
+            "lang string",
+        ),
+        str(root / "batch"), stem=True, n_buckets=8, bucket_groups=1,
+        salt_bits=2, positions=True,
+    )
+    batch.build_spellindex()
+    base = served.single.index_dir
+    compact(spark, [base, batch.index_dir], str(root / "compacted"))
+    comp = SearchEngine(spark, str(root / "compacted"))
+    comp.set_synonyms([["river", "harbor"]])
+    comp.build_spellindex()
+    return SimpleNamespace(
+        tiered=TieredEngine(spark, [base, batch.index_dir]),
+        compacted=comp,
+        recrawled=[r["url"] for r in recrawled],
+    )
+
+
+def test_tombstones_hold_only_the_segments_own_docids(spark, crawled):
+    """An earlier segment's tombstones are the later docids it really
+    holds: a crawl batch's fresh urls tombstone nothing in the base."""
+    import numpy as np
+    import pyarrow.parquet as pq
+
+    def docids(eng):
+        return pq.read_table(
+            f"{eng.index_dir}/docs", columns=["docid"]
+        ).column("docid").to_numpy()
+
+    (base, base_tombs, _), (batch, batch_tombs, _) = (
+        crawled.tiered.segments
+    )
+    for seg, tombs in ((base, base_tombs), (batch, batch_tombs)):
+        assert np.isin(tombs, docids(seg)).all()
+    recrawled = {
+        r["docid"] for r in spark.createDataFrame(
+            [(u,) for u in crawled.recrawled], "url string"
+        )
+        .withColumn("docid", F.shiftrightunsigned(F.xxhash64("url"), 1))
+        .collect()
+    }
+    assert set(base_tombs.tolist()) == recrawled
+    assert batch_tombs.size == 0
+    assert crawled.tiered.overridden == len(recrawled)
+    assert crawled.tiered.n == crawled.compacted.n
+
+
+@pytest.mark.parametrize(
+    "query,kwargs", [r[1:] for r in REQUESTS], ids=[r[0] for r in REQUESTS]
+)
+def test_crawl_batch_is_served_as_compacted(crawled, query, kwargs):
+    kw = {"k": 10, **kwargs}
+    _assert_same_up_to_float(
+        crawled.tiered.query_response(query, **kw),
+        crawled.compacted.query_response(query, **kw),
+    )
+    if kwargs.get("phrase") or kwargs.get("fuzzy") or '"' in query:
+        return  # local-only request classes
+    kw = {
+        k: v for k, v in kwargs.items()
+        if k in ("semantics", "negation", "synonyms")
+    }
+    kw["mode"] = kwargs.get("option_name", "tfidf")
+    _assert_same_ranking(
+        _ids(crawled.tiered.search_ids(query, k=10, **kw)),
+        _ids(crawled.compacted.search_ids(query, k=10, **kw)),
+    )
+
+
+def _cli_search(index: str, *flags: str) -> tuple[int, dict]:
+    """(exit code, JSON output) of ``run_engine.py search``."""
+    import json
+    import os
+    import subprocess
+    import sys
+
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    proc = subprocess.run(
+        [sys.executable, "scripts/run_engine.py", "search",
+         "--index", index, *flags],
+        capture_output=True, text=True, timeout=300, cwd=repo,
+        env=dict(os.environ, SPARK_MASTER="local[2]", PYTHONPATH=repo),
+    )
+    return proc.returncode, json.loads(proc.stdout.strip().splitlines()[-1])
+
+
+def test_cli_search_serves_a_segment_list_like_one_index(served):
+    """The search CLI runs one dispatch for a single index and a
+    segment list: phrase and quoted (mixed) queries serve over segments
+    as over the compacted index, and a boost request over segments is
+    the JSON 400 error, not a silently unboosted answer."""
+    segments = f"{served.single.index_dir},{served.tiered_deletes_dir}"
+    rc, out = _cli_search(
+        segments, "--query", "river stone", "--phrase", "--k", "5"
+    )
+    assert rc == 0
+    exp = served.compacted.search_phrase("river stone", k=5)
+    assert [(r["docid"], r["phrase_tf"]) for r in out["results"]] == [
+        (d, tf) for d, _s, tf in exp
+    ]
+    assert exp and all(
+        math.isclose(r["score"], round(s, 6), abs_tol=1e-6)
+        for r, (_d, s, _tf) in zip(out["results"], exp)
+    )
+    rc, out = _cli_search(
+        segments, "--query", '"river stone" garden', "--path", "local",
+        "--k", "5",
+    )
+    assert rc == 0
+    exp = served.compacted.search_mixed('"river stone" garden', k=5)
+    assert exp and [r["docid"] for r in out["results"]] == [
+        d for d, _s in exp
+    ]
+    rc, out = _cli_search(
+        segments, "--query", "river stone", "--path", "local",
+        "--boost", "static",
+    )
+    assert rc == 1
+    assert out == {
+        "success": False, "error": "boost is single-index serving only"
+    }

@@ -6,8 +6,9 @@ Checks, per headline path:
   scan (PushedFilters) and the scan reads only the needed columns;
 - hydration join: BroadcastHashJoin (never SortMerge for a k-row side);
 - exhaustive scorer: partial/final HashAggregate pair + WholeStageCodegen;
-- exhaustive and BM25F scorers: live df with no Window (a per-term
-  window puts a head term's whole relation in one task);
+- exhaustive and BM25F scorers, and the substring-dedup gram df: no
+  Window (a per-key window puts a head term's whole relation, or the
+  hottest boilerplate gram's rows, in one task);
 - lineitem demo query: filter + column pruning pushed to the scan.
 
 Usage: python tools/explain_audit.py  (exit 1 on any failed assertion)
@@ -154,11 +155,27 @@ def main() -> None:
 
     # 4b. live df without a window keyed on term: a head term's whole
     # posting relation must never land in one task — the per-term count
-    # is a partial aggregate broadcast back to the rows
+    # is a partial aggregate broadcast back to the rows. The same holds
+    # for the substring-dedup gram df (the hottest gram is the most
+    # duplicated boilerplate): a partial aggregate joined back
+    from wiki_search_engine_spark.operators.substring_dedup import (
+        ngram_dup_fraction,
+    )
+
+    dplan = plan_of(ngram_dup_fraction(
+        spark.createDataFrame(
+            [(i, "the same boilerplate span opens every page " + str(i))
+             for i in range(8)],
+            "doc_id long, text string",
+        ),
+        n=3,
+    ))
     check(
         "no_window_in_scorers",
-        xplan + fplan,
-        must=[r"BroadcastHashJoin"],
+        xplan + fplan + dplan,
+        must=[r"BroadcastHashJoin",
+              r"Keys \[1\]: \[gram#\d+\]\nFunctions \[1\]: "
+              r"\[partial_count"],
         must_not=[r"Window"],
     )
 

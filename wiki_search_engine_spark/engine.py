@@ -13,11 +13,16 @@ SAME analyzer as indexing -> bucket-pruned scan of the postings table ->
 per-shard block-max kernel (or the exhaustive Catalyst path) -> global
 orderBy(score desc, docid asc).limit(k) -> broadcast hydration join.
 
-Every serving mode and path (search_local, search_ids, search_many,
-search_phrase, search_mixed, facet_counts, query_response) is inherited
-from serving.ServingCore, shared with tiered.TieredEngine; this class is
-the core's one-segment source (no tombstones, its own lexicon df, the
-pruned title_tf scan) plus the build/merge lifecycle and hydration.
+Every serving mode, path and source read (search_local, search_ids,
+search_many, search_phrase, search_mixed, facet_counts, query_response,
+suggest, correct, lookup_docs, ...) is inherited from
+serving.ServingCore, shared with tiered.TieredEngine. This class is a
+single index's segment list — ``segments == [(self, no tombstones,
+1.0)]`` — and the READER of one index directory that the core folds
+over every segment: lexicon df and posting lists, lexicon ranges,
+wildcard and spell candidates, raw title, phrase and facet rows, doc
+rows, the synonym sidecar and the distributed postings and title
+scans; plus the build/merge lifecycle.
 """
 
 from __future__ import annotations
@@ -29,7 +34,7 @@ from pyspark.sql import functions as F
 from .functions.analyzer import analyze_query
 from .operators.postings import DEFAULT_BUCKETS, term_bucket
 from .plans.build import build_index
-from .serving import EmptyQueryError, LiveList, ServingCore
+from .serving import EmptyQueryError, ServingCore
 
 
 def salt_of(docid: int, salt_bits: int) -> int:
@@ -83,11 +88,14 @@ def resolve_index_dir(path: str, snapshot: str | None = None) -> str:
 
 
 class SearchEngine(ServingCore):
-    # a single index is one segment: no docs overridden by a later one,
-    # no tombstones, block-max bounds computed at its own avgdl
+    # a single index is one segment: no docs overridden by a later one
     overridden = 0
-    tombstones = (np.empty(0, np.int64),)
-    ub_scales = (1.0,)
+
+    @property
+    def segments(self) -> list:
+        """The core's source: this index as its only segment, with no
+        tombstones and its block-max bounds at its own avgdl."""
+        return [(self, np.empty(0, np.int64), 1.0)]
 
     def __init__(
         self,
@@ -285,6 +293,14 @@ class SearchEngine(ServingCore):
                 else:
                     missing.append(t)
         if missing:
+            import os
+
+            if not os.path.isdir(f"{self.index_dir}/term_stats"):
+                raise FileNotFoundError(
+                    f"{self.index_dir}/term_stats missing — the local "
+                    "serving path needs the lexicon side table; rebuild "
+                    "the index or use path='wand'"
+                )
             df_map = self.term_df(missing)
             loaded: dict[str, tuple[int, list]] = {
                 t: (0, []) for t in missing
@@ -405,26 +421,13 @@ class SearchEngine(ServingCore):
             F.col("bucket").isin(buckets)
         )
 
-    def _candidate_postings(self, terms: list[str]) -> DataFrame:
-        """The distributed source's candidate rows: ``_postings`` as
-        segment 0."""
-        return self._postings(terms).withColumn("seg", F.lit(0))
-
-    def _live_df_map(self, terms: list[str]) -> dict[str, int]:
-        return self.term_df(terms)
-
-    def _title_relation(self, terms: list[str]) -> DataFrame:
+    def _title_scan(self, terms: list[str]) -> DataFrame | None:
         """(term, docid, tf, doc_len) title rows of ``terms``: a scan of
         the title_tf sidecar pruned to the terms' bucket directories,
-        with the term predicate pushed into the parquet reader."""
-        import os
-
-        if not os.path.isdir(f"{self.index_dir}/title_tf"):
-            raise FileNotFoundError(
-                f"{self.index_dir}/title_tf missing — BM25F and "
-                "field-scoped queries need the title-field sidecar; run "
-                "engine.build_title_tf() (CLI: titleindex)"
-            )
+        with the term predicate pushed into the parquet reader; None
+        without the sidecar."""
+        if not self._has_sidecar("title_tf"):
+            return None
         buckets = sorted({term_bucket(t, self.n_buckets) for t in terms})
         return (
             self.spark.read.parquet(f"{self.index_dir}/title_tf")
@@ -465,49 +468,6 @@ class SearchEngine(ServingCore):
             )
         }
 
-    def suggest(self, prefix: str, k: int = 10) -> list[tuple[str, int]]:
-        """Autocomplete: top-k index terms starting with ``prefix``,
-        ranked by df desc then term asc — a driver-side RANGE scan of
-        the term_stats lexicon, zero Spark jobs.
-
-        The lexicon is hash-bucketed for point lookups, so a prefix
-        range has members in every bucket directory — but each bucket's
-        files are term-sorted, so pyarrow's footer min/max stats prune
-        each directory to the row groups straddling
-        [prefix, prefix_hi): at a 10^9-term lexicon that is
-        O(n_buckets) row groups read, not a lexicon scan. (An
-        autocomplete-heavy head would additionally materialize a
-        term-sorted top-df projection; this path needs no extra
-        table.) The reference's `word` B-tree serves the same range
-        shape (mongoService.js does point $in; this is the range
-        form). Distributed twin: __spark_entry__ q_term_prefix_topk —
-        pytest asserts the two agree on a built index.
-
-        Reads go through ONE cached pyarrow dataset over the bucket
-        directories (threaded scan + footer-stats row-group pruning)
-        — measured ~4x faster than per-bucket sequential read_table
-        on a 64-bucket lexicon."""
-        import re
-
-        import pyarrow.dataset as pads
-
-        p = re.sub(r"[^a-z0-9]", "", (prefix or "").lower())
-        if not p:
-            raise EmptyQueryError("Empty query")
-        hi = p[:-1] + chr(ord(p[-1]) + 1)
-        tbl = self._side_dataset("term_stats").to_table(
-            columns=["term", "df"],
-            filter=(pads.field("term") >= p) & (pads.field("term") < hi),
-        )
-        matches = sorted(
-            zip(
-                (int(x) for x in tbl.column("df").to_pylist()),
-                tbl.column("term").to_pylist(),
-            ),
-            key=lambda t: (-t[0], t[1]),
-        )
-        return [(term, df) for df, term in matches[:k]]
-
     def build_title_tf(self, analyzer: str | None = None) -> None:
         """Materialize the title-field sidecar (``title_tf/``) on an
         existing index — the retrofit path for indexes built before
@@ -522,23 +482,14 @@ class SearchEngine(ServingCore):
         self._title_cache = {}
         self._footers = {}
 
-    def _live_title_rows(self, terms: list[str]) -> dict:
-        """term -> (docids, title_tfs, body_doc_lens) numpy arrays from
-        the title_tf sidecar — pyarrow over the terms' bucket
-        directories (term-sorted row groups), no Spark job, the same
-        cached-footer point read as term_df. Missing sidecar raises with
-        the titleindex remedy."""
-        import os
-
-        import numpy as np
-
-        root = f"{self.index_dir}/title_tf"
-        if not os.path.isdir(root):
-            raise FileNotFoundError(
-                f"{root} missing — BM25F needs the title-field sidecar; "
-                "run engine.build_title_tf() (CLI: titleindex) or "
-                "rebuild the index"
-            )
+    def _title_rows(self, terms: list[str]) -> dict | None:
+        """term -> (docids, title_tfs, body_doc_lens) numpy arrays, docid
+        sorted, from the title_tf sidecar — pyarrow over the terms'
+        bucket directories (term-sorted row groups), no Spark job, the
+        same cached-footer point read as term_df, cached per term. None
+        without the sidecar."""
+        if not self._has_sidecar("title_tf"):
+            return None
         cache = getattr(self, "_title_cache", None)
         if cache is None:
             cache = self._title_cache = {}
@@ -714,12 +665,9 @@ class SearchEngine(ServingCore):
             )
         )
 
-    def expand_wildcard(
-        self, pattern: str, cap: int | None = None
-    ) -> list[tuple[str, int]]:
-        """Expand one wildcard token (``snow*``, ``*ing``, ``s*ing``,
-        multi-star) to its top-df lexicon matches, capped at
-        ``MAX_WILDCARD_EXPANSIONS``.
+    def _wildcard_matches(self, pattern: str) -> list[tuple[str, int]]:
+        """Every (term, df) of this lexicon matching one wildcard token
+        (``snow*``, ``*ing``, ``s*ing``, multi-star), uncapped.
 
         Strategy (the Lucene automaton's range-scan slice, made
         distributed-storage-friendly): take the LONGER of the literal
@@ -727,18 +675,16 @@ class SearchEngine(ServingCore):
         footer-pruned range scan of the forward lexicon (prefix) or
         the reversed-term sidecar (suffix; ``build_lexicon_rev``,
         CLI ``revindex``) — then regex-filter the pruned candidates
-        against the full pattern and keep the highest-df ``cap``
-        matches. The scan is O(range straddle), never a lexicon scan;
-        the regex touches only pruned candidate rows. Filtering
-        happens BEFORE the cap, so selective infixes aren't starved
-        by high-df prefix cousins. A pattern with no literal anchor
-        (``*``) raises EmptyQueryError; a leading/infix pattern whose
-        only anchor is the suffix raises FileNotFoundError with the
-        revindex remedy when the sidecar is absent."""
-        import os
+        against the full pattern. The scan is O(range straddle), never
+        a lexicon scan; the regex touches only pruned candidate rows,
+        and filtering happens BEFORE any cap, so selective infixes
+        aren't starved by high-df prefix cousins. A pattern with no
+        literal anchor (``*``) raises EmptyQueryError; a leading/infix
+        pattern whose only anchor is the suffix raises
+        FileNotFoundError with the revindex remedy when the sidecar is
+        absent."""
         import re as _re
 
-        cap = cap or self.MAX_WILDCARD_EXPANSIONS
         p = _re.sub(r"[^a-z0-9*]", "", (pattern or "").lower())
         segs = p.split("*")
         if not any(segs):
@@ -758,7 +704,7 @@ class SearchEngine(ServingCore):
         if len(prefix) >= len(suffix) and prefix:
             cands = self._term_range("term_stats", "term", prefix)
         else:
-            if not os.path.isdir(f"{self.index_dir}/lexicon_rev"):
+            if not self._has_sidecar("lexicon_rev"):
                 raise FileNotFoundError(
                     f"{self.index_dir}/lexicon_rev missing — leading/"
                     "infix wildcards need the reversed-term lexicon "
@@ -769,40 +715,12 @@ class SearchEngine(ServingCore):
             cands = self._term_range(
                 "lexicon_rev", "term_rev", suffix[::-1]
             )
-        matched = sorted(
-            ((t, df) for t, df in cands if rx.match(t)),
-            key=lambda td: (-td[1], td[0]),
-        )
-        return matched[:cap]
+        return [(t, df) for t, df in cands if rx.match(t)]
 
-    def fuzzy_terms(
-        self, terms: list[str]
-    ) -> tuple[list[str], dict[str, str]]:
-        """Did-you-mean expansion: analyzed terms absent from the
-        lexicon (df == 0) are replaced by their best spell correction
-        (``correct`` — the SymSpell layout must be built). Present
-        terms are never touched. Returns (deduped corrected terms,
-        {original: replacement})."""
-        dfm = self.term_df(terms)
-        out: list[str] = []
-        corr: dict[str, str] = {}
-        for t in terms:
-            if dfm.get(t, 0) > 0:
-                out.append(t)
-                continue
-            cand = self.correct(t, k=1)
-            if cand:
-                corr[t] = cand[0][0]
-                out.append(cand[0][0])
-            else:
-                out.append(t)
-        return list(dict.fromkeys(out)), corr
-
-    def build_spellindex(self, max_dist: int = 2) -> None:
+    def _build_spell_layout(self, max_dist: int) -> None:
         """Materialize the SymSpell deletion-neighborhood layout
         (operators/fuzzy.py) under ``index_dir/spell`` from the
-        lexicon — one lexicon-sized Spark job; afterwards corrections
-        serve driver-side with zero Spark jobs (``correct``)."""
+        lexicon — one lexicon-sized Spark job."""
         from .operators.fuzzy import spellindex_write
 
         spellindex_write(
@@ -812,16 +730,12 @@ class SearchEngine(ServingCore):
         )
         self._datasets.pop("spell", None)
 
-    def correct(
-        self, term: str, k: int = 10
-    ) -> list[tuple[str, int, int]]:
-        """Spell-correct one term against the lexicon:
-        [(term, dist, df)] by (distance asc, df desc, term asc) — a
-        driver-side SymSpell candidate lookup + DP-levenshtein verify
-        (operators/fuzzy.py spell_lookup), zero Spark jobs.
+    def _spell_candidates(self, term: str) -> list[tuple[str, int, int]]:
+        """Every correction of one term in this lexicon: [(term, dist,
+        df)] — a driver-side SymSpell candidate lookup + DP-levenshtein
+        verify (operators/fuzzy.py spell_lookup), zero Spark jobs.
         Equivalence with the distributed levenshtein scan is
         pytest-enforced."""
-        import os
         import re
 
         from .operators.fuzzy import spell_lookup
@@ -829,14 +743,14 @@ class SearchEngine(ServingCore):
         t = re.sub(r"[^a-z0-9]", "", (term or "").lower())
         if not t:
             raise EmptyQueryError("Empty query")
-        if not os.path.isdir(f"{self.index_dir}/spell"):
+        if not self._has_sidecar("spell"):
             raise FileNotFoundError(
                 f"{self.index_dir}/spell missing — corrections need "
                 "the materialized deletion-neighborhood index; run "
                 "engine.build_spellindex() (CLI: spellindex)"
             )
         return spell_lookup(
-            f"{self.index_dir}/spell", t, k=k,
+            f"{self.index_dir}/spell", t, k=None,
             dataset=self._side_dataset("spell"),
         )
 
@@ -857,30 +771,12 @@ class SearchEngine(ServingCore):
             self._datasets[name] = ds
         return ds
 
-    # -- the live-postings source of ServingCore ----------------------------
-    def _live_postings(self, terms: list[str]) -> dict:
-        """term -> (df, [LiveList per salt shard]) for every term (absent:
-        (0, [])) — the cached lexicon + postings point reads; a single
-        index has no tombstones and its block bounds need no scaling."""
+    def _has_sidecar(self, name: str) -> bool:
         import os
 
-        if not os.path.isdir(f"{self.index_dir}/term_stats"):
-            raise FileNotFoundError(
-                f"{self.index_dir}/term_stats missing — the local serving "
-                "path needs the lexicon side table; rebuild the index or "
-                "use path='wand'"
-            )
-        return {
-            t: (df, [LiveList(salt, blocks) for salt, blocks in salted])
-            for t, (df, salted) in self._cached_term_lists(terms).items()
-        }
+        return os.path.isdir(f"{self.index_dir}/{name}")
 
-    def _has_positions(self) -> bool:
-        import os
-
-        return os.path.isdir(f"{self.index_dir}/positions")
-
-    def _live_phrase_matches(self, phrase: str, slop: int = 0):
+    def _phrase_rows(self, phrase: str, slop: int = 0):
         """Phrase machinery (search_phrase / search_mixed):
         sidecar read + vectorized adjacency (or, with ``slop`` > 0,
         the greedy ordered-window chain — smallest-successor chains
@@ -888,8 +784,6 @@ class SearchEngine(ServingCore):
         (docids, doc_lens, phrase_tfs) NumPy arrays in docid order for
         the matching docs; None when a phrase term is absent or
         nothing matches. tf counts distinct start positions."""
-        import os
-
         import numpy as np
         import pyarrow as pa
         import pyarrow.dataset as pads
@@ -900,7 +794,7 @@ class SearchEngine(ServingCore):
 
         if not (phrase or "").strip():
             raise EmptyQueryError("Empty query")
-        if not os.path.isdir(f"{self.index_dir}/positions"):
+        if not self._has_sidecar("positions"):
             raise FileNotFoundError(
                 f"{self.index_dir}/positions missing — phrase search "
                 "needs the positional sidecar; rebuild with "
@@ -1135,67 +1029,46 @@ class SearchEngine(ServingCore):
         os.replace(tmp, path)
         self._syn_map = None
 
-    def _load_synonyms(self) -> dict[str, list[str]]:
-        """analyzed term -> full analyzed group (cached). Missing or
-        empty sidecar -> {} (synonyms=True is then a no-op, never an
-        error — the flag is safe to set unconditionally)."""
-        if getattr(self, "_syn_map", None) is not None:
-            return self._syn_map
+    def _read_synonyms(self) -> dict[str, list[str]] | None:
+        """analyzed term -> full analyzed group from the synonyms.json
+        sidecar; None without one (an empty sidecar is {})."""
         import json
         import os
 
         path = f"{self.index_dir}/synonyms.json"
+        if not os.path.isfile(path):
+            return None
         out: dict[str, list[str]] = {}
-        if os.path.isfile(path):
-            with open(path) as f:
-                for group in json.load(f):
-                    analyzed = list(
-                        dict.fromkeys(
-                            t
-                            for w in group
-                            for t in analyze_query(
-                                w, stem=self.stem, analyzer=self.analyzer
-                            )
+        with open(path) as f:
+            for group in json.load(f):
+                analyzed = list(
+                    dict.fromkeys(
+                        t
+                        for w in group
+                        for t in analyze_query(
+                            w, stem=self.stem, analyzer=self.analyzer
                         )
                     )
-                    if len(analyzed) > 1:
-                        for t in analyzed:
-                            # last-wins on overlapping groups (documented)
-                            out[t] = analyzed
-        self._syn_map = out
+                )
+                if len(analyzed) > 1:
+                    for t in analyzed:
+                        # last-wins on overlapping groups (documented)
+                        out[t] = analyzed
         return out
 
-    def facet_fields(self) -> list[str]:
-        """Facet fields available on this index: the categorical
-        corpus columns the docs side table carried through the build
-        (plans/build.py FACET_COLUMNS)."""
-        from .plans.build import FACET_COLUMNS
+    def _doc_columns(self) -> list[str]:
+        """Column names of the docs side table (facet fields among
+        them: plans/build.py FACET_COLUMNS)."""
+        return self._side_dataset("docs").schema.names
 
-        names = set(self._side_dataset("docs").schema.names)
-        return [c for c in FACET_COLUMNS if c in names]
-
-    def _live_facet_arrays(self, field: str):
+    def _facet_rows(self, field: str):
         """Doc-values analogue for one facet field: [(docid-sorted ids,
         int codes)] per salt shard + the category list, from a
         COLUMN-PRUNED (docid, field, salt) read of the docs side table
         — snippet/images/text bytes are never touched (parquet column
-        pruning; pytest-asserted). Cached per engine instance, exactly
-        like Lucene holds doc values per segment; at scales where the
-        facet column no longer fits the driver, the distributed twin
-        is the facet_counts entry operator (same semantics, one Spark
-        job)."""
-        import numpy as np
-
-        cache = getattr(self, "_facet_cache", None)
-        if cache is None:
-            cache = self._facet_cache = {}
-        if field in cache:
-            return cache[field]
-        if field not in self.facet_fields():
-            raise ValueError(
-                f"unknown facet field {field!r}; this index has: "
-                f"{self.facet_fields() or 'none'}"
-            )
+        pruning; pytest-asserted). At scales where the facet column no
+        longer fits the driver, the distributed twin is the
+        facet_counts entry operator (same semantics, one Spark job)."""
         tbl = self._side_dataset("docs").to_table(
             columns=["docid", field, "salt"]
         )
@@ -1215,10 +1088,9 @@ class SearchEngine(ServingCore):
             ds, cs = d[m], codes[m]
             order = np.argsort(ds, kind="stable")
             by_salt[int(s)] = (ds[order], cs[order])
-        cache[field] = (list(by_salt.values()), cats)
-        return cache[field]
+        return list(by_salt.values()), cats
 
-    def lookup_docs(
+    def _doc_rows(
         self, docids: list[int], with_images: bool = True
     ) -> list[dict]:
         """Point-lookup hydration: the reference's result fetch

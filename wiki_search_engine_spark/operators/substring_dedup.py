@@ -17,15 +17,18 @@ Spark-first shape, and how it survives 100 TB:
   n-gram form — functions/textstats.py shingles' linear shape, NOT an
   interpreted-lambda explode) + ``array_distinct`` BEFORE the explode,
   so within-doc repetition never inflates the shuffle;
-- cross-doc document frequency is ONE hash aggregate keyed on the
-  gram; ``key='xxhash64'`` (production mode) shuffles an 8-byte key
-  instead of an ~n-token string — the same trade as
+- cross-doc document frequency is ONE partial-aggregating hash
+  aggregate keyed on the gram: each map task collapses a gram to one
+  row before the shuffle, so the hottest boilerplate gram never
+  buffers its rows in one task (a gram-keyed window would). Only the
+  duplicated grams (df >= 2) join back to the (doc, gram) rows; AQE's
+  skew-join split keeps a hot gram's probe rows off a single task.
+  ``key='xxhash64'`` (production mode) shuffles an 8-byte key instead
+  of an ~n-token string — the same trade as
   operators/decontaminate.py, collisions can only ADD (~2^-64 each)
   false dup marks, never lose one;
 - the per-doc rollup is a hash aggregate keyed on doc_id whose input
-  is already one row per (doc, distinct gram). Two exchanges total
-  (gram-keyed window count, doc-keyed rollup) — no joins, nothing
-  driver-sized.
+  is already one row per (doc, distinct gram). Nothing driver-sized.
 """
 
 from __future__ import annotations
@@ -69,23 +72,20 @@ def ngram_dup_fraction(
         )
     # document frequency per distinct gram: rows are (doc, distinct
     # gram), so the per-gram row count == count of docs containing it.
-    # A window count keeps it to ONE gram-keyed exchange (no
-    # aggregate-then-rejoin second pass; same trick as
-    # operators/scoring.py's live-df recompute). The null partition
-    # (docs shorter than n, kept by explode_outer) counts 0.
-    from pyspark.sql import Window
-
+    # The null gram (docs shorter than n, kept by explode_outer) never
+    # joins, so it counts in neither column.
+    dup_grams = (
+        g.groupBy("gram")
+        .count()
+        .filter(F.col("count") >= 2)
+        .select("gram", F.lit(1).alias("dup"))
+    )
     per_doc = (
-        g.withColumn(
-            "gram_df",
-            F.count("gram").over(Window.partitionBy("gram")),
-        )
+        g.join(dup_grams, "gram", "left")
         .groupBy("doc_id")
         .agg(
             F.count(F.col("gram")).cast("long").alias("n_grams"),
-            F.sum(
-                F.when(F.col("gram_df") >= 2, 1).otherwise(0)
-            ).cast("long").alias("n_dup_grams"),
+            F.count(F.col("dup")).cast("long").alias("n_dup_grams"),
         )
         .withColumn(
             "dup_frac",

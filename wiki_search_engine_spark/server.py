@@ -19,15 +19,16 @@ Routes:
       exact-phrase ranking from the positional sidecar (400 when the
       index was built without positions=True)
     GET /suggest?prefix=...[&k=10]                            -> 200 JSON
-      autocomplete over the lexicon (SearchEngine.suggest — an
+      autocomplete over the lexicon (ServingCore.suggest — an
       extension beyond the reference API; blank prefix -> 400)
     GET /correct?term=...[&k=10]                              -> 200 JSON
-      spell correction (SearchEngine.correct over the SymSpell
+      spell correction (ServingCore.correct over the SymSpell
       layout; blank term or missing spell layout -> 400)
 
 Every route serves over a TieredEngine segment list too —
-suggest/correct/fuzzy included (tiered.py exposes the same methods
-with live-df semantics, answer-identical to the compacted index).
+suggest/correct/fuzzy included (serving.ServingCore serves both
+engines with live-df semantics, answer-identical to the compacted
+index).
     GET /query-stem?query=...&highlight=true                  -> 200 JSON
       query-term highlighting: snippet words whose analyzed form
       matches a query term are wrapped in <em>..</em>
@@ -187,7 +188,7 @@ class _Handler(BaseHTTPRequestHandler):
 
     def _do_suggest(self, qs: dict) -> None:
         """GET /suggest?prefix=...[&k=10] — autocomplete over the
-        lexicon (SearchEngine.suggest: driver-side term-range scan,
+        lexicon (ServingCore.suggest: driver-side term-range scans,
         zero Spark jobs; an extension beyond the reference API). Blank
         prefix mirrors the empty-query 400 contract."""
         from .engine import EmptyQueryError
@@ -221,10 +222,11 @@ class _Handler(BaseHTTPRequestHandler):
 
     def _do_correct(self, qs: dict) -> None:
         """GET /correct?term=...[&k=10] — spell correction over the
-        lexicon (SearchEngine.correct: SymSpell candidate lookup +
+        lexicon (ServingCore.correct: SymSpell candidate lookups +
         verify, zero Spark jobs; an extension beyond the reference
         API). Blank term -> the 400 empty-query contract; an index
-        without the spell layout -> 400 with the remedy."""
+        without the spell layout -> 400 with the remedy; anything else
+        is a server fault (500)."""
         from .engine import EmptyQueryError
 
         term = (qs.get("term") or [""])[0]
@@ -241,7 +243,7 @@ class _Handler(BaseHTTPRequestHandler):
                 {"success": False, "result": [], "error": "Empty query"},
             )
             return
-        except (FileNotFoundError, AttributeError) as e:
+        except FileNotFoundError as e:
             self._send(
                 400, {"success": False, "result": [], "error": str(e)}
             )

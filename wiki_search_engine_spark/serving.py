@@ -1,30 +1,35 @@
-"""Serving: every query mode and every path, written once.
+"""Serving: every query mode, every path and every source read, written
+once.
 
 ``SearchEngine`` (one index) and ``TieredEngine`` (a segment list) both
 inherit ``ServingCore``. Its modes — bag/OR, AND, ``+``MUST, ``-``NOT,
 ``title:`` fields, BM25F, synonyms, the static boost, phrase, mixed
-quoted queries, facets and the reference response — and its paths —
+quoted queries, facets, the reference response and the search-head
+features (suggest, correct, did-you-mean, wildcards) — and its paths —
 driver-local (``search_local`` and the response modes) and distributed
-(``search_ids``, ``search_many``) — read the index only through a small
-SOURCE that each engine implements. A single index is the source with
-one segment and no tombstones.
+(``search_ids``, ``search_many``) — read the index through one source:
 
-- ``n`` / ``avgdl`` / ``analyzer``: live corpus stats and the analyzer
-  name; ``overridden``: docs a later segment replaced or deleted (0 on a
-  single index, and on an append-only segment list);
-- ``analyze``, ``expand_query_terms`` (through the engine's
-  ``expand_wildcard``), ``fuzzy_terms``, ``_load_synonyms``;
-- driver-local: ``_live_postings(terms)`` -> term -> (live df,
-  [LiveList, ...]); ``_live_title_rows(terms)``,
-  ``_live_phrase_matches(text, slop)``, ``_live_facet_arrays(field)``,
-  ``_static_rank_arrays()`` (only where ``SERVES_STATIC_BOOST``; a
-  segment list rejects every boost request), ``_has_positions()`` and
-  ``lookup_docs(docids)``;
-- distributed: ``spark``, ``salt_bits``, ``_candidate_postings(terms)``
-  (bucket-pruned packed postings rows with a ``seg`` column),
-  ``tombstones`` and ``ub_scales`` (one per segment),
-  ``_live_df_map(terms)`` and ``_title_relation(terms)`` (title rows as
-  a DataFrame).
+- ``segments``: (reader, tombstones, ub_scale) per segment, oldest
+  first. A reader is the ``SearchEngine`` of one index directory; its
+  tombstones are the sorted docids it holds that a later segment
+  replaced or deleted (empty exactly when nothing in it is stale); its
+  ub_scale, max(1, live avgdl / segment avgdl), keeps the stored
+  block-max bounds sound at the live avgdl. A single index is
+  ``[(self, no tombstones, 1.0)]``;
+- ``n`` / ``avgdl`` / ``analyzer`` / ``spark`` / ``salt_bits``: live
+  corpus stats and the layout; ``overridden``: how many docs the
+  tombstones hold in all (0 on a single index and on an append-only
+  segment list, where stored df == live df);
+- ``analyze``.
+
+The core folds the segments' readers once for every source read:
+driver-local postings (``_live_postings``: term -> (live df,
+[LiveList, ...])), title rows, phrase matches, facet doc-values, doc
+rows (newest segment wins), the synonym sidecar (newest segment with
+one wins), lexicon df (``_live_df``), and distributed candidate
+postings (a union with a ``seg`` column), live df (``_live_df_map``)
+and the title relation. A fold over one segment without tombstones
+returns the reader's own arrays: a single index pays no merge.
 
 Every path parses a query once (``_parse_query``) and rejects the
 combinations no path serves in one place
@@ -45,7 +50,11 @@ operators/scoring.py.
 
 from __future__ import annotations
 
+import re
+from functools import reduce
+
 import numpy as np
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from . import B, K1
@@ -55,6 +64,12 @@ from .oracle_py.oracle import bm25_idf, tfidf_idf
 _NO_DOCS = np.empty(0, np.int64)
 _NO_VALUES = np.empty(0, np.float64)
 _NO_MATCHES = (_NO_DOCS, _NO_VALUES)
+_NO_TITLE_ROWS = (_NO_DOCS, _NO_VALUES, _NO_VALUES)
+_TITLE_REMEDY = (
+    "the title_tf sidecar is missing — BM25F and field-scoped queries "
+    "need the title-field sidecar; run engine.build_title_tf() (CLI: "
+    "titleindex) or rebuild the index"
+)
 
 
 class EmptyQueryError(ValueError):
@@ -233,10 +248,7 @@ class LiveList:
                 b if isinstance(b, dict) else b.asDict()
                 for b in self.blocks
             ])
-            if self.tombs.size and d.size:
-                keep = ~isin_sorted(self.tombs, d)
-                d, tf, dl = d[keep], tf[keep], dl[keep]
-            self._arrays = (d, tf, dl)
+            self._arrays = _drop_tombstoned((d, tf, dl), self.tombs)
         return self._arrays
 
 
@@ -251,6 +263,38 @@ def _decode(lists):
         np.concatenate([p[1] for p in parts]).astype(np.float64),
         np.concatenate([p[2] for p in parts]).astype(np.float64),
     )
+
+
+def _drop_tombstoned(rows, tombs):
+    """``rows`` (a tuple of docid-aligned arrays, docids first, or
+    None) without the docids in sorted ``tombs``."""
+    if rows is None or not tombs.size or not rows[0].size:
+        return rows
+    keep = ~isin_sorted(tombs, rows[0])
+    return tuple(a[keep] for a in rows)
+
+
+def _docid_merge(parts):
+    """One tuple of docid-aligned arrays, docid-sorted, from per-segment
+    ``parts`` that are each docid-sorted (None and empty parts skip):
+    a lone part as it is, several concatenated and sorted; None when
+    nothing is left."""
+    parts = [p for p in parts if p is not None and p[0].size]
+    if len(parts) <= 1:
+        return parts[0] if parts else None
+    cols = [np.concatenate(c) for c in zip(*parts)]
+    order = np.argsort(cols[0], kind="stable")
+    return tuple(c[order] for c in cols)
+
+
+def _ranked_sum(per_segment) -> list[tuple[str, int]]:
+    """(term, df) lists, one per segment, summed per term and ranked by
+    (df desc, term asc)."""
+    agg: dict[str, int] = {}
+    for pairs in per_segment:
+        for t, df in pairs:
+            agg[t] = agg.get(t, 0) + int(df)
+    return sorted(agg.items(), key=lambda td: (-td[1], td[0]))
 
 
 def _top_k(docs, scores, k):
@@ -283,14 +327,412 @@ class ServingCore:
     # oracle-checked bm25_static_rank entry replays in DuckDB
     STATIC_BOOST_WEIGHT = 2.0
 
-    # whether the source has a static_rank sidecar (_static_rank_arrays);
-    # a segment list has none — the rule for per-segment PageRank is
-    # open — so every boost request to it raises, whatever the query
-    SERVES_STATIC_BOOST = True
-
     def _reject_unserved_boost(self, boost) -> None:
-        if boost and not self.SERVES_STATIC_BOOST:
+        """The static_rank sidecar belongs to one index directory and
+        the rule for a segment list's PageRank is open, so only a
+        single index (the source whose one segment is itself) serves a
+        boost; any other source raises, whatever the query."""
+        if boost and self.segments[0][0] is not self:
             raise ValueError("boost is single-index serving only")
+
+    # -- the segment source: driver-local reads ------------------------------
+    @property
+    def tombstones(self) -> list:
+        return [tombs for _seg, tombs, _scale in self.segments]
+
+    @property
+    def ub_scales(self) -> list:
+        return [scale for _seg, _tombs, scale in self.segments]
+
+    def _only_segment(self):
+        """The reader when the source is one segment without tombstones
+        (its rows are then live as they are), else None."""
+        (seg, tombs, _scale), *rest = self.segments
+        return None if rest or tombs.size else seg
+
+    def _live_postings(self, terms: list[str]) -> dict:
+        """term -> (live df, [LiveList per segment and salt shard]) for
+        every term (absent: (0, [])). Each list carries its segment's
+        tombstones and bound scale. A segment without tombstones adds
+        its lexicon df; one with tombstones adds the live postings it
+        decodes (segments are docid-disjoint after tombstoning). Every
+        term loads through one ``_cached_term_lists`` call per segment:
+        one lexicon read and one bucket-grouped postings read each."""
+        out: dict[str, tuple[int, list]] = {
+            t: (0, []) for t in dict.fromkeys(terms)
+        }
+        for seg, tombs, scale in self.segments:
+            decode = bool(tombs.size)
+            for t, (dfi, salted) in seg._cached_term_lists(list(out)).items():
+                if dfi <= 0:
+                    continue
+                df, lists = out[t]
+                for salt, blocks in salted:
+                    ll = LiveList(salt, blocks, tombs, scale)
+                    if decode:
+                        n_live = ll.arrays()[0].size
+                        if not n_live:
+                            continue
+                        df += n_live
+                    lists.append(ll)
+                out[t] = (df if decode else df + dfi, lists)
+        return out
+
+    def _stored_df(self, terms: list[str]) -> dict[str, int]:
+        """Lexicon df per present term, summed over the segments."""
+        out: dict[str, int] = {}
+        for seg, _tombs, _scale in self.segments:
+            for t, df in seg.term_df(terms).items():
+                out[t] = out.get(t, 0) + df
+        return out
+
+    def _live_df(self, terms: list[str]) -> dict[str, int]:
+        """Live df per present term with zero Spark jobs: the summed
+        lexicon df while no doc is overridden (stored == live), else
+        counted from the decoded live postings."""
+        if not self.overridden:
+            return self._stored_df(terms)
+        return {
+            t: df for t, (df, _lists) in self._live_postings(terms).items()
+            if df > 0
+        }
+
+    def _top_by_live_df(self, ranked, k: int) -> list[tuple[str, int]]:
+        """The top ``k`` by (live df desc, term asc) of ``ranked``:
+        (term, summed stored df) pairs in that order by stored df.
+        Stored df bounds live df from above (tombstoning only removes),
+        so candidates decode in stored order, a batch at a time, until
+        the k-th best live df strictly exceeds the next candidate's
+        bound: no unseen term can then displace the selection (an equal
+        bound keeps decoding, since equal df breaks by term). Terms
+        whose live df is 0 drop, as the compacted lexicon drops them.
+        While nothing is overridden stored == live and nothing
+        decodes."""
+        if not self.overridden:
+            return ranked[:k]
+        live: list[tuple[str, int]] = []
+        i = 0
+        while i < len(ranked) and not (
+            len(live) >= k and live[k - 1][1] > ranked[i][1]
+        ):
+            batch = [t for t, _ in ranked[i:i + max(k, 8)]]
+            i += len(batch)
+            dfs = self._live_df(batch)
+            live.extend((t, dfs[t]) for t in batch if t in dfs)
+            live.sort(key=lambda td: (-td[1], td[0]))
+        return live[:k]
+
+    def suggest(self, prefix: str, k: int = 10) -> list[tuple[str, int]]:
+        """Autocomplete: the top-k live-df terms starting with
+        ``prefix``, by (df desc, term asc) — zero Spark jobs. Each
+        segment's lexicon yields every term in the prefix range
+        (``_term_range``: footer-pruned, O(n_buckets) row groups, never
+        a lexicon scan), uncapped, since a term ranked k+1 in every
+        segment can still lead the summed ranking; the stored dfs sum
+        and ``_top_by_live_df`` ranks them. Over a segment list the
+        answer equals the compacted index's (pytest). Distributed twin:
+        __spark_entry__ q_term_prefix_topk."""
+        p = re.sub(r"[^a-z0-9]", "", (prefix or "").lower())
+        if not p:
+            raise EmptyQueryError("Empty query")
+        return self._top_by_live_df(
+            _ranked_sum(
+                seg._term_range("term_stats", "term", p)
+                for seg, _tombs, _scale in self.segments
+            ),
+            k,
+        )
+
+    def expand_wildcard(
+        self, pattern: str, cap: int | None = None
+    ) -> list[tuple[str, int]]:
+        """Expand one wildcard token (``snow*``, ``*ing``, ``s*ing``,
+        multi-star) to its top-``cap`` live-df lexicon matches
+        (default ``MAX_WILDCARD_EXPANSIONS``), by (df desc, term asc).
+        Each segment matches the pattern uncapped (``_wildcard_matches``:
+        a footer-pruned range scan of the forward or reversed lexicon,
+        regex-filtered before any cap); the stored dfs sum and
+        ``_top_by_live_df`` ranks them, so the expansion (terms, dfs
+        and order) equals the compacted index's also under tombstones
+        (pytest). A pattern with no literal anchor raises
+        EmptyQueryError; a suffix-anchored one without the reversed
+        lexicon raises FileNotFoundError with the revindex remedy."""
+        return self._top_by_live_df(
+            _ranked_sum(
+                seg._wildcard_matches(pattern)
+                for seg, _tombs, _scale in self.segments
+            ),
+            cap or self.MAX_WILDCARD_EXPANSIONS,
+        )
+
+    def correct(
+        self, term: str, k: int | None = 10
+    ) -> list[tuple[str, int, int]]:
+        """Spell-correct one term: [(term, dist, live df)] by (distance
+        asc, df desc, term asc) — each segment's SymSpell candidates
+        (``_spell_candidates``: deletion-variant lookup + levenshtein
+        verify, zero Spark jobs; every segment needs its layout,
+        ``build_spellindex``), stored dfs summed and, when a doc is
+        overridden, replaced by live df; candidates with live df 0
+        drop, as the compacted layout drops them. ``k`` None keeps
+        every candidate."""
+        dist: dict[str, int] = {}
+        dfs: dict[str, int] = {}
+        for seg, _tombs, _scale in self.segments:
+            for t, d, df in seg._spell_candidates(term):
+                dist[t] = d  # the same edit distance in every segment
+                dfs[t] = dfs.get(t, 0) + df
+        if self.overridden:
+            dfs = self._live_df(list(dfs))
+        return sorted(
+            ((t, dist[t], df) for t, df in dfs.items() if df > 0),
+            key=lambda r: (r[1], -r[2], r[0]),
+        )[:k]
+
+    def fuzzy_terms(
+        self, terms: list[str]
+    ) -> tuple[list[str], dict[str, str]]:
+        """Did-you-mean: terms with live df 0 swap to their best
+        correction (``correct``), so a term that only appears in
+        deleted docs corrects like a typo, as on the compacted index.
+        Present terms are never touched. Returns (deduped corrected
+        terms, {original: replacement})."""
+        dfm = self._live_df(terms)
+        out: list[str] = []
+        corr: dict[str, str] = {}
+        for t in terms:
+            if dfm.get(t, 0) > 0:
+                out.append(t)
+                continue
+            cand = self.correct(t, k=1)
+            if cand:
+                corr[t] = cand[0][0]
+                out.append(cand[0][0])
+            else:
+                out.append(t)
+        return list(dict.fromkeys(out)), corr
+
+    def build_spellindex(self, max_dist: int = 2) -> None:
+        """Materialize the SymSpell layout under every segment (one
+        lexicon-sized Spark job each); ``correct`` then serves with zero
+        Spark jobs. A segment added later needs its own."""
+        for seg, _tombs, _scale in self.segments:
+            seg._build_spell_layout(max_dist)
+
+    def _load_synonyms(self) -> dict[str, list[str]]:
+        """analyzed term -> its analyzed group, from the newest segment
+        carrying a ``synonyms.json`` sidecar; {} when none does
+        (synonyms=True is then a no-op). Cached per engine."""
+        if getattr(self, "_syn_map", None) is None:
+            found = (
+                seg._read_synonyms()
+                for seg, _tombs, _scale in reversed(self.segments)
+            )
+            self._syn_map = next((m for m in found if m is not None), {})
+        return self._syn_map
+
+    def _has_positions(self) -> bool:
+        """Quoted queries route to mixed phrase semantics only when
+        every segment carries the positional sidecar."""
+        return all(
+            seg._has_sidecar("positions")
+            for seg, _tombs, _scale in self.segments
+        )
+
+    def _live_title_rows(self, terms: list[str]) -> dict:
+        """term -> (docids, title tfs, body doc_lens) of the live title
+        rows, docid-sorted: each segment's title_tf rows
+        (``_title_rows``) minus its tombstones. A segment without the
+        sidecar (a pre-BM25F build) contributes nothing; FileNotFoundError
+        with the titleindex remedy when none carries it."""
+        terms = list(dict.fromkeys(terms))
+        found = []
+        for seg, tombs, _scale in self.segments:
+            rows = seg._title_rows(terms)
+            if rows is not None:
+                found.append((rows, tombs))
+        if not found:
+            raise FileNotFoundError(_TITLE_REMEDY)
+        if len(found) == 1 and not found[0][1].size:
+            return found[0][0]
+        return {
+            t: _docid_merge(
+                [_drop_tombstoned(rows[t], tombs) for rows, tombs in found]
+            ) or _NO_TITLE_ROWS
+            for t in terms
+        }
+
+    def _live_phrase_matches(self, phrase: str, slop: int = 0):
+        """Live phrase (or ``slop`` proximity) matches: each segment's
+        positional-sidecar matches (``_phrase_rows``; every segment
+        must be built with positions=True) minus its tombstones, as
+        (docids, doc_lens, phrase_tfs) in docid order; None when
+        nothing matches."""
+        return _docid_merge([
+            _drop_tombstoned(seg._phrase_rows(phrase, slop), tombs)
+            for seg, tombs, _scale in self.segments
+        ])
+
+    def facet_fields(self) -> list[str]:
+        """Facet fields every segment's docs table carries
+        (plans/build.py FACET_COLUMNS): a count that silently skipped a
+        segment would be wrong, not partial."""
+        from .plans.build import FACET_COLUMNS
+
+        cols = [set(seg._doc_columns()) for seg, _t, _s in self.segments]
+        return [c for c in FACET_COLUMNS if all(c in cs for cs in cols)]
+
+    def _live_facet_arrays(self, field: str):
+        """Doc-values of one facet field: ([(docid-sorted ids, int
+        codes)] per segment and salt shard, the category list) — each
+        segment's column-pruned rows (``_facet_rows``) minus its
+        tombstones, codes remapped into one category list. Cached per
+        engine, as Lucene holds doc values; segments are docid-disjoint
+        after tombstoning, so per-part counts just sum."""
+        cache = getattr(self, "_facet_cache", None)
+        if cache is None:
+            cache = self._facet_cache = {}
+        if field in cache:
+            return cache[field]
+        if field not in self.facet_fields():
+            raise ValueError(
+                f"unknown facet field {field!r}; this index serves: "
+                f"{self.facet_fields() or 'none'}"
+            )
+        only = self._only_segment()
+        if only is not None:
+            cache[field] = only._facet_rows(field)
+            return cache[field]
+        per_seg = [
+            (seg._facet_rows(field), tombs)
+            for seg, tombs, _scale in self.segments
+        ]
+        cats = sorted(
+            {c for (_parts, seg_cats), _t in per_seg for c in seg_cats},
+            key=lambda x: (x is None, x or ""),
+        )
+        code_of = {c: i for i, c in enumerate(cats)}
+        parts = []
+        for (seg_parts, seg_cats), tombs in per_seg:
+            remap = np.array([code_of[c] for c in seg_cats], np.int32)
+            for part in seg_parts:
+                fd, codes = _drop_tombstoned(part, tombs)
+                parts.append((fd, remap[codes]))
+        cache[field] = (parts, cats)
+        return cache[field]
+
+    def lookup_docs(
+        self, docids: list[int], with_images: bool = True
+    ) -> list[dict]:
+        """Point-lookup hydration (``_doc_rows``: pruned reads over
+        cached parquet footers, no Spark job). Over several segments the
+        newest holding a docid wins: each segment is asked only for the
+        ids it does not tombstone, so a re-crawled doc hydrates from the
+        overriding segment and a deleted one from nowhere (a taken-down
+        doc never resurfaces on the HTTP path)."""
+        only = self._only_segment()
+        if only is not None:
+            return only._doc_rows(docids, with_images)
+        out: dict[int, dict] = {}
+        ids = np.asarray(docids, dtype=np.int64)
+        for seg, tombs, _scale in self.segments:  # oldest first
+            live = ids[~isin_sorted(tombs, ids)] if tombs.size else ids
+            if live.size:
+                for row in seg._doc_rows(
+                    [int(d) for d in live], with_images
+                ):
+                    out[row["docid"]] = row
+        return [out[d] for d in docids if d in out]
+
+    # -- the segment source: distributed reads ------------------------------
+    def _candidate_postings(self, terms: list[str]) -> DataFrame:
+        """Every segment's bucket-pruned postings rows, with a ``seg``
+        column (segment index) for tombstone routing. Segments share
+        the docid-range salt domain, so a shard holds every segment's
+        postings for its range and per-shard top-k stays exact."""
+        return reduce(DataFrame.unionByName, (
+            seg._postings(terms).withColumn("seg", F.lit(i))
+            for i, (seg, _tombs, _scale) in enumerate(self.segments)
+        ))
+
+    def _live_df_map(self, terms: list[str]) -> dict[str, int]:
+        """Live df per term for the distributed paths: the summed
+        lexicon df while no doc is overridden (no Spark job, so a
+        distributed query costs one job as on a single index), else
+        ``_live_df_distributed``."""
+        if self.overridden:
+            return self._live_df_distributed(terms)
+        return self._stored_df(terms)
+
+    def _live_df_distributed(self, terms: list[str]) -> dict[str, int]:
+        """Exact live df per term, computed where the postings are: each
+        task decodes its candidate lists' docids only for segments that
+        carry tombstones (the others count their stored block counts)
+        and subtracts stale hits. One job over the pruned candidate
+        rows; the output is <= |terms| tiny rows."""
+        cand = self._candidate_postings(terms).filter(
+            F.col("term").isin(terms)
+        )
+        bc = self.spark.sparkContext.broadcast(self.tombstones)
+
+        def kernel(batches):
+            import pandas as pd
+
+            from wiki_search_engine_spark.operators.codec import (
+                decode_posting_list, isin_sorted,
+            )
+
+            for pdf in batches:
+                agg: dict[str, int] = {}
+                for term, seg, blocks in zip(
+                    pdf["term"], pdf["seg"], pdf["blocks"]
+                ):
+                    t = bc.value[int(seg)]
+                    blks = [
+                        b if isinstance(b, dict) else b.asDict()
+                        for b in blocks
+                    ]
+                    if t.size == 0:
+                        n_live = sum(int(b["count"]) for b in blks)
+                    else:
+                        d, _tf, _dl = decode_posting_list(blks)
+                        n_live = int((~isin_sorted(t, d)).sum())
+                    agg[term] = agg.get(term, 0) + n_live
+                yield pd.DataFrame(
+                    {"term": list(agg), "df": list(agg.values())}
+                )
+
+        out: dict[str, int] = {}
+        for r in (
+            cand.select("term", "seg", "blocks")
+            .mapInPandas(kernel, "term string, df long")
+            .collect()
+        ):
+            out[r["term"]] = out.get(r["term"], 0) + int(r["df"])
+        return out
+
+    def _title_relation(self, terms: list[str]) -> DataFrame:
+        """(term, docid, tf, doc_len) live title rows: the union of each
+        segment's bucket- and term-pruned title_tf scan
+        (``_title_scan``), a segment's tombstoned rows dropped by a
+        broadcast anti-join only where it has tombstones — one segment
+        without them is the plain pruned scan. Segments without the
+        sidecar contribute nothing; FileNotFoundError with the
+        titleindex remedy when none carries it."""
+        scans = []
+        for seg, tombs, _scale in self.segments:
+            scan = seg._title_scan(terms)
+            if scan is None:
+                continue
+            if tombs.size:
+                gone = self.spark.createDataFrame(
+                    [(int(d),) for d in tombs], "docid long"
+                )
+                scan = scan.join(F.broadcast(gone), "docid", "left_anti")
+            scans.append(scan)
+        if not scans:
+            raise FileNotFoundError(_TITLE_REMEDY)
+        return reduce(DataFrame.unionByName, scans)
 
     # -- scoring primitives ------------------------------------------------
     def _scores(self, tf, dl, df: int, mode: str):

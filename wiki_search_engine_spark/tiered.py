@@ -10,9 +10,9 @@ directly and compact offline:
 - each crawl batch stays its own index (a segment), built by the normal
   ``plans/build.py`` pipeline — batch-sized IO, nothing rewritten;
 - a later segment OVERRIDES earlier ones per docid (docid = stable url
-  hash, so "same url re-crawled" == "same docid"): earlier segments get
-  a TOMBSTONE set = the sorted docid arrays of later segments (only
-  crawl batches are ever loaded — the base's docid set is never read);
+  hash, so "same url re-crawled" == "same docid"): an earlier segment
+  gets a TOMBSTONE set = the later segments' docids it holds (only
+  crawl batches' docid sets are ever loaded — the base's never is);
 - queries run against all segments; stale base postings are dropped at
   decode time by a vectorized searchsorted against the tombstones.
 
@@ -22,39 +22,20 @@ compaction" segment engine: scores are IDENTICAL to the compacted
 
 - N / avgdl: segment stats combine, minus the overridden docs' counts
   and lengths (a pruned point lookup of the later segments' docids in
-  earlier ``doc_stats``, which is docid-sorted for this);
+  earlier ``doc_stats``, which is docid-sorted for this); the lookup
+  also narrows each segment's tombstones to the docids it really holds,
+  so a segment's array is empty exactly when nothing in it is stale;
 - df per query term: counted from the LIVE postings — the candidate
   lists are decoded anyway to score, so tombstoned postings are both
-  excluded from scoring and subtracted from df before idf is computed
-  (two passes over arrays already in memory, not extra IO).
+  excluded from scoring and subtracted from df before idf is computed.
 
-Every query mode and path — driver-local (``search_local``,
-``search_phrase``, ``search_mixed``, ``facet_counts``,
-``query_response``) and distributed (``search_ids``, ``search_many``) —
-is the SAME code as the single index: ``serving.ServingCore``, inherited
-by both engines, of which a single index is the one-segment case.
-TieredEngine is only its SOURCE:
-
-- driver-local: ``_live_postings`` (one list per segment and salt shard,
-  carrying that segment's tombstones and the block-max bound scale
-  max(1, live avgdl / segment avgdl); live df = summed lexicon df while
-  no doc is overridden, else counted from the decoded live docids),
-  ``_live_title_rows``, ``_live_phrase_matches`` and
-  ``_live_facet_arrays`` (tombstone-filtered per segment) and
-  ``lookup_docs`` (newest segment wins). Plain OR therefore runs the
-  block-max shard kernel over an append-only segment list and the
-  decoded exhaustive accumulate once a doc is overridden;
-- distributed: ``_candidate_postings`` (the union of every segment's
-  bucket-pruned postings with a ``seg`` column), ``tombstones`` and
-  ``ub_scales`` per segment, ``_live_df_map`` (summed lexicon df while
-  append-only, else one job that counts the live postings where they
-  are) and ``_title_relation`` (the live title rows). Segments share
-  the docid-range salt domain, so a shard holds every segment's
-  postings for its range and per-shard top-k stays exact — the cluster
-  path for head terms.
-
-A segment list has no static rank (``SERVES_STATIC_BOOST = False``):
-every ``boost`` request raises ValueError (HTTP 400).
+``TieredEngine`` is only its constructor: it opens each index segment's
+``SearchEngine`` (the per-segment reader), computes the tombstones and
+the live stats, and hands ``segments`` — (reader, tombstones,
+ub_scale) per segment, oldest first — to ``serving.ServingCore``, which
+serves every query mode, path and search-head feature over any segment
+list, a single index being the one-segment case. A segment list serves
+no static boost: every ``boost`` request raises ValueError (HTTP 400).
 
 Compaction IS ``plans/merge.py``: fold segments when their count or
 tombstone ratio grows (``compact`` below; automated in
@@ -73,7 +54,7 @@ import numpy as np
 from pyspark.sql import SparkSession
 
 from .engine import SearchEngine
-from .serving import EmptyQueryError, LiveList, ServingCore
+from .serving import ServingCore
 
 _COMPAT_KEYS = ("stem", "analyzer", "n_buckets", "salt_bits")
 
@@ -175,12 +156,12 @@ def write_deletes_segment(
 
 def _overridden_doc_stats(
     doc_stats_dir: str, tombs: np.ndarray, salt_bits: int
-) -> tuple[int, int]:
-    """(count, total doc_len) of ``tombs`` docids present in a
-    doc_stats table — directory-pruned per salt shard (the sorted array
-    slices contiguously because salt is the top docid bits). Falls back
-    to one filtered whole-table read on a legacy unpartitioned
-    layout."""
+) -> tuple[np.ndarray, int]:
+    """(sorted docids, total doc_len) of the ``tombs`` docids present in
+    a doc_stats table — directory-pruned per salt shard (the sorted
+    array slices contiguously because salt is the top docid bits).
+    Falls back to one filtered whole-table read on a legacy
+    unpartitioned layout."""
     import os
 
     import pyarrow.parquet as pq
@@ -191,21 +172,23 @@ def _overridden_doc_stats(
             columns=["docid", "doc_len"],
             filters=[("docid", "in", ids)],
         )
-        return len(tbl), (
-            int(tbl.column("doc_len").to_numpy().sum()) if len(tbl) else 0
+        return (
+            tbl.column("docid").to_numpy().astype(np.int64),
+            int(tbl.column("doc_len").to_numpy().sum()) if len(tbl) else 0,
         )
 
     if not any(
         e.startswith("salt=") for e in os.listdir(doc_stats_dir)
     ):
-        return read(doc_stats_dir, tombs.tolist())
+        found, len_rm = read(doc_stats_dir, tombs.tolist())
+        return np.unique(found), len_rm
     shift = 63 - salt_bits
     n_salts = 1 << salt_bits
     needles = np.array(
         [s << shift for s in range(n_salts)], dtype=np.int64
     )
     bounds = np.searchsorted(tombs, needles, "left")
-    n_rm, len_rm = 0, 0
+    found, len_rm = [np.empty(0, np.int64)], 0
     for s in range(n_salts):
         lo = bounds[s]
         hi = bounds[s + 1] if s + 1 < n_salts else tombs.size
@@ -214,16 +197,13 @@ def _overridden_doc_stats(
         d = f"{doc_stats_dir}/salt={s}"
         if not os.path.isdir(d):
             continue
-        c, tot = read(d, tombs[lo:hi].tolist())
-        n_rm += c
+        ids, tot = read(d, tombs[lo:hi].tolist())
+        found.append(ids)
         len_rm += tot
-    return n_rm, len_rm
+    return np.unique(np.concatenate(found)), len_rm
 
 
 class TieredEngine(ServingCore):
-    # no static rank sidecar: the rule for per-segment PageRank is open
-    SERVES_STATIC_BOOST = False
-
     def __init__(
         self,
         spark: SparkSession,
@@ -233,10 +213,9 @@ class TieredEngine(ServingCore):
         """``index_dirs`` oldest-first: [base, batch1, batch2, ...].
         Later segments override earlier ones per docid. Any entry may be
         a tombstone-only DELETES segment (``write_deletes_segment``):
-        it contributes its docid set to every earlier segment's
-        tombstones — a pure removal with batch-sized IO — but no
-        postings or docs of its own. The first entry must be a full
-        index segment."""
+        it removes its docids from every earlier segment — a pure
+        removal with batch-sized IO — but adds no postings or docs of
+        its own. The first entry must be a full index segment."""
         import pyarrow.parquet as pq
 
         if not index_dirs:
@@ -251,15 +230,16 @@ class TieredEngine(ServingCore):
                 f"first segment {index_dirs[0]} is a deletes segment — "
                 "there is nothing before it to delete from"
             )
-        self.engines = [
-            SearchEngine(spark, d, cache_terms=cache_terms)
-            for d, k in zip(index_dirs, kinds)
+        # (original position, reader) per index segment
+        engines = [
+            (j, SearchEngine(spark, d, cache_terms=cache_terms))
+            for j, (d, k) in enumerate(zip(index_dirs, kinds))
             if k == "index"
         ]
-        head = self.engines[0]
+        head = engines[0][1]
         self.analyzer = head.analyzer
         self.salt_bits = head.salt_bits
-        for eng in self.engines[1:]:
+        for _j, eng in engines[1:]:
             diffs = [
                 k for k in _COMPAT_KEYS
                 if getattr(eng, k) != getattr(head, k)
@@ -282,531 +262,48 @@ class TieredEngine(ServingCore):
                     .column("docid")
                     .to_numpy()
                 )
-        # tombstones (ENGINE-aligned, like self.engines): for the engine
-        # at original position i, the sorted union of every later unit's
-        # docids — a later index segment overrides, a later deletes
-        # segment removes; the tombstone machinery is identical
-        self.tombstones: list[np.ndarray] = []
-        for i, k in enumerate(kinds):
-            if k != "index":
-                continue
-            later = [unit_docids[j] for j in unit_docids if j > i]
-            self.tombstones.append(
-                np.unique(np.concatenate(later))
-                if later
-                else np.empty(0, dtype=np.int64)
-            )
 
-        # live corpus stats: combined minus overridden docs. The lookup
-        # uses BOTH pruning levels of the doc_stats layout: the sorted
-        # tombstone array slices contiguously per salt (top docid bits),
-        # so only the touched salt DIRECTORIES are read, each with a
+        # tombstones: of the sorted union of every later unit's docids
+        # (a later index segment overrides, a later deletes segment
+        # removes), the ones the segment holds — with their lengths, the
+        # live corpus stats are the combined stats minus them. The
+        # lookup uses BOTH pruning levels of the doc_stats layout: the
+        # sorted array slices contiguously per salt (top docid bits), so
+        # only the touched salt DIRECTORIES are read, each with a
         # docid-in filter over its own slice — never an index-wide
         # metadata scan, and never one giant Python in-list.
-        n_live, total_live, overridden = 0, 0, 0
-        for i, eng in enumerate(self.engines):
-            n_live += eng.n
-            total_live += eng.total_length
-            tombs = self.tombstones[i]
-            if tombs.size:
-                n_rm, len_rm = _overridden_doc_stats(
-                    f"{eng.index_dir}/doc_stats", tombs, eng.salt_bits
+        tombstoned = []
+        n_live, total_live = 0, 0
+        for j, eng in engines:
+            later = [ids for u, ids in unit_docids.items() if u > j]
+            tombs, len_rm = np.empty(0, np.int64), 0
+            if later:
+                tombs, len_rm = _overridden_doc_stats(
+                    f"{eng.index_dir}/doc_stats",
+                    np.unique(np.concatenate(later)), eng.salt_bits,
                 )
-                n_live -= n_rm
-                overridden += n_rm
-                total_live -= len_rm
+            tombstoned.append((eng, tombs))
+            n_live += eng.n - tombs.size
+            total_live += eng.total_length - len_rm
         self.n = n_live
         self.avgdl = total_live / n_live if n_live else 0.0
         self.total_length = total_live
-        # number of docs actually overridden by later segments. 0 means
-        # the segment set is APPEND-ONLY: no stale postings can exist
-        # anywhere (a segment's postings docids are a subset of its doc
-        # table), so live df == lexicon sums and the tombstone filters
-        # are no-ops.
-        self.overridden = overridden
-        # sound block-max bounds: each segment's stored max_score was
-        # computed at ITS OWN avgdl; scale up when the live avgdl is
-        # larger (merge.py pass-through lemma)
-        self.ub_scales = [
-            max(1.0, self.avgdl / eng.avgdl) if eng.avgdl else 1.0
-            for eng in self.engines
+        # 0 means the segment list is APPEND-ONLY: no posting is stale,
+        # so live df == summed lexicon df
+        self.overridden = sum(tombs.size for _eng, tombs in tombstoned)
+        # ub_scale: each segment's stored max_score was computed at ITS
+        # OWN avgdl; scale up when the live avgdl is larger (merge.py
+        # pass-through lemma)
+        self.segments = [
+            (
+                eng, tombs,
+                max(1.0, self.avgdl / eng.avgdl) if eng.avgdl else 1.0,
+            )
+            for eng, tombs in tombstoned
         ]
 
     def analyze(self, query: str) -> list[str]:
-        return self.engines[0].analyze(query)
-
-    def _live_postings(self, terms: list[str]) -> dict:
-        """term -> (live df, [LiveList per segment and salt shard]) —
-        the live-postings source of ServingCore. Each list carries its
-        segment's tombstones (none while no doc is overridden: no
-        posting is stale then) and the bound scale max(1, live avgdl /
-        segment avgdl) (sound block-max bounds: each segment's stored
-        max_score was computed at ITS OWN avgdl; merge.py pass-through
-        lemma). Live df sums the lexicon df of segments without
-        tombstones and the decoded live docids of segments with them
-        (segments are docid-disjoint after tombstoning). ALL terms load
-        through one ``_cached_term_lists`` call per segment — one
-        lexicon read and one bucket-grouped postings read each, not one
-        per term."""
-        out: dict[str, tuple[int, list]] = {
-            t: (0, []) for t in dict.fromkeys(terms)
-        }
-        for eng, tombs, scale in zip(
-            self.engines, self.tombstones, self.ub_scales
-        ):
-            if not self.overridden:
-                tombs = tombs[:0]  # append-only: nothing to filter
-            decode = bool(tombs.size)
-            for t, (dfi, salted) in eng._cached_term_lists(list(out)).items():
-                if dfi <= 0:
-                    continue
-                df, lists = out[t]
-                for salt, blocks in salted:
-                    ll = LiveList(salt, blocks, tombs, scale)
-                    if decode:
-                        n_live = ll.arrays()[0].size
-                        if not n_live:
-                            continue
-                        df += n_live
-                    lists.append(ll)
-                out[t] = (df if decode else df + dfi, lists)
-        return out
-
-    def expand_wildcard(
-        self, pattern: str, cap: int | None = None
-    ) -> list[tuple[str, int]]:
-        """Tiered wildcard expansion: each segment's lexicon expands
-        the pattern UNCAPPED (the forward/reversed range scan of
-        engine.expand_wildcard — a per-segment cap-then-union would
-        starve terms ranked below cap in every segment), stored dfs
-        sum across segments, top-``cap`` by (df desc, term asc).
-
-        Under tombstones/overrides the summed STORED df is only an
-        UPPER bound on live df, so when the match set exceeds the cap
-        the boundary is refined with suggest-style LIVE df: candidates
-        decode in stored-df order (chunked — one batched lexicon +
-        postings read per segment per chunk, the same IO a query on
-        them would do) until the cap-th best live df seen strictly
-        exceeds the next candidate's stored bound — no unseen term can
-        then displace the selection (live <= stored). Expansion (terms,
-        dfs AND order) is therefore IDENTICAL to the compacted index's
-        (pytest), and fully-tombstoned terms drop. The refinement IO is
-        bounded by the cap (+ boundary ties) and is postings the query
-        on the expansion would read anyway; append-only segment lists
-        (``overridden == 0``) skip it entirely: stored == live there."""
-        cap = cap or self.MAX_WILDCARD_EXPANSIONS
-        agg: dict[str, int] = {}
-        for eng in self.engines:
-            for t, df in eng.expand_wildcard(pattern, cap=1 << 30):
-                agg[t] = agg.get(t, 0) + int(df)
-        ranked = sorted(agg.items(), key=lambda kv: (-kv[1], kv[0]))
-        if self.overridden == 0:
-            return ranked[:cap]
-        by_live: list[tuple[str, int]] = []
-        i, chunk = 0, 64
-        while i < len(ranked):
-            if len(by_live) >= cap:
-                kth = sorted(
-                    by_live, key=lambda kv: (-kv[1], kv[0])
-                )[cap - 1][1]
-                # strict >: a tied unseen candidate could still win the
-                # (df desc, term asc) tie-break, so equal-bound
-                # candidates keep decoding (bounded by the tie class)
-                if kth > ranked[i][1]:
-                    break
-            names = [t for t, _ in ranked[i:i + chunk]]
-            lp = self._live_postings(names)
-            by_live.extend(
-                (t, lp[t][0]) for t in names if lp[t][0] > 0
-            )
-            i += chunk
-        return sorted(by_live, key=lambda kv: (-kv[1], kv[0]))[:cap]
-
-    def _load_synonyms(self) -> dict[str, list[str]]:
-        """Query-time synonym map over a segment list: the NEWEST
-        segment carrying a ``synonyms.json`` wins (same delta-wins rule
-        as every other tiered override); {} when none has one. Cached
-        per TieredEngine instance."""
-        if getattr(self, "_syn_map", None) is not None:
-            return self._syn_map
-        out: dict[str, list[str]] = {}
-        for eng in reversed(self.engines):
-            import os
-
-            if os.path.isfile(f"{eng.index_dir}/synonyms.json"):
-                out = eng._load_synonyms()
-                break
-        self._syn_map = out
-        return out
-
-    def _live_title_rows(self, terms: list[str]) -> dict:
-        """term -> (docids, title_tfs, body_doc_lens) LIVE across
-        segments: each segment's title_tf sidecar rows for the query
-        terms (bucket-pruned pyarrow read, cached per segment engine)
-        minus that segment's tombstones — newest-segment-wins exactly
-        like postings. Segments missing the sidecar (pre-BM25F builds)
-        contribute nothing; raises only when NO segment carries it."""
-        import os
-
-        from .operators.codec import isin_sorted
-
-        uniq_terms = list(dict.fromkeys(terms))
-        parts: dict[str, list] = {t: [] for t in uniq_terms}
-        any_sidecar = False
-        for i, eng in enumerate(self.engines):
-            if not os.path.isdir(f"{eng.index_dir}/title_tf"):
-                continue
-            any_sidecar = True
-            tombs = self.tombstones[i]
-            for t, (td, ttf, tdl) in eng._live_title_rows(
-                uniq_terms
-            ).items():
-                if tombs is not None and tombs.size and td.size:
-                    keep = ~isin_sorted(tombs, td)
-                    td, ttf, tdl = td[keep], ttf[keep], tdl[keep]
-                if td.size:
-                    parts[t].append((td, ttf, tdl))
-        if not any_sidecar:
-            raise FileNotFoundError(
-                "no segment carries the title_tf sidecar — BM25F needs "
-                "it; run `titleindex` on the segments (new builds write "
-                "it automatically)"
-            )
-        empty = (
-            np.empty(0, np.int64),
-            np.empty(0, np.float64),
-            np.empty(0, np.float64),
-        )
-        out: dict = {}
-        for t, ps in parts.items():
-            if not ps:
-                out[t] = empty
-                continue
-            td = np.concatenate([p[0] for p in ps])
-            ttf = np.concatenate([p[1] for p in ps]).astype(np.float64)
-            tdl = np.concatenate([p[2] for p in ps]).astype(np.float64)
-            order = np.argsort(td, kind="stable")
-            out[t] = (td[order], ttf[order], tdl[order])
-        return out
-
-    def _live_phrase_matches(self, phrase: str, slop: int = 0):
-        """Live phrase (or ``slop`` proximity) matches across segments:
-        each index segment's positional sidecar matches (every segment
-        must be built with positions=True) minus that segment's
-        tombstones, as (docids, doc_lens, phrase_tfs) in docid order —
-        segments are docid-disjoint after tombstoning, so the
-        survivors just concatenate; None when nothing matches."""
-        from .operators.codec import isin_sorted
-
-        parts = []
-        for eng, tombs in zip(self.engines, self.tombstones):
-            m = eng._live_phrase_matches(phrase, slop=slop)
-            if m is None:
-                continue
-            if tombs.size:
-                keep = ~isin_sorted(tombs, m[0])
-                m = tuple(a[keep] for a in m)
-            if m[0].size:
-                parts.append(m)
-        if not parts:
-            return None
-        docs, dls, tfs = (np.concatenate(a) for a in zip(*parts))
-        order = np.argsort(docs, kind="stable")
-        return docs[order], dls[order], tfs[order]
-
-    def _has_positions(self) -> bool:
-        """Quoted queries route to mixed phrase semantics only when
-        EVERY segment carries the positional sidecar."""
-        return all(eng._has_positions() for eng in self.engines)
-
-    # -- search-head features over segments (suggest/correct/fuzzy) -----
-    def _live_df_driver(self, terms: list[str]) -> dict[str, int]:
-        """EXACT live df per term with zero Spark jobs: an append-only
-        segment set (overridden == 0) sums per-segment lexicon point
-        lookups; otherwise the candidate posting lists decode
-        driver-side (bucket-pruned pyarrow reads) and tombstoned
-        entries subtract — the same machinery search_local scores
-        with, reused for df alone."""
-        terms = list(dict.fromkeys(terms))
-        if not terms:
-            return {}
-        if not self.overridden:
-            out: dict[str, int] = {}
-            for eng in self.engines:
-                for t, d in eng.term_df(terms).items():
-                    out[t] = out.get(t, 0) + int(d)
-            return out
-        live = self._live_postings(terms)
-        return {t: df for t, (df, _lists) in live.items()}
-
-    def suggest(self, prefix: str, k: int = 10) -> list[tuple[str, int]]:
-        """Tiered autocomplete: top-k LIVE-df terms with the prefix —
-        rank-identical to ``suggest`` on the compacted index (pytest).
-
-        Candidates come from each segment lexicon's footer-pruned
-        range scan (UNCAPPED — per-segment top-k unions are wrong: a
-        term ranked k+1 in every segment can still lead the summed
-        ranking), stored df summed across segments. Append-only sets
-        stop there: stored == live. With overrides, summed stored df
-        is an UPPER BOUND on live df (tombstoning only removes), so
-        candidates refine in stored-df order — decode a batch's live
-        postings, re-rank, stop once the next candidate's upper bound
-        is strictly below the current k-th live df (ties keep
-        refining: equal df breaks by term asc). Between compactions
-        the tombstoned fraction is small, so refinement typically
-        touches ~k candidates; fully-tombstoned terms (live df 0)
-        drop, exactly as the compacted lexicon drops them."""
-        import re
-
-        p = re.sub(r"[^a-z0-9]", "", (prefix or "").lower())
-        if not p:
-            raise EmptyQueryError("Empty query")
-        stored: dict[str, int] = {}
-        for eng in self.engines:
-            for t, df in eng._term_range("term_stats", "term", p):
-                stored[t] = stored.get(t, 0) + int(df)
-        order = sorted(stored.items(), key=lambda td: (-td[1], td[0]))
-        if not self.overridden:
-            return order[:k]
-        live: list[tuple[str, int]] = []
-        i = 0
-        while i < len(order):
-            batch = [t for t, _ in order[i:i + max(k, 8)]]
-            i += len(batch)
-            lm = self._live_postings(batch)
-            live.extend(
-                (t, lm[t][0]) for t in batch if lm[t][0] > 0
-            )
-            live.sort(key=lambda td: (-td[1], td[0]))
-            if (
-                len(live) >= k
-                and i < len(order)
-                and order[i][1] < live[k - 1][1]
-            ):
-                break
-        return live[:k]
-
-    def build_spellindex(self, max_dist: int = 2) -> None:
-        """Materialize the SymSpell layout under EVERY index segment
-        (each a lexicon-sized job on that segment only) — new segments
-        need their own after a fold; deletes segments carry none."""
-        for eng in self.engines:
-            eng.build_spellindex(max_dist=max_dist)
-
-    def correct(
-        self, term: str, k: int = 10
-    ) -> list[tuple[str, int, int]]:
-        """Tiered spell correction: [(term, dist, live df)] by
-        (distance asc, live df desc, term asc) — identical to
-        ``correct`` on the compacted index (pytest). Union of
-        UNCAPPED per-segment SymSpell lookups (every segment needs
-        its spell layout — ``build_spellindex``; a missing one raises
-        the per-segment remedy), then the small candidate set re-ranks
-        by exact live df; fully-tombstoned candidates drop, as the
-        compacted layout would have dropped them at build time."""
-        cand_dist: dict[str, int] = {}
-        for eng in self.engines:
-            for t, dist, _df in eng.correct(term, k=None):
-                cand_dist[t] = dist  # same edit distance everywhere
-        if not cand_dist:
-            return []
-        dfs = self._live_df_driver(sorted(cand_dist))
-        ranked = sorted(
-            (
-                (t, d, dfs.get(t, 0))
-                for t, d in cand_dist.items()
-                if dfs.get(t, 0) > 0
-            ),
-            key=lambda r: (r[1], -r[2], r[0]),
-        )
-        return ranked[:k]
-
-    def fuzzy_terms(
-        self, terms: list[str]
-    ) -> tuple[list[str], dict[str, str]]:
-        """Did-you-mean over segments: terms with LIVE df == 0 swap to
-        their best tiered correction — so a term that only ever
-        appeared in docs since deleted corrects exactly like a typo,
-        which is what the compacted index would do. Same contract as
-        SearchEngine.fuzzy_terms."""
-        dfm = self._live_df_driver(terms)
-        out: list[str] = []
-        corr: dict[str, str] = {}
-        for t in terms:
-            if dfm.get(t, 0) > 0:
-                out.append(t)
-                continue
-            cand = self.correct(t, k=1)
-            if cand:
-                corr[t] = cand[0][0]
-                out.append(cand[0][0])
-            else:
-                out.append(t)
-        return list(dict.fromkeys(out)), corr
-
-    def _candidate_postings(self, terms: list[str]):
-        """Bucket-pruned candidate postings across all segments, with a
-        ``seg`` column (segment index) for tombstone routing."""
-        from functools import reduce
-
-        from pyspark.sql import functions as F
-
-        parts = [
-            eng._postings(terms).withColumn("seg", F.lit(i))
-            for i, eng in enumerate(self.engines)
-        ]
-        return reduce(lambda a, b: a.unionByName(b), parts)
-
-    def _live_df_map(self, terms: list[str]) -> dict[str, int]:
-        """Live df per term. An APPEND-ONLY segment set (overridden ==
-        0: later segments share no docids with earlier ones) needs no
-        decode at all — per-segment lexicon reads sum driver-side (no
-        Spark job), so a distributed tiered query then costs exactly
-        ONE job, like the single-index path. Otherwise the exact
-        distributed live-df job runs."""
-        if self.overridden:
-            return self._live_df_distributed(terms)
-        return self._live_df_driver(terms)
-
-    def _live_df_distributed(self, terms: list[str]) -> dict[str, int]:
-        """Phase 1 of the distributed tiered query: EXACT live df per
-        query term, computed where the postings are — each task decodes
-        its candidate lists' docids (only for segments that carry
-        tombstones; tomb-free segments use the stored block counts) and
-        subtracts stale hits. One job over the pruned candidate rows;
-        output is <= |terms| tiny rows."""
-        from pyspark.sql import functions as F
-
-        cand = self._candidate_postings(terms).filter(
-            F.col("term").isin(terms)
-        )
-        bc = self.spark.sparkContext.broadcast(list(self.tombstones))
-
-        def kernel(batches):
-            import pandas as pd
-
-            from wiki_search_engine_spark.operators.codec import (
-                decode_posting_list,
-            )
-
-            for pdf in batches:
-                agg: dict[str, int] = {}
-                for term, seg, blocks in zip(
-                    pdf["term"], pdf["seg"], pdf["blocks"]
-                ):
-                    t = bc.value[int(seg)]
-                    blks = [
-                        b if isinstance(b, dict) else b.asDict()
-                        for b in blocks
-                    ]
-                    if t.size == 0:
-                        n_live = sum(int(b["count"]) for b in blks)
-                    else:
-                        from wiki_search_engine_spark.operators.codec import (
-                            isin_sorted,
-                        )
-
-                        d, _tf, _dl = decode_posting_list(blks)
-                        n_live = int((~isin_sorted(t, d)).sum())
-                    agg[term] = agg.get(term, 0) + n_live
-                yield pd.DataFrame(
-                    {"term": list(agg), "df": list(agg.values())}
-                )
-
-        out: dict[str, int] = {}
-        for r in (
-            cand.select("term", "seg", "blocks")
-            .mapInPandas(kernel, "term string, df long")
-            .collect()
-        ):
-            out[r["term"]] = out.get(r["term"], 0) + int(r["df"])
-        return out
-
-    def _title_relation(self, terms: list[str]):
-        """The live title rows (``_live_title_rows``: driver-decoded,
-        tombstone-filtered per segment — bounded by the title dfs, the
-        IO a title query pays anyway) as a small DataFrame."""
-        return self.spark.createDataFrame(
-            [
-                (t, int(d), int(tf), int(dl))
-                for t, (td, ttf, tdl) in self._live_title_rows(terms).items()
-                for d, tf, dl in zip(td, ttf, tdl)
-            ],
-            "term string, docid long, tf int, doc_len int",
-        )
-
-    def facet_fields(self) -> list[str]:
-        """Facet fields servable across this segment list: the
-        intersection of every segment's available fields (a count that
-        silently skipped a segment would be wrong, not partial)."""
-        fields = None
-        for eng in self.engines:
-            f = set(eng.facet_fields())
-            fields = f if fields is None else (fields & f)
-        from .plans.build import FACET_COLUMNS
-
-        return [c for c in FACET_COLUMNS if c in (fields or set())]
-
-    def _live_facet_arrays(self, field: str):
-        """Doc-values for one facet field across segments: each
-        segment's per-shard (docid-sorted ids, int codes) minus that
-        segment's tombstones, codes remapped into ONE category list —
-        cached per TieredEngine instance. Segments are docid-disjoint
-        after tombstoning, so per-segment counts just sum."""
-        from .operators.codec import isin_sorted
-
-        cache = getattr(self, "_facet_cache", None)
-        if cache is None:
-            cache = self._facet_cache = {}
-        if field in cache:
-            return cache[field]
-        if field not in self.facet_fields():
-            raise ValueError(
-                f"unknown facet field {field!r}; this segment list "
-                f"serves: {self.facet_fields() or 'none'}"
-            )
-        per_seg = [eng._live_facet_arrays(field) for eng in self.engines]
-        cats = sorted(
-            {c for _parts, seg_cats in per_seg for c in seg_cats},
-            key=lambda x: (x is None, x or ""),
-        )
-        code_of = {c: i for i, c in enumerate(cats)}
-        parts = []
-        for (seg_parts, seg_cats), tombs in zip(per_seg, self.tombstones):
-            remap = np.array([code_of[c] for c in seg_cats], np.int32)
-            for fd, codes in seg_parts:
-                if tombs.size:
-                    keep = ~isin_sorted(tombs, fd)
-                    fd, codes = fd[keep], codes[keep]
-                parts.append((fd, remap[codes]))
-        cache[field] = (parts, cats)
-        return cache[field]
-
-    def lookup_docs(
-        self, docids: list[int], with_images: bool = True
-    ) -> list[dict]:
-        """Point-lookup hydration across segments — later segments win
-        per docid (same pruned pyarrow reads as SearchEngine). Each
-        segment is only asked for ids NOT tombstoned at its position:
-        a re-crawled doc hydrates from the overriding segment, and a
-        doc removed by a deletes segment hydrates from nowhere (the
-        HTTP-path guarantee that a taken-down doc never resurfaces)."""
-        from .operators.codec import isin_sorted
-
-        out: dict[int, dict] = {}
-        ids = np.asarray(docids, dtype=np.int64)
-        for i, eng in enumerate(self.engines):  # oldest first
-            tombs = self.tombstones[i]
-            live = (
-                ids[~isin_sorted(tombs, ids)] if tombs.size else ids
-            )
-            if not live.size:
-                continue
-            for row in eng.lookup_docs(
-                [int(d) for d in live], with_images=with_images
-            ):
-                out[row["docid"]] = row
-        return [out[d] for d in docids if d in out]
+        return self.segments[0][0].analyze(query)
 
 
 def compact(
