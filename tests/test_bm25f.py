@@ -185,13 +185,7 @@ def test_bm25f_composes_with_negation(titled_engine):
     got = eng.search_local(
         "alpha discussion -general", k=10, mode="bm25f", negation=True
     )
-    exc = {
-        int(d)
-        for arr in eng._excluded_docids_by_salt(
-            eng.analyze("general")
-        ).values()
-        for d in arr
-    }
+    exc = set(eng._live_docids(eng.analyze("general")).tolist())
     base = eng.search_local("alpha discussion", k=eng.n, mode="bm25f")
     assert got == [(d, s) for d, s in base if d not in exc][:10]
 

@@ -89,6 +89,159 @@ def test_block_roundtrip(n, seed):
         assert abs(b["max_score"] - u.max()) < 1e-12
 
 
+def _ref_varbyte(data) -> list[int]:
+    """Byte-at-a-time varbyte reference (high bit ends a value)."""
+    out, cur, shift = [], 0, 0
+    for byte in bytes(data):
+        cur |= (byte & 0x7F) << shift
+        shift += 7
+        if byte & 0x80:
+            out.append(cur)
+            cur, shift = 0, 0
+    return out
+
+
+def _ref_decode_blocks(blocks):
+    """Per-block reference decode of a run of blocks, concatenated."""
+    d, t, dl = [], [], []
+    for b in blocks:
+        doc = b["first_docid"]
+        for delta in _ref_varbyte(b["docids_bytes"]):
+            doc += delta
+            d.append(doc)
+        t += _ref_varbyte(b["tfs_bytes"])
+        dl += _ref_varbyte(b["doclens_bytes"])
+    return d, t, dl
+
+
+@given(st.integers(1, 6), st.integers(0, 2**31))
+@settings(max_examples=40, deadline=None)
+def test_batched_decode_matches_per_block_reference(n_blocks, seed):
+    """decode_posting_list over lists of 1-6 blocks — docid gaps up to
+    2^62, tf/doc_len values of 1-9 varbyte bytes — and over any subset
+    of their blocks (the kernel decodes only the blocks it keeps)
+    equals a per-block, byte-at-a-time reference decode."""
+    rng = np.random.default_rng(seed)
+    n = int(rng.integers((n_blocks - 1) * 128 + 1, n_blocks * 128 + 1))
+    gaps = rng.integers(0, 2 ** rng.integers(1, 53, n), dtype=np.int64)
+    gaps[1:] += 1  # strictly increasing docids
+    gaps[rng.integers(n)] += int(rng.integers(1, 2**62 + 1))
+    docids = np.cumsum(gaps)
+
+    def wide():  # values needing 1..9 varbyte bytes
+        return rng.integers(
+            0, 2 ** rng.integers(1, 64, n).astype(np.uint64),
+            dtype=np.uint64,
+        ).astype(np.int64)
+
+    tfs, dls = wide(), wide()
+    blocks = encode_postings(docids, tfs, dls, avgdl=500.0)
+    assert len(blocks) == n_blocks
+    d, t, dl = decode_posting_list(blocks)
+    assert (d == docids).all() and (t == tfs).all() and (dl == dls).all()
+    keep = np.flatnonzero(rng.random(n_blocks) < 0.5)
+    sub = [blocks[i] for i in keep]
+    got = decode_posting_list(sub)
+    exp = _ref_decode_blocks(sub)
+    for g, e in zip(got, exp):
+        assert g.dtype == np.int64 and g.tolist() == e
+
+
+def _brute_topk(term_lists, n, avgdl, k, mode):
+    """Exhaustive top-k by (score desc, docid asc): every posting of
+    every list decoded by the reference decoder and scored, tombstoned
+    docids dropped. Contributions are summed in the kernel's term order
+    (descending upper bound), so equal docs get bit-identical sums."""
+    from wiki_search_engine_spark import B, K1
+    from wiki_search_engine_spark.oracle_py.oracle import (
+        bm25_idf, tfidf_idf,
+    )
+
+    def idf_ub(tl):
+        if mode == "bm25":
+            idf = bm25_idf(n, tl["df"])
+            return idf, idf * max(b["max_score"] for b in tl["blocks"])
+        idf = tfidf_idf(n, tl["df"])
+        return idf, idf * max(b["max_tf"] for b in tl["blocks"])
+
+    acc: dict[int, float] = {}
+    for tl in sorted(term_lists, key=lambda tl: -idf_ub(tl)[1]):
+        idf = idf_ub(tl)[0]
+        tombs = set(tl.get("tombs", np.empty(0, np.int64)).tolist())
+        for doc, tf, dl in zip(*_ref_decode_blocks(tl["blocks"])):
+            if doc in tombs:
+                continue
+            if mode == "bm25":
+                s = idf * tf * (K1 + 1.0) / (
+                    tf + K1 * (1.0 - B + B * dl / avgdl)
+                )
+            else:
+                s = tf * idf
+            acc[doc] = acc.get(doc, 0.0) + float(s)
+    return sorted(acc.items(), key=lambda ds: (-ds[1], ds[0]))[:k]
+
+
+@pytest.mark.parametrize("mode", ["bm25", "tfidf"])
+@pytest.mark.parametrize("k", [1, 10, 50])
+@pytest.mark.parametrize("tombstoned", [False, True])
+def test_kernel_matches_bruteforce_on_multiblock_lists(
+    monkeypatch, mode, k, tombstoned
+):
+    """score_shard_topk over lists of >= 3 blocks equals an exhaustive
+    top-k, ties broken by docid, with and without tombstones; across
+    the seeds the kernel's closed phase skips blocks (block selection
+    runs), so the check covers pruning, not only the open phase."""
+    from wiki_search_engine_spark.operators import wand
+
+    decoded = []
+    batched = wand.decode_posting_list
+    monkeypatch.setattr(
+        wand, "decode_posting_list",
+        lambda blocks: decoded.append(len(blocks)) or batched(blocks),
+    )
+    skipped = 0
+    n_docs, avgdl = 600, 8.0
+    for seed in range(12):
+        rng = np.random.default_rng(seed)
+        term_lists = []
+        if seed % 2 == 0:
+            # one topical high-tf term over the first docid range, whose
+            # matches fill the top-k and close the pruning phase, and
+            # common low-tf terms over every docid: their blocks past
+            # the topical range hold no candidate and must be skipped
+            specs = [(250, 120, (10, 40), (2, 7))] + [
+                (n_docs, int(rng.integers(350, 500)), (1, 4), (8, 31))
+            ] * 3
+        else:
+            # four terms of one df whose every posting scores the same
+            # bound: docs holding only later terms tie the early ones
+            # and win on docid, so closing the phase before the bounds
+            # allow (even on a tie) would lose them
+            specs = [(n_docs, 180, (3, 4), (8, 9))] * 4
+        for span, size, (tf_lo, tf_hi), (dl_lo, dl_hi) in specs:
+            docids = np.sort(rng.choice(span, size, replace=False))
+            tfs = rng.integers(tf_lo, tf_hi, size)
+            dls = rng.integers(dl_lo, dl_hi, size)
+            blocks = encode_postings(
+                docids, tfs, dls, avgdl=avgdl, block_size=8
+            )
+            assert len(blocks) >= 3
+            tl = {"df": size, "blocks": blocks}
+            if tombstoned:
+                tl["tombs"] = np.sort(
+                    rng.choice(docids, size // 4, replace=False)
+                )
+            term_lists.append(tl)
+        decoded.clear()
+        d, s = wand.score_shard_topk(term_lists, n_docs, avgdl, k, mode)
+        exp = _brute_topk(term_lists, n_docs, avgdl, k, mode)
+        assert list(zip(d.tolist(), s.tolist())) == exp, seed
+        skipped += sum(len(tl["blocks"]) for tl in term_lists) - sum(
+            decoded
+        )
+    assert skipped > 0, "the closed phase never skipped a block"
+
+
 def test_extraction_removes_decoys_and_formats_headings():
     html = doc_html(3)
     text = extract_text(html)

@@ -35,17 +35,8 @@ def _brute_not(engine, pos, neg, k=50):
     contain the excluded term (membership from the engine's own
     postings read), cut to k."""
     base = engine.search_local(pos, k=engine.n, mode="bm25")
-    exc_by_salt = engine._excluded_docids_by_salt(
-        engine.analyze(neg)
-    )
-    import numpy as np
-
-    exc = (
-        np.concatenate(list(exc_by_salt.values()))
-        if exc_by_salt
-        else np.array([], dtype=np.int64)
-    )
-    kept = [(d, s) for d, s in base if d not in set(exc.tolist())]
+    exc = set(engine._live_docids(engine.analyze(neg)).tolist())
+    kept = [(d, s) for d, s in base if d not in exc]
     return kept[:k]
 
 
@@ -101,13 +92,7 @@ def test_negation_and_semantics(engine, neg_query):
         f"{pos} -{neg}", k=10, semantics="and", negation=True
     )
     base = engine.search_local(pos, k=engine.n, semantics="and")
-    exc = {
-        int(d)
-        for a in engine._excluded_docids_by_salt(
-            engine.analyze(neg)
-        ).values()
-        for d in a
-    }
+    exc = set(engine._live_docids(engine.analyze(neg)).tolist())
     exp = [(d, s) for d, s in base if d not in exc][:10]
     assert got == exp
 
@@ -294,13 +279,7 @@ def test_must_semantics_all_paths(engine, neg_query):
     ]
     assert wand == [d for d, _ in got]
     # MUST + NOT compose
-    exc = {
-        int(d)
-        for a in engine._excluded_docids_by_salt(
-            engine.analyze(neg)
-        ).values()
-        for d in a
-    }
+    exc = set(engine._live_docids(engine.analyze(neg)).tolist())
     got2 = engine.search_local(f"{q} -{neg}", k=10, negation=True)
     exp2 = [
         (d, s) for d, s in base if d in req_docs and d not in exc

@@ -327,7 +327,7 @@ def test_unknown_path_and_kernel_mode_are_rejected(served):
         )
 
 
-def test_modes_exist_once():
+def test_modes_exist_once(served):
     """Each serving mode and path lives on ServingCore only: neither
     engine may define its own copy (a parallel path would drift), and
     the tiered engine borrows no single-index method. Every source read
@@ -335,6 +335,7 @@ def test_modes_exist_once():
     its per-segment readers, and TieredEngine only its constructor."""
     from wiki_search_engine_spark import tiered
     from wiki_search_engine_spark.engine import SearchEngine
+    from wiki_search_engine_spark.operators import codec, wand
     from wiki_search_engine_spark.serving import ServingCore
     from wiki_search_engine_spark.tiered import TieredEngine
 
@@ -364,11 +365,44 @@ def test_modes_exist_once():
     }
     assert own <= {"analyze"}, own
     assert len(inspect.getsource(TieredEngine).splitlines()) <= 200
-    # the segment readers the core folds stay reachable on SearchEngine
-    # (perfbench/trace.py wraps some of them)
-    for name in ("lookup_docs", "term_df", "_cached_term_lists",
-                 "query_response"):
-        assert callable(getattr(SearchEngine, name)), name
+    # every name perfbench/trace.py wraps or reads must resolve, or a
+    # refactor crashes each traced benchmark run with an AttributeError
+    for owner, name in [
+        (codec, "decode_block"), (wand, "decode_block"),
+        (wand, "score_shard_topk"), (TieredEngine, "query_response"),
+        *((SearchEngine, n) for n in (
+            "query_response", "lookup_docs", "term_df",
+            "_cached_term_lists",
+        )),
+    ]:
+        assert callable(getattr(owner, name)), name
+    assert isinstance(served.single._term_cache, dict)
+
+
+def test_title_row_cache_is_bounded(served):
+    """The title-row cache follows the posting cache's ``cache_terms``
+    LRU rule: 2,000 distinct absent terms leave at most ``cache_terms``
+    entries, and title: and BM25F answers stay the same."""
+    from wiki_search_engine_spark.engine import SearchEngine
+
+    ref = served.single
+    eng = SearchEngine(ref.spark, ref.index_dir, cache_terms=4)
+    queries = [
+        ("title:alpha stone", {"negation": True}),
+        ("alpha river", {"mode": "bm25f"}),
+    ]
+    expected = [ref.search_local(q, k=10, **kw) for q, kw in queries]
+    assert all(expected)
+    assert [eng.search_local(q, k=10, **kw) for q, kw in queries] == (
+        expected
+    )
+    for i in range(2000):
+        eng._live_title_rows([f"zzabsent{i}"])
+    assert len(eng._title_cache) <= 4
+    assert len(eng._term_cache) <= 4
+    assert [eng.search_local(q, k=10, **kw) for q, kw in queries] == (
+        expected
+    )
 
 
 # the search-head features, as (method, args) calls

@@ -431,6 +431,77 @@ def test_streaming_segment_maintenance(spark, tmp_path):
     assert_equal(live1 + b2, "ref2")
 
 
+def test_streamed_segments_carry_spell_layout(spark, tmp_path):
+    """When the oldest segment has the spell layout, every micro-batch
+    segment (and the base a fold compacts) gets one at the same
+    max_dist, so corrections over the maintained segment list answer
+    and equal the compacted index's, before and after the fold."""
+    import datetime
+    import json
+    import os
+
+    import pandas as pd
+
+    from wiki_search_engine_spark.engine import SearchEngine
+    from wiki_search_engine_spark.tiered import (
+        TieredEngine, compact, list_segments, maintain_segments_incremental,
+    )
+
+    words = ["river", "rover", "stone", "field", "cloud", "tower"]
+    seg_dir = str(tmp_path / "segments")
+    stream_dir = tmp_path / "landed"
+    stream_dir.mkdir()
+    ckpt = str(tmp_path / "ckpt")
+    cfg = dict(n_buckets=8, salt_bits=2, stem=True, analyzer="porter")
+
+    def land(ids, name):
+        rows = [{
+            "url": f"https://example.org/wiki/Doc_{i}",
+            "warc_ts": datetime.datetime(2024, 1, 1, 0, 0, i % 60),
+            "html": b"",
+            "text": " ".join(words[(i * j) % 6] for j in range(1, 5)),
+            "lang": "en",
+        } for i in ids]
+        spark.createDataFrame(
+            pd.DataFrame(rows),
+            "url string, warc_ts timestamp, html binary, text string, "
+            "lang string",
+        ).coalesce(1).write.parquet(str(stream_dir / name))
+        maintain_segments_incremental(
+            spark, str(stream_dir) + "/*", seg_dir, ckpt,
+            base_config=cfg, compact_after=2,
+        ).awaitTermination(180)
+
+    def assert_corrects_as_compacted(name):
+        segs = list_segments(seg_dir)
+        for s in segs:
+            with open(f"{s}/spell/_spell_meta.json") as f:
+                assert json.load(f)["max_dist"] == 1
+        got = TieredEngine(spark, segs).correct("rivr")
+        assert got and got[0][0] == "river"
+        if len(segs) > 1:
+            ref = SearchEngine(
+                spark, compact(spark, segs, str(tmp_path / name))
+            )
+            ref.build_spellindex(max_dist=1)
+        else:
+            ref = SearchEngine(spark, segs[0])
+        assert got == ref.correct("rivr")
+
+    land(range(0, 12), "b0")
+    (base,) = list_segments(seg_dir)
+    assert not os.path.exists(f"{base}/spell")
+    SearchEngine(spark, base).build_spellindex(max_dist=1)
+    # a micro-batch that adds docs and replaces two of the base's
+    land([*range(12, 20), 3, 7], "b1")
+    assert len(list_segments(seg_dir)) == 2
+    assert_corrects_as_compacted("ref1")
+    land(range(20, 26), "b2")  # the third segment folds the list
+    (folded,) = list_segments(seg_dir)
+    assert folded.endswith("_compacted")
+    assert_corrects_as_compacted("ref2")
+
+
 def test_worker_liveness_non_utc_timezone(spark, tmp_path):
     """Regression: with a non-UTC session timezone, Arrow hands the
     stateful kernel tz-naive SESSION-zone timestamps; treating them as

@@ -174,7 +174,9 @@ class SearchEngine(ServingCore):
         self._term_cache: "OrderedDict[str, tuple[int, list]]" = (
             OrderedDict()
         )
-        # the cache is served from ThreadingHTTPServer worker threads:
+        # term -> title_tf rows, under the same cache_terms LRU rule
+        self._title_cache: "OrderedDict[str, tuple]" = OrderedDict()
+        # the caches are served from ThreadingHTTPServer worker threads:
         # check-then-use against concurrent eviction needs a lock (loads
         # happen outside it; a double-load of the same term is a benign
         # idempotent insert)
@@ -183,7 +185,33 @@ class SearchEngine(ServingCore):
     def clear_cache(self) -> None:
         with self._cache_lock:
             self._term_cache.clear()
+            self._title_cache.clear()
         self._footers = {}
+
+    def _cache_get(self, cache, terms) -> tuple[dict, list]:
+        """(cached term -> value, [uncached terms]) of ``terms`` in one
+        of the per-term LRU caches; hits become most recent."""
+        out: dict = {}
+        missing: list[str] = []
+        with self._cache_lock:
+            for t in dict.fromkeys(terms):
+                if t in cache:
+                    cache.move_to_end(t)
+                    out[t] = cache[t]
+                else:
+                    missing.append(t)
+        return out, missing
+
+    def _cache_put(self, cache, loaded: dict) -> None:
+        """Insert ``loaded`` into a per-term LRU cache as most recent and
+        evict the least recent past ``cache_terms`` (0: cache nothing)."""
+        with self._cache_lock:
+            if self._cache_cap:
+                for t, v in loaded.items():
+                    cache[t] = v
+                    cache.move_to_end(t)
+            while len(cache) > self._cache_cap:
+                cache.popitem(last=False)
 
     def _footer_index(self, sub: str, key: str) -> list:
         """[(path, FileMetaData, [(min, max) of ``key`` or None per row
@@ -283,15 +311,7 @@ class SearchEngine(ServingCore):
         """(term -> (df, [(salt, blocks), ...])) for every present term,
         loading misses from the lexicon + postings buckets and evicting
         LRU past ``cache_terms``. df == 0 terms are cached as absent."""
-        out: dict[str, tuple[int, list]] = {}
-        missing: list[str] = []
-        with self._cache_lock:
-            for t in dict.fromkeys(terms):
-                if t in self._term_cache:
-                    self._term_cache.move_to_end(t)
-                    out[t] = self._term_cache[t]
-                else:
-                    missing.append(t)
+        out, missing = self._cache_get(self._term_cache, terms)
         if missing:
             import os
 
@@ -317,14 +337,8 @@ class SearchEngine(ServingCore):
                         df_map[t],
                         loaded[t][1] + [(row["salt"], row["blocks"])],
                     )
-            with self._cache_lock:
-                for t, v in loaded.items():
-                    out[t] = v
-                    if self._cache_cap:
-                        self._term_cache[t] = v
-                        self._term_cache.move_to_end(t)
-                while len(self._term_cache) > self._cache_cap:
-                    self._term_cache.popitem(last=False)
+            out.update(loaded)
+            self._cache_put(self._term_cache, loaded)
         return out
 
     # -- lifecycle ---------------------------------------------------------
@@ -479,27 +493,20 @@ class SearchEngine(ServingCore):
             self.spark, self.index_dir, self.n_buckets,
             analyzer=analyzer or self.analyzer,
         )
-        self._title_cache = {}
-        self._footers = {}
+        self.clear_cache()
 
     def _title_rows(self, terms: list[str]) -> dict | None:
         """term -> (docids, title_tfs, body_doc_lens) numpy arrays, docid
         sorted, from the title_tf sidecar — pyarrow over the terms'
         bucket directories (term-sorted row groups), no Spark job, the
-        same cached-footer point read as term_df, cached per term. None
+        same cached-footer point read as term_df, cached per term in
+        the ``cache_terms`` LRU (absent terms too, as empty arrays). None
         without the sidecar."""
         if not self._has_sidecar("title_tf"):
             return None
-        cache = getattr(self, "_title_cache", None)
-        if cache is None:
-            cache = self._title_cache = {}
-        out: dict = {}
-        want: list[str] = []
-        for t in dict.fromkeys(terms):
-            if t in cache:
-                out[t] = cache[t]
-            else:
-                want.append(t)
+        out, want = self._cache_get(self._title_cache, terms)
+        if not want:
+            return out
         empty = (
             np.empty(0, np.int64),
             np.empty(0, np.float64),
@@ -523,8 +530,7 @@ class SearchEngine(ServingCore):
                 td, ttf, tdl = did[sel], tf[sel], dl[sel]
                 order = np.argsort(td, kind="stable")
                 out[t] = (td[order], ttf[order], tdl[order])
-        for t, v in out.items():
-            cache[t] = v
+        self._cache_put(self._title_cache, {t: out[t] for t in want})
         return out
 
     def _static_rank_arrays(self):

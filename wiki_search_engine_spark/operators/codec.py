@@ -21,8 +21,13 @@ value (classic; see e.g. "List Intersection for Web Search" VLDB'18 for the
 block-layout rationale — PAPERS.md).
 
 Encoding is NumPy-vectorized: all byte lengths computed in one pass, bytes
-scattered into a preallocated buffer. Decoding uses a high-bit scan +
-cumulative shifts. No per-posting Python loops.
+scattered into a preallocated buffer. Decoding is one batched function,
+``decode_posting_list``: it takes any run of one list's blocks, joins
+their three byte streams, decodes them with one high-bit scan and one
+``np.add.reduceat`` over the shifted 7-bit groups, and rebuilds docids
+with one ``cumsum`` — a fixed number of array ops per call, however many
+blocks it covers (``decode_block`` is its one-block case). No per-posting
+or per-block Python loops beyond reading block metadata.
 """
 
 from __future__ import annotations
@@ -82,23 +87,27 @@ def varbyte_encode(values: np.ndarray) -> bytes:
     return varbyte_encode_with_offsets(values)[0]
 
 
+def _varbyte_values(raw: np.ndarray) -> np.ndarray:
+    """uint64 values of a varbyte uint8 array: one high-bit scan finds
+    each value's final byte, and ``np.add.reduceat`` sums each value's
+    shifted 7-bit groups (they occupy disjoint bits, so the sum is the
+    value)."""
+    ends = np.flatnonzero(raw >= 0x80)
+    low = (raw & 0x7F).astype(np.uint64)
+    if ends.size == raw.size:  # every value is one byte (or none)
+        return low
+    starts = np.empty_like(ends)
+    starts[0] = 0
+    starts[1:] = ends[:-1] + 1
+    byte_pos = np.arange(raw.size) - np.repeat(starts, ends - starts + 1)
+    return np.add.reduceat(
+        low << (np.uint64(7) * byte_pos.astype(np.uint64)), starts
+    )
+
+
 def varbyte_decode(data: bytes) -> np.ndarray:
     """Decode varbyte bytes back to a uint64 array."""
-    if not data:
-        return np.zeros(0, dtype=np.uint64)
-    raw = np.frombuffer(data, dtype=np.uint8)
-    is_last = (raw & 0x80) != 0
-    # index of each byte within its value: position - start_of_value
-    value_id = np.concatenate(([0], np.cumsum(is_last)[:-1]))
-    starts = np.concatenate(([0], np.nonzero(is_last)[0][:-1] + 1))
-    byte_pos = np.arange(raw.size) - starts[value_id]
-    contrib = (raw & 0x7F).astype(np.uint64) << (
-        np.uint64(7) * byte_pos.astype(np.uint64)
-    )
-    nvals = int(is_last.sum())
-    out = np.zeros(nvals, dtype=np.uint64)
-    np.add.at(out, value_id, contrib)
-    return out
+    return _varbyte_values(np.frombuffer(data, dtype=np.uint8))
 
 
 def encode_postings(
@@ -230,25 +239,38 @@ def encode_partition_flat(
     )
 
 
-def decode_block(block) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
-    """Decode one block -> (docids:int64, tfs:int64, doclens:int64)."""
-    deltas = varbyte_decode(bytes(block["docids_bytes"]))
-    docids = (
-        np.cumsum(deltas.astype(np.int64)) + np.int64(block["first_docid"])
-    )
-    tfs = varbyte_decode(bytes(block["tfs_bytes"])).astype(np.int64)
-    doclens = varbyte_decode(bytes(block["doclens_bytes"])).astype(np.int64)
-    return docids, tfs, doclens
-
-
 def decode_posting_list(blocks) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
-    """Decode and concatenate all blocks of one term (docid-sorted)."""
-    if not blocks:
+    """Decode many blocks of one list in one pass -> (docids, tfs,
+    doclens), all int64, in block order.
+
+    The blocks' three byte streams are joined (every block's docid
+    deltas, then every block's tfs, then every block's doclens) and
+    decoded by one varbyte pass; docids come from one ``cumsum`` over
+    the deltas, where the first delta of each block (stored as 0)
+    becomes that block's ``first_docid`` minus the previous block's
+    ``last_docid``. Any subset of a list's blocks decodes this way —
+    the kernel passes only the blocks it keeps."""
+    nb = len(blocks)
+    if not nb:
         z = np.zeros(0, dtype=np.int64)
         return z, z.copy(), z.copy()
-    parts = [decode_block(b) for b in blocks]
-    return (
-        np.concatenate([p[0] for p in parts]),
-        np.concatenate([p[1] for p in parts]),
-        np.concatenate([p[2] for p in parts]),
-    )
+    values = _varbyte_values(np.frombuffer(b"".join([
+        b[key] for key in ("docids_bytes", "tfs_bytes", "doclens_bytes")
+        for b in blocks
+    ]), dtype=np.uint8)).astype(np.int64)
+    n = values.size // 3
+    deltas = values[:n]
+    first = np.fromiter((b["first_docid"] for b in blocks), np.int64, nb)
+    deltas[0] = first[0]
+    if nb > 1:
+        head = blocks[:-1]
+        counts = np.fromiter((b["count"] for b in head), np.int64, nb - 1)
+        last = np.fromiter((b["last_docid"] for b in head), np.int64, nb - 1)
+        deltas[np.cumsum(counts)] = first[1:] - last
+    return np.cumsum(deltas), values[n:2 * n], values[2 * n:]
+
+
+def decode_block(block) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+    """Decode one block -> (docids:int64, tfs:int64, doclens:int64): the
+    one-block case of ``decode_posting_list``."""
+    return decode_posting_list([block])

@@ -16,15 +16,22 @@ block-max bounds per Ding & Suel 2011 block-max WAND), vectorized in NumPy:
    (np.concatenate + np.unique-sum);
 3. once the sum of remaining terms' UBs drops below the current k-th
    score θ, no NEW doc can enter the top-k — remaining terms only update
-   existing candidates, so their blocks are DECODED ONLY IF
-   (a) the block's docid range intersects the candidate set, and
-   (b) idf * block.max_score could still matter (> 0 contribution test is
-       implicit; range test via np.searchsorted on the sorted candidates);
+   existing candidates, so a list keeps only the blocks whose docid
+   range holds a candidate — one np.searchsorted range test of all its
+   blocks' (first_docid, last_docid) against the sorted candidates;
 4. exact final top-k by (score desc, docid asc).
 
-Runs inside ``applyInPandas`` grouped by the index's docid-range shard
-(``salt``): every query term's postings for that range are in the group,
-so per-shard top-k is exact; the global merge is a tiny
+Each list's blocks (all of them, or the kept ones) decode in ONE
+``decode_posting_list`` call, and its tombstones drop once, so a call
+costs a fixed number of array ops per list, not per block.
+
+The kernel scores whatever docid range its lists cover. Driver-local
+serving (serving.py ``_search_kernel``) makes ONE call per query over
+the whole range: each (term, segment) list is that segment's salt shards
+concatenated, so θ is the global k-th score. The distributed path makes
+one call per docid-range shard (``salt``) inside ``applyInPandas``:
+every query term's postings for that range are in the group, so
+per-shard top-k is exact; the global merge is a tiny
 ``orderBy(score desc, docid asc).limit(k)`` over ≤ k×shards rows.
 """
 
@@ -37,7 +44,9 @@ from pyspark.sql import functions as F
 
 from .. import B, K1
 from ..oracle_py.oracle import bm25_idf, tfidf_idf
-from .codec import decode_block, isin_sorted
+# decode_block is re-exported for perfbench/trace.py, which wraps the
+# name here as well as in codec
+from .codec import decode_block, decode_posting_list, isin_sorted  # noqa: F401
 
 
 def _bm25_scores(tfs, doclens, idf, avgdl):
@@ -115,19 +124,25 @@ def _segment_args(postings: DataFrame, df_map, tombstones_by_seg,
 def score_shard_topk(
     term_lists: list[dict], n: int, avgdl: float, k: int, mode: str
 ) -> tuple[np.ndarray, np.ndarray]:
-    """Exact top-k (docids, scores) for one docid-range shard.
+    """Exact top-k (docids, scores) by (score desc, docid asc) over the
+    docids the lists cover — one salt shard on the distributed path,
+    the whole docid range on the driver-local one.
 
-    ``term_lists``: [{df, blocks}] one entry per distinct query term
-    present in the shard. ``mode`` is 'bm25' or 'tfidf': the stored
-    block bounds (max_score, max_tf) bound those two formulas only, so
-    any other mode raises rather than silently scoring as one of them.
+    ``term_lists``: [{df, blocks[, tombs, ub_scale]}], one entry per
+    list of a query term (a term may have several: one per segment or
+    bounded-row split, docid-disjoint, each with its own tombstones and
+    bound scale). ``mode`` is 'bm25' or 'tfidf': the stored block
+    bounds (max_score, max_tf) bound those two formulas only, so any
+    other mode raises rather than silently scoring as one of them.
     """
     _check_kernel_mode(mode)
     prepared = []
     for tl in term_lists:
+        blocks = tl["blocks"]
+        if not len(blocks):
+            continue
         df = int(tl["df"])
         idf = bm25_idf(n, df) if mode == "bm25" else tfidf_idf(n, df)
-        blocks = tl["blocks"]
         if mode == "bm25":
             # ub_scale (tiered serving): block max_score was computed at
             # the list's SOURCE-index avgdl; u grows monotonically with
@@ -156,51 +171,46 @@ def score_shard_topk(
 
     for i, (ub, idf, blocks, tombs) in enumerate(prepared):
         if closed:
-            # prune: only blocks overlapping current candidates matter
-            kept = []
-            for blk in blocks:
-                lo = np.searchsorted(acc_docids, blk["first_docid"], "left")
-                hi = np.searchsorted(acc_docids, blk["last_docid"], "right")
-                if hi > lo:
-                    kept.append(blk)
-            blocks = kept
-            if not blocks:
+            # prune: only blocks whose docid range holds a current
+            # candidate matter — one range test over all the blocks
+            nb = len(blocks)
+            first = np.fromiter(
+                (b["first_docid"] for b in blocks), np.int64, nb
+            )
+            last = np.fromiter(
+                (b["last_docid"] for b in blocks), np.int64, nb
+            )
+            kept = np.flatnonzero(
+                np.searchsorted(acc_docids, last, "right")
+                > np.searchsorted(acc_docids, first, "left")
+            )
+            if not kept.size:
                 continue
-        d_parts, s_parts = [], []
-        for blk in blocks:
-            docids, tfs, doclens = decode_block(blk)
-            if tombs is not None and tombs.size and docids.size:
-                # tiered serving: this list's segment carries stale
-                # postings overridden by later segments — drop them at
-                # decode time (block-max bounds stay sound: pruning
-                # over-estimates only)
-                hit = isin_sorted(tombs, docids)
-                if hit.any():
-                    keep = ~hit
-                    docids, tfs, doclens = (
-                        docids[keep], tfs[keep], doclens[keep],
-                    )
-                if docids.size == 0:
-                    continue
-            if mode == "bm25":
-                s = _bm25_scores(tfs, doclens, idf, avgdl)
-            else:
-                s = tfs.astype(np.float64) * idf
-            d_parts.append(docids)
-            s_parts.append(s)
-        if not d_parts:
-            continue
-        d = np.concatenate(d_parts)
-        s = np.concatenate(s_parts)
+            if kept.size < nb:
+                blocks = [blocks[j] for j in kept]
+        docids, tfs, doclens = decode_posting_list(blocks)
+        if tombs is not None and tombs.size:
+            # tiered serving: this list's segment carries stale
+            # postings overridden by later segments (and the local
+            # path's NOT docids) — drop them at decode time (block-max
+            # bounds stay sound: pruning over-estimates only)
+            keep = ~isin_sorted(tombs, docids)
+            docids, tfs, doclens = docids[keep], tfs[keep], doclens[keep]
+            if not docids.size:
+                continue
+        if mode == "bm25":
+            s = _bm25_scores(tfs, doclens, idf, avgdl)
+        else:
+            s = tfs.astype(np.float64) * idf
         if closed:
             # keep only contributions to existing candidates
-            pos = np.searchsorted(acc_docids, d)
+            pos = np.searchsorted(acc_docids, docids)
             ok = (pos < acc_docids.size) & (
-                acc_docids[np.minimum(pos, acc_docids.size - 1)] == d
+                acc_docids[np.minimum(pos, acc_docids.size - 1)] == docids
             )
             np.add.at(acc_scores, pos[ok], s[ok])
         else:
-            all_d = np.concatenate([acc_docids, d])
+            all_d = np.concatenate([acc_docids, docids])
             all_s = np.concatenate([acc_scores, s])
             acc_docids, inv = np.unique(all_d, return_inverse=True)
             acc_scores = np.zeros(acc_docids.size, dtype=np.float64)
@@ -215,22 +225,6 @@ def score_shard_topk(
     # top-k by (score desc, docid asc): lexsort on (-score, docid)
     idx = np.lexsort((acc_docids, -acc_scores))[:kk]
     return acc_docids[idx], acc_scores[idx]
-
-
-def merge_topk(
-    shard_results: list[tuple[np.ndarray, np.ndarray]], k: int
-) -> list[tuple[int, float]]:
-    """Merge per-shard (docids, scores) top-ks into the global top-k with
-    the engine's tie-break (score desc, docid asc). Shards are docid-range
-    disjoint, so concatenation (no re-aggregation) is exact."""
-    if not shard_results:
-        return []
-    d = np.concatenate([r[0] for r in shard_results])
-    s = np.concatenate([r[1] for r in shard_results])
-    if d.size == 0:
-        return []
-    idx = np.lexsort((d, -s))[: min(k, d.size)]
-    return [(int(d[i]), float(s[i])) for i in idx]
 
 
 def search_topk_many(

@@ -34,11 +34,12 @@ returns the reader's own arrays: a single index pays no merge.
 Every path parses a query once (``_parse_query``) and rejects the
 combinations no path serves in one place
 (``_reject_unserved_combination``). Locally, plain OR runs the block-max
-shard kernel (operators/wand.py ``score_shard_topk``, which drops each
-list's tombstones and scales its bounds by ``ub_scale``) whenever every
-list's df is known without decoding (``overridden == 0``) and only the
-top k is asked for. Every other local retrieval decodes the candidate
-lists once (``LiveList.arrays``), scores them per posting (``_scores``)
+kernel (operators/wand.py ``score_shard_topk``, which drops each list's
+tombstones and scales its bounds by ``ub_scale``) in one call per query
+(``_search_kernel``) whenever every list's df is known without decoding
+(``overridden == 0``) and only the top k is asked for. Every other local
+retrieval decodes the candidate lists once (``LiveList.arrays``, one
+batched decode per term and segment), scores them per posting (``_scores``)
 and accumulates -> gates -> excludes in one helper (``_accumulate``);
 ``_top_k`` cuts the page. A faceted response keeps the full match set
 of that one retrieval: the facets count it and the page is cut from it.
@@ -225,17 +226,17 @@ def assemble_reference_response(
 
 
 class LiveList:
-    """One term's posting list in one docid-range shard (``salt``) of
-    one index: its encoded ``blocks``, the sorted docids a later
-    segment overrides (``tombs``) and the factor that keeps the stored
+    """One term's posting list in one segment: its encoded ``blocks``
+    (every docid-range shard's, in salt order — salt is the top docid
+    bits, so that is docid order), the sorted docids a later segment
+    overrides (``tombs``) and the factor that keeps the stored
     block-max bounds sound at the live avgdl (``ub_scale``).
-    ``arrays()`` decodes the list once and drops the tombstoned
-    postings."""
+    ``arrays()`` decodes the list in one batched pass and drops the
+    tombstoned postings."""
 
-    __slots__ = ("salt", "blocks", "tombs", "ub_scale", "_arrays")
+    __slots__ = ("blocks", "tombs", "ub_scale", "_arrays")
 
-    def __init__(self, salt, blocks, tombs=_NO_DOCS, ub_scale=1.0):
-        self.salt = salt
+    def __init__(self, blocks, tombs=_NO_DOCS, ub_scale=1.0):
         self.blocks = blocks
         self.tombs = tombs
         self.ub_scale = ub_scale
@@ -244,11 +245,9 @@ class LiveList:
     def arrays(self):
         """(docids, tfs, doc_lens) of the live postings."""
         if self._arrays is None:
-            d, tf, dl = decode_posting_list([
-                b if isinstance(b, dict) else b.asDict()
-                for b in self.blocks
-            ])
-            self._arrays = _drop_tombstoned((d, tf, dl), self.tombs)
+            self._arrays = _drop_tombstoned(
+                decode_posting_list(self.blocks), self.tombs
+            )
         return self._arrays
 
 
@@ -351,13 +350,15 @@ class ServingCore:
         return None if rest or tombs.size else seg
 
     def _live_postings(self, terms: list[str]) -> dict:
-        """term -> (live df, [LiveList per segment and salt shard]) for
-        every term (absent: (0, [])). Each list carries its segment's
-        tombstones and bound scale. A segment without tombstones adds
-        its lexicon df; one with tombstones adds the live postings it
-        decodes (segments are docid-disjoint after tombstoning). Every
-        term loads through one ``_cached_term_lists`` call per segment:
-        one lexicon read and one bucket-grouped postings read each."""
+        """term -> (live df, [LiveList per segment holding it]) for
+        every term (absent: (0, [])). A segment's list joins its salt
+        shards' blocks in salt (= docid) order and carries the
+        segment's tombstones and bound scale. A segment without
+        tombstones adds its lexicon df; one with tombstones adds the
+        live postings it decodes (segments are docid-disjoint after
+        tombstoning). Every term loads through one
+        ``_cached_term_lists`` call per segment: one lexicon read and
+        one bucket-grouped postings read each."""
         out: dict[str, tuple[int, list]] = {
             t: (0, []) for t in dict.fromkeys(terms)
         }
@@ -367,15 +368,24 @@ class ServingCore:
                 if dfi <= 0:
                     continue
                 df, lists = out[t]
-                for salt, blocks in salted:
-                    ll = LiveList(salt, blocks, tombs, scale)
-                    if decode:
-                        n_live = ll.arrays()[0].size
-                        if not n_live:
-                            continue
-                        df += n_live
-                    lists.append(ll)
-                out[t] = (df if decode else df + dfi, lists)
+                ll = LiveList(
+                    [
+                        b for _salt, blocks in sorted(
+                            salted, key=lambda sb: sb[0]
+                        )
+                        for b in blocks
+                    ],
+                    tombs, scale,
+                )
+                if decode:
+                    n_live = ll.arrays()[0].size
+                    if not n_live:
+                        continue
+                    df += n_live
+                else:
+                    df += dfi
+                lists.append(ll)
+                out[t] = (df, lists)
         return out
 
     def _stored_df(self, terms: list[str]) -> dict[str, int]:
@@ -773,26 +783,19 @@ class ServingCore:
             )
             acc = acc + boost
         return uniq, acc
-    def _excluded_docids_by_salt(self, terms: list[str]) -> dict:
-        """salt -> sorted docids whose LIVE postings hold any of
-        ``terms`` — the NOT set, grouped by docid-range shard. Cost
-        tracks those terms' posting sizes (the reads a positive query on
-        them would do), never the corpus."""
-        by_salt: dict = {}
-        for _df, lists in self._live_postings(terms).values():
-            for ll in lists:
-                by_salt.setdefault(ll.salt, []).append(ll.arrays()[0])
-        return {s: np.unique(np.concatenate(v)) for s, v in by_salt.items()}
 
     def _live_docids(self, terms) -> np.ndarray:
-        """Sorted docids whose live postings hold any of ``terms``."""
+        """Sorted docids whose live postings hold any of ``terms`` — the
+        NOT set. Cost tracks those terms' posting sizes (the reads a
+        positive query on them would do), never the corpus."""
         if not terms:
             return _NO_DOCS
-        by_salt = self._excluded_docids_by_salt(list(dict.fromkeys(terms)))
-        return (
-            np.unique(np.concatenate(list(by_salt.values())))
-            if by_salt else _NO_DOCS
-        )
+        parts = [
+            ll.arrays()[0]
+            for _df, lists in self._live_postings(terms).values()
+            for ll in lists
+        ]
+        return np.unique(np.concatenate(parts)) if parts else _NO_DOCS
 
     # -- query parsing -----------------------------------------------------
     def _analyze_or_empty(self, text: str) -> list[str]:
@@ -1033,44 +1036,31 @@ class ServingCore:
             return self._decoded_matches(
                 terms, gate, excluded, mode, t_should, t_must, t_not, rank,
             )
-        hits = self._search_kernel(terms, excluded, k, mode)
-        return (
-            np.array([d for d, _ in hits], np.int64),
-            np.array([s for _, s in hits], np.float64),
-        )
+        return self._search_kernel(terms, excluded, k, mode)
 
     def _search_kernel(self, terms, excluded, k, mode):
-        """Plain OR through the block-max shard kernel, one call per
-        docid-range shard: every live list of the shard (one per term
-        and segment) with its tombstones, the NOT docids of the shard
-        merged in — excluded docs drop at decode time, BEFORE the top-k
-        cut, so the heap stays k-sized however common the excluded term
-        is. Needs each term's live df up front (``overridden == 0``)."""
-        from .operators.wand import merge_topk, score_shard_topk
+        """Plain OR through the block-max kernel in ONE call over the
+        whole docid range: one entry per (term, segment) — the
+        segment's list with all its salt shards' blocks, its bound
+        scale, and its tombstones ∪ the NOT docids, so excluded docs
+        drop at decode time, BEFORE the top-k cut (the heap stays
+        k-sized however common the excluded term is) — and θ is the
+        global k-th score. Needs each term's live df up front
+        (``overridden == 0``). Returns (docids, scores) ranked."""
+        from .operators.wand import score_shard_topk
 
-        exc_by_salt = (
-            self._excluded_docids_by_salt(excluded) if excluded else {}
-        )
-        by_salt: dict = {}
-        for df, lists in self._live_postings(terms).values():
-            if df <= 0:
-                continue
-            for ll in lists:
-                tombs = ll.tombs
-                exc = exc_by_salt.get(ll.salt)
-                if exc is not None:
-                    tombs = np.union1d(tombs, exc) if tombs.size else exc
-                by_salt.setdefault(ll.salt, []).append({
-                    "df": df, "blocks": ll.blocks, "tombs": tombs,
-                    "ub_scale": ll.ub_scale,
-                })
-        return merge_topk(
-            [
-                score_shard_topk(tls, self.n, self.avgdl, k, mode)
-                for tls in by_salt.values()
-            ],
-            k,
-        )
+        exc = self._live_docids(excluded)
+        entries = [
+            {
+                "df": df, "blocks": ll.blocks,
+                "tombs": np.union1d(ll.tombs, exc) if exc.size else ll.tombs,
+                "ub_scale": ll.ub_scale,
+            }
+            for df, lists in self._live_postings(terms).values()
+            if df > 0
+            for ll in lists
+        ]
+        return score_shard_topk(entries, self.n, self.avgdl, k, mode)
 
     def _decoded_matches(
         self, terms, gate, excluded, mode,

@@ -395,10 +395,18 @@ def maintain_segments_incremental(
         if segs:
             with open(f"{segs[0]}/meta.json") as f:
                 m = json.load(f)
-            return {
+            cfg = {
                 "n_buckets": m["n_buckets"], "salt_bits": m["salt_bits"],
                 "stem": m["stem"], "analyzer": m["analyzer"],
             }
+            # a segment list serves corrections only when every segment
+            # has the spell layout: new segments get one, at the same
+            # max_dist, when the oldest full segment has one
+            spell = f"{segs[0]}/spell/_spell_meta.json"
+            if os.path.exists(spell):
+                with open(spell) as f:
+                    cfg["spell_max_dist"] = int(json.load(f)["max_dist"])
+            return cfg
         if base_config is None:
             raise ValueError(
                 "no existing segments: pass base_config for the first "
@@ -430,12 +438,15 @@ def maintain_segments_incremental(
                 )
         cfg = config()
         stem = cfg.pop("stem", True)
+        max_dist = cfg.pop("spell_max_dist", None)
         seg = f"{segments_dir}/seg_{batch_id:08d}"
         shutil.rmtree(seg, ignore_errors=True)
         tmp = seg + ".building"
-        SearchEngine.build(
+        built = SearchEngine.build(
             spark, batch_df, tmp, stem=stem, bucket_groups=1, **cfg
         )
+        if max_dist is not None:
+            built._build_spell_layout(max_dist)
         os.rename(tmp, seg)  # segments appear atomically
         segs = list_segments(segments_dir)
         if len(segs) > compact_after:
@@ -446,6 +457,10 @@ def maintain_segments_incremental(
                 spark, segs, new_base + ".building",
                 work_dir=f"{segments_dir}/.compact_work",
             )
+            if max_dist is not None:
+                SearchEngine(
+                    spark, new_base + ".building"
+                )._build_spell_layout(max_dist)
             os.rename(new_base + ".building", new_base)
             # retire = atomic rename OUT of the listing namespace first,
             # then delete: a reader that lists after any rename sees a
