@@ -152,8 +152,8 @@ def main(argv=None):
     )
     v.add_argument(
         "--cache-terms", type=int, default=1024,
-        help="LRU hot-term posting cache for the local serving path "
-        "(0 disables)",
+        help="LRU bound for the serving caches: posting lists and title "
+        "rows per term, hydrated doc rows per docid (0 disables)",
     )
 
     q = sub.add_parser("search")

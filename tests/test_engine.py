@@ -895,6 +895,105 @@ def test_lookup_docs_concurrent_threads(spark, engine, index_dir,
     assert len(results) == 40 and all(r == exp for r in results)
 
 
+def _direct_doc_rows(index_dir, ids, salt_bits, with_images):
+    """test_lookup_docs_matches_direct_read's expectation: per salt
+    directory in first-request order, the direct filtered read."""
+    from wiki_search_engine_spark.engine import salt_of
+
+    cols = ["docid", "url", "title", "snippet"]
+    if with_images:
+        cols += ["images", "image_count"]
+    by_salt: dict = {}
+    for d in ids:
+        by_salt.setdefault(salt_of(d, salt_bits), []).append(d)
+    return [
+        row
+        for s, ss in by_salt.items()
+        for row in _direct_rows(f"{index_dir}/docs/salt={s}", "docid",
+                                ss, cols)
+    ]
+
+
+@pytest.mark.parametrize("cache_terms", [0, 4, 1024])
+def test_lookup_docs_cached_equals_direct_read(spark, engine, index_dir,
+                                              docid_map, monkeypatch,
+                                              cache_terms):
+    """Hydration through the per-docid row cache returns the direct
+    read's rows on a first lookup and on a repeat, with and without
+    images, for known, unknown and absent-salt ids. The cache never
+    holds more than ``cache_terms`` ids, a repeat of a fully cached id
+    set opens no parquet file, and clear_cache() empties it."""
+    import pyarrow.parquet as pq
+
+    from wiki_search_engine_spark.engine import SearchEngine
+
+    eng = SearchEngine(spark, index_dir, cache_terms=cache_terms)
+    ids = _docs_query_ids(index_dir, docid_map, eng.salt_bits)
+    for with_images in (True, False):
+        exp = _direct_doc_rows(index_dir, ids, eng.salt_bits, with_images)
+        assert len(exp) == len(ids) - 2
+        for _ in range(2):
+            got = eng.lookup_docs(ids, with_images=with_images)
+            assert got == exp
+            assert len(eng._doc_cache) <= cache_terms
+            got[0]["url"] = "mutated"  # callers own what they get
+    hot = list(eng._doc_cache)
+    assert len(hot) == min(cache_terms, len(ids))
+    exp_hot = {
+        w: _direct_doc_rows(index_dir, hot, eng.salt_bits, w)
+        for w in (True, False)
+    }
+
+    def boom(*a, **kw):
+        raise AssertionError("parquet file opened for a cached row")
+
+    monkeypatch.setattr(pq, "ParquetFile", boom)
+    for w in (True, False):
+        assert eng.lookup_docs(hot, with_images=w) == exp_hot[w]
+    monkeypatch.undo()
+    eng.clear_cache()
+    assert not eng._doc_cache
+    assert eng.lookup_docs(ids) == _direct_doc_rows(
+        index_dir, ids, eng.salt_bits, True
+    )
+
+
+def test_lookup_docs_concurrent_threads_evicting(spark, engine, index_dir,
+                                                 docid_map):
+    """test_lookup_docs_concurrent_threads with a row cache smaller than
+    the id set: 8 threads race cache inserts and evictions, and every
+    result is still the single-threaded rows."""
+    import sys
+    import threading
+
+    from wiki_search_engine_spark.engine import SearchEngine
+
+    ids = sorted(docid_map.values())[::2]
+    exp = SearchEngine(spark, index_dir).lookup_docs(ids)
+    eng = SearchEngine(spark, index_dir, cache_terms=len(ids) // 3)
+    start = threading.Barrier(8)
+    results: list = []
+
+    def work():
+        start.wait(timeout=30)
+        for _ in range(5):
+            results.append(eng.lookup_docs(ids))
+
+    old = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)
+    try:
+        threads = [threading.Thread(target=work) for _ in range(8)]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=60)
+    finally:
+        sys.setswitchinterval(old)
+    assert not any(t.is_alive() for t in threads)
+    assert len(results) == 40 and all(r == exp for r in results)
+    assert 0 < len(eng._doc_cache) <= len(ids) // 3
+
+
 def test_point_reads_skip_dataset_discovery(spark, engine, index_dir,
                                             fixture_queries, monkeypatch):
     """After a first query, hydration, the lexicon and posting-list

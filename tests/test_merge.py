@@ -823,6 +823,75 @@ def test_tiered_deletes_segment_equals_delete_rebuild(
         TieredEngine(spark, [del_seg, base_dir])
 
 
+def _docids_by_url(index_dir):
+    import pyarrow.parquet as pq
+
+    t = pq.read_table(f"{index_dir}/docs", columns=["url", "docid"])
+    return dict(zip(t.column("url").to_pylist(),
+                    t.column("docid").to_pylist()))
+
+
+def test_tiered_hydration_through_warm_caches(spark, merged_and_full,
+                                              tmp_path, monkeypatch):
+    """[base, crawl batch, deletes] with per-segment row caches: two
+    lookups both equal the compacted index's rows (merged minus the
+    taken-down doc). The re-crawled doc X hydrates from the batch's
+    row, the taken-down doc Y from nowhere, and the repeat is served
+    from the warm caches without opening a parquet file."""
+    import pyarrow.parquet as pq
+
+    from wiki_search_engine_spark.engine import SearchEngine
+    from wiki_search_engine_spark.sources.synth import doc_row
+    from wiki_search_engine_spark.tiered import (
+        TieredEngine, write_deletes_segment,
+    )
+
+    merged, _full = merged_and_full
+    base_dir = merged.index_dir.replace("merged", "base")
+    delta_dir = merged.index_dir.replace("merged", "delta")
+    by_url = _docids_by_url(merged.index_dir)
+    x = by_url[doc_row(UPDATED[2], SEED)["url"]]  # re-crawled in delta
+    y = by_url[doc_row(5, SEED)["url"]]  # base-only, taken down
+    del_seg = write_deletes_segment(str(tmp_path / "del"), docids=[y])
+    tiered = TieredEngine(spark, [base_dir, delta_dir, del_seg],
+                          cache_terms=64)
+    ids = sorted(by_url.values())[::3] + [x, y]
+    exp = {
+        r["docid"]: r for r in merged.lookup_docs(ids) if r["docid"] != y
+    }
+    [x_new] = SearchEngine(spark, delta_dir).lookup_docs([x])
+    [x_old] = SearchEngine(spark, base_dir).lookup_docs([x])
+    assert exp[x] == x_new != x_old
+
+    first = tiered.lookup_docs(ids)
+    monkeypatch.setattr(pq, "ParquetFile", None)  # any open would raise
+    second = tiered.lookup_docs(ids)
+    monkeypatch.undo()
+    for got in (first, second):
+        assert {r["docid"]: r for r in got} == exp
+        assert len(got) == len(exp)
+    assert all(
+        0 < len(seg._doc_cache) <= 64 for seg, _t, _s in tiered.segments
+    )
+
+
+def test_lookup_docs_repeated_ids_once(spark, merged_and_full):
+    """lookup_docs(ids + ids) holds the same rows as lookup_docs(ids),
+    each found docid once, on a single index and on a segment list
+    (whose re-crawled ids live in two segments)."""
+    from wiki_search_engine_spark.tiered import TieredEngine
+
+    merged, _full = merged_and_full
+    base_dir = merged.index_dir.replace("merged", "base")
+    delta_dir = merged.index_dir.replace("merged", "delta")
+    ids = sorted(_docids_by_url(merged.index_dir).values())[::2]
+    for eng in (merged, TieredEngine(spark, [base_dir, delta_dir])):
+        once = eng.lookup_docs(ids)
+        assert len(once) == len(ids)
+        assert eng.lookup_docs(ids + ids) == once
+        assert eng.lookup_docs(ids[::-1] + ids) == eng.lookup_docs(ids[::-1])
+
+
 def test_segments_dir_takedown_and_compaction(spark, tmp_path):
     """add_deletes_to_segments over a maintained segments directory:
     the deletes segment sorts last, serving drops the docs immediately,

@@ -46,6 +46,18 @@ def salt_of(docid: int, salt_bits: int) -> int:
     return (int(docid) & 0xFFFFFFFFFFFFFFFF) >> (63 - salt_bits)
 
 
+# the docs table's served columns; images/image_count last (with_images)
+_DOC_COLUMNS = ("docid", "url", "title", "snippet", "images", "image_count")
+
+
+def _fresh(v):
+    """A cached row value as a caller may mutate it: list values (the
+    images array of structs) copied down to their struct dicts."""
+    if not isinstance(v, list):
+        return v
+    return [dict(x) if isinstance(x, dict) else x for x in v]
+
+
 def resolve_index_dir(path: str, snapshot: str | None = None) -> str:
     """Pointer-root resolution: a path whose directory contains a
     ``current`` file is a SNAPSHOT ROOT — the file names the live
@@ -106,14 +118,17 @@ class SearchEngine(ServingCore):
         cache_terms: int = 0,
         snapshot: str | None = None,
     ):
-        """``cache_terms`` > 0 enables a bounded LRU cache of hot
-        posting lists for the driver-local serving path (search_local):
-        term -> (global df, per-salt block rows). Real search heads
-        cache hot terms; here it cuts repeated-term local p50 from
-        ~25ms (two pyarrow reads) to sub-ms. The cache belongs to THIS
-        engine instance and therefore to the index snapshot it opened —
-        after an index swap (streaming maintenance) load a fresh engine
-        or call clear_cache()."""
+        """``cache_terms`` > 0 enables bounded LRU caches of hot serving
+        state, each holding at most ``cache_terms`` entries: posting
+        lists for the driver-local serving path (search_local, term ->
+        (global df, per-salt block rows)) and title rows per term, and
+        hydrated doc rows per docid (lookup_docs). Real search heads
+        cache hot terms and hot documents; here a repeated term costs
+        sub-ms instead of two pyarrow reads, and a repeated result no
+        parquet open or decode. The caches belong to THIS engine
+        instance and therefore to the index snapshot it opened — after
+        an index swap (streaming maintenance) load a fresh engine or
+        call clear_cache()."""
         import json
         import os
 
@@ -176,6 +191,9 @@ class SearchEngine(ServingCore):
         )
         # term -> title_tf rows, under the same cache_terms LRU rule
         self._title_cache: "OrderedDict[str, tuple]" = OrderedDict()
+        # docid -> (storage ordinal, full docs row), None when not in
+        # this index; same rule
+        self._doc_cache: "OrderedDict[int, tuple | None]" = OrderedDict()
         # the caches are served from ThreadingHTTPServer worker threads:
         # check-then-use against concurrent eviction needs a lock (loads
         # happen outside it; a double-load of the same term is a benign
@@ -186,15 +204,16 @@ class SearchEngine(ServingCore):
         with self._cache_lock:
             self._term_cache.clear()
             self._title_cache.clear()
+            self._doc_cache.clear()
         self._footers = {}
 
-    def _cache_get(self, cache, terms) -> tuple[dict, list]:
-        """(cached term -> value, [uncached terms]) of ``terms`` in one
-        of the per-term LRU caches; hits become most recent."""
+    def _cache_get(self, cache, keys) -> tuple[dict, list]:
+        """(cached key -> value, [uncached keys]) of ``keys`` in one of
+        the per-key LRU caches; hits become most recent."""
         out: dict = {}
-        missing: list[str] = []
+        missing: list = []
         with self._cache_lock:
-            for t in dict.fromkeys(terms):
+            for t in dict.fromkeys(keys):
                 if t in cache:
                     cache.move_to_end(t)
                     out[t] = cache[t]
@@ -203,7 +222,7 @@ class SearchEngine(ServingCore):
         return out, missing
 
     def _cache_put(self, cache, loaded: dict) -> None:
-        """Insert ``loaded`` into a per-term LRU cache as most recent and
+        """Insert ``loaded`` into a per-key LRU cache as most recent and
         evict the least recent past ``cache_terms`` (0: cache nothing)."""
         with self._cache_lock:
             if self._cache_cap:
@@ -252,7 +271,9 @@ class SearchEngine(ServingCore):
         # a concurrent first touch computes the same list; either wins
         return self._footers.setdefault((sub, key), files)
 
-    def _point_read(self, key: str, columns, reads: dict):
+    def _point_read(
+        self, key: str, columns, reads: dict, ordinals: bool = False
+    ):
         """Rows whose ``key`` is in the requested values, projected to
         ``columns`` (which include ``key``), as one pyarrow Table — or
         None when no row group can hold a value (absent directories
@@ -267,13 +288,19 @@ class SearchEngine(ServingCore):
         without statistics is read, never skipped); one filter over all
         of them keeps the exact matches. Each call opens its own readers
         over the cached footers, so ThreadingHTTPServer workers share no
-        reader state."""
+        reader state. With ``ordinals`` the table gains an int64
+        ``_ordinal`` column: each row's position in its directory's
+        storage order (files in name order, then rows in file order),
+        which is the order the read returns them in."""
         import pyarrow as pa
         import pyarrow.compute as pc
         import pyarrow.parquet as pq
 
+        from itertools import accumulate
+
         tables = []
         for sub, values in reads.items():
+            first = 0  # ordinal of the file's first row in ``sub``
             for path, md, ranges in self._footer_index(sub, key):
                 groups = [
                     g for g, r in enumerate(ranges)
@@ -284,9 +311,25 @@ class SearchEngine(ServingCore):
                     # more than it saves, and the server already runs
                     # one query per handler thread
                     with pq.ParquetFile(path, metadata=md) as pf:
-                        tables.append(pf.read_row_groups(
+                        t = pf.read_row_groups(
                             groups, columns=columns, use_threads=False
+                        )
+                    if ordinals:
+                        starts = list(accumulate((
+                            md.row_group(g).num_rows
+                            for g in range(md.num_row_groups)
+                        ), initial=first))
+                        # an int64 ndarray converts zero-copy; naming
+                        # the type costs ~20x more
+                        t = t.append_column("_ordinal", pa.array(
+                            np.concatenate([
+                                np.arange(starts[g], starts[g + 1],
+                                          dtype=np.int64)
+                                for g in groups
+                            ])
                         ))
+                    tables.append(t)
+                first += md.num_rows
         if not tables:
             return None
         # directories written by separate jobs (bucket groups, merges)
@@ -1101,34 +1144,59 @@ class SearchEngine(ServingCore):
     ) -> list[dict]:
         """Point-lookup hydration: the reference's result fetch
         (mongoService.js:75-113, ``find({_id: {$in: ids}})`` over the
-        _id B-tree) as a driver-side point read over CACHED parquet
-        footers (_point_read). The docs table is partitioned by the
-        docid-range salt, so only the <= k salt directories holding the
-        requested ids are touched; each directory's file list, footers
-        and per-row-group docid min/max are read once per engine (it
-        pins an immutable snapshot), and a lookup reads only the
-        docid-sorted row groups that can hold a requested id. No Spark
-        job, no directory listing or dataset discovery per query: cost
-        tracks k (<= 50), not corpus size. An id whose salt directory
+        _id B-tree). Requested ids are looked up in the per-docid LRU
+        cache first (``cache_terms`` bounds it; 0 caches nothing), so a
+        hot result costs no parquet open or decode. Only the misses go
+        to a driver-side point read over CACHED parquet footers
+        (_point_read). The docs table is partitioned by the docid-range
+        salt, so only the <= k salt directories holding the missed ids
+        are touched; each directory's file list, footers and
+        per-row-group docid min/max are read once per engine (it pins
+        an immutable snapshot), and a lookup reads only the row groups
+        whose docid min/max can hold a requested id. No Spark job, no
+        directory listing or dataset discovery per query: cost tracks k
+        (<= 50), not corpus size. An id whose salt directory
         does not exist is simply not found. A legacy unpartitioned
         layout (files directly under docs/) is point-read as one
-        directory."""
+        directory.
+
+        Full rows (images included) are cached with their storage
+        ordinal; each call returns fresh dicts projected to its columns,
+        each found docid once, grouped by directory in first-request
+        order and in storage order within one — the order of a direct
+        read, so a cached and an uncached lookup return the same
+        list."""
         if not docids:
             return []
-        cols = ["docid", "url", "title", "snippet"]
-        if with_images:
-            cols += ["images", "image_count"]
-        ids = [int(d) for d in docids]
-        reads: dict[str, list[int]] = {}
-        if self._footer_index("docs", "docid"):  # legacy, unpartitioned
-            reads["docs"] = ids
-        else:
-            for d in ids:
-                reads.setdefault(
-                    f"docs/salt={salt_of(d, self.salt_bits)}", []
-                ).append(d)
-        tbl = self._point_read("docid", cols, reads)
-        return [] if tbl is None else tbl.to_pylist()
+        legacy = bool(self._footer_index("docs", "docid"))
+        # docid -> the directory its row lives in
+        home = {
+            d: "docs" if legacy
+            else f"docs/salt={salt_of(d, self.salt_bits)}"
+            for d in map(int, docids)
+        }
+        rows, missing = self._cache_get(self._doc_cache, home)
+        if missing:
+            reads: dict[str, list[int]] = {}
+            for d in missing:
+                reads.setdefault(home[d], []).append(d)
+            tbl = self._point_read(
+                "docid", list(_DOC_COLUMNS), reads, ordinals=True
+            )
+            loaded = dict.fromkeys(missing)  # not found: cached as absent
+            for r in [] if tbl is None else tbl.to_pylist():
+                loaded[r["docid"]] = (r.pop("_ordinal"), r)
+            rows.update(loaded)
+            self._cache_put(self._doc_cache, loaded)
+        rank = {h: i for i, h in enumerate(dict.fromkeys(home.values()))}
+        cols = _DOC_COLUMNS if with_images else _DOC_COLUMNS[:4]
+        return [
+            {c: _fresh(rows[d][1][c]) for c in cols}
+            for d in sorted(
+                (d for d in home if rows[d] is not None),
+                key=lambda d: (rank[home[d]], rows[d][0]),
+            )
+        ]
 
     def search(
         self,

@@ -639,7 +639,8 @@ class ServingCore:
         newest holding a docid wins: each segment is asked only for the
         ids it does not tombstone, so a re-crawled doc hydrates from the
         overriding segment and a deleted one from nowhere (a taken-down
-        doc never resurfaces on the HTTP path)."""
+        doc never resurfaces on the HTTP path). Each found docid comes
+        back once, however often it was asked for."""
         only = self._only_segment()
         if only is not None:
             return only._doc_rows(docids, with_images)
@@ -652,7 +653,7 @@ class ServingCore:
                     [int(d) for d in live], with_images
                 ):
                     out[row["docid"]] = row
-        return [out[d] for d in docids if d in out]
+        return [out[d] for d in dict.fromkeys(docids) if d in out]
 
     # -- the segment source: distributed reads ------------------------------
     def _candidate_postings(self, terms: list[str]) -> DataFrame:
