@@ -438,3 +438,24 @@ def test_anchor_terms_field_relation(spark):
     assert a["alpha"] == (1, 2) and a["page"] == (1, 2)
     # the frontier target never appears
     assert set(by_doc) == {did[urls["A"]], did[urls["B"]]}
+
+
+def test_salt_files_are_docid_sorted(ranked_engine, engine):
+    """Every salt=* file of docs, doc_stats and static_rank holds its
+    rows in strictly ascending docid order, so its row groups' docid
+    min/max prune point lookups."""
+    import glob
+
+    import numpy as np
+    import pyarrow.parquet as pq
+
+    for eng, tables in (
+        (ranked_engine, ("docs", "doc_stats", "static_rank")),
+        (engine, ("docs", "doc_stats")),
+    ):
+        for table in tables:
+            files = glob.glob(f"{eng.index_dir}/{table}/salt=*/*.parquet")
+            assert files, table
+            for f in files:
+                d = pq.read_table(f, columns=["docid"]).column("docid")
+                assert (np.diff(d.to_numpy()) > 0).all(), f

@@ -165,6 +165,22 @@ def test_merged_docs_table_updated(spark, merged_and_full):
     )
 
 
+def test_merged_salt_files_are_docid_sorted(merged_and_full):
+    """A merge writes every salt=* file of docs and doc_stats in
+    strictly ascending docid order, as a build does."""
+    import glob
+
+    import numpy as np
+    import pyarrow.parquet as pq
+
+    merged, _full = merged_and_full
+    for table in ("docs", "doc_stats"):
+        files = glob.glob(f"{merged.index_dir}/{table}/salt=*/*.parquet")
+        assert files, table
+        for f in files:
+            d = pq.read_table(f, columns=["docid"]).column("docid")
+            assert (np.diff(d.to_numpy()) > 0).all(), f
+
 def test_merge_rejects_mismatched_config(spark, tmp_path):
     from wiki_search_engine_spark.engine import SearchEngine
     from wiki_search_engine_spark.plans.merge import merge_indexes

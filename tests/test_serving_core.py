@@ -574,3 +574,306 @@ def test_cli_search_serves_a_segment_list_like_one_index(served):
     assert out == {
         "success": False, "error": "boost is single-index serving only"
     }
+
+
+def test_republish_shares_the_unchanged_base_reader(
+    spark, served, tmp_path
+):
+    """[base, del_a] then [base, del_b] share one base reader, warm
+    from the first list's answers, and [base, del_b] still answers
+    every request class as the compacted [base, del_b] does. A
+    different cache_terms or spark session gets a fresh reader, and
+    after a disjoint list the held readers are only that list's."""
+    import os
+
+    from wiki_search_engine_spark import tiered
+    from wiki_search_engine_spark.tiered import (
+        TieredEngine, write_deletes_segment,
+    )
+
+    base = served.single.index_dir
+    del_a = write_deletes_segment(
+        str(tmp_path / "del_a"),
+        docids=served.single.sorted_docids()[1::9].tolist(),
+    )
+    first = TieredEngine(spark, [base, del_a], cache_terms=64)
+    for _name, query, kwargs in REQUESTS:
+        first.query_response(query, **{"k": 10, **kwargs})
+    reader = first.segments[0][0]
+    assert reader._term_cache and reader._doc_cache
+    second = TieredEngine(
+        spark, [base, served.tiered_deletes_dir], cache_terms=64
+    )
+    assert second.segments[0][0] is reader
+    for _name, query, kwargs in REQUESTS:
+        kw = {"k": 10, **kwargs}
+        _assert_same_up_to_float(
+            second.query_response(query, **kw),
+            served.compacted.query_response(query, **kw),
+        )
+    for _name, method, args, kwargs in SEARCH_HEAD:
+        assert getattr(second, method)(*args, **kwargs) == (
+            getattr(served.compacted, method)(*args, **kwargs)
+        )
+    for _name, query, kwargs in DISTRIBUTED:
+        _assert_same_ranking(
+            _ids(second.search_ids(query, k=10, **kwargs)),
+            _ids(served.compacted.search_ids(query, k=10, **kwargs)),
+        )
+
+    assert TieredEngine(spark, [base], cache_terms=8).segments[0][0] is not (
+        reader
+    )
+    assert TieredEngine(None, [base], cache_terms=64).segments[0][0] is not (
+        reader
+    )
+    comp = served.compacted.index_dir
+    only = TieredEngine(spark, [comp])
+    assert list(tiered._held_readers) == [os.path.realpath(comp)]
+    assert tiered._held_readers[os.path.realpath(comp)][3] is (
+        only.segments[0][0]
+    )
+
+
+def test_concurrent_opens_answer_as_one_thread(spark, served):
+    """Eight threads each opening [base, deletes] and answering every
+    request class, with a short switch interval, get one shared base
+    reader and the single-threaded answers."""
+    import sys
+    from concurrent.futures import ThreadPoolExecutor
+
+    from wiki_search_engine_spark.tiered import TieredEngine
+
+    segments = [served.single.index_dir, served.tiered_deletes_dir]
+
+    def answers(te):
+        return [
+            _strip(te.query_response(query, **{"k": 10, **kwargs}))
+            for _name, query, kwargs in REQUESTS
+        ]
+
+    one = TieredEngine(spark, segments, cache_terms=64)
+    want = answers(one)
+
+    def run(_i):
+        te = TieredEngine(spark, segments, cache_terms=64)
+        return te.segments[0][0], answers(te)
+
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)
+    try:
+        with ThreadPoolExecutor(8) as pool:
+            futures = [pool.submit(run, i) for i in range(8)]
+            results = [f.result(timeout=300) for f in futures]
+    finally:
+        sys.setswitchinterval(interval)
+    assert all(reader is one.segments[0][0] for reader, _a in results)
+    assert all(got == want for _r, got in results)
+
+
+@pytest.fixture
+def base_copy(served, tmp_path):
+    """A copy of the served base index, so a writer can change it."""
+    import shutil
+
+    path = str(tmp_path / "base")
+    shutil.copytree(served.single.index_dir, path)
+    return path
+
+
+def _reopened(spark, segments, before):
+    """A TieredEngine over ``segments`` after a write: its reader must
+    be fresh, not the one ``before`` held."""
+    from wiki_search_engine_spark.tiered import TieredEngine
+
+    after = TieredEngine(spark, segments, cache_terms=64)
+    assert after.segments[0][0] is not before.segments[0][0]
+    return after
+
+
+def test_set_synonyms_between_opens_is_seen(spark, base_copy):
+    from wiki_search_engine_spark.engine import SearchEngine
+    from wiki_search_engine_spark.tiered import TieredEngine
+
+    kw = {"option_name": "bm25", "synonyms": True, "k": 10}
+    before = TieredEngine(spark, [base_copy], cache_terms=64)
+    old = _strip(before.query_response("harbor", **kw))
+    SearchEngine(spark, base_copy).set_synonyms([])
+    after = _reopened(spark, [base_copy], before)
+    new = _strip(after.query_response("harbor", **kw))
+    assert new != old
+    assert new == _strip(
+        SearchEngine(spark, base_copy).query_response("harbor", **kw)
+    )
+
+
+def test_build_title_tf_between_opens_is_seen(spark, base_copy):
+    import shutil
+
+    from wiki_search_engine_spark.engine import SearchEngine
+    from wiki_search_engine_spark.tiered import TieredEngine
+
+    shutil.rmtree(f"{base_copy}/title_tf")
+    before = TieredEngine(spark, [base_copy], cache_terms=64)
+    with pytest.raises(FileNotFoundError):
+        before.search_local("alpha river", k=10, mode="bm25f")
+    SearchEngine(spark, base_copy).build_title_tf()
+    after = _reopened(spark, [base_copy], before)
+    got = after.search_local("alpha river", k=10, mode="bm25f")
+    assert got and got == SearchEngine(spark, base_copy).search_local(
+        "alpha river", k=10, mode="bm25f"
+    )
+
+
+def test_build_spellindex_between_opens_is_seen(spark, base_copy):
+    import shutil
+
+    from wiki_search_engine_spark.engine import SearchEngine
+    from wiki_search_engine_spark.tiered import TieredEngine
+
+    shutil.rmtree(f"{base_copy}/spell")
+    before = TieredEngine(spark, [base_copy], cache_terms=64)
+    with pytest.raises(FileNotFoundError):
+        before.correct("rivr", k=5)
+    SearchEngine(spark, base_copy).build_spellindex()
+    after = _reopened(spark, [base_copy], before)
+    got = after.correct("rivr", k=5)
+    assert got and got == SearchEngine(spark, base_copy).correct(
+        "rivr", k=5
+    )
+
+
+def test_rebuild_between_opens_is_seen(spark, base_copy):
+    from wiki_search_engine_spark.engine import SearchEngine
+    from wiki_search_engine_spark.tiered import TieredEngine
+
+    kw = {"option_name": "bm25", "k": 10}
+    before = TieredEngine(spark, [base_copy], cache_terms=64)
+    old = _strip(before.query_response("river stone", **kw))
+    rows = [_row(i) for i in range(20)]
+    SearchEngine.build(
+        spark,
+        spark.createDataFrame(
+            rows,
+            "url string, warc_ts timestamp, html binary, text string, "
+            "lang string",
+        ),
+        base_copy, stem=True, n_buckets=8, bucket_groups=1, salt_bits=2,
+    )
+    after = _reopened(spark, [base_copy], before)
+    assert after.n == 20
+    new = _strip(after.query_response("river stone", **kw))
+    assert new != old
+    assert new == _strip(
+        SearchEngine(spark, base_copy).query_response("river stone", **kw)
+    )
+
+
+def test_snapshot_flip_between_opens_is_seen(spark, served, tmp_path):
+    import os
+    import shutil
+
+    from wiki_search_engine_spark.engine import SearchEngine
+    from wiki_search_engine_spark.tiered import TieredEngine
+
+    root = tmp_path / "root"
+    root.mkdir()
+    shutil.copytree(served.single.index_dir, str(root / "v_a"))
+    shutil.copytree(served.compacted.index_dir, str(root / "v_b"))
+    (root / "current").write_text("v_a")
+    kw = {"option_name": "bm25", "k": 10}
+    before = TieredEngine(spark, [str(root)], cache_terms=64)
+    assert before.n == served.single.n
+    (root / "current.tmp").write_text("v_b")
+    os.replace(root / "current.tmp", root / "current")
+    after = _reopened(spark, [str(root)], before)
+    assert after.n == served.compacted.n != served.single.n
+    assert _strip(after.query_response("river stone", **kw)) == _strip(
+        SearchEngine(spark, str(root)).query_response("river stone", **kw)
+    )
+
+
+def test_republish_reads_no_index_segment_table(
+    spark, crawled, tmp_path, monkeypatch
+):
+    """A takedown republish over unchanged index segments reads no
+    pq.read_table of theirs (only the new deletes segment's docids),
+    and opens the same segment list as fresh readers do."""
+    import numpy as np
+    import pyarrow.parquet as pq
+
+    from wiki_search_engine_spark.tiered import (
+        TieredEngine, write_deletes_segment,
+    )
+
+    (base, _t, _s), (batch, _t2, _s2) = crawled.tiered.segments
+    gone = [int(base.sorted_docids()[4]), int(batch.sorted_docids()[0])]
+    del0 = write_deletes_segment(str(tmp_path / "del0"), docids=gone[:1])
+    del1 = write_deletes_segment(str(tmp_path / "del1"), docids=gone)
+    segments = [base.index_dir, batch.index_dir]
+    held = TieredEngine(spark, segments + [del0])
+    read_table = pq.read_table
+
+    def only_the_deletes(source, *args, **kwargs):
+        assert str(source).startswith(del1), source
+        return read_table(source, *args, **kwargs)
+
+    monkeypatch.setattr(pq, "read_table", only_the_deletes)
+    te = TieredEngine(spark, segments + [del1])
+    monkeypatch.undo()
+    fresh = TieredEngine(spark, segments + [del1], cache_terms=3)
+    for (a, _ta, _sa), (b, _tb, _sb), (c, _tc, _sc) in zip(
+        held.segments, te.segments, fresh.segments
+    ):
+        assert a is b and b is not c
+    assert (te.n, te.total_length, te.overridden) == (
+        fresh.n, fresh.total_length, fresh.overridden
+    )
+    assert te.overridden >= 2
+    for (_a, ta, sa), (_b, tb, sb) in zip(te.segments, fresh.segments):
+        assert np.array_equal(ta, tb) and sa == sb
+    for _name, query, kwargs in REQUESTS:
+        kw = {"k": 10, **kwargs}
+        assert _strip(te.query_response(query, **kw)) == _strip(
+            fresh.query_response(query, **kw)
+        )
+
+
+def test_overridden_doc_stats_equal_filtered_read(spark, served, tmp_path):
+    """The point read of overridden docs' stats equals a filtered read
+    of the whole doc_stats table, on the salted layout and on a legacy
+    flat one."""
+    import os
+    import shutil
+
+    import numpy as np
+    import pyarrow.parquet as pq
+
+    from wiki_search_engine_spark.engine import SearchEngine
+    from wiki_search_engine_spark.tiered import _overridden_doc_stats
+
+    flat = str(tmp_path / "flat")
+    shutil.copytree(served.single.index_dir, flat)
+    table = pq.read_table(f"{flat}/doc_stats").drop(["salt"])
+    shutil.rmtree(f"{flat}/doc_stats")
+    os.makedirs(f"{flat}/doc_stats")
+    pq.write_table(
+        table, f"{flat}/doc_stats/part-0.parquet", row_group_size=10
+    )
+    ids = served.single.sorted_docids()
+    for tombs in (
+        np.unique(np.concatenate([ids[::5], ids[:3] + 1, [1, 2**62 + 7]])),
+        np.array([1, 2**62 + 7], np.int64),
+    ):
+        for eng in (served.single, SearchEngine(spark, flat)):
+            want = pq.read_table(
+                f"{eng.index_dir}/doc_stats",
+                columns=["docid", "doc_len"],
+                filters=[("docid", "in", tombs.tolist())],
+            )
+            found, len_rm = _overridden_doc_stats(eng, tombs)
+            assert np.array_equal(
+                found, np.unique(want.column("docid").to_numpy())
+            )
+            assert found.size == (ids[::5].size if tombs.size > 2 else 0)
+            assert len_rm == int(want.column("doc_len").to_numpy().sum())

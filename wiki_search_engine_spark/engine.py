@@ -128,7 +128,9 @@ class SearchEngine(ServingCore):
         parquet open or decode. The caches belong to THIS engine
         instance and therefore to the index snapshot it opened — after
         an index swap (streaming maintenance) load a fresh engine or
-        call clear_cache()."""
+        call clear_cache(). A segment list reuses the engine of an
+        index segment only while its directory is unchanged
+        (tiered.TieredEngine)."""
         import json
         import os
 
@@ -199,6 +201,7 @@ class SearchEngine(ServingCore):
         # happen outside it; a double-load of the same term is a benign
         # idempotent insert)
         self._cache_lock = threading.Lock()
+        self._docids = None
 
     def clear_cache(self) -> None:
         with self._cache_lock:
@@ -206,6 +209,20 @@ class SearchEngine(ServingCore):
             self._title_cache.clear()
             self._doc_cache.clear()
         self._footers = {}
+
+    def sorted_docids(self) -> np.ndarray:
+        """Every docid of this index, sorted: one column-pruned read of
+        the docs table per engine (a later segment's override set in a
+        segment list)."""
+        if self._docids is None:
+            import pyarrow.parquet as pq
+
+            self._docids = np.sort(
+                pq.read_table(f"{self.index_dir}/docs", columns=["docid"])
+                .column("docid")
+                .to_numpy()
+            )
+        return self._docids
 
     def _cache_get(self, cache, keys) -> tuple[dict, list]:
         """(cached key -> value, [uncached keys]) of ``keys`` in one of

@@ -390,7 +390,9 @@ def _build_stages(
         # 10^12-row table's files), then prunes ROW GROUPS via footer
         # min/max stats. No extra shuffle beyond the salt clustering —
         # a range partition would re-execute the snippet/image
-        # projections for its sampling pass.
+        # projections for its sampling pass. The sort leads with salt so
+        # the partitioned writer's required ordering is already met: on
+        # docid alone it re-sorts by salt and the docid order is lost.
         (
             docs.withColumn(
                 "salt",
@@ -405,7 +407,7 @@ def _build_stages(
                 ),
                 "salt",
             )
-            .sortWithinPartitions("docid")
+            .sortWithinPartitions("salt", "docid")
             .write.mode("overwrite")
             .partitionBy("salt")
             .parquet(f"{index_dir}/docs")
@@ -448,7 +450,7 @@ def _build_stages(
                 ),
                 "salt",
             )
-            .sortWithinPartitions("docid")
+            .sortWithinPartitions("salt", "docid")
             .write.mode("overwrite")
             .partitionBy("salt")
             .parquet(f"{index_dir}/doc_stats")
@@ -696,7 +698,7 @@ def write_static_rank(
             min(spark.sparkContext.defaultParallelism, 1 << salt_bits),
             "salt",
         )
-        .sortWithinPartitions("docid")
+        .sortWithinPartitions("salt", "docid")
         .write.mode("overwrite")
         .partitionBy("salt")
         .parquet(f"{index_dir}/static_rank")

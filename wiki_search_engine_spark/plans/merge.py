@@ -267,7 +267,7 @@ def merge_indexes(
     if not manifest.is_done("doc_stats"):
         t0 = time.time()
         _anti_union("doc_stats").repartition("salt").sortWithinPartitions(
-            "docid"
+            "salt", "docid"
         ).write.mode("overwrite").partitionBy("salt").parquet(
             f"{out_dir}/doc_stats"
         )
@@ -309,7 +309,7 @@ def merge_indexes(
     if not manifest.is_done("docs"):
         t0 = time.time()
         _anti_union("docs").repartition("salt").sortWithinPartitions(
-            "docid"
+            "salt", "docid"
         ).write.mode("overwrite").partitionBy("salt").parquet(
             f"{out_dir}/docs"
         )
@@ -443,7 +443,7 @@ def delete_docs(
     if not manifest.is_done("doc_stats"):
         t0 = time.time()
         _minus("doc_stats").repartition("salt").sortWithinPartitions(
-            "docid"
+            "salt", "docid"
         ).write.mode("overwrite").partitionBy("salt").parquet(
             f"{out_dir}/doc_stats"
         )
@@ -483,7 +483,7 @@ def delete_docs(
     if not manifest.is_done("docs"):
         t0 = time.time()
         _minus("docs").repartition("salt").sortWithinPartitions(
-            "docid"
+            "salt", "docid"
         ).write.mode("overwrite").partitionBy("salt").parquet(
             f"{out_dir}/docs"
         )

@@ -21,10 +21,11 @@ compaction" segment engine: scores are IDENTICAL to the compacted
 (merged) index, pytest-enforced and DuckDB-oracle-checked:
 
 - N / avgdl: segment stats combine, minus the overridden docs' counts
-  and lengths (a pruned point lookup of the later segments' docids in
-  earlier ``doc_stats``, which is docid-sorted for this); the lookup
-  also narrows each segment's tombstones to the docids it really holds,
-  so a segment's array is empty exactly when nothing in it is stale;
+  and lengths (a point lookup of the later segments' docids in earlier
+  ``doc_stats``, whose salt files the build and merge write
+  docid-sorted, so row-group min/max prune it); the lookup also
+  narrows each segment's tombstones to the docids it really holds, so
+  a segment's array is empty exactly when nothing in it is stale;
 - df per query term: counted from the LIVE postings — the candidate
   lists are decoded anyway to score, so tombstoned postings are both
   excluded from scoring and subtracted from df before idf is computed.
@@ -36,6 +37,15 @@ ub_scale) per segment, oldest first — to ``serving.ServingCore``, which
 serves every query mode, path and search-head feature over any segment
 list, a single index being the one-segment case. A segment list serves
 no static boost: every ``boost`` request raises ValueError (HTTP 400).
+
+Readers outlive a publish, as Lucene's ``DirectoryReader.openIfChanged``
+shares an unchanged segment's reader: the process holds the readers of
+the last segment list opened (``_open_readers``), and an open reuses
+one whose directory, ``cache_terms`` and Spark session are unchanged,
+so a takedown republish over [base, deletes] serves from the base's
+warm footer, posting, title and doc-row caches. Only stored data lives
+in a reader; tombstones, live N/avgdl and ub_scale are computed per
+open and held by the ``TieredEngine``.
 
 Compaction IS ``plans/merge.py``: fold segments when their count or
 tombstone ratio grows (``compact`` below; automated in
@@ -50,10 +60,13 @@ live corpus.
 
 from __future__ import annotations
 
+import os
+import threading
+
 import numpy as np
 from pyspark.sql import SparkSession
 
-from .engine import SearchEngine
+from .engine import SearchEngine, resolve_index_dir
 from .serving import ServingCore
 
 _COMPAT_KEYS = ("stem", "analyzer", "n_buckets", "salt_bits")
@@ -155,52 +168,88 @@ def write_deletes_segment(
 
 
 def _overridden_doc_stats(
-    doc_stats_dir: str, tombs: np.ndarray, salt_bits: int
+    eng: SearchEngine, tombs: np.ndarray
 ) -> tuple[np.ndarray, int]:
-    """(sorted docids, total doc_len) of the ``tombs`` docids present in
-    a doc_stats table — directory-pruned per salt shard (the sorted
-    array slices contiguously because salt is the top docid bits).
-    Falls back to one filtered whole-table read on a legacy
-    unpartitioned layout."""
-    import os
-
-    import pyarrow.parquet as pq
-
-    def read(path, ids):
-        tbl = pq.read_table(
-            path,
-            columns=["docid", "doc_len"],
-            filters=[("docid", "in", ids)],
-        )
-        return (
-            tbl.column("docid").to_numpy().astype(np.int64),
-            int(tbl.column("doc_len").to_numpy().sum()) if len(tbl) else 0,
-        )
-
-    if not any(
-        e.startswith("salt=") for e in os.listdir(doc_stats_dir)
-    ):
-        found, len_rm = read(doc_stats_dir, tombs.tolist())
-        return np.unique(found), len_rm
-    shift = 63 - salt_bits
-    n_salts = 1 << salt_bits
-    needles = np.array(
-        [s << shift for s in range(n_salts)], dtype=np.int64
+    """(sorted docids, total doc_len) of the sorted ``tombs`` docids
+    present in ``eng``'s doc_stats table: one point read over the
+    reader's cached footers (``_point_read``), each docid routed to its
+    salt directory (the top docid bits) or to the one directory of a
+    legacy unpartitioned layout."""
+    if eng._footer_index("doc_stats", "docid"):
+        reads = {"doc_stats": tombs.tolist()}
+    else:
+        salts = tombs.view(np.uint64) >> np.uint64(63 - eng.salt_bits)
+        reads = {
+            f"doc_stats/salt={int(s)}": tombs[salts == s].tolist()
+            for s in np.unique(salts)
+        }
+    tbl = eng._point_read("docid", ["docid", "doc_len"], reads)
+    if tbl is None:
+        return np.empty(0, np.int64), 0
+    return (
+        np.unique(tbl.column("docid").to_numpy().astype(np.int64)),
+        int(tbl.column("doc_len").to_numpy().sum()),
     )
-    bounds = np.searchsorted(tombs, needles, "left")
-    found, len_rm = [np.empty(0, np.int64)], 0
-    for s in range(n_salts):
-        lo = bounds[s]
-        hi = bounds[s + 1] if s + 1 < n_salts else tombs.size
-        if hi <= lo:
-            continue
-        d = f"{doc_stats_dir}/salt={s}"
-        if not os.path.isdir(d):
-            continue
-        ids, tot = read(d, tombs[lo:hi].tolist())
-        found.append(ids)
-        len_rm += tot
-    return np.unique(np.concatenate(found)), len_rm
+
+
+# The index-segment readers of the last segment list opened in this
+# process, by resolved real path: (identity stamp, cache_terms, spark,
+# reader). Lucene's DirectoryReader.openIfChanged: a republish shares
+# the readers, and so the warm caches, of its unchanged segments.
+_held_readers: dict = {}
+_held_lock = threading.Lock()
+
+
+def _dir_stamp(path: str) -> tuple:
+    """Identity of an index directory: its (inode, mtime) and the
+    (name, inode, mtime, size) of each top-level entry. Every writer
+    replaces a top-level entry — a Spark overwrite recreates its stage
+    directory (title_tf/, spell/, lexicon_rev/), set_synonyms renames
+    its file over the old one, builds and streamed segments rename a
+    .building directory, a rebuild removes the stages and writes them
+    again — so any write changes the stamp."""
+    st = os.stat(path)
+    with os.scandir(path) as it:
+        entries = sorted(
+            (e.name, e.inode(), s.st_mtime_ns, s.st_size)
+            for e in it
+            for s in (e.stat(follow_symlinks=False),)
+        )
+    return st.st_ino, st.st_mtime_ns, tuple(entries)
+
+
+def _open_readers(
+    spark: SparkSession, index_dirs: list[str], cache_terms: int
+) -> list[SearchEngine]:
+    """One reader per index segment directory, in order: the held
+    reader of a directory whose stamp, ``cache_terms`` and ``spark``
+    session are those of this open, else a fresh ``SearchEngine``.
+    Afterwards the held readers are exactly this list's, so memory is
+    bounded by one segment list and a retired segment's reader goes at
+    the next open. The stamp is taken before a fresh reader opens: a
+    write racing the open leaves a stamp that the next open finds
+    changed. A reader caches only stored data, never tombstones, so
+    lists with different deletes share it exactly."""
+    with _held_lock:
+        held: dict = {}
+        readers = []
+        for d in index_dirs:
+            resolved = resolve_index_dir(d)
+            path = os.path.realpath(resolved)
+            stamp = _dir_stamp(path)
+            hit = held.get(path) or _held_readers.get(path)
+            if hit is None or hit[:2] != (stamp, cache_terms) or (
+                hit[2] is not spark
+            ):
+                hit = (
+                    stamp, cache_terms, spark,
+                    SearchEngine(spark, resolved, cache_terms=cache_terms),
+                )
+            held[path] = hit
+            readers.append(hit[3])
+        _held_readers.clear()
+        _held_readers.update(held)
+    return readers
 
 
 class TieredEngine(ServingCore):
@@ -215,9 +264,9 @@ class TieredEngine(ServingCore):
         a tombstone-only DELETES segment (``write_deletes_segment``):
         it removes its docids from every earlier segment — a pure
         removal with batch-sized IO — but adds no postings or docs of
-        its own. The first entry must be a full index segment."""
-        import pyarrow.parquet as pq
-
+        its own. The first entry must be a full index segment. An
+        index segment whose directory is unchanged since the last open
+        keeps its reader (``_open_readers``)."""
         if not index_dirs:
             raise ValueError("need at least one index dir")
         self.spark = spark
@@ -231,11 +280,10 @@ class TieredEngine(ServingCore):
                 "there is nothing before it to delete from"
             )
         # (original position, reader) per index segment
-        engines = [
-            (j, SearchEngine(spark, d, cache_terms=cache_terms))
-            for j, (d, k) in enumerate(zip(index_dirs, kinds))
-            if k == "index"
-        ]
+        at = [j for j, k in enumerate(kinds) if k == "index"]
+        engines = list(zip(at, _open_readers(
+            spark, [index_dirs[j] for j in at], cache_terms
+        )))
         head = engines[0][1]
         self.analyzer = head.analyzer
         self.salt_bits = head.salt_bits
@@ -252,26 +300,21 @@ class TieredEngine(ServingCore):
 
         # docid set per non-head unit position (crawl batches / deletes
         # lists — small by construction; the base's docids never load)
-        unit_docids: dict[int, np.ndarray] = {}
+        unit_docids: dict[int, np.ndarray] = {
+            j: eng.sorted_docids() for j, eng in engines[1:]
+        }
         for j, (d, k) in enumerate(zip(index_dirs, kinds)):
             if k == "deletes":
                 unit_docids[j] = read_deletes_docids(d)
-            elif j > 0:
-                unit_docids[j] = np.sort(
-                    pq.read_table(f"{d}/docs", columns=["docid"])
-                    .column("docid")
-                    .to_numpy()
-                )
 
         # tombstones: of the sorted union of every later unit's docids
         # (a later index segment overrides, a later deletes segment
         # removes), the ones the segment holds — with their lengths, the
         # live corpus stats are the combined stats minus them. The
-        # lookup uses BOTH pruning levels of the doc_stats layout: the
-        # sorted array slices contiguously per salt (top docid bits), so
-        # only the touched salt DIRECTORIES are read, each with a
-        # docid-in filter over its own slice — never an index-wide
-        # metadata scan, and never one giant Python in-list.
+        # lookup uses BOTH pruning levels of the doc_stats layout: only
+        # the touched salt DIRECTORIES are read, and in them only the
+        # row groups whose docid min/max can hold a tombstone — never an
+        # index-wide metadata scan.
         tombstoned = []
         n_live, total_live = 0, 0
         for j, eng in engines:
@@ -279,8 +322,7 @@ class TieredEngine(ServingCore):
             tombs, len_rm = np.empty(0, np.int64), 0
             if later:
                 tombs, len_rm = _overridden_doc_stats(
-                    f"{eng.index_dir}/doc_stats",
-                    np.unique(np.concatenate(later)), eng.salt_bits,
+                    eng, np.unique(np.concatenate(later))
                 )
             tombstoned.append((eng, tombs))
             n_live += eng.n - tombs.size
