@@ -95,3 +95,17 @@ def assert_rank_identical(got, exp):
     for (gd, gs), (ed, es) in zip(got, exp):
         assert gd == ed, f"docid {gd} != {ed}"
         assert math.isclose(gs, es, rel_tol=1e-9), f"score {gs} != {es}"
+
+
+def assert_one_file_per_bucket(index_dir, tables=("postings",)):
+    """Every bucket=* directory of each of ``tables`` holds exactly one
+    parquet data file, so a term's point read opens one file."""
+    import glob
+    import os
+
+    for table in tables:
+        dirs = glob.glob(f"{index_dir}/{table}/bucket=*")
+        assert dirs, f"{index_dir}/{table}"
+        for d in dirs:
+            files = [n for n in os.listdir(d) if n.endswith(".parquet")]
+            assert len(files) == 1, (d, files)

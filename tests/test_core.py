@@ -413,11 +413,12 @@ def test_export_index_formats(spark, tmp_path):
         X.SINGLE_FILE_MAX_ROWS = saved
 
 
-def test_bounded_postings_rows(spark):
+def test_bounded_postings_rows(spark, tmp_path):
     """MAX_POSTINGS_PER_ROW splits oversized (term, salt) groups into
     several rows. Forced tiny cap: splits appear, every row stays under
-    the cap, decode/df/top-k are identical to the uncapped index, and
-    the merge kernel handles multi-row groups."""
+    the cap, decode/df/top-k are identical to the uncapped index, the
+    table writer keeps a split group's rows in docid order, and the
+    merge kernel handles multi-row groups."""
     import numpy as np
     import pandas as pd
     from pyspark.sql import functions as F
@@ -472,6 +473,50 @@ def test_bounded_postings_rows(spark):
         .collect()
     }
     assert df_of(cap) == df_of(norm)
+
+    # written as the build writes postings, and loaded as the local
+    # path loads them: a term's rows, concatenated salt by salt in read
+    # order, decode to the unsplit list, even when a group's later rows
+    # reach the writer first
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from wiki_search_engine_spark.engine import SearchEngine
+    from wiki_search_engine_spark.operators.codec import decode_posting_list
+    from wiki_search_engine_spark.plans.build import write_bucket_table
+
+    vocab = sorted(
+        r["term"] for r in norm.select("term").distinct().collect()
+    )
+
+    def served(p, name):
+        d = tmp_path / name
+        write_bucket_table(p, str(d / "postings"))
+        (d / "stats").mkdir()
+        pq.write_table(
+            pa.table({"N": [n], "avgdl": [avgdl], "total_length": [0]}),
+            str(d / "stats" / "part-0.parquet"),
+        )
+        out = {}
+        for t, (df, salted) in (
+            SearchEngine(spark, str(d))._cached_term_lists(vocab).items()
+        ):
+            docids, tfs, doclens = decode_posting_list([
+                b for _salt, blocks in sorted(salted, key=lambda sb: sb[0])
+                for b in blocks
+            ])
+            out[t] = (df, docids.tolist(), tfs.tolist(), doclens.tolist())
+        return out
+
+    first = F.col("blocks")[0]["first_docid"]
+    served_cap = served(
+        cap.filter(first >= 100).unionByName(cap.filter(first < 100)), "cap"
+    )
+    assert served_cap["common"][0] == 200
+    assert all(
+        d == sorted(set(d)) for _df, d, _tf, _dl in served_cap.values()
+    )
+    assert served_cap == served(norm, "norm")
     for terms in (["common"], ["common", "word0"], ["word1", "filler7"]):
         a = search_topk(cap, terms, n, avgdl, k=10).collect()
         b = search_topk(norm, terms, n, avgdl, k=10).collect()

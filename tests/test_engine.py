@@ -10,7 +10,7 @@ import math
 import pytest
 from pyspark.sql import functions as F
 
-from tests.conftest import assert_rank_identical
+from tests.conftest import assert_one_file_per_bucket, assert_rank_identical
 
 
 @pytest.mark.parametrize("mode", ["bm25", "tfidf"])
@@ -859,6 +859,37 @@ def test_term_reads_match_direct_read(spark, engine, index_dir, tmp_path):
     for _ in range(2):
         assert eng.term_df(terms) == exp_df
         assert eng._cached_term_lists(terms) == exp_lists
+
+
+def test_cold_term_list_reads_one_postings_file(spark, engine, index_dir,
+                                                monkeypatch):
+    """The build writes one postings file per bucket directory, and a
+    cold _cached_term_lists([t]) opens exactly that one file: df comes
+    from the postings rows, so no term_stats file is touched."""
+    import pyarrow.parquet as pq
+
+    from wiki_search_engine_spark.engine import SearchEngine
+    from wiki_search_engine_spark.sources.synth import vocabulary
+
+    assert_one_file_per_bucket(index_dir)
+    term = engine.analyze(vocabulary(42)[0][3])[0]
+    exp_df = engine.term_df([term])[term]
+    eng = SearchEngine(spark, index_dir)
+    touched: list = []
+    opened: list = []
+
+    def wrap(fn, seen):
+        def inner(path, *args, **kwargs):
+            seen.append(str(path))
+            return fn(path, *args, **kwargs)
+        return inner
+
+    monkeypatch.setattr(pq, "ParquetFile", wrap(pq.ParquetFile, opened))
+    monkeypatch.setattr(pq, "read_metadata", wrap(pq.read_metadata, touched))
+    df, lists = eng._cached_term_lists([term])[term]
+    assert df == exp_df > 0 and lists
+    assert len(opened) == 1 and "/postings/bucket=" in opened[0]
+    assert not any("term_stats" in p for p in opened + touched)
 
 
 def test_lookup_docs_concurrent_threads(spark, engine, index_dir,

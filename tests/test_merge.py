@@ -13,7 +13,7 @@ import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
-from tests.conftest import SEED
+from tests.conftest import SEED, assert_one_file_per_bucket
 
 BASE_IDX = list(range(60))
 UPDATED = list(range(10, 20))  # re-crawled: same urls, new content
@@ -167,13 +167,15 @@ def test_merged_docs_table_updated(spark, merged_and_full):
 
 def test_merged_salt_files_are_docid_sorted(merged_and_full):
     """A merge writes every salt=* file of docs and doc_stats in
-    strictly ascending docid order, as a build does."""
+    strictly ascending docid order, as a build does, and one postings
+    file per bucket directory."""
     import glob
 
     import numpy as np
     import pyarrow.parquet as pq
 
     merged, _full = merged_and_full
+    assert_one_file_per_bucket(merged.index_dir)
     for table in ("docs", "doc_stats"):
         files = glob.glob(f"{merged.index_dir}/{table}/salt=*/*.parquet")
         assert files, table
@@ -222,6 +224,7 @@ def test_delete_equals_rebuild(spark, tmp_path):
         spark, str(tmp_path / "base"), str(tmp_path / "del"),
         urls=sorted(gone),
     )
+    assert_one_file_per_bucket(got.index_dir)
     assert got.n == expected.n
     assert _math.isclose(got.avgdl, expected.avgdl, rel_tol=1e-12)
     pd.testing.assert_frame_equal(

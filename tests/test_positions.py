@@ -16,6 +16,7 @@ from wiki_search_engine_spark.operators.positions import (
     positions_flat,
     positions_packed,
 )
+from tests.conftest import assert_one_file_per_bucket
 
 N_BUCKETS = 16
 SALT_BITS = 2
@@ -455,6 +456,7 @@ def test_merge_folds_positions(
 
     with open(f"{merged.index_dir}/meta.json") as f:
         assert json.load(f)["positions"] is True
+    assert_one_file_per_bucket(merged.index_dir, ("postings", "positions"))
     # expected merged corpus: base docs not re-crawled + delta docs
     delta_urls = {r["url"] for r in delta_rows}
     exp_rows = [
@@ -503,6 +505,8 @@ def test_delete_folds_positions(spark, pos_index, tmp_path):
     )
     with open(f"{out}/meta.json") as f:
         assert json.load(f)["positions"] is True
+    assert_one_file_per_bucket(pos_index.index_dir, ("postings", "positions"))
+    assert_one_file_per_bucket(out, ("postings", "positions"))
     for row in spark.read.parquet(f"{out}/positions").collect():
         docids, _dl, _off, _pos = decode_positions_row(row.asDict())
         assert victim not in set(int(d) for d in docids)

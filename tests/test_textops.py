@@ -371,6 +371,31 @@ def test_media_header_parse_roundtrip():
     assert parse_media_header(b"") == ("raw", None, None)
 
 
+def test_media_payload_md5s_pinned():
+    """Every synth media payload hashes to the md5 committed in the
+    media_features oracle sidecar. JPEG payloads pass a floating-point
+    FDCT, so this fails if its rounding ever depends on the machine's
+    BLAS kernel."""
+    import hashlib
+    import os
+
+    import pyarrow.parquet as pq
+
+    from wiki_search_engine_spark.operators.multimodal import synth_payload
+
+    path = os.path.join(
+        os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+        "oracle_sidecar", "media_expected_v7.parquet",
+    )
+    rows = pq.read_table(path, columns=["media_id", "payload_md5"])
+    n = rows.num_rows
+    assert n == 200
+    got = {
+        i: hashlib.md5(synth_payload(i, n)).hexdigest() for i in range(n)
+    }
+    assert got == dict(zip(*rows.to_pydict().values()))
+
+
 def test_decode_media_meta_matches_encoded(spark):
     """The distributed kernel's parsed dims equal the dims encoded at
     synth time for every image row (Arrow binary plumbing round-trip)."""

@@ -9,6 +9,8 @@ Checks, per headline path:
 - exhaustive and BM25F scorers, and the substring-dedup gram df: no
   Window (a per-key window puts a head term's whole relation, or the
   hottest boilerplate gram's rows, in one task);
+- build postings write: the (bucket, salt) hash exchange before the
+  encode, then exactly one rebalance by bucket after it;
 - lineitem demo query: filter + column pruning pushed to the scan.
 
 Usage: python tools/explain_audit.py  (exit 1 on any failed assertion)
@@ -209,6 +211,44 @@ def main() -> None:
         print("FAIL merge_single_exchange")
     else:
         print("PASS merge_single_exchange")
+
+    # 5b. build postings write (plans/build.py bucket_layout): the salted
+    # encode keeps its hash exchange on (bucket, salt) BEFORE the
+    # MapInArrow encode (a head term's bucket splits across salt tasks),
+    # and the writer adds exactly ONE rebalance of the encoded rows by
+    # bucket after it (one file per bucket). Formatted explain lists the
+    # operator details bottom-up, so text order is execution order.
+    from wiki_search_engine_spark.operators.postings import build_postings
+    from wiki_search_engine_spark.plans.build import bucket_layout
+
+    bplan = plan_of(bucket_layout(build_postings(
+        spark.read.parquet(f"{index_dir}/tokens").select(
+            "docid", "term", "tf", "doc_len"
+        ),
+        avgdl=eng.avgdl, salt_bits=eng.salt_bits, n_buckets=eng.n_buckets,
+    )))
+    encode_at = bplan.find(") MapInArrow\n")
+    salted = [m.start() for m in re.finditer(
+        r"hashpartitioning\(bucket#\d+, salt#\d+, \d+\)", bplan
+    )]
+    rebalance = [m.start() for m in re.finditer(
+        r"hashpartitioning\(bucket#\d+, \d+\), REBALANCE_PARTITIONS_BY_COL",
+        bplan,
+    )]
+    n_exchanges = len(re.findall(r"\(\d+\) Exchange", bplan))
+    if (
+        encode_at < 0 or n_exchanges != 2
+        or len(salted) != 1 or salted[0] > encode_at
+        or len(rebalance) != 1 or rebalance[0] < encode_at
+    ):
+        FAILURES.append(
+            f"postings_write_plan: {n_exchanges} exchanges, (bucket, "
+            f"salt) exchange at {salted}, rebalance at {rebalance}, "
+            f"encode at {encode_at}"
+        )
+        print("FAIL postings_write_plan")
+    else:
+        print("PASS postings_write_plan")
 
     # 6. merge side-table update: anti-join of the updated-docid set is
     # broadcast (the delta is the small side by construction)

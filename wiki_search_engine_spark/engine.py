@@ -368,34 +368,27 @@ class SearchEngine(ServingCore):
         return reads
 
     def _cached_term_lists(self, terms: list[str]):
-        """(term -> (df, [(salt, blocks), ...])) for every present term,
-        loading misses from the lexicon + postings buckets and evicting
-        LRU past ``cache_terms``. df == 0 terms are cached as absent."""
+        """(term -> (df, [(salt, blocks), ...])) for every requested
+        term, loading misses with one postings read over their bucket
+        directories and evicting LRU past ``cache_terms``. df is the sum
+        of the term's rows' ``df_shard`` (the lexicon's own definition),
+        so a miss reads no lexicon; a term without rows is cached as
+        (0, [])."""
         out, missing = self._cache_get(self._term_cache, terms)
         if missing:
-            import os
-
-            if not os.path.isdir(f"{self.index_dir}/term_stats"):
-                raise FileNotFoundError(
-                    f"{self.index_dir}/term_stats missing — the local "
-                    "serving path needs the lexicon side table; rebuild "
-                    "the index or use path='wand'"
-                )
-            df_map = self.term_df(missing)
             loaded: dict[str, tuple[int, list]] = {
                 t: (0, []) for t in missing
             }
-            present = [t for t in missing if df_map.get(t, 0) > 0]
             tbl = self._point_read(
-                "term", ["term", "salt", "blocks"],
-                self._bucket_reads("postings", present),
+                "term", ["term", "salt", "df_shard", "blocks"],
+                self._bucket_reads("postings", missing),
             )
             if tbl is not None:
                 for row in tbl.to_pylist():
-                    t = row["term"]
-                    loaded[t] = (
-                        df_map[t],
-                        loaded[t][1] + [(row["salt"], row["blocks"])],
+                    df, lists = loaded[row["term"]]
+                    loaded[row["term"]] = (
+                        df + row["df_shard"],
+                        lists + [(row["salt"], row["blocks"])],
                     )
             out.update(loaded)
             self._cache_put(self._term_cache, loaded)

@@ -207,6 +207,10 @@ _FDCT_M = None
 
 
 def _fdct(block: np.ndarray) -> np.ndarray:
+    """M @ block @ M.T summed elementwise in a fixed order (over j, then
+    over k). A BLAS matmul picks its summation order by CPU kernel, so
+    rounding ties in the quantizer flip between machines and the
+    payload bytes (and their pinned md5s) would too."""
     global _FDCT_M
     if _FDCT_M is None:
         x = np.arange(8)
@@ -214,7 +218,14 @@ def _fdct(block: np.ndarray) -> np.ndarray:
         m = 0.5 * np.cos((2 * x + 1) * u * np.pi / 16)
         m[0] /= np.sqrt(2)
         _FDCT_M = m
-    return _FDCT_M @ block @ _FDCT_M.T
+    m = _FDCT_M
+    rows = m[:, 0:1] * block[0:1, :]
+    for j in range(1, 8):
+        rows = rows + m[:, j:j + 1] * block[j:j + 1, :]
+    out = rows[:, 0:1] * m[:, 0]
+    for k in range(1, 8):
+        out = out + rows[:, k:k + 1] * m[:, k]
+    return out
 
 
 def _encode_block(

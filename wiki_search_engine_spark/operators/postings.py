@@ -264,8 +264,9 @@ def build_postings(
     max_postings_per_row: int = MAX_POSTINGS_PER_ROW,
 ) -> DataFrame:
     """tokens (docid, term, tf, doc_len) -> (term, salt, df_shard, bucket,
-    blocks). Exactly ONE shuffle (repartition by term+salt).
-    ``df_shard`` counts the postings in ITS ROW; a (term, salt) group
+    blocks). Exactly ONE shuffle (repartition by bucket+salt) before the
+    encode; the table writer (plans/build.py bucket_layout) adds one
+    rebalance of the encoded rows. ``df_shard`` counts the postings in ITS ROW; a (term, salt) group
     larger than ``max_postings_per_row`` spans several rows, so shard df
     = sum of the group's rows and global df = sum over all of a term's
     rows (what term_stats and the query paths already compute)."""
@@ -283,14 +284,12 @@ def build_postings(
     # splits it across 2^salt_bits doc-range shards (encode groups are
     # (term, salt), so a group never straddles partitions: bucket is a
     # function of term). The writer lays the table out as
-    # partitionBy("bucket") directories (see plans/build.py), so a query
-    # term's bucket — computable driver-side, term_bucket() — prunes to
-    # one directory, the Spark analogue of the reference's Mongo B-tree on
-    # `word` (mongodb_scripts/insertIndex.py:104).
-    # sortWithinPartitions leads with bucket so the writer's required
-    # clustering is already satisfied (no extra sort) and rows within a
-    # bucket file stay term-sorted => tight row-group min/max stats on
-    # `term` for footer-level pruning WITHIN the bucket directory.
+    # partitionBy("bucket") directories (plans/build.py bucket_layout),
+    # so a query term's bucket — computable driver-side, term_bucket() —
+    # prunes to one directory, the Spark analogue of the reference's
+    # Mongo B-tree on `word` (mongodb_scripts/insertIndex.py:104).
+    # The sort makes each (term, salt) group contiguous and docid-ordered
+    # for the encoder.
     num_partitions = min(num_partitions, n_buckets << salt_bits)
     salted = (
         tokens.withColumn(

@@ -8,20 +8,29 @@ Pipeline (SURVEY §3.2 "Rebuild lifecycle"):
        bucket) written as parquet partitioned by bucket  [1 Python stage]
     -> stage doc_stats / stats / docs : plain aggregations + snippet
     -> stage postings[g] : per bucket-group, salted (term, salt) encode ->
-       doc-range-sharded block postings, parquet partitioned by bucket;
-       one manifest unit per group  => kill/rerun resumes group-granular.
+       doc-range-sharded block postings, rebalanced by bucket and written
+       partitioned by bucket (bucket_layout); one manifest unit per
+       group  => kill/rerun resumes group-granular.
+    -> stage term_stats / title_tf / positions (opt-in) side tables
 
 Layout under ``index_dir``:
-    tokens/    staging (docid,term,tf,doc_len) parquet, partitionBy bucket
-    postings/  (term,salt,df,bucket,blocks)   parquet, partitionBy bucket
-    doc_stats/ (docid, doc_len)
-    docs/      (docid, url, title, snippet)
-    stats/     1-row (N, avgdl, total_length)
+    tokens/     staging (docid,term,tf,doc_len) parquet, partitionBy bucket
+    postings/   (term,salt,df_shard,bucket,blocks) parquet, partitionBy bucket
+    positions/  (term,salt,bucket,n_docs,...)   parquet, partitionBy bucket
+    term_stats/ (term,df,bucket)                parquet, partitionBy bucket
+    title_tf/   (term,docid,tf,doc_len,bucket)  parquet, partitionBy bucket
+    doc_stats/  (docid, doc_len)                parquet, partitionBy salt
+    docs/       (docid, url, title, snippet, ...) parquet, partitionBy salt
+    stats/      1-row (N, avgdl, total_length)
     manifest.json
 
 The bucket directory key makes query-time term lookups partition-pruned
 scans (the Spark analogue of the reference's Mongo B-tree on ``word``,
-mongodb_scripts/insertIndex.py:104).
+mongodb_scripts/insertIndex.py:104). Each bucket directory holds one
+term-sorted file until the bucket outgrows one write task, so a term's
+point read opens one file, and row-group min/max on term prunes within
+it. A (term, salt) group split over several postings rows keeps its rows
+in docid order.
 """
 
 from __future__ import annotations
@@ -111,6 +120,41 @@ def tune_scan_splits(spark: SparkSession, input_bytes: int,
     spark.conf.set(
         "spark.sql.files.openCostInBytes", str(min(target // 4, 4 << 20))
     )
+
+
+def bucket_layout(rows: DataFrame) -> DataFrame:
+    """The row layout of a bucket-partitioned serving table (postings,
+    positions) from its encoded (term, salt) rows.
+
+    The encode runs hash-partitioned on (bucket, salt) for skew, so
+    every encode task holds rows of every bucket; written as they are,
+    each bucket directory gets one file per task, each spanning the
+    bucket's whole term range, and a point read opens all of them. An
+    AQE rebalance on bucket instead sizes the write tasks by bytes: small
+    buckets coalesce (one file per bucket) and a bucket past the
+    advisory partition size splits (a few files for a hot bucket).
+
+    Within a file rows sort by (term, salt) for row-group min/max
+    pruning on term. A postings (term, salt) group split over several
+    rows (MAX_POSTINGS_PER_ROW, merges) then sorts by its rows' first
+    docid: the rebalance discards the encode order and Spark's sort is
+    not stable. Positions readers order docids themselves."""
+    order = ["bucket", "term", "salt"]
+    if "blocks" in rows.columns:
+        order.append(F.col("blocks")[0]["first_docid"])
+    return rows.hint("rebalance", "bucket").sortWithinPartitions(*order)
+
+
+def write_bucket_table(
+    rows: DataFrame, path: str, dynamic: bool = False
+) -> None:
+    """Write ``rows`` in ``bucket_layout`` as parquet partitioned by
+    bucket. ``dynamic`` overwrites only the bucket directories the rows
+    hold (resumable bucket groups) instead of the whole table."""
+    writer = bucket_layout(rows).write.mode("overwrite")
+    if dynamic:
+        writer = writer.option("partitionOverwriteMode", "dynamic")
+    writer.partitionBy("bucket").parquet(path)
 
 
 def _tokenize_with_bucket(
@@ -505,18 +549,12 @@ def _build_stages(
             salt_bits=salt_bits,
             n_buckets=n_buckets,
         )
-        # bucket-directory layout: every group writes only ITS bucket=N
-        # directories (buckets partition the term space, groups partition
-        # the buckets), so dynamic partition overwrite is idempotent per
-        # group — a crashed group rewrites only its own directories on
-        # resume, and query terms prune to single directories via their
-        # driver-computed bucket. Rows within a bucket file are term-
-        # sorted (see build_postings) for row-group stats pruning.
-        (
-            postings.write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("bucket")
-            .parquet(f"{index_dir}/postings")
+        # every group writes only ITS bucket=N directories (buckets
+        # partition the term space, groups partition the buckets), so
+        # dynamic partition overwrite is idempotent per group — a crashed
+        # group rewrites only its own directories on resume
+        write_bucket_table(
+            postings, f"{index_dir}/postings", dynamic=True
         )
         rows, nbytes, files = _bucket_range_lineage(
             f"{index_dir}/postings", lo, hi
@@ -558,14 +596,12 @@ def _build_stages(
                 corpus.select("docid", "text"),
                 stem=(analyzer == "porter"),
             )
-        (
+        write_bucket_table(
             build_positions(
                 packed, salt_bits=salt_bits, n_buckets=n_buckets
-            )
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("bucket")
-            .parquet(f"{index_dir}/positions")
+            ),
+            f"{index_dir}/positions",
+            dynamic=True,
         )
         rows, nbytes, _files = _parquet_lineage(
             f"{index_dir}/positions"

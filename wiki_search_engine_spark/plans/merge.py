@@ -44,7 +44,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.merge import merge_postings_tables
-from .build import _parquet_lineage, write_term_stats, write_title_tf
+from .build import (
+    _parquet_lineage, write_bucket_table, write_term_stats, write_title_tf,
+)
 from .manifest import Manifest
 
 _META_COMPAT_KEYS = ("n_buckets", "salt_bits", "stem", "analyzer",
@@ -102,12 +104,7 @@ def _merge_positions_stage(
         merged = merged.unionByName(
             spark.read.parquet(f"{delta_dir}/positions")
         )
-    (
-        merged.sortWithinPartitions("bucket", "term")
-        .write.mode("overwrite")
-        .partitionBy("bucket")
-        .parquet(f"{out_dir}/positions")
-    )
+    write_bucket_table(merged, f"{out_dir}/positions")
     rows, nbytes, _files = _parquet_lineage(f"{out_dir}/positions")
     manifest.mark(
         "positions", rows_out=rows, bytes_out=nbytes,
@@ -346,13 +343,7 @@ def merge_indexes(
             f_delta=f_delta,
             **merge_kw,
         )
-        (
-            merged.sortWithinPartitions("bucket", "term")
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("bucket")
-            .parquet(f"{out_dir}/postings")
-        )
+        write_bucket_table(merged, f"{out_dir}/postings", dynamic=True)
         rows, nbytes, files = _bucket_range_lineage(
             f"{out_dir}/postings", lo, hi
         )
@@ -518,12 +509,7 @@ def delete_docs(
             f_delta=1.0,
             **kw,
         )
-        (
-            merged.sortWithinPartitions("bucket", "term")
-            .write.mode("overwrite")
-            .partitionBy("bucket")
-            .parquet(f"{out_dir}/postings")
-        )
+        write_bucket_table(merged, f"{out_dir}/postings")
         rows, nbytes, files = _parquet_lineage(f"{out_dir}/postings")
         manifest.mark(
             "postings", rows_out=rows, bytes_out=nbytes, partitions=files,

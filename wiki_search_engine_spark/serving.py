@@ -351,14 +351,14 @@ class ServingCore:
 
     def _live_postings(self, terms: list[str]) -> dict:
         """term -> (live df, [LiveList per segment holding it]) for
-        every term (absent: (0, [])). A segment's list joins its salt
-        shards' blocks in salt (= docid) order and carries the
-        segment's tombstones and bound scale. A segment without
-        tombstones adds its lexicon df; one with tombstones adds the
-        live postings it decodes (segments are docid-disjoint after
-        tombstoning). Every term loads through one
-        ``_cached_term_lists`` call per segment: one lexicon read and
-        one bucket-grouped postings read each."""
+        every term (absent: (0, [])). A segment's list joins its
+        postings rows' blocks in docid order (each row is a docid range:
+        a salt shard, or part of one) and carries the segment's
+        tombstones and bound scale. A segment without tombstones adds
+        its stored df; one with tombstones adds the live postings it
+        decodes (segments are docid-disjoint after tombstoning). Every
+        term loads through one ``_cached_term_lists`` call per segment:
+        one bucket-grouped postings read of its missed terms."""
         out: dict[str, tuple[int, list]] = {
             t: (0, []) for t in dict.fromkeys(terms)
         }
@@ -371,7 +371,7 @@ class ServingCore:
                 ll = LiveList(
                     [
                         b for _salt, blocks in sorted(
-                            salted, key=lambda sb: sb[0]
+                            salted, key=lambda sb: sb[1][0]["first_docid"]
                         )
                         for b in blocks
                     ],

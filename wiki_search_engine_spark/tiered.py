@@ -75,12 +75,12 @@ _COMPAT_KEYS = ("stem", "analyzer", "n_buckets", "salt_bits")
 # the measured segment-count serving curve (bench.py
 # tiered_local_p50_{1,2,4,8}seg, local[32] @ sf0.1-sized segments):
 # p50 grows LINEARLY with segment count — 13.5ms/27.5ms/53.6ms/105.5ms
-# at 1/2/4/8 segments (~13ms per segment: each segment adds one lexicon
-# read + one bucket-pruned postings read per query; there is no knee to
-# sit under). 4 keeps steady-state serving within ~4x the compacted
-# index's p50 (~55ms here) while still amortizing compaction over
-# several batch folds; raise it only if ingest throughput matters more
-# than query latency.
+# at 1/2/4/8 segments (~13ms per segment: each segment adds one
+# bucket-pruned postings read per query for its missed terms; there is
+# no knee to sit under). 4 keeps steady-state serving within ~4x the
+# compacted index's p50 (~55ms here) while still amortizing compaction
+# over several batch folds; raise it only if ingest throughput matters
+# more than query latency.
 DEFAULT_COMPACT_AFTER = 4
 
 
