@@ -153,7 +153,9 @@ def main(argv=None):
     v.add_argument(
         "--cache-terms", type=int, default=1024,
         help="LRU bound for the serving caches: posting lists and title "
-        "rows per term, hydrated doc rows per docid (0 disables)",
+        "rows per term, hydrated doc rows per docid (0 disables). For docs "
+        "it bounds rows: the rows a docs read decodes beside the requested "
+        "ones fill free slots at the cold end, never evicting",
     )
 
     q = sub.add_parser("search")

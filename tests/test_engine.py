@@ -945,6 +945,37 @@ def _direct_doc_rows(index_dir, ids, salt_bits, with_images):
     ]
 
 
+def _docs_row_groups(index_dir, ids, salt_bits):
+    """The docids of each docs row group whose footer docid min/max
+    can hold one of ``ids`` (each id looked up in its own salt
+    directory), read directly: one list per row group."""
+    import os
+
+    import pyarrow.parquet as pq
+
+    from wiki_search_engine_spark.engine import salt_of
+
+    by_salt: dict = {}
+    for d in ids:
+        by_salt.setdefault(salt_of(d, salt_bits), []).append(d)
+    out = []
+    for s, ss in by_salt.items():
+        sub = f"{index_dir}/docs/salt={s}"
+        for name in sorted(os.listdir(sub)) if os.path.isdir(sub) else []:
+            if name.startswith((".", "_")):
+                continue
+            with pq.ParquetFile(f"{sub}/{name}") as pf:
+                md = pf.metadata
+                j = next(i for i in range(md.num_columns)
+                         if md.schema.column(i).path == "docid")
+                for g in range(md.num_row_groups):
+                    st = md.row_group(g).column(j).statistics
+                    if any(st.min <= d <= st.max for d in ss):
+                        out.append(pf.read_row_group(g, columns=["docid"])
+                                   .column("docid").to_pylist())
+    return out
+
+
 @pytest.mark.parametrize("cache_terms", [0, 4, 1024])
 def test_lookup_docs_cached_equals_direct_read(spark, engine, index_dir,
                                               docid_map, monkeypatch,
@@ -952,8 +983,10 @@ def test_lookup_docs_cached_equals_direct_read(spark, engine, index_dir,
     """Hydration through the per-docid row cache returns the direct
     read's rows on a first lookup and on a repeat, with and without
     images, for known, unknown and absent-salt ids. The cache never
-    holds more than ``cache_terms`` ids, a repeat of a fully cached id
-    set opens no parquet file, and clear_cache() empties it."""
+    holds more than ``cache_terms`` ids; with room to spare it holds
+    every row of the docs row groups the lookups read, a repeat of a
+    fully cached id set opens no parquet file, and clear_cache()
+    empties it."""
     import pyarrow.parquet as pq
 
     from wiki_search_engine_spark.engine import SearchEngine
@@ -969,7 +1002,14 @@ def test_lookup_docs_cached_equals_direct_read(spark, engine, index_dir,
             assert len(eng._doc_cache) <= cache_terms
             got[0]["url"] = "mutated"  # callers own what they get
     hot = list(eng._doc_cache)
-    assert len(hot) == min(cache_terms, len(ids))
+    if cache_terms < len(ids):
+        assert len(hot) == min(cache_terms, len(ids))
+    else:  # the requested ids and their row groups' co-decoded rows
+        read = set(ids).union(
+            *_docs_row_groups(index_dir, ids, eng.salt_bits)
+        )
+        assert set(hot) <= read
+        assert len(hot) == min(cache_terms, len(read)) > len(ids)
     exp_hot = {
         w: _direct_doc_rows(index_dir, hot, eng.salt_bits, w)
         for w in (True, False)
@@ -1023,6 +1063,157 @@ def test_lookup_docs_concurrent_threads_evicting(spark, engine, index_dir,
     assert not any(t.is_alive() for t in threads)
     assert len(results) == 40 and all(r == exp for r in results)
     assert 0 < len(eng._doc_cache) <= len(ids) // 3
+
+
+def test_cold_reader_decodes_each_docs_row_group_once(
+    spark, engine, index_dir, docid_map, monkeypatch
+):
+    """With room for every doc, hydrating each docid alone opens one
+    parquet reader per docs row group: the rows a read decodes beside
+    the requested one fill the cache, so no row group is read twice."""
+    import pyarrow.parquet as pq
+
+    from wiki_search_engine_spark.engine import SearchEngine
+
+    ids = sorted(docid_map.values())
+    eng = SearchEngine(spark, index_dir, cache_terms=len(ids))
+    groups = _docs_row_groups(index_dir, ids, eng.salt_bits)
+    assert sorted(d for g in groups for d in g) == ids
+    exp = {
+        r["docid"]: r for r in SearchEngine(spark, index_dir).lookup_docs(ids)
+    }
+    opened: list = []
+    real = pq.ParquetFile
+
+    def counting(path, *args, **kwargs):
+        opened.append(str(path))
+        return real(path, *args, **kwargs)
+
+    monkeypatch.setattr(pq, "ParquetFile", counting)
+    got = {}
+    for d in ids:
+        [row] = eng.lookup_docs([d])
+        got[d] = row
+    monkeypatch.undo()
+    assert got == exp
+    assert len(opened) == len(groups) and all("/docs/" in p for p in opened)
+    assert len(eng._doc_cache) == len(ids)
+
+
+def _assert_spares_yield(eng, index_dir, requests, cap, salt_bits):
+    """Runs ``requests`` (id lists) through ``eng.lookup_docs`` one
+    thread's worth: each answer equals the direct read, the requested
+    ids are cached after their call, the cache never exceeds ``cap``,
+    and a call evicts an id that was ever requested only when no
+    never-requested (co-decoded) row is left in the cache. Returns how
+    many calls left co-decoded rows cached and how many evicted a
+    requested id."""
+    asked: set = set()
+    kept = evicted = 0
+    for ids in requests:
+        with eng._cache_lock:
+            before = set(eng._doc_cache)
+        assert eng.lookup_docs(ids) == _direct_doc_rows(
+            index_dir, ids, salt_bits, True
+        )
+        asked |= set(ids)
+        with eng._cache_lock:
+            after = set(eng._doc_cache)
+        assert set(ids) <= after and len(after) <= cap
+        kept += bool(after - asked)
+        if (before - after) & asked:
+            evicted += 1
+            assert after <= asked
+    return kept, evicted
+
+
+def test_co_decoded_rows_never_evict_requested(spark, engine, index_dir,
+                                               docid_map):
+    """A row cache smaller than a salt file: every requested row is
+    cached after its lookup, co-decoded rows only fill free slots at the
+    cold end (they never evict a requested row and are evicted first),
+    and every answer equals the direct read."""
+    import random
+
+    from wiki_search_engine_spark.engine import SearchEngine, salt_of
+
+    ids = sorted(docid_map.values())
+    salt_bits = engine.salt_bits
+    groups = _docs_row_groups(index_dir, ids, salt_bits)
+    cap = 6
+    assert cap < min(len(g) for g in groups)
+    eng = SearchEngine(spark, index_dir, cache_terms=cap)
+    rng = random.Random(5)
+    requests = [rng.sample(ids, rng.randint(1, 3)) for _ in range(30)]
+    kept, evicted = _assert_spares_yield(
+        eng, index_dir, requests, cap, salt_bits
+    )
+    assert kept and evicted  # both rules were exercised
+
+    # two requests from two salt directories: the first fills the
+    # cache with its row group's rows behind it, the second evicts
+    # exactly as many of those as it needs and leaves the rest coldest
+    eng.clear_cache()
+    by_salt: dict = {}
+    for d in ids:
+        by_salt.setdefault(salt_of(d, salt_bits), []).append(d)
+    sa, sb = sorted(by_salt)[:2]
+    a1, a2 = by_salt[sa][:2]
+    b1, b2 = by_salt[sb][:2]
+    eng.lookup_docs([a1, a2])
+    first = list(eng._doc_cache)
+    assert len(first) == cap and first[-2:] == [a1, a2]
+    assert set(first[:-2]) <= set(by_salt[sa]) - {a1, a2}
+    eng.lookup_docs([b1, b2])
+    assert list(eng._doc_cache) == first[2:-2] + [a1, a2, b1, b2]
+
+
+def test_co_decoded_rows_never_evict_requested_threads(
+    spark, engine, index_dir, docid_map
+):
+    """The same with 8 threads racing on one engine, each asking for one
+    salt directory's ids and then another's: their answers equal the
+    direct read, requested rows stay cached, and the co-decoded rows
+    fill exactly the slots the requested ones leave."""
+    import sys
+    import threading
+
+    from wiki_search_engine_spark.engine import SearchEngine, salt_of
+
+    ids = sorted(docid_map.values())
+    salt_bits = engine.salt_bits
+    by_salt: dict = {}
+    for d in ids:
+        by_salt.setdefault(salt_of(d, salt_bits), []).append(d)
+    first, second = (v[:2] for v in sorted(by_salt.values())[:2])
+    cap = 6
+    eng = SearchEngine(spark, index_dir, cache_terms=cap)
+    start = threading.Barrier(8)
+    errors: list = []
+
+    def work():
+        try:
+            start.wait(timeout=30)
+            _assert_spares_yield(
+                eng, index_dir, [first, second] * 3, cap, salt_bits
+            )
+        except Exception as e:  # re-raised on the main thread
+            errors.append(e)
+
+    old = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)
+    try:
+        threads = [threading.Thread(target=work) for _ in range(8)]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=120)
+    finally:
+        sys.setswitchinterval(old)
+    assert not any(t.is_alive() for t in threads)
+    assert not errors, errors[0]
+    hot = set(eng._doc_cache)
+    assert len(hot) == cap and set(first + second) <= hot
 
 
 def test_point_reads_skip_dataset_discovery(spark, engine, index_dir,

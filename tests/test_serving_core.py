@@ -635,6 +635,44 @@ def test_republish_shares_the_unchanged_base_reader(
     )
 
 
+def test_second_open_hydrates_co_decoded_base_rows(spark, served,
+                                                   monkeypatch):
+    """The base rows one TieredEngine's hydration decoded beside the
+    requested doc are hot state of the shared base reader: a second
+    TieredEngine over the same base hydrates them without opening any
+    docs file, with the compacted index's rows."""
+    import pyarrow.parquet as pq
+
+    from wiki_search_engine_spark.engine import salt_of
+    from wiki_search_engine_spark.tiered import TieredEngine
+
+    segments = [served.single.index_dir, served.tiered_deletes_dir]
+    # a cache_terms no other test opens with: a cold base reader
+    first = TieredEngine(spark, segments, cache_terms=200)
+    reader = first.segments[0][0]
+    assert not reader._doc_cache
+    live = served.compacted.sorted_docids().tolist()
+    asked = live[0]
+    first.lookup_docs([asked])
+    bits = served.single.salt_bits
+    mates = [
+        d for d in live
+        if d != asked and salt_of(d, bits) == salt_of(asked, bits)
+    ]
+    assert mates and set(mates) <= set(reader._doc_cache)
+    exp = served.compacted.lookup_docs(mates)
+    second = TieredEngine(spark, segments, cache_terms=200)
+    assert second.segments[0][0] is reader
+
+    def boom(*a, **kw):
+        raise AssertionError("docs file opened for a co-decoded row")
+
+    monkeypatch.setattr(pq, "ParquetFile", boom)
+    got = second.lookup_docs(mates)
+    monkeypatch.undo()
+    assert got == exp
+
+
 def test_concurrent_opens_answer_as_one_thread(spark, served):
     """Eight threads each opening [base, deletes] and answering every
     request class, with a short switch interval, get one shared base

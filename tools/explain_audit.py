@@ -6,6 +6,7 @@ Checks, per headline path:
   scan (PushedFilters) and the scan reads only the needed columns;
 - hydration join: BroadcastHashJoin (never SortMerge for a k-row side);
 - exhaustive scorer: partial/final HashAggregate pair + WholeStageCodegen;
+  on a source with no overridden doc, one postings scan and one decode;
 - exhaustive and BM25F scorers, and the substring-dedup gram df: no
   Window (a per-key window puts a head term's whole relation, or the
   hottest boilerplate gram's rows, in one task);
@@ -154,6 +155,23 @@ def main() -> None:
               r"PartitionFilters: \[[^\]]*bucket"],
         must_not=[r"SortMergeJoin"],
     )
+
+    # 4a. no doc is overridden on a single index, so the exhaustive
+    # scorer takes the lexicon df: the candidate postings are scanned and
+    # decoded ONCE (a live count joined back to the rows plans a second
+    # scan and decode of the same relation)
+    n_decodes = len(re.findall(r"\(\d+\) MapInPandas", xplan))
+    n_scans = len(re.findall(
+        r"Location: InMemoryFileIndex \[[^\]]*/postings\]", xplan
+    ))
+    if (n_decodes, n_scans) != (1, 1):
+        FAILURES.append(
+            f"exhaustive_single_decode: {n_decodes} decodes over "
+            f"{n_scans} postings scans, expected 1 and 1"
+        )
+        print("FAIL exhaustive_single_decode")
+    else:
+        print("PASS exhaustive_single_decode")
 
     # 4b. live df without a window keyed on term: a head term's whole
     # posting relation must never land in one task — the per-term count

@@ -122,10 +122,14 @@ class SearchEngine(ServingCore):
         state, each holding at most ``cache_terms`` entries: posting
         lists for the driver-local serving path (search_local, term ->
         (global df, per-salt block rows)) and title rows per term, and
-        hydrated doc rows per docid (lookup_docs). Real search heads
-        cache hot terms and hot documents; here a repeated term costs
-        sub-ms instead of two pyarrow reads, and a repeated result no
-        parquet open or decode. The caches belong to THIS engine
+        hydrated doc rows per docid (lookup_docs) — so for docs it
+        bounds rows. Real search heads cache hot terms and hot
+        documents; here a repeated term costs sub-ms instead of two
+        pyarrow reads, and a repeated result no parquet open or decode.
+        A docs read also keeps the rows it decoded beside the requested
+        ones, in the row cache's free slots at its cold end, so a cold
+        reader decodes each docs row group about once while the cache
+        has room (_doc_rows). The caches belong to THIS engine
         instance and therefore to the index snapshot it opened — after
         an index swap (streaming maintenance) load a fresh engine or
         call clear_cache(). A segment list reuses the engine of an
@@ -238,9 +242,15 @@ class SearchEngine(ServingCore):
                     missing.append(t)
         return out, missing
 
-    def _cache_put(self, cache, loaded: dict) -> None:
+    def _cache_put(
+        self, cache, loaded: dict, spare: dict | None = None
+    ) -> None:
         """Insert ``loaded`` into a per-key LRU cache as most recent and
-        evict the least recent past ``cache_terms`` (0: cache nothing)."""
+        evict the least recent past ``cache_terms`` (0: cache nothing).
+        Then ``spare`` entries (rows a read decoded beside the requested
+        ones) go in at the cold end, only into free slots: a spare never
+        replaces a cached key and never evicts anything, and spares are
+        the first evicted when a later requested load overflows."""
         with self._cache_lock:
             if self._cache_cap:
                 for t, v in loaded.items():
@@ -248,6 +258,12 @@ class SearchEngine(ServingCore):
                     cache.move_to_end(t)
             while len(cache) > self._cache_cap:
                 cache.popitem(last=False)
+            for t, v in (spare or {}).items():
+                if len(cache) >= self._cache_cap:
+                    break
+                if t not in cache:
+                    cache[t] = v
+                    cache.move_to_end(t, last=False)
 
     def _footer_index(self, sub: str, key: str) -> list:
         """[(path, FileMetaData, [(min, max) of ``key`` or None per row
@@ -288,29 +304,45 @@ class SearchEngine(ServingCore):
         # a concurrent first touch computes the same list; either wins
         return self._footers.setdefault((sub, key), files)
 
-    def _point_read(
-        self, key: str, columns, reads: dict, ordinals: bool = False
-    ):
+    def _point_read(self, key: str, columns, reads: dict):
         """Rows whose ``key`` is in the requested values, projected to
         ``columns`` (which include ``key``), as one pyarrow Table — or
         None when no row group can hold a value (absent directories
-        included). ``reads`` maps each subdirectory of the index to the
-        values that can live in it: the key picks the directory (term ->
-        bucket, docid -> salt), so no value has rows in another one. The
-        one read behind every per-query point lookup: hydration, lexicon
-        df, posting lists, title rows.
+        included): ``_read_row_groups`` filtered to the exact matches.
+        The one read behind every per-query point lookup: lexicon df,
+        posting lists, title rows; hydration takes the unfiltered row
+        groups (``_doc_rows``)."""
+        import pyarrow as pa
+        import pyarrow.compute as pc
+
+        tbl = self._read_row_groups(key, columns, reads)
+        if tbl is None:
+            return None
+        wanted = [v for values in reads.values() for v in values]
+        return tbl.filter(pc.is_in(
+            tbl[key],
+            value_set=pa.array(wanted, type=tbl.schema.field(key).type),
+        ))
+
+    def _read_row_groups(
+        self, key: str, columns, reads: dict, ordinals: bool = False
+    ):
+        """Every row of the row groups that can hold a requested value
+        of ``key``, projected to ``columns``, as one pyarrow Table (None
+        when no row group can). ``reads`` maps each subdirectory of the
+        index to the values that can live in it: the key picks the
+        directory (term -> bucket, docid -> salt), so no value has rows
+        in another one.
 
         Per directory it reads only the row groups whose cached key
         min/max can hold one of that directory's values (a row group
-        without statistics is read, never skipped); one filter over all
-        of them keeps the exact matches. Each call opens its own readers
-        over the cached footers, so ThreadingHTTPServer workers share no
-        reader state. With ``ordinals`` the table gains an int64
-        ``_ordinal`` column: each row's position in its directory's
-        storage order (files in name order, then rows in file order),
-        which is the order the read returns them in."""
+        without statistics is read, never skipped). Each call opens its
+        own readers over the cached footers, so ThreadingHTTPServer
+        workers share no reader state. With ``ordinals`` the table
+        gains an int64 ``_ordinal`` column: each row's position in its
+        directory's storage order (files in name order, then rows in
+        file order), which is the order the read returns them in."""
         import pyarrow as pa
-        import pyarrow.compute as pc
         import pyarrow.parquet as pq
 
         from itertools import accumulate
@@ -351,12 +383,7 @@ class SearchEngine(ServingCore):
             return None
         # directories written by separate jobs (bucket groups, merges)
         # may disagree on a column's nullability
-        tbl = pa.concat_tables(tables, promote_options="default")
-        wanted = [v for values in reads.values() for v in values]
-        return tbl.filter(pc.is_in(
-            tbl[key],
-            value_set=pa.array(wanted, type=tbl.schema.field(key).type),
-        ))
+        return pa.concat_tables(tables, promote_options="default")
 
     def _bucket_reads(self, table: str, terms) -> dict:
         """_point_read's ``reads`` for a term-bucketed table (term_stats,
@@ -1155,12 +1182,12 @@ class SearchEngine(ServingCore):
         """Point-lookup hydration: the reference's result fetch
         (mongoService.js:75-113, ``find({_id: {$in: ids}})`` over the
         _id B-tree). Requested ids are looked up in the per-docid LRU
-        cache first (``cache_terms`` bounds it; 0 caches nothing), so a
-        hot result costs no parquet open or decode. Only the misses go
-        to a driver-side point read over CACHED parquet footers
-        (_point_read). The docs table is partitioned by the docid-range
-        salt, so only the <= k salt directories holding the missed ids
-        are touched; each directory's file list, footers and
+        cache first (``cache_terms`` bounds its rows; 0 caches nothing),
+        so a hot result costs no parquet open or decode. Only the misses
+        go to a driver-side read over CACHED parquet footers
+        (_read_row_groups). The docs table is partitioned by the
+        docid-range salt, so only the <= k salt directories holding the
+        missed ids are touched; each directory's file list, footers and
         per-row-group docid min/max are read once per engine (it pins
         an immutable snapshot), and a lookup reads only the row groups
         whose docid min/max can hold a requested id. No Spark job, no
@@ -1170,12 +1197,24 @@ class SearchEngine(ServingCore):
         layout (files directly under docs/) is point-read as one
         directory.
 
+        A read keeps what it decoded, as a page cache keeps the whole
+        page one read made resident: one ``is_in`` mask splits the
+        requested rows from the co-decoded rest of the row groups, and
+        at most the cache's free slots of that rest (``cache_terms`` −
+        cached − missed rows) are converted and handed to ``_cache_put``
+        as spares, which fill free slots at the cold end only. So a cold
+        reader decodes each docs row group about once while the cache
+        has room, and a full cache behaves as if nothing were kept.
+
         Full rows (images included) are cached with their storage
         ordinal; each call returns fresh dicts projected to its columns,
         each found docid once, grouped by directory in first-request
         order and in storage order within one — the order of a direct
         read, so a cached and an uncached lookup return the same
         list."""
+        import pyarrow as pa
+        import pyarrow.compute as pc
+
         if not docids:
             return []
         legacy = bool(self._footer_index("docs", "docid"))
@@ -1190,14 +1229,24 @@ class SearchEngine(ServingCore):
             reads: dict[str, list[int]] = {}
             for d in missing:
                 reads.setdefault(home[d], []).append(d)
-            tbl = self._point_read(
+            tbl = self._read_row_groups(
                 "docid", list(_DOC_COLUMNS), reads, ordinals=True
             )
             loaded = dict.fromkeys(missing)  # not found: cached as absent
-            for r in [] if tbl is None else tbl.to_pylist():
-                loaded[r["docid"]] = (r.pop("_ordinal"), r)
+            spare: dict = {}
+            if tbl is not None:
+                asked = pc.is_in(tbl["docid"], value_set=pa.array(
+                    missing, type=tbl.schema.field("docid").type
+                ))
+                for r in tbl.filter(asked).to_pylist():
+                    loaded[r["docid"]] = (r.pop("_ordinal"), r)
+                free = self._cache_cap - len(self._doc_cache) - len(missing)
+                if free > 0:
+                    rest = np.flatnonzero(~asked.to_numpy())[:free]
+                    for r in tbl.take(rest).to_pylist():
+                        spare[r["docid"]] = (r.pop("_ordinal"), r)
             rows.update(loaded)
-            self._cache_put(self._doc_cache, loaded)
+            self._cache_put(self._doc_cache, loaded, spare)
         rank = {h: i for i, h in enumerate(dict.fromkeys(home.values()))}
         cols = _DOC_COLUMNS if with_images else _DOC_COLUMNS[:4]
         return [

@@ -63,6 +63,7 @@ def score_exhaustive(
     semantics: str = "or",
     exclude_terms: list[str] | None = None,
     required_terms: list[str] | None = None,
+    df_map: dict[str, int] | None = None,
 ) -> DataFrame:
     """Top-k (docid, score) over a token/posting relation.
 
@@ -86,14 +87,28 @@ def score_exhaustive(
     only (the same magnitude as the excluded postings the engine's
     local path decodes), never corpus-sized; AQE broadcasts it when
     small. A term both queried and excluded empties the result (the
-    Lucene boolean contradiction)."""
+    Lucene boolean contradiction).
+
+    ``df_map``: each query term's df when the caller already knows it to
+    equal the relation's live count (a source with no overridden doc:
+    its lexicon df), given as a literal map — then the relation is
+    decoded once instead of also feeding ``with_live_df``'s count.
+    Without it df is recomputed from the relation."""
     if not query_terms:
         return (
             tokens.sparkSession.createDataFrame(
                 [], "docid long, score double"
             )
         )
-    matched = with_live_df(tokens.filter(F.col("term").isin(query_terms)))
+    matched = tokens.filter(F.col("term").isin(query_terms))
+    if df_map is None:
+        matched = with_live_df(matched)
+    else:
+        matched = matched.withColumn("df", F.create_map(*(
+            F.lit(x)
+            for t in dict.fromkeys(query_terms)
+            for x in (t, int(df_map.get(t, 0)))
+        ))[F.col("term")])
     scored = matched.withColumn("partial", score_expr(mode, n, avgdl))
     if semantics == "and":
         agg = (

@@ -1561,6 +1561,9 @@ class ServingCore:
             self.avgdl, k, mode, semantics=semantics,
             exclude_terms=excluded or None,
             required_terms=required or None,
+            # no overridden doc: the lexicon df is the live df, so the
+            # relation is decoded once (with deletes it is recounted)
+            df_map=None if self.overridden else self._live_df_map(terms),
         )
 
     def search_many(
